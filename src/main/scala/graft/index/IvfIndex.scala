@@ -1,7 +1,11 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Predicate, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Paths, Path}
 import java.util.Comparator
 
@@ -226,6 +230,15 @@ object IvfIndex {
     * orders of magnitude; above it the sphere covers so much of the table
     * that the shuffle join is the honest plan. */
   val rangeBroadcastCap = 10000000L
+
+  /** The one `cluster_id` restriction every cell-pruned scan applies.
+    * The cell set is a referenced BitSet inside [[CellIn]], never code
+    * literals, so each new probe set reuses the compiled class. */
+  private[graft] def inCells(cells: Array[Int]): Column = {
+    val bits = new java.util.BitSet()
+    cells.foreach(c => bits.set(c))
+    ColumnBridge.column(CellIn(ColumnBridge.expression(col("cluster_id")), bits))
+  }
 
   private def spherical(cfg: IvfConfig): Boolean = cfg.metric == "cosdist"
 
@@ -2435,7 +2448,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     val bits = meta.cfg.bits
     val dim = meta.dim
     val isL2 = meta.cfg.metric == "l2"
-    codesDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+    codesDf.filter(IvfIndex.inCells(probed))
       .as[(Int, Long, Array[Float], Array[Byte])]
       .mapPartitions { it =>
         val pc = bpc.value
@@ -2483,7 +2496,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     graft.eval.QueryRecorder.record(dir, q)
     val qq = prepQuery(q)
     val probed = probe(q, probes, probes1)
-    val data = dataDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+    val data = dataDf.filter(IvfIndex.inCells(probed))
     val nCand = math.max(k * refine, k)
     val cand = estFrame(qq, probed, epsilon).orderBy($"lb", $"id").limit(nCand)
       .select($"id").as[Long].collect()
@@ -2637,7 +2650,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     val dim = meta.dim
     val metric = meta.cfg.metric
     val rad = radius
-    codesDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+    codesDf.filter(IvfIndex.inCells(probed))
       .as[(Int, Long, Array[Float], Array[Byte])]
       .mapPartitions { it =>
         val pc = bpc.value
@@ -2695,7 +2708,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val bPreps = spark.sparkContext.broadcast(preps)
     val bByCell = spark.sparkContext.broadcast(byCell)
-    codesDf.filter(col("cluster_id").isin(allCells.map(Integer.valueOf): _*))
+    codesDf.filter(IvfIndex.inCells(allCells))
       .as[(Int, Long, Array[Float], Array[Byte])]
       .mapPartitions { it =>
         val preps = bPreps.value
@@ -2788,7 +2801,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           case None =>
             val exact = exactDistCol(qq)
             val probed = rangeCells(qq, radius)
-            dataDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+            dataDf.filter(IvfIndex.inCells(probed))
               .select($"id", exact($"vec").as("dist"))
               .filter(col("dist") < radius)
           case Some((src, idCol, vecCol)) =>
@@ -2822,7 +2835,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           // re-matched by the range-serve planner rule
           val exact = exactDistCol(qq)
           val probed = rangeCells(qq, radius)
-          dataDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+          dataDf.filter(IvfIndex.inCells(probed))
             .join(candDf, Seq("id"))
             .select($"id", exact($"vec").as("dist"))
             .filter(col("dist") < radius)
@@ -2863,7 +2876,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
         // id filter alone would touch every cell's files — the same
         // cluster_id pruning `search` applies to its rerank scan)
         val probed = rangeCells(qq, radius)
-        dataDf.filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
+        dataDf.filter(IvfIndex.inCells(probed))
           .filter(col("id").isin(cand.map(java.lang.Long.valueOf): _*))
           .select($"id", exact($"vec").as("dist"))
           .filter(col("dist") < radius)
@@ -2920,7 +2933,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     val bByCell = spark.sparkContext.broadcast(byCell)
     // job 1 (lazy plan): code-only estimate pass over the union of cells
     val cand0 = codesDf
-      .filter(col("cluster_id").isin(allCells.map(Integer.valueOf): _*))
+      .filter(IvfIndex.inCells(allCells))
       .as[(Int, Long, Array[Float], Array[Byte])]
       .mapPartitions { it =>
         val preps = bPreps.value
@@ -2978,7 +2991,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           queries.map(q => q._1 -> (prepQuery(q._2), q._3)).toMap)
         val isF16 = meta.cfg.storage == "f16"
         val rows = dataDf
-          .filter(col("cluster_id").isin(allCells.map(Integer.valueOf): _*))
+          .filter(IvfIndex.inCells(allCells))
           .select(col("id"), col("vec"))
         val joined = rows.join(cand, Seq("id"))
         if (isF16)
@@ -3024,7 +3037,7 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           val cells = preps.filter(p => scanQids.contains(p._1)).flatMap(_._4).distinct
           val isF16 = meta.cfg.storage == "f16"
           val rows = dataDf
-            .filter(col("cluster_id").isin(cells.map(Integer.valueOf): _*))
+            .filter(IvfIndex.inCells(cells))
             .select(col("id"), col("vec"))
           if (isF16)
             rows.as[(Long, Array[Byte])].mapPartitions { it =>
@@ -3129,13 +3142,13 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     val bPrep = spark.sparkContext.broadcast(preps)
     val bTabs = spark.sparkContext.broadcast((qrTab, qSumTab, qNormSqTab, cDotTab))
     val bC2Q = spark.sparkContext.broadcast(clusterToQ)
-    val data = dataDf.filter(col("cluster_id").isin(allProbed.map(Integer.valueOf): _*))
+    val data = dataDf.filter(IvfIndex.inCells(allProbed))
     // InternalRow scan: primitive accessors, no Seq boxing — this pass
     // touches every row of every probed cluster and is the batch's hot loop
     // (reads the codes cache when prewarmCodes() ran)
     val estRdd = org.apache.spark.sql.graft.ColumnBridge
       .toInternalRdd(codesDf
-        .filter(col("cluster_id").isin(allProbed.map(Integer.valueOf): _*)))
+        .filter(IvfIndex.inCells(allProbed)))
       .mapPartitions { it =>
         val preps = bPrep.value
         val (qrT, qSumT, qNormSqT, cDotT) = bTabs.value
@@ -3366,4 +3379,28 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     if (exact.isEmpty) Double.NaN
     else ann.intersect(exact).size.toDouble / exact.size
   }
+}
+
+/** `cluster_id` membership in a fixed cell set. A literal `isin`
+  * compiles the probed ids into generated code (an In chain, or an int
+  * `switch` past the InSet threshold), so every new query vector cost
+  * fresh Janino classes whose tasks then ran before the JIT had
+  * compiled them. Here the set is a referenced BitSet: one class for
+  * every probe set, O(1) membership at any probe count. Deterministic
+  * over the partition column alone, so parquet partition pruning still
+  * applies it on an uncached index. */
+final case class CellIn(child: Expression, cells: java.util.BitSet)
+    extends UnaryExpression with Predicate with ImplicitCastInputTypes {
+  override def prettyName: String = "cell_in"
+  override def inputTypes = Seq(IntegerType)
+  override protected def nullSafeEval(c: Any): Any = {
+    val cid = c.asInstanceOf[Int]
+    cid >= 0 && cells.get(cid)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("cells", cells, "java.util.BitSet")
+    defineCodeGen(ctx, ev, c => s"($c >= 0 && $ref.get($c))")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
 }

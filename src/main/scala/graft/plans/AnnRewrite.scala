@@ -263,11 +263,6 @@ object AnnCatalog {
   def index(spark: SparkSession, e: Entry): IvfIndex =
     indexes.computeIfAbsent(e.indexDir, d => IvfIndex.load(spark, d))
 
-  /** Indexed row count (the cost model's N — the reference reads it from
-    * pg_class reltuples). Delegates to the index, which re-counts when a
-    * generation change or delta append invalidates the cached value. */
-  def rowCount(spark: SparkSession, e: Entry): Long = index(spark, e).rowCount
-
   // ---- graph-index (vchordg) entries: same ORDER BY <-> LIMIT k shape,
   // served by beam search over the broadcast Vamana graph ----
 
@@ -1081,7 +1076,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                   idLit <- litFor(idAttr)
                   // an index serves only queries in its own metric
                   if AnnCatalog.index(spark, entry).meta.cfg.metric == metric
-                  s <- serve(gl, sort, child, projOpt, entry, idAttr, idLit, qv, k, predOpt)
+                  s <- serveMulti(gl, sort, child, projOpt, Seq(entry), idAttr,
+                    idLit, qv, k, predOpt)
                 } yield s
                 // PARTITIONED table (reference partition.slt): several
                 // parquet roots — or one discovered root whose child
@@ -1119,7 +1115,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                   idAttr <- child.output.find(_.name == pe.entry.idCol)
                   idLit <- litFor(idAttr)
                   if AnnCatalog.index(spark, pe.entry).meta.cfg.metric == metric
-                  s <- serve(gl, sort, child, projOpt, pe.entry, idAttr,
+                  s <- serveMulti(gl, sort, child, projOpt, Seq(pe.entry), idAttr,
                     idLit, qv, k, remaining)
                 } yield s
                 // a vchordg-style graph index may serve the same shape when
@@ -1847,7 +1843,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         val refine = spark.conf.get("graft.ann.refine", "8").toInt
         // cost gate: per query row, summed per-root index work vs the
         // exact cross join touching every indexed row — the query-row
-        // count multiplies both sides, so it cancels (serve()'s formula)
+        // count multiplies both sides, so it cancels (serveMulti's formula)
         val costOk = !spark.conf.get("graft.ann.cost.enable", "true").toBoolean ||
           CostGates.ivf(idxs.map(ix => (ix.rowCount, ix.meta.cfg.lists,
             probesFor(ix.meta.cfg.lists))), k, refine)
@@ -1886,7 +1882,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             else Some((spark.read.parquet(e0.tablePath), e0.idCol, e0.vecCol))
           }
           // per-query candidate POOLS of k*r ids by estimate order (the
-          // escalate() pool semantics — refine=1, the survivor floor needs
+          // escalateMulti() pool semantics — refine=1, the survivor floor needs
           // the whole pool, not its reranked top-k) at the given probe
           // scale — ONE batched job however many queries and roots
           def pools(probeScale: Int, r: Int): Option[Map[Long, Array[Long]]] = {
@@ -2566,11 +2562,14 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Partitioned-table serve: one bounded top-k pool per per-root index,
-    * unioned (≤ roots×k ids — the same bounded merge rangeSearchMany
-    * uses), then the standard exact Sort+Limit over the IN-restricted
-    * scan. Cost model sums the per-root index costs against the total
-    * exact scan. Declines past `graft.ann.maxInList`. */
+  /** The IVF top-k serve, for one root or a partitioned table's many:
+    * one estimate-only pool of k·refine ids per root (RaBitQ lower
+    * bounds, no in-index rerank), unioned, then the standard exact
+    * Sort+Limit over the IN-restricted scan reranks the pool — the
+    * reference's probe, estimate, rerank pass with the rerank in the
+    * plan. Cost model sums the per-root index costs against the total
+    * exact scan. Declines when even k ids per root exceed
+    * `graft.ann.maxInList`. */
   private def serveMulti(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
                          projOpt: Option[Seq[NamedExpression]],
                          es: Seq[AnnCatalog.Entry], idAttr: Attribute,
@@ -2603,7 +2602,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // the IN-restricted scan reranks the pooled candidates exactly, and
     // the full-depth pool per root is a superset of what per-root rerank
     // would have kept — end-to-end recall is the old path's or better.
-    // A SINGLE covered root keeps the per-index frame (cache-aware and
+    // A SINGLE root keeps the per-index frame (cache-aware and
     // branch-free anyway).
     // the k-floor is the serve/decline line, as in the old per-root
     // shape: if even k ids per root overflow maxInList, decline to exact
@@ -2622,7 +2621,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       else
         IvfIndex.multiEstimateCandidates(idxs.map(_._2), qArr, nCand, prs)
     }
-    // dedup ids across roots (keep the best lb for budgeting)
+    // dedup ids across roots, and within a root across generation and
+    // delta (keep the best lb for budgeting): one id must not take two of
+    // the k*refine slots
     def dedup(pool: Array[(Long, Double, Int)]): Array[(Long, Double, Int)] =
       pool.groupBy(_._1).valuesIterator.map(_.minBy(t => (t._2, t._3))).toArray
     def planWith(ids: Array[Long]): LogicalPlan = {
@@ -2664,20 +2665,20 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           }
         if (ids.isEmpty) Some(gl) else Some(planWith(ids))
       case Some(pred) =>
-        // PREFILTER over a partitioned table: the same escalation contract
-        // as the single-root serve — pool candidates, count the
-        // predicate's survivors among them (child already contains the
-        // user Filter), escalate probes/refine x4 until k survivors exist
-        // or every root is provably covered. Each round is ONE unioned
-        // pool job + ONE survivor count, regardless of root count. The
-        // budget contract also matches: a pool past maxInList means the
-        // exact plan is equivalent-or-cheaper than a giant IN — declined
-        // BEFORE the pool job runs, like the single-root escalate().
+        // PREFILTER: pool candidates, count the predicate's survivors
+        // among them (child already contains the user Filter), escalate
+        // probes/refine x4 until k survivors exist or every root is
+        // provably covered. The IN list must be the POOL, not a top-k —
+        // a top-k list holds k survivors only if the predicate passes all
+        // of them. Each round is ONE unioned pool job + ONE survivor
+        // count, regardless of root count. A pool past maxInList means
+        // the exact plan is equivalent-or-cheaper than a giant IN —
+        // declined BEFORE the pool job runs.
         def escalateMulti(): Option[LogicalPlan] = {
           var scale = 1
           var r = refine0
-          // tight at full probes, conservative below — the single-root
-          // contract (poolSize pre-decline) summed per root
+          // tight at full probes, conservative below — per root
+          // min(k*r, rows), summed
           def poolBound: Long =
             idxs.map { case (_, ix) => math.min(k.toLong * r, ix.rowCount) }.sum
           def covered: Boolean = idxs.forall { case (_, ix) =>
@@ -2690,10 +2691,14 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             else {
               AnnTopKRewrite.planningJobs.incrementAndGet()
               ensureInPushdown(ids.length)
+              // guard: the count plan contains the user's own Filter —
+              // optimizing it must not re-fire this rule's Filter cases.
+              // An RDD count: one job, no shuffle (Dataset.count is an
+              // aggregate — two jobs and an exchange under AQE)
               AnnTopKRewrite.withPlanningGuard {
-                ColumnBridge.ofRows(spark,
+                ColumnBridge.toInternalRdd(ColumnBridge.ofRows(spark,
                   Filter(AnnTopKRewrite.idsInExpr(idAttr, ids, idLit),
-                    child)).count()
+                    child))).count()
               }
             }
           if (poolBound > maxInList) return Some(gl)
@@ -2713,14 +2718,15 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if (ids.isEmpty) Some(gl) else Some(planWith(ids))
         }
         pred match {
-          // sphere prefilter in the shared index metric: per-root RANGE
-          // candidates (cell + code lower bounds — a SUPERSET of every
-          // qualifying row per root) union into one job, exactly the
-          // single-root SphereCond branch generalized; no escalation
-          // rounds, exact output. Oversized pools fall back to the
+          // sphere prefilter in the shared index metric (reference
+          // opclass strategy 2 WITH an order-by, pushdown_range.slt):
+          // per-root RANGE candidates (cell + code lower bounds — a
+          // SUPERSET of every qualifying row per root) union into one
+          // job; no escalation rounds, exact output (the plan keeps the
+          // original filter + sort). Oversized pools fall back to the
           // generic escalation. Without this branch the generic loop
-          // would stop at k pool-order survivors — approximate where the
-          // single-root path (and the pre-partitioned decline) was exact.
+          // would stop at k pool-order survivors — approximate where
+          // this branch is exact.
           case SphereCond(sphMetric, sphAttr, sphCv, sphRadius)
               if idxs.forall(_._2.meta.cfg.metric == sphMetric) &&
                  sphAttr.name == es.head.vecCol =>
@@ -2740,8 +2746,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             if (raw.length > maxInList) escalateMulti()
             else if (raw.isEmpty) Some(LocalRelation(gl.output))
             else {
-              // merge the IN into the EXISTING Filter and stamp it (the
-              // single-root planWithMerged contract): a fresh In-Filter
+              // merge the IN into the EXISTING Filter and stamp it: a
+              // fresh In-Filter
               // wrapped AROUND the unstamped sphere Filter would leave
               // the inner node servable by the standalone range case —
               // a second planning job re-serving this rule's own output
@@ -2761,137 +2767,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           case _ => escalateMulti()
         }
-    }
-  }
-
-  private def serve(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                    projOpt: Option[Seq[NamedExpression]],
-                    entry: AnnCatalog.Entry, idAttr: Attribute, idLit: Long => Literal,
-                    qv: ArrayData, k: Int,
-                    predOpt: Option[Expression]): Option[LogicalPlan] = {
-    val idx = AnnCatalog.index(spark, entry)
-    val lists = idx.meta.cfg.lists
-    val probesConf = spark.conf.get("graft.ann.probes", "auto")
-    val probes0 =
-      if (probesConf == "auto") math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-      else probesConf.toInt
-    val refine0 = spark.conf.get("graft.ann.refine", "8").toInt
-    val n = AnnCatalog.rowCount(spark, entry)
-
-    // cost model (reference amcostestimate): exact full scan = n rows at
-    // unit cost; index scan = code-only estimate over the probed fraction
-    // (~0.3 units/row: pruned columns, integer kernel) + exact rerank of
-    // k*refine candidate rows + per-query probe overhead.
-    val costEnabled = spark.conf.get("graft.ann.cost.enable", "true").toBoolean
-    if (costEnabled && !CostGates.ivf(Seq((n, lists, probes0)), k, refine0))
-      return None
-
-    val qArr = qv.toFloatArray()
-    import spark.implicits._
-    // codes-only index: candidate pools rerank against the SOURCE table
-    // (the reference's rerank_in_table pairing); a full index keeps the
-    // cheaper in-index rerank. Exactness of the final output is the
-    // rewritten plan's Sort+Limit either way.
-    val rt: Option[(org.apache.spark.sql.DataFrame, String, String)] =
-      if (idx.meta.cfg.storeVectors || entry.tablePath.isEmpty) None
-      else Some((spark.read.parquet(entry.tablePath), entry.idCol, entry.vecCol))
-    def planWith(ids: Array[Long]): LogicalPlan = {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, idAttr, ids, idLit,
-        complete = idx.sourceComplete)
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
-
-    // merge the IN into the EXISTING Filter node (sphere prefilter path):
-    // the inner Filter is stamped, so the standalone range-filter case
-    // cannot re-serve a plan this rewrite produced
-    def planWithMerged(ids: Array[Long]): LogicalPlan = {
-      ensureInPushdown(ids.length)
-      val inExpr = AnnTopKRewrite.idsInExpr(idAttr, ids, idLit)
-      val newChild = child match {
-        case Filter(p, r)              => stamped(Filter(And(p, inExpr), r))
-        case Project(pl, Filter(p, r)) => Project(pl, stamped(Filter(And(p, inExpr), r)))
-        case other                     => stamped(Filter(inExpr, other))
-      }
-      val sorted = Sort(sort.order, global = true, newChild)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
-
-    def escalate(): Option[LogicalPlan] = {
-        // prefilter escalation. The IN list must be the candidate POOL
-        // (k*refine ids by estimate order), not the final top-k — a top-k
-        // list can never contain k predicate survivors unless the
-        // predicate passes all of them. `child` already contains the user
-        // Filter, so counting the candidate-restricted child counts
-        // survivors. Bounded: once the pool would exceed `maxInList`
-        // literals (or would have to cover the whole table), the original
-        // exact plan is equivalent-or-cheaper than a giant IN — serve that
-        // instead of multi-thousand-literal expressions.
-        val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-        var p = probes0
-        var r = refine0
-        def poolSize(r: Int): Long = math.min(k.toLong * r, n)
-        def pool(p: Int, r: Int): Array[Long] = {
-          AnnTopKRewrite.planningJobs.incrementAndGet()
-          idx.search(qArr, poolSize(r).toInt, probes = p, refine = 1,
-              rerankTable = rt)
-            .select("id").as[Long].collect()
-        }
-        if (poolSize(r) > maxInList) return Some(gl)
-        var ids = pool(p, r)
-        def survivors(ids: Array[Long]): Long =
-          if (ids.isEmpty) 0L
-          else {
-            AnnTopKRewrite.planningJobs.incrementAndGet()
-            ensureInPushdown(ids.length)
-            // guard: the count plan contains the user's own Filter —
-            // optimizing it must not re-fire this rule's Filter cases
-            AnnTopKRewrite.withPlanningGuard {
-              ColumnBridge.ofRows(spark,
-                Filter(AnnTopKRewrite.idsInExpr(idAttr, ids, idLit),
-                  child)).count()
-            }
-          }
-        // coverage FIRST: a covered pool serves regardless of the
-        // survivor count, so that count job would be pure waste
-        var covered = p >= lists && k.toLong * r >= n
-        while (!covered && survivors(ids) < k) {
-          p = math.min(lists, p * 4)
-          r = r * 4
-          if (poolSize(r) > maxInList) return Some(gl) // exact plan beats a huge IN
-          ids = pool(p, r)
-          covered = p >= lists && k.toLong * r >= n
-        }
-        if (ids.isEmpty) Some(gl) else Some(planWith(ids))
-    }
-
-    predOpt match {
-      case None =>
-        val ids = idx.search(qArr, k, probes = probes0, refine = refine0,
-            rerankTable = rt)
-          .select("id").as[Long].collect()
-        if (ids.isEmpty) Some(gl) else Some(planWith(ids))
-      // sphere prefilter in the INDEX METRIC (reference opclass strategy 2
-      // WITH an accompanying order-by, pushdown_range.slt): the range
-      // scan's estimate survivors are a SUPERSET of the sphere conjunct's
-      // qualifying rows — and any further conjuncts only shrink that set —
-      // so they serve as the candidate pool directly: one planning job, no
-      // escalation rounds, exact output (the plan keeps the original
-      // filter + sort). Oversized pools fall back to the generic
-      // escalation.
-      case Some(SphereCond(sphMetric, sphAttr, sphCv, sphRadius))
-          if sphMetric == idx.meta.cfg.metric && sphAttr.name == entry.vecCol =>
-        val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-        val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
-        AnnTopKRewrite.planningJobs.incrementAndGet()
-        val ids = idx.rangeCandidateIds(sphCv.toFloatArray(), sphRadius, eps, maxInList)
-        if (ids.length > maxInList) escalate()
-        else if (ids.isEmpty) Some(LocalRelation(gl.output))
-        else Some(planWithMerged(ids))
-      case Some(_) => escalate()
     }
   }
 }

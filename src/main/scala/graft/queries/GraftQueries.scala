@@ -162,10 +162,11 @@ object GraftQueries {
     * scan order within a partition, which on the single-partition
     * fixture is exactly the collect order the driver loop summed in
     * (and `element_at(...).cast("double")` is the same float->double
-    * widening). `dim` is the embeddings-table contract (the oracle SQL
-    * hard-codes range(0, 64)); a row of any other length fails loudly
-    * via the same aggregation rather than silently mis-summing. */
-  private def labelCentroids(e: DataFrame, dim: Int = 64): Array[Array[Float]] = {
+    * widening). `dim` comes from the aggregate itself (highest position
+    * + 1, no extra job); a label whose rows are shorter, or ragged
+    * lengths within a label, fail loudly rather than silently
+    * mis-summing. */
+  private[graft] def labelCentroids(e: DataFrame): Array[Array[Float]] = {
     // posexplode + a NARROW (l, p) groupBy rather than dim-many sum
     // columns: the 64-sum formulation generated a per-query codegen
     // function heavy enough to cost ~0.4 s at the fixture (r18 bench
@@ -180,20 +181,19 @@ object GraftQueries {
       .collect()
     require(rows.nonEmpty, "labelCentroids: empty embeddings table")
     val k = rows.iterator.map(_.getInt(0)).max + 1
+    val dim = rows.iterator.map(_.getInt(1)).max + 1
     val sums = Array.fill(k)(new Array[Double](dim))
     val cnts = Array.fill(k)(-1L)
     val perLabelRows = new Array[Int](k)
     rows.foreach { r =>
       val l = r.getInt(0); val p = r.getInt(1); val n = r.getLong(2)
-      require(p < dim,
-        s"labelCentroids: embedding longer than the expected $dim")
       sums(l)(p) = r.getDouble(3)
       if (cnts(l) < 0) cnts(l) = n
       require(cnts(l) == n, "labelCentroids: ragged embedding lengths")
       perLabelRows(l) += 1
     }
     require(perLabelRows.forall(c => c == 0 || c == dim),
-      s"labelCentroids: embedding dimensionality is not the expected $dim")
+      s"labelCentroids: embedding lengths differ across labels (longest $dim)")
     Array.tabulate(k)(c => Array.tabulate(dim)(j =>
       if (cnts(c) <= 0) 0.0f else (sums(c)(j) / cnts(c)).toFloat))
   }

@@ -26,7 +26,7 @@ object PlanAudit {
     println("=== estimate-scan plan (codes path, probe filter) ===")
     val est = spark.read.parquet(s"$dir/gen-0")
       .select("cluster_id", "id", "cmeta", "codes")
-      .filter($"cluster_id".isin(idx.probe(q, 4).map(Integer.valueOf): _*))
+      .filter(IvfIndex.inCells(idx.probe(q, 4)))
     est.explain("formatted")
     spark.stop()
   }

@@ -245,20 +245,28 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("estimate scan prunes partitions and the vec column (plan golden)") {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import spark.implicits._
     val df = rows.toDF("id", "vec")
     val idx = IvfIndex.build(df, "id", "vec", freshDir(), IvfConfig(lists = 8))
-    val probed = idx.probe(Array.fill(12)(0.1f), 2)
-    assert(probed.length == 2)
-    // the physical scan the estimate phase runs: cluster_id is a partition
-    // column (pruned at the source), vec is absent from the read schema
-    val scan = idx.dataDf
-      .filter(col("cluster_id").isin(probed.map(Integer.valueOf): _*))
-      .select("cluster_id", "id", "cmeta", "codes")
-    val phys = scan.queryExecution.executedPlan.toString
-    assert(phys.contains("PartitionFilters:") && phys.contains("cluster_id"),
-      s"expected cluster_id partition pruning:\n$phys")
+    val q = Array.fill(12)(0.1f)
+    assert(idx.probe(q, 2).length == 2)
+    // the physical scan the estimate phase runs on an uncached index:
+    // cluster_id is a partition column pruned at the source through the
+    // cell restriction, vec is absent from the read schema
+    val scan = idx.estimateCandidates(q, 5, probes = 2)
+    assert(scan.collect().length == 5)
+    val plan = scan.queryExecution.executedPlan
+    val phys = plan.toString
+    val partFilters = phys.split("PartitionFilters: ")
+    assert(partFilters.length > 1 &&
+      partFilters(1).takeWhile(_ != ']').contains("cell_in(cluster_id"),
+      s"expected cluster_id partition pruning by the cell restriction:\n$phys")
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(_.metrics("numPartitions").value == 2),
+      "the scan must read only the 2 probed cells: " +
+      scans.map(_.metrics("numPartitions").value).mkString(","))
     val readSchema = phys.split("ReadSchema:")(1).split("\n")(0)
     assert(!readSchema.contains("vec"), s"vec must be pruned from the estimate scan: $readSchema")
   }

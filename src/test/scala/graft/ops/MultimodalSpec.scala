@@ -163,6 +163,19 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  test("a MIDI blob is not media: readAudio returns null") {
+    // minimal format-0 standard MIDI file: one note on/off, end of track
+    val track = Array(0x00, 0x90, 0x3c, 0x40, 0x60, 0x80, 0x3c, 0x40,
+      0x00, 0xff, 0x2f, 0x00).map(_.toByte)
+    val midi = "MThd".getBytes("US-ASCII") ++
+      Array[Byte](0, 0, 0, 6, 0, 0, 0, 1, 0, 0x60) ++
+      "MTrk".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0, track.length.toByte) ++ track
+    // the bytes are real MIDI, so the null is the reader contract
+    assert(javax.sound.midi.MidiSystem.getSequence(
+      new java.io.ByteArrayInputStream(midi)).getTracks.length == 1)
+    assert(Multimodal.readAudio(midi) == null)
+  }
+
   test("mjpegFrames walks marker structure: FF D8 FF inside an APP1 payload " +
        "does not false-split; truncated tail frame dropped, not emitted as garbage") {
     // hand-build frame 1 = a real JPEG with an APP1 segment whose payload
