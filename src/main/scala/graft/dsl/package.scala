@@ -157,13 +157,15 @@ package object dsl {
       idx.searchMany(queries, k, probes = probes, refine = refine)
 
     /** Index-served sphere range (opclass strategy 2): cell-pruned codes
-      * scan + exact strict-< cutoff at rerank. */
+      * scan + exact strict-< cutoff — the batched range fold with one
+      * sphere. Output (id, dist) ascending (dist, id). */
     def annRange(center: Array[Float], radius: Double): DataFrame =
       idx.rangeSearch(center, radius)
 
-    /** Batch sphere range: M (qid, center, radius) spheres in one plan,
-      * no driver candidate collect. */
+    /** Batch sphere range: M (qid, center, radius) spheres through the
+      * batched range fold over this one index — a constant number of
+      * jobs at any M. Output (qid, id, dist) ascending (qid, dist, id). */
     def annRangeBatch(queries: Array[(Long, Array[Float], Double)]): DataFrame =
-      idx.rangeSearchMany(queries)
+      IvfIndex.rangeSearchManyMulti(Seq(idx), queries)
   }
 }

@@ -208,23 +208,18 @@ object IvfIndex {
     else if (cur > inPushdownCap) spark.conf.set(key, inPushdownCap.toString)
   }
 
-  /** Count of [[IvfIndex.rangeSearch]] calls that delegated to the
-    * distributed candidate-join shape (survivors exceeded `maxInList`) —
-    * observability for specs and ops, like `AnnTopKRewrite.planningJobs`. */
-  val rangeDelegations = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Count of delegated range queries that fell back to the straight
-    * exact scan because the code bound kept more than
-    * [[rangeScanFallbackFrac]] of the table (no pruning to exploit). */
+  /** Count of range spheres that fell back to the straight exact scan
+    * because the code bound kept more than [[rangeScanFallbackFrac]] of
+    * the table (no pruning to exploit). */
   val rangeScanFallbacks = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Candidate fraction above which the delegated range shape abandons
-    * the candidate join for a direct exact scan: past this the estimate
+  /** Candidate fraction above which a range sphere abandons the
+    * candidate path for a direct exact scan: past this the estimate
     * pass retained most rows, so the join adds cost without removing
     * work (measured 10x brute on uniform 768d bits=1). */
   val rangeScanFallbackFrac = 0.25
 
-  /** Largest delegated-range candidate set shipped as a broadcast id set
+  /** Largest distributed-tier range candidate set shipped as a broadcast
     * instead of a shuffle join (10M ids ~ 80 MB broadcast). Below this,
     * broadcasting beats re-shuffling the (much wider) data/source side by
     * orders of magnitude; above it the sphere covers so much of the table
@@ -431,11 +426,9 @@ object IvfIndex {
                           origDim: Int): IvfIndex = {
     val spark = df.sparkSession
     val dim = centroids(0).length
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
     // internal levels first (driver-side, centroid-count work): the
     // encode pass needs them when cfg.assignByTree descends
     val (upC, upCh) = buildUpper(centroids, cfg.effectiveUpper, cfg.kmeansIters)
-    val t0 = System.nanoTime()
     val up = if (upC.nonEmpty) Some((upC, upCh)) else None
     val passes = math.min(math.max(1, cfg.buildPasses), centroids.length)
     // partitionOverwriteMode pinned STATIC on every build write: under a
@@ -468,7 +461,6 @@ object IvfIndex {
         val lo = p * per
         val hi = math.min(centroids.length, lo + per)
         if (lo < hi) {
-          val tp = System.nanoTime()
           encodeRows(df, idCol, vecCol, cfg, centroids, origDim, upper = up,
               clusterRange = Some((lo, hi)))
             .repartition(col("cluster_id"))
@@ -476,13 +468,10 @@ object IvfIndex {
             .option("partitionOverwriteMode", "static")
             .partitionBy("cluster_id").parquet(s"$dir/gen-0")
           releaseShuffleScratch(scratch0)
-          if (dbg) System.err.println(
-            s"[build] pass $p clusters [$lo,$hi): ${(System.nanoTime()-tp)/1e9}s")
         }
         p += 1
       }
     }
-    if (dbg) System.err.println(s"[build] encode+write: ${(System.nanoTime()-t0)/1e9}s")
     // SOURCE COMPLETENESS (round 17): did every source row enter the
     // index? The encode pass silently drops NULL-vector / NULL-id rows
     // (they have no home in any cell), so a bare candidate-id
@@ -502,9 +491,7 @@ object IvfIndex {
       try spark.read.parquet(s"$dir/gen-0").count()
       catch { case scala.util.control.NonFatal(_) => 0L }
     val sourceComplete = srcCount == keptCount
-    val t1 = System.nanoTime()
     writeMeta(spark, dir, dim, origDim, cfg, centroids, sourceComplete)
-    if (dbg) System.err.println(s"[build] meta: ${(System.nanoTime()-t1)/1e9}s")
     Files.createDirectories(Paths.get(dir))
     // a rebuild into a dir tainted by an earlier instance's null-bearing
     // delta append starts from this build's own fresh verdict
@@ -525,8 +512,6 @@ object IvfIndex {
     cfg.validate()
     val spark = df.sparkSession
     import spark.implicits._
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
-    val tS = System.nanoTime()
     val cap = math.max(cfg.lists * cfg.samplingFactor, cfg.lists)
     // Randomized sample, not a prefix: a limit(cap) would take the FIRST
     // cap rows, and on data sorted/clustered by time or source (every real
@@ -588,8 +573,6 @@ object IvfIndex {
     val sample =
       if (cfg.rotate) { val r = new Rotation(origDim); sampleN.map(r.apply) }
       else sampleN
-    if (dbg) System.err.println(s"[build] sample: ${(System.nanoTime()-tS)/1e9}s (${sample0.length} rows)")
-    val tK = System.nanoTime()
     val hier = cfg.kmeansAlgo == "hierarchical"
     val centroids =
       if (cfg.kmeansDim > 0)
@@ -598,7 +581,6 @@ object IvfIndex {
       else if (hier) KMeans.hierarchical(sample, cfg.lists, cfg.kmeansIters,
         spherical(cfg))
       else KMeans.lloyd(sample, cfg.lists, cfg.kmeansIters, spherical(cfg))
-    if (dbg) System.err.println(s"[build] kmeans: ${(System.nanoTime()-tK)/1e9}s")
     finishBuild(df, idCol, vecCol, dir, cfg, centroids, origDim)
   }
 
@@ -760,38 +742,6 @@ object IvfIndex {
     if (Files.exists(p))
       Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 
-  /** Executor-side strict-< cutoff kernel of [[IvfIndex.rangeSearchMany]]
-    * — a companion method so closures capture no index instance. The
-    * stored vector is already normalized/rotated; `qq` in the map is the
-    * matching prepped query. */
-  private[index] def cutStatic(qs: Map[Long, (Array[Float], Double)],
-                               qid: Long, id: Long, v: Array[Float],
-                               metric: String): Iterator[(Long, Long, Double)] = {
-    val (qq, r) = qs(qid)
-    val d = metric match {
-      case "l2"      => K.l2(v, qq)
-      case "negdot"  => K.negdot(v, qq)
-      case "cosdist" => 1.0 + K.negdot(v, qq)
-    }
-    if (d < r) Iterator.single((qid, id, d)) else Iterator.empty
-  }
-
-  /** [[cutStatic]] against RAW source-table vectors and raw queries (the
-    * rerank-in-table shape): cosine must renormalize — the table's
-    * vectors are the user's originals, not the index's normalized
-    * store. */
-  private[index] def cutStaticRaw(qs: Map[Long, (Array[Float], Double)],
-                                  qid: Long, id: Long, v: Array[Float],
-                                  metric: String): Iterator[(Long, Long, Double)] = {
-    val (q, r) = qs(qid)
-    val d = metric match {
-      case "l2"      => K.l2(v, q)
-      case "negdot"  => K.negdot(v, q)
-      case "cosdist" => K.cosdist(v, q)
-    }
-    if (d < r) Iterator.single((qid, id, d)) else Iterator.empty
-  }
-
   // ------------------------------------------------------------------
   // FLAT MULTI-ROOT planning reads: the partitioned-table planner
   // (AnnTopKRewrite.serveMulti / serveRange over per-child indexes,
@@ -808,11 +758,12 @@ object IvfIndex {
   // map and scored with that root's own prep (residual query, sums,
   // cluster dot — roots may differ in bits/storage/rotation).
   //
-  // Trade, documented: the direct file read bypasses a prewarmCodes()
-  // cache on individual child indexes (probed cells come from the OS
-  // page cache instead). Flat planning at hundreds of roots is the
-  // winning side; single-root serves keep the cache-aware per-index
-  // path (callers branch on root count).
+  // Trade, documented: the direct file read bypasses a prewarm() /
+  // prewarmCodes() cache on the indexes it reads (probed cells come
+  // from the OS page cache instead). Every IVF range path — single-root
+  // included — reads flat, so range never uses those caches; single-root
+  // top-k (search / searchMany / estimateCandidates) keeps the
+  // cache-aware per-index path.
   // ------------------------------------------------------------------
 
   /** Per-dir structural info for the flat read: (root, clusterId, bits,
@@ -935,13 +886,6 @@ object IvfIndex {
     require(queries.nonEmpty, "empty query batch")
     val spark = idxs.head.spark
     import spark.implicits._
-    val dbg = sys.env.contains("GRAFT_DEBUG_FLAT")
-    var tMark = System.nanoTime()
-    def mark(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[flatdebug] $label ${(now - tMark) / 1e9}%.3f s")
-      tMark = now
-    }
     val nQ = queries.length
     val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
     val files =
@@ -968,7 +912,6 @@ object IvfIndex {
       }
       probedDirs(ix, r, allProbed, info, files)
     }
-    mark("prep+probe")
     if (artifacts != null) {
       artifacts.qq = qqOut
       artifacts.info = info.toMap
@@ -981,7 +924,6 @@ object IvfIndex {
     val bPreps = spark.sparkContext.broadcast(
       prepByRoot.map(_.view.mapValues(_.toArray).toMap))
     val pruned = flatCodesFor(spark, files.toArray)
-    mark("relation+prune")
     val partials = pruned
       .mapPartitions { it =>
         val info = bInfo.value
@@ -1030,16 +972,13 @@ object IvfIndex {
     // irrelevant.
     val prdd = partials.rdd
     val directBound = prdd.getNumPartitions.toLong * nRoots * nQ * nCand
-    mark("physical-plan")
     val directMax = scala.util.Try(
         spark.conf.get("graft.ann.flat.directCollectMax").toLong)
       .getOrElse(IvfIndex.directPoolCollectMax)
-    if (directBound <= directMax) {
-      val out = prdd.collect().groupBy(t => (t._1, t._2)).valuesIterator
+    if (directBound <= directMax)
+      prdd.collect().groupBy(t => (t._1, t._2)).valuesIterator
         .flatMap { rows => rows.sortBy(t => (t._4, t._3)).take(nCand) }.toArray
-      mark("pool-job")
-      out
-    } else {
+    else {
       // reducer count sized to the SLOT count, not inherited from the
       // wide scan: the default partitioner would schedule one reduce
       // task per scan partition (thousands, on exactly the wide-scan
@@ -1077,16 +1016,99 @@ object IvfIndex {
     multiEstimatePools(idxs, Array(q), nCand, probes, epsilon)
       .map { case (r, _, id, lb) => (id, lb, r) }
 
+  /** Driver-side range prep of every root plus the code-estimate
+    * survivor kernel — the ONE range estimate kernel, shared by the
+    * planner's candidate pool ([[multiRangeCandidateIds]]) and the
+    * batched range fold ([[rangeManyMultiHomogeneous]]). Per root and
+    * sphere: the prepped query, the sphere-intersecting cells
+    * (`rangeCells`) and their scoring preps. `codes` reads those cells'
+    * codes as ONE flat relation (null when no cell is probed); `hits`
+    * maps its rows to (qi, root, id) for each sphere whose
+    * epsilon-scaled lower bound (cos-shifted at the cutoff) undercuts
+    * its radius — every passing sphere, or only the first when
+    * `firstHit`. Callers run `hits` in their own mapPartitions so each
+    * picks its output encoder. A gen+delta double row emits its tuples
+    * twice. */
+  private final case class RangeEstimate(
+      codes: Dataset[(Long, Array[Float], Array[Byte], String)],
+      hits: Iterator[(Long, Array[Float], Array[Byte], String)] => Iterator[(Int, Int, Long)],
+      files: Array[org.apache.hadoop.fs.FileStatus],
+      bInfo: org.apache.spark.broadcast.Broadcast[Map[String, DirInfo]],
+      qq: Array[Array[Array[Float]]],
+      cells: Array[Array[Array[Int]]])
+
+  private def rangeEstimate(idxs: Seq[IvfIndex],
+      spheres: Array[(Array[Float], Double)], epsilon: Double,
+      firstHit: Boolean): RangeEstimate = {
+    val spark = idxs.head.spark
+    import spark.implicits._
+    val nQ = spheres.length
+    val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
+    val files =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+    // per root: cid -> preps of the spheres whose range cells include it
+    // ((queryIdx, radius, qr, qSum, qNormSq, clusterDot) per sphere); and
+    // per (root, query) the prepped vector + probed cells (the fold's
+    // exact phase and scan fallback reuse them — no re-probing)
+    val prepByRoot = Array.fill(idxs.length)(scala.collection.mutable
+      .HashMap.empty[Int, List[(Int, Double, Array[Float], Double, Double, Double)]])
+    val qqByRoot = Array.ofDim[Array[Float]](idxs.length, nQ)
+    val cellsByRootQ = Array.ofDim[Array[Int]](idxs.length, nQ)
+    idxs.zipWithIndex.foreach { case (ix, r) =>
+      val allProbed = scala.collection.mutable.LinkedHashSet.empty[Int]
+      spheres.zipWithIndex.foreach { case ((center, radius), qi) =>
+        graft.eval.QueryRecorder.record(ix.dir, center)
+        val qq = ix.prepQuery(center)
+        qqByRoot(r)(qi) = qq
+        val probed = ix.rangeCells(qq, radius)
+        cellsByRootQ(r)(qi) = probed
+        val pc = ix.clusterPrep(qq, probed)
+        probed.foreach { cid =>
+          val (qr, qSum, qNormSq, cDot) = pc(cid)
+          prepByRoot(r)(cid) = (qi, radius, qr, qSum, qNormSq, cDot) ::
+            prepByRoot(r).getOrElse(cid, Nil)
+          allProbed += cid
+        }
+      }
+      probedDirs(ix, r, allProbed, info, files)
+    }
+    val bInfo = spark.sparkContext.broadcast(info.toMap)
+    val bPreps = spark.sparkContext.broadcast(
+      prepByRoot.map(_.view.mapValues(_.toArray).toMap))
+    val eps = epsilon
+    val hits = (it: Iterator[(Long, Array[Float], Array[Byte], String)]) => {
+      val info = bInfo.value
+      val preps = bPreps.value
+      val dirCache = new java.util.HashMap[String, DirInfo]()
+      it.flatMap { case (id, cm, codes, path) =>
+        val (root, cid, bits, dim, isL2, isCos) = dirInfoFor(info, dirCache, path)
+        val sps = preps(root).getOrElse(cid,
+          Array.empty[(Int, Double, Array[Float], Double, Double, Double)])
+        if (sps.isEmpty) Iterator.empty
+        else {
+          val code = RaBitQ.Code(cm, codes, bits, dim)
+          val pass = sps.iterator.filter { case (_, rad, qr, qSum, qNormSq, cDot) =>
+            val lb0 = lbOf(code, bits, dim, isL2, qr, qSum, qNormSq, cDot, eps)
+            val lb = if (isCos) 1.0 + lb0 else lb0 // cosdist output shift
+            lb < rad
+          }.map(sp => (sp._1, root, id))
+          if (firstHit) pass.take(1) else pass
+        }
+      }
+    }
+    RangeEstimate(if (files.isEmpty) null else flatCodesFor(spark, files.toArray),
+      hits, files.toArray, bInfo, qqByRoot, cellsByRootQ)
+  }
+
   /** One-read multi-root MULTI-SPHERE range candidates: ids whose code
     * lower bound undercuts SOME sphere's radius in that sphere's
-    * intersecting cells of ANY root (the rangeCandidateDf cutoff,
-    * cos-shifted like the single-root path; a row exits at its first
-    * passing sphere), capped at `cap + 1` rows so callers detect
-    * overflow without an unbounded collect. One Spark job and ONE
-    * analyzed relation for R roots x M spheres — the standalone range
-    * serve (M = 1) and the partitioned range-JOIN serve both pool
-    * through this. May contain gen+delta duplicates (like the per-root
-    * frames) — callers dedup after the overflow check. */
+    * intersecting cells of ANY root ([[rangeEstimate]], a row exits at
+    * its first passing sphere), capped at `cap + 1` rows so callers
+    * detect overflow without an unbounded collect. One Spark job and ONE
+    * analyzed relation for R roots x M spheres — every planner range
+    * serve (standalone filter and order-by at M = 1, range join at any
+    * M, on one root or many) pools through this. May contain gen+delta
+    * duplicates — callers dedup after the overflow check. */
   private[graft] def multiRangeCandidateIds(idxs: Seq[IvfIndex],
       spheres: Array[(Array[Float], Double)], epsilon: Double,
       cap: Int): Array[Long] = {
@@ -1094,60 +1116,12 @@ object IvfIndex {
     require(spheres.nonEmpty, "no spheres")
     val spark = idxs.head.spark
     import spark.implicits._
-    val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
-    val files =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    // per root: cid -> preps of the spheres whose range cells include it
-    // ((radius, qr, qSum, qNormSq, clusterDot) per sphere)
-    val prepByRoot = Array.fill(idxs.length)(scala.collection.mutable
-      .HashMap.empty[Int, List[(Double, Array[Float], Double, Double, Double)]])
-    idxs.zipWithIndex.foreach { case (ix, r) =>
-      val allProbed = scala.collection.mutable.LinkedHashSet.empty[Int]
-      spheres.foreach { case (center, radius) =>
-        graft.eval.QueryRecorder.record(ix.dir, center)
-        val qq = ix.prepQuery(center)
-        val probed = ix.rangeCells(qq, radius)
-        val pc = ix.clusterPrep(qq, probed)
-        probed.foreach { cid =>
-          val (qr, qSum, qNormSq, cDot) = pc(cid)
-          prepByRoot(r)(cid) = (radius, qr, qSum, qNormSq, cDot) ::
-            prepByRoot(r).getOrElse(cid, Nil)
-          allProbed += cid
-        }
-      }
-      probedDirs(ix, r, allProbed, info, files)
+    val e = rangeEstimate(idxs, spheres, epsilon, firstHit = true)
+    if (e.codes == null) Array.empty
+    else {
+      val hits = e.hits
+      e.codes.mapPartitions(it => hits(it).map(_._3)).limit(cap + 1).collect()
     }
-    if (files.isEmpty) return Array.empty
-    val eps = epsilon
-    val bInfo = spark.sparkContext.broadcast(info.toMap)
-    val bPreps = spark.sparkContext.broadcast(
-      prepByRoot.map(_.view.mapValues(_.toArray).toMap))
-    flatCodesFor(spark, files.toArray)
-      .mapPartitions { it =>
-        val info = bInfo.value
-        val preps = bPreps.value
-        val dirCache = new java.util.HashMap[String, DirInfo]()
-        it.flatMap { case (id, cm, codes, path) =>
-          val (root, cid, bits, dim, isL2, isCos) =
-            dirInfoFor(info, dirCache, path)
-          val sps = preps(root).getOrElse(cid,
-            Array.empty[(Double, Array[Float], Double, Double, Double)])
-          if (sps.isEmpty) Iterator.empty
-          else {
-            val code = RaBitQ.Code(cm, codes, bits, dim)
-            var hit = false
-            var i = 0
-            while (!hit && i < sps.length) {
-              val (rad, qr, qSum, qNormSq, cDot) = sps(i)
-              val lb0 = lbOf(code, bits, dim, isL2, qr, qSum, qNormSq, cDot, eps)
-              val lb = if (isCos) 1.0 + lb0 else lb0 // cosdist output shift
-              if (lb < rad) hit = true
-              i += 1
-            }
-            if (hit) Iterator.single(id) else Iterator.empty
-          }
-        }
-      }.limit(cap + 1).collect()
   }
 
   /** One index's on-disk layout snapshot: current generation name, the
@@ -1420,37 +1394,36 @@ object IvfIndex {
     scored
   }
 
-  /** Batched MULTI-ROOT sphere range — the range analogue of
-    * [[searchManyMulti]] and the amortized form of the planner's
-    * partitioned range serve (reference opclass strategy 2,
-    * scanners/default.rs:111-117 cutoff, over partition.slt-style
-    * per-child indexes): M spheres x R roots answered by a CONSTANT
-    * number of Spark jobs. Job 1 pools (qid, root, id) code-estimate
+  /** Batched MULTI-ROOT sphere range — the ONE IVF range implementation
+    * (reference opclass strategy 2, scanners/default.rs:111-117 cutoff):
+    * M spheres x R roots answered by a CONSTANT number of Spark jobs.
+    * [[IvfIndex.rangeSearch]] is this fold at M = 1, R = 1; a batch over
+    * one index passes `Seq(idx)`; partition.slt-style corpora pass every
+    * per-child index. Job 1 pools (qid, root, id) code-estimate
     * survivors over every root's sphere-intersecting cells from ONE flat
     * parquet relation (a row passes its cell's spheres' epsilon-scaled
-    * lower bound, cos-shifted at the cutoff like the single-root path).
-    * Survivor delivery is two-tier: BOUNDED survivor sets (under
+    * lower bound, cos-shifted at the cutoff). Survivor delivery is
+    * two-tier: BOUNDED survivor sets (under
     * `graft.ann.range.maxDriverSurvivors`, default 1M tuples) collect
     * once and the exact strict-< cutoff runs as a membership
-    * mapPartitions over the flat VECTOR read — two jobs total; past the
-    * bound, survivors stay a DATAFRAME end to end — joined to the
-    * root-tagged vector read on (root, id), broadcast while bounded
-    * ([[rangeBroadcastCap]]) — so a low-selectivity sphere over billions
-    * of rows is served without any driver candidate collect (the
-    * [[IvfIndex.rangeSearchMany]] output contract). Spheres
-    * whose code bound kept more than [[rangeScanFallbackFrac]] of the
-    * union corpus take the direct-scan fallback over their own probed
-    * cells instead (per query, like the single-index batch — mixed
+    * mapPartitions over the flat VECTOR read (or a point fetch from the
+    * rerank table) — two jobs total; past the bound, survivors stay a
+    * DATAFRAME end to end — joined to the root-tagged vector read on
+    * (root, id), broadcast while bounded ([[rangeBroadcastCap]]) — so a
+    * low-selectivity sphere over billions of rows is served without any
+    * driver candidate collect. Spheres whose code bound kept more than
+    * [[rangeScanFallbackFrac]] of the corpus take the direct-scan
+    * fallback over their own probed cells instead (per query — mixed
     * batches split row sets, not plans). Queries are prepped PER ROOT
     * (rotation / cosine normalization may differ), and each row scores
     * only under its own root's prep. Children must share dim and metric;
     * STORAGE-mixed corpora (f32 + f16, full + codes-only with a rerank
     * table) serve by homogeneous group — per-group survivor frames union
     * exactly, since the range contract is a per-row cutoff with no
-    * cross-group merge state. Like [[IvfIndex.rangeSearchMany]], an
-    * id stored twice in one root (gen + delta, append-without-delete)
-    * yields its rows independently — both pass the exact cutoff
-    * honestly. Output: (qid, id, dist) ascending (qid, dist, id). */
+    * cross-group merge state. An id stored twice in one root (gen +
+    * delta, append-without-delete) yields its rows independently — both
+    * pass the exact cutoff honestly. Output: (qid, id, dist) ascending
+    * (qid, dist, id). */
   def rangeSearchManyMulti(idxs: Seq[IvfIndex],
       queries: Array[(Long, Array[Float], Double)],
       epsilon: Double = 1.9,
@@ -1513,71 +1486,21 @@ object IvfIndex {
     val h = idxs.head
     val spark = h.spark
     import spark.implicits._
-    val metric = h.meta.cfg.metric
+    val met = h.meta.cfg.metric
     val f16 = h.meta.cfg.storage == "f16"
     val nQ = queries.length
-    val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
-    val files =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    // per root: cid -> preps of the spheres whose range cells include it
-    // ((queryIdx, radius, qr, qSum, qNormSq, clusterDot) per sphere); and
-    // per (root, query) the prepped vector + probed cells (the exact
-    // phase and the scan fallback reuse them — no re-probing)
-    val prepByRoot = Array.fill(idxs.length)(scala.collection.mutable
-      .HashMap.empty[Int, List[(Int, Double, Array[Float], Double, Double, Double)]])
-    val qqByRoot = Array.ofDim[Array[Float]](idxs.length, nQ)
-    val cellsByRootQ = Array.ofDim[Array[Int]](idxs.length, nQ)
-    idxs.zipWithIndex.foreach { case (ix, r) =>
-      val allProbed = scala.collection.mutable.LinkedHashSet.empty[Int]
-      queries.zipWithIndex.foreach { case ((_, center, radius), qi) =>
-        graft.eval.QueryRecorder.record(ix.dir, center)
-        val qq = ix.prepQuery(center)
-        qqByRoot(r)(qi) = qq
-        val probed = ix.rangeCells(qq, radius)
-        cellsByRootQ(r)(qi) = probed
-        val pc = ix.clusterPrep(qq, probed)
-        probed.foreach { cid =>
-          val (qr, qSum, qNormSq, cDot) = pc(cid)
-          prepByRoot(r)(cid) = (qi, radius, qr, qSum, qNormSq, cDot) ::
-            prepByRoot(r).getOrElse(cid, Nil)
-          allProbed += cid
-        }
-      }
-      probedDirs(ix, r, allProbed, info, files)
-    }
-    if (files.isEmpty)
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-    val eps = epsilon
-    val met = metric
-    val qidArr = queries.map(_._1)
-    val bInfo = spark.sparkContext.broadcast(info.toMap)
-    val bPreps = spark.sparkContext.broadcast(
-      prepByRoot.map(_.view.mapValues(_.toArray).toMap))
-    // job 1 (lazy plan): code-only estimate pass over the flat relation —
-    // a row emits EVERY passing sphere (per-qid survivors, unlike the
-    // planner's any-sphere pooled ids), deduped so a gen+delta double row
+    // job 1 (lazy plan): the shared code-estimate pass, emitting EVERY
+    // passing sphere (per-qid survivors, unlike the planner's
+    // any-sphere pooled ids). The driver tier dedups what it collects;
+    // the distributed tier dedups `cand0` so a gen+delta double row
     // does not multiply through the join below
-    val cand0 = flatCodesFor(spark, files.toArray)
-      .mapPartitions { it =>
-        val info = bInfo.value
-        val preps = bPreps.value
-        val dirCache = new java.util.HashMap[String, DirInfo]()
-        it.flatMap { case (id, cm, codes, path) =>
-          val (root, cid, bits, dim, isL2, isCos) =
-            dirInfoFor(info, dirCache, path)
-          val sps = preps(root).getOrElse(cid,
-            Array.empty[(Int, Double, Array[Float], Double, Double, Double)])
-          if (sps.isEmpty) Iterator.empty
-          else {
-            val code = RaBitQ.Code(cm, codes, bits, dim)
-            sps.iterator.flatMap { case (qi, rad, qr, qSum, qNormSq, cDot) =>
-              val lb0 = lbOf(code, bits, dim, isL2, qr, qSum, qNormSq, cDot, eps)
-              val lb = if (isCos) 1.0 + lb0 else lb0 // cosdist output shift
-              if (lb < rad) Iterator.single((qi, root, id)) else Iterator.empty
-            }
-          }
-        }
-      }.toDF("qi", "root", "id").distinct()
+    val RangeEstimate(codes, hits, files, bInfo, qqByRoot, cellsByRootQ) =
+      rangeEstimate(idxs, queries.map(q => (q._2, q._3)), epsilon, firstHit = false)
+    if (codes == null)
+      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
+    val est = codes.mapPartitions(hits)
+    val qidArr = queries.map(_._1)
+    lazy val cand0 = est.toDF("qi", "root", "id").distinct()
     val nTable = idxs.map(_.rowCount).sum
     // TWO-TIER survivor delivery. Common case (bounded survivors): ONE
     // estimate pass collects the (qi, root, id) survivors to the driver
@@ -1589,7 +1512,9 @@ object IvfIndex {
     // DataFrame end to end — one count job for the no-prune split, the
     // estimate pass re-runs inside the join (the honest duplicate at
     // sizes where the join dominates anyway), candidates broadcast
-    // while bounded. Both tiers are exact and spec'd equal.
+    // while bounded. Both tiers are exact and spec'd equal. The bound
+    // counts collected tuples before the driver dedup, so gen+delta
+    // doubles can tip a sphere near it into the distributed tier.
     val maxDriver = scala.util.Try(
         spark.conf.get("graft.ann.range.maxDriverSurvivors").toLong)
       .getOrElse(1000000L) / math.max(1, capDivisor)
@@ -1597,15 +1522,15 @@ object IvfIndex {
       if (maxDriver <= 0) null
       else {
         val lim = math.min(maxDriver, (Int.MaxValue - 2).toLong).toInt
-        val r = cand0.as[(Int, Int, Long)].limit(lim + 1).collect()
-        if (r.length > lim) null else r
+        val r = est.limit(lim + 1).collect()
+        if (r.length > lim) null else r.distinct
       }
-    // per-query no-prune check over THIS GROUP's corpus (the
-    // rangeSearchMany policy; on a storage-mixed call each group decides
-    // its own scan fallback against its own rows — the fallback concerns
-    // the scan the group itself would run): spheres whose code bound
-    // kept most rows take the direct scan of their own probed cells —
-    // the join adds cost without removing work there.
+    // per-query no-prune check over THIS GROUP's corpus (on a
+    // storage-mixed call each group decides its own scan fallback
+    // against its own rows — the fallback concerns the scan the group
+    // itself would run): spheres whose code bound kept most rows take
+    // the direct scan of their own probed cells — the join adds cost
+    // without removing work there.
     val perQ: Array[(Int, Long)] =
       if (probeRows != null)
         probeRows.groupBy(_._1).view.mapValues(_.length.toLong).toArray
@@ -1622,7 +1547,7 @@ object IvfIndex {
     // bookkeeping the scan fallback already uses); dir resolution stays
     // on the full `info` map (a superset is fine).
     lazy val vecFiles: Array[org.apache.hadoop.fs.FileStatus] =
-      if (scanQis.isEmpty) files.toArray
+      if (scanQis.isEmpty) files
       else {
         val jInfo = scala.collection.mutable.HashMap.empty[String, DirInfo]
         val jFiles =
@@ -1671,7 +1596,7 @@ object IvfIndex {
         if (d < r) Iterator.single((qids(qi), id, d)) else Iterator.empty
       }
     }
-    val emptyScored = Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
+    lazy val emptyScored = Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
     val scored: org.apache.spark.sql.DataFrame = if (probeRows != null) {
       // DRIVER-survivor tier: membership maps ship as broadcasts; the
       // flat vector read is scanned ONCE with per-row membership checks
@@ -1714,8 +1639,20 @@ object IvfIndex {
             surv.groupBy(_._3).view.mapValues(_.map(_._1).distinct).toMap
           val bI2Q = spark.sparkContext.broadcast(id2q)
           val candIds = id2q.keysIterator.toArray.sorted
-          src.join(broadcast(candIds.toSeq.toDF("__cand_id")),
-              col(idCol).cast("long") === col("__cand_id"))
+          // POINT FETCH while the id set fits a pushed parquet IN: the
+          // exact set then reaches row-group/page pruning, so the fetch
+          // reads only the pages the candidates live in (measured 7x on
+          // the 10M x 768d codes-only anchor — see ensureInPushdown).
+          // Past inPushdownCap the pushed set would overflow parquet's
+          // or-chain visitor, so larger sets broadcast-join instead.
+          val fetched =
+            if (candIds.length <= IvfIndex.inPushdownCap) {
+              ensureInPushdown(spark, candIds.length)
+              src.filter(col(idCol).isin(candIds.map(java.lang.Long.valueOf): _*))
+            } else
+              src.join(broadcast(candIds.toSeq.toDF("__cand_id")),
+                col(idCol).cast("long") === col("__cand_id"))
+          fetched
             .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
             .as[(Long, Seq[Float])]
             .mapPartitions { it =>
@@ -2633,105 +2570,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     }
   }
 
-  /** Estimate-phase survivors of the radius cutoff as a LAZY single-column
-    * (`id`) frame: ids whose epsilon-scaled code lower bound undercuts
-    * `radius` (same bound `search` trusts), read from codes only — the vec
-    * column is never touched. Never materialized on the driver here;
-    * callers either take a bounded `.limit(...).collect()` probe or join
-    * it distributed. */
-  private def rangeCandidateDf(center: Array[Float], radius: Double,
-                               epsilon: Double): Dataset[Long] = {
-    val qq = prepQuery(center)
-    val probed = rangeCells(qq, radius)
-    if (probed.isEmpty) return spark.emptyDataset[Long]
-    val perCluster = clusterPrep(qq, probed)
-    val bpc = spark.sparkContext.broadcast(perCluster)
-    val bits = meta.cfg.bits
-    val dim = meta.dim
-    val metric = meta.cfg.metric
-    val rad = radius
-    codesDf.filter(IvfIndex.inCells(probed))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-      .mapPartitions { it =>
-        val pc = bpc.value
-        it.flatMap { case (cid, id, cm, codes) =>
-          val (qr, qSum, qNormSq, clusterDot) = pc(cid)
-          val lb0 = IvfIndex.lbOf(RaBitQ.Code(cm, codes, bits, dim), bits, dim,
-            metric == "l2", qr, qSum, qNormSq, clusterDot, epsilon)
-          val lb = if (metric == "cosdist") 1.0 + lb0 else lb0
-          if (lb < rad) Iterator.single(id) else Iterator.empty
-        }
-      }
-  }
-
-  /** Bounded driver probe of [[rangeCandidateDf]]: at most `cap + 1` ids
-    * (CollectLimit's incremental jobs stop early), so callers can detect
-    * overflow without materializing an unbounded driver set. */
-  private[graft] def rangeCandidateIds(center: Array[Float], radius: Double,
-                                       epsilon: Double, cap: Int): Array[Long] =
-    rangeCandidateFrame(center, radius, epsilon, cap).collect()
-
-  /** LAZY capped range-candidate frame — [[rangeCandidateIds]] without the
-    * collect, for callers that union MANY per-root indexes' candidates
-    * into one planning job (AnnTopKRewrite.serveRange over a partitioned
-    * table). cap+1 rows lets the caller detect overflow. */
-  private[graft] def rangeCandidateFrame(center: Array[Float], radius: Double,
-                                         epsilon: Double, cap: Int): Dataset[Long] =
-    rangeCandidateDf(center, radius, epsilon).limit(cap + 1)
-
-  /** Batched [[rangeCandidateIds]]: the UNION of every sphere's
-    * estimate-phase survivors in ONE Spark job — a single codes pass over
-    * the union of all spheres' intersecting cells, each row tested
-    * against just the spheres probing its cell (the [[rangeSearchMany]]
-    * estimate kernel, candidates only; a row exits at its FIRST passing
-    * sphere). Distinct ids, capped at `cap + 1` so callers detect
-    * overflow without an unbounded driver collect. The range-JOIN planner
-    * (AnnTopKRewrite.serveRangeJoin) pools all query rows through this,
-    * so planning cost is flat in the queries-side row count — the old
-    * shape paid one serialized driver-blocking job per query row. */
-  private[graft] def rangeCandidateIdsMany(spheres: Array[(Array[Float], Double)],
-                                           epsilon: Double, cap: Int): Array[Long] = {
-    if (spheres.isEmpty) return Array.empty
-    val metric = meta.cfg.metric
-    val bits = meta.cfg.bits
-    val dim = meta.dim
-    val preps = spheres.map { case (c, r) =>
-      val qq = prepQuery(c)
-      val probed = rangeCells(qq, r)
-      (r, probed, clusterPrep(qq, probed))
-    }
-    val allCells = preps.flatMap(_._2).distinct
-    if (allCells.isEmpty) return Array.empty
-    val byCell: Map[Int, Array[Int]] =
-      preps.zipWithIndex
-        .flatMap { case (p, qi) => p._2.map(cid => (cid, qi)) }
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val bPreps = spark.sparkContext.broadcast(preps)
-    val bByCell = spark.sparkContext.broadcast(byCell)
-    codesDf.filter(IvfIndex.inCells(allCells))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-      .mapPartitions { it =>
-        val preps = bPreps.value
-        val byCell = bByCell.value
-        it.flatMap { case (cid, id, cm, codes) =>
-          val code = RaBitQ.Code(cm, codes, bits, dim)
-          val qis = byCell.getOrElse(cid, Array.empty[Int])
-          var hit = false
-          var i = 0
-          while (!hit && i < qis.length) {
-            val (r, _, pc) = preps(qis(i))
-            val (qr, qSum, qNormSq, clusterDot) = pc(cid)
-            val lb0 = IvfIndex.lbOf(code, bits, dim, metric == "l2",
-              qr, qSum, qNormSq, clusterDot, epsilon)
-            val lb = if (metric == "cosdist") 1.0 + lb0 else lb0
-            if (lb < r) hit = true
-            i += 1
-          }
-          if (hit) Iterator.single(id) else Iterator.empty
-        }
-      }.distinct().limit(cap + 1).collect()
-  }
-
   /**
    * Sphere range query SERVED BY THE INDEX — reference opclass strategy 2
    * (`WHERE embedding <<metric>> sphere(c, r)`): the sphere center becomes
@@ -2739,338 +2577,20 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
    * (src/index/vchordrq/opclass.rs:145-172, scanners/default.rs:75-117).
    *
    * Three-stage pruning: (1) CELL — triangle bound d(q, centroid) -
-   * cellRadius < r keeps only cells intersecting the sphere (partition
-   * pruning on cluster_id); (2) ROW — the epsilon-scaled code lower bound
-   * drops rows that cannot qualify, from the codes columns only; (3) the
-   * exact strict `dist < radius` cutoff at rerank (vec column read only
-   * for estimate survivors). Output: (id, dist) ascending (dist, id).
-   *
-   * Two serving shapes, picked by survivor count: up to `maxInList`
-   * survivors the candidate ids ride the plan as an IN filter pushed to
-   * the parquet scan (a bounded driver round-trip, the same shape the
-   * planner emits); PAST `maxInList` the candidates never touch the
-   * driver — the code-estimate survivors stay a distributed frame joined
-   * to the cell-pruned exact side (the [[rangeSearchMany]] shape), so a
-   * low-selectivity sphere over billions of rows is served without any
-   * driver candidate collect or multi-MB IN list in the plan.
+   * cellRadius < r keeps only cells intersecting the sphere; (2) ROW —
+   * the epsilon-scaled code lower bound drops rows that cannot qualify,
+   * from the codes columns only; (3) the exact strict `dist < radius`
+   * cutoff (vec column read only for estimate survivors). This is the
+   * batched multi-root fold ([[IvfIndex.rangeSearchManyMulti]]) with one
+   * sphere and one root, so survivor delivery, the no-prune scan
+   * fallback and the rerank-table point fetch are that fold's.
+   * Output: (id, dist) ascending (dist, id).
    */
   def rangeSearch(center: Array[Float], radius: Double, epsilon: Double = 1.9,
-                  rerankTable: Option[(DataFrame, String, String)] = None,
-                  maxInList: Int = 65536,
-                  scanFallbackFrac: Double = IvfIndex.rangeScanFallbackFrac): DataFrame = {
-    // maxInList: the IN-shape fetch stays the plan while the candidate
-    // set fits this driver-side cap (64k longs = 512 KB — trivial to
-    // collect, and with ensureInPushdown the exact set reaches Parquet's
-    // row-group/page pruning, so the fetch reads only touched pages).
-    // Past it, the distributed candidate-join shape takes over. 8192 was
-    // the cap while big INs degraded to un-pruning range filters; with
-    // that fixed, the wider fast regime is strictly better.
-    requireRerankSource(rerankTable)
-    graft.eval.QueryRecorder.record(dir, center)
-    // bounded probe: collect at most maxInList+1 ids to pick the shape
-    val cand = rangeCandidateIds(center, radius, epsilon, maxInList)
-    val qq = prepQuery(center)
-    if (cand.length > maxInList) {
-      // DISTRIBUTED shape: candidates as a frame end-to-end, joined to
-      // the exact side — no driver id set, no giant InSet in the plan
-      IvfIndex.rangeDelegations.incrementAndGet()
-      // distinct(): the estimate pass emits one survivor row per DATA row,
-      // so an id present in both gen and delta would appear twice and the
-      // join would MULTIPLY result rows (2x2) — the IN shape filters and
-      // never multiplies; distinct keeps the two shapes cardinality-equal
-      val candDf0 = rangeCandidateDf(center, radius, epsilon).toDF("id").distinct()
-      // Join shape: Catalyst cannot size a mapPartitions-derived frame, so
-      // it plans SortMergeJoin — which SHUFFLES the full data/source side
-      // (measured at 10M x 768d: a ~30 GB sort shuffle for a 10k-id
-      // candidate set; AQE only downgrades to broadcast AFTER that map
-      // stage is written). The candidate count is cheap to know exactly
-      // (one codes-only scan, vec never touched): broadcast the id set
-      // while it is bounded, keep the shuffle join only for genuinely
-      // huge spheres where shipping the table is the honest cost.
-      val nCandDistributed = candDf0.count()
-      // NO-PRUNE FALLBACK: when the code bound keeps most of the table
-      // (coarse bits=1 codes + a wide sphere on unclustered data — the
-      // measured pathology: a 0.1%-selectivity sphere over uniform
-      // 768d/bits=1 kept millions of "candidates" and the join+fetch ran
-      // 10x the brute scan), the estimate pass is not pruning and the
-      // honest plan is the straight exact scan with the cutoff — same
-      // rows rescored, none of the join machinery.
-      if (nCandDistributed > rowCount * scanFallbackFrac) {
-        IvfIndex.rangeScanFallbacks.incrementAndGet()
-        return (rerankTable match {
-          case None =>
-            val exact = exactDistCol(qq)
-            val probed = rangeCells(qq, radius)
-            dataDf.filter(IvfIndex.inCells(probed))
-              .select($"id", exact($"vec").as("dist"))
-              .filter(col("dist") < radius)
-          case Some((src, idCol, vecCol)) =>
-            // same opaque typed cutoff as the join shape (see below for
-            // why an expression filter must not be used here)
-            val met = meta.cfg.metric
-            val bQ = spark.sparkContext.broadcast((center, radius))
-            src.select(col(idCol).cast("long").as("id"),
-                col(vecCol).cast("array<float>").as("__v"))
-              .as[(Long, Array[Float])]
-              .mapPartitions { it =>
-                val (q, r) = bQ.value
-                it.flatMap { case (id, v) =>
-                  val d = met match {
-                    case "l2"      => K.l2(v, q)
-                    case "negdot"  => K.negdot(v, q)
-                    case "cosdist" => K.cosdist(v, q)
-                  }
-                  if (d < r) Iterator.single((id, d)) else Iterator.empty
-                }
-              }.toDF("id", "dist")
-        }).orderBy(col("dist"), col("id"))
-      }
-      val candDf =
-        if (nCandDistributed <= IvfIndex.rangeBroadcastCap) broadcast(candDf0)
-        else candDf0
-      rerankTable match {
-        case None =>
-          // dataDf is the index's own parquet — never a catalog-registered
-          // source table, so the expression-level cutoff cannot be
-          // re-matched by the range-serve planner rule
-          val exact = exactDistCol(qq)
-          val probed = rangeCells(qq, radius)
-          dataDf.filter(IvfIndex.inCells(probed))
-            .join(candDf, Seq("id"))
-            .select($"id", exact($"vec").as("dist"))
-            .filter(col("dist") < radius)
-            .orderBy($"dist", $"id")
-        case Some((src, idCol, vecCol)) =>
-          // OPAQUE typed cutoff, not an expression filter: `src` may be an
-          // AnnCatalog-registered table, and an expression-level
-          // `dist < radius` would be pushed below the join by Catalyst
-          // into Filter(sphereCond, relation) — which the range-serve rule
-          // would re-match, paying an extra planning job and re-pruning at
-          // the CONF epsilon over the caller's explicit one. mapPartitions
-          // cannot be pushed or re-matched (same design as rangeSearchMany).
-          val met = meta.cfg.metric
-          val bQ = spark.sparkContext.broadcast((center, radius))
-          src.select(col(idCol).cast("long").as("id"),
-              col(vecCol).cast("array<float>").as("__v"))
-            .join(candDf, Seq("id"))
-            .select($"id", $"__v").as[(Long, Array[Float])]
-            .mapPartitions { it =>
-              val (q, r) = bQ.value
-              it.flatMap { case (id, v) =>
-                val d = met match {
-                  case "l2"      => K.l2(v, q)
-                  case "negdot"  => K.negdot(v, q)
-                  case "cosdist" => K.cosdist(v, q)
-                }
-                if (d < r) Iterator.single((id, d)) else Iterator.empty
-              }
-            }.toDF("id", "dist")
-            .orderBy(col("dist"), col("id"))
-      }
-    } else {
-      ensureInPushdown(cand.length)
-      rerankTable match {
-      case None =>
-        val exact = exactDistCol(qq)
-        // partition-prune the rerank to sphere-intersecting cells (the
-        // id filter alone would touch every cell's files — the same
-        // cluster_id pruning `search` applies to its rerank scan)
-        val probed = rangeCells(qq, radius)
-        dataDf.filter(IvfIndex.inCells(probed))
-          .filter(col("id").isin(cand.map(java.lang.Long.valueOf): _*))
-          .select($"id", exact($"vec").as("dist"))
-          .filter(col("dist") < radius)
-          .orderBy($"dist", $"id")
-      case Some((src, idCol, vecCol)) =>
-        val exact = rawDistCol(center)
-        src.filter(col(idCol).isin(cand.map(java.lang.Long.valueOf): _*))
-          .select(col(idCol).cast("long").as("id"), exact(col(vecCol)).as("dist"))
-          .filter(col("dist") < radius)
-          .orderBy(col("dist"), col("id"))
-      }
-    }
-  }
-
-  /**
-   * Batch sphere range: all `queries` (qid, center, radius) answered in
-   * ONE plan, independent of batch size — the range analogue of
-   * [[searchMany]]. The estimate side scans the UNION of all
-   * sphere-intersecting cells' code columns once, each row tested
-   * against just the queries probing its cell (epsilon-scaled lower
-   * bound, as [[rangeSearch]]); the (qid, id) survivors join back to the
-   * cell-pruned data for the exact strict-< cutoff — fully distributed,
-   * no driver candidate collect at all (the single-query path collects
-   * its bounded id list; a batch of selective spheres can exceed any
-   * driver bound, so here candidates stay a DataFrame end to end).
-   * Output: (qid, id, dist) ascending (qid, dist, id).
-   */
-  def rangeSearchMany(queries: Array[(Long, Array[Float], Double)],
-                      epsilon: Double = 1.9,
-                      rerankTable: Option[(DataFrame, String, String)] = None): DataFrame = {
-    require(queries.nonEmpty, "empty query batch")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "duplicate qids in query batch — results would silently merge")
-    requireRerankSource(rerankTable)
-    queries.foreach(q => graft.eval.QueryRecorder.record(dir, q._2))
-    val metric = meta.cfg.metric
-    val bits = meta.cfg.bits
-    val dim = meta.dim
-    // driver prep: per query, prepped vector + probed cells + per-cell sums
-    val preps = queries.map { case (qid, c, r) =>
-      val qq = prepQuery(c)
-      val probed = rangeCells(qq, r)
-      (qid, qq, r, probed, clusterPrep(qq, probed))
-    }
-    val allCells = preps.flatMap(_._4).distinct
-    if (allCells.isEmpty)
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-    // cid -> indices of queries probing it (dense arrays, no per-row maps)
-    val byCell: Map[Int, Array[Int]] =
-      preps.zipWithIndex
-        .flatMap { case (p, qi) => p._4.map(cid => (cid, qi)) }
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val bPreps = spark.sparkContext.broadcast(preps)
-    val bByCell = spark.sparkContext.broadcast(byCell)
-    // job 1 (lazy plan): code-only estimate pass over the union of cells
-    val cand0 = codesDf
-      .filter(IvfIndex.inCells(allCells))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-      .mapPartitions { it =>
-        val preps = bPreps.value
-        val byCell = bByCell.value
-        it.flatMap { case (cid, id, cm, codes) =>
-          val code = RaBitQ.Code(cm, codes, bits, dim)
-          byCell.getOrElse(cid, Array.empty[Int]).iterator.flatMap { qi =>
-            val (qid, _, r, _, pc) = preps(qi)
-            val (qr, qSum, qNormSq, clusterDot) = pc(cid)
-            val lb = metric match {
-              case "l2" =>
-                val (e, err) = RaBitQ.estimateL2s(code, qr, qSum, qNormSq)
-                math.sqrt(math.max(e - epsilon * err, 0.0))
-              case _ =>
-                val d = RaBitQ.estimateDot(code, qr, qSum) + clusterDot
-                val err = math.sqrt(qNormSq) * code.scale * math.sqrt(dim.toDouble)
-                val base = -d - epsilon * err
-                if (metric == "cosdist") 1.0 + base else base
-            }
-            if (lb < r) Iterator.single((qid, id)) else Iterator.empty
-          }
-        }
-      }.toDF("qid", "id")
-      // one survivor row per DATA row: dedupe so an id stored twice
-      // (gen + delta) does not multiply through the join below
-      .distinct()
-    // Same join-shape decision as the delegated single-query path: the
-    // survivor frame is un-sizable to Catalyst, so without help the join
-    // below plans SortMergeJoin and shuffles the wide data/source side.
-    // The survivor count job doubles as the PER-QUERY no-prune check:
-    // queries whose code bound kept more than rangeScanFallbackFrac of
-    // the table take the DIRECT-SCAN fallback (the single-query path's
-    // defense — the join adds cost without removing work there), while
-    // pruning queries keep the candidate join. Mixed batches split row
-    // sets, not plans.
-    val perQ = cand0.groupBy("qid").count().as[(Long, Long)].collect()
-    val nTable = rowCount
-    val scanQids: Set[Long] =
-      perQ.filter(_._2 > nTable * IvfIndex.rangeScanFallbackFrac).map(_._1).toSet
-    if (scanQids.nonEmpty) IvfIndex.rangeScanFallbacks.addAndGet(scanQids.size)
-    val candJoin0 =
-      if (scanQids.isEmpty) cand0
-      else cand0.filter(!col("qid").isin(scanQids.toSeq.map(java.lang.Long.valueOf): _*))
-    val nJoinSurvivors = perQ.collect { case (q, c) if !scanQids.contains(q) => c }.sum
-    val cand =
-      if (nJoinSurvivors <= IvfIndex.rangeBroadcastCap) broadcast(candJoin0) else candJoin0
-    // job 2: exact cutoff — cell-pruned vectors joined to survivors, the
-    // kernel runs zero-boxing over (qid, vec) rows. Queries are PREPPED
-    // on the driver (normalize/rotate), so the closure ships only the
-    // prepped map — never `meta` or its centroid arrays.
-    import IvfIndex.{cutStatic, cutStaticRaw}
-    val scored = rerankTable match {
-      case None =>
-        val bQs = spark.sparkContext.broadcast(
-          queries.map(q => q._1 -> (prepQuery(q._2), q._3)).toMap)
-        val isF16 = meta.cfg.storage == "f16"
-        val rows = dataDf
-          .filter(IvfIndex.inCells(allCells))
-          .select(col("id"), col("vec"))
-        val joined = rows.join(cand, Seq("id"))
-        if (isF16)
-          joined.select(col("qid"), col("id"), col("vec")).as[(Long, Long, Array[Byte])]
-            .mapPartitions { it =>
-              val qs = bQs.value
-              it.flatMap { case (qid, id, vb) =>
-                cutStatic(qs, qid, id, graft.core.Half.decodeBytes(vb), metric)
-              }
-            }.toDF("qid", "id", "dist")
-        else
-          joined.select(col("qid"), col("id"), col("vec").cast("array<float>"))
-            .as[(Long, Long, Array[Float])]
-            .mapPartitions { it =>
-              val qs = bQs.value
-              it.flatMap { case (qid, id, v) => cutStatic(qs, qid, id, v, metric) }
-            }.toDF("qid", "id", "dist")
-      case Some((src, idCol, vecCol)) =>
-        // rerank-in-table: candidates join the SOURCE table (original f32
-        // vectors, RAW queries) — the only exact path a codes-only index
-        // has, and the batch analogue of rangeSearch's table branch
-        val bQs = spark.sparkContext.broadcast(
-          queries.map(q => q._1 -> (q._2, q._3)).toMap)
-        src.select(col(idCol).cast("long").as("id"),
-            col(vecCol).cast("array<float>").as("__v"))
-          .join(cand, Seq("id"))
-          .select(col("qid"), col("id"), col("__v")).as[(Long, Long, Array[Float])]
-          .mapPartitions { it =>
-            val qs = bQs.value
-            it.flatMap { case (qid, id, v) => cutStaticRaw(qs, qid, id, v, metric) }
-          }.toDF("qid", "id", "dist")
-    }
-    // direct-scan rows for the no-prune queries: one pass over the
-    // (cell-pruned) data or source, every scan query tested per row —
-    // the same kernels, none of the join machinery
-    val scanned: Option[DataFrame] =
-      if (scanQids.isEmpty) None
-      else Some(rerankTable match {
-        case None =>
-          val bQs = spark.sparkContext.broadcast(
-            queries.filter(q => scanQids.contains(q._1))
-              .map(q => q._1 -> (prepQuery(q._2), q._3)).toMap)
-          val cells = preps.filter(p => scanQids.contains(p._1)).flatMap(_._4).distinct
-          val isF16 = meta.cfg.storage == "f16"
-          val rows = dataDf
-            .filter(IvfIndex.inCells(cells))
-            .select(col("id"), col("vec"))
-          if (isF16)
-            rows.as[(Long, Array[Byte])].mapPartitions { it =>
-              val qs = bQs.value
-              it.flatMap { case (id, vb) =>
-                val v = graft.core.Half.decodeBytes(vb)
-                qs.keysIterator.flatMap(qid => cutStatic(qs, qid, id, v, metric))
-              }
-            }.toDF("qid", "id", "dist")
-          else
-            rows.select(col("id"), col("vec").cast("array<float>"))
-              .as[(Long, Array[Float])].mapPartitions { it =>
-                val qs = bQs.value
-                it.flatMap { case (id, v) =>
-                  qs.keysIterator.flatMap(qid => cutStatic(qs, qid, id, v, metric))
-                }
-              }.toDF("qid", "id", "dist")
-        case Some((src, idCol, vecCol)) =>
-          val bQs = spark.sparkContext.broadcast(
-            queries.filter(q => scanQids.contains(q._1))
-              .map(q => q._1 -> (q._2, q._3)).toMap)
-          src.select(col(idCol).cast("long").as("id"),
-              col(vecCol).cast("array<float>").as("__v"))
-            .as[(Long, Array[Float])].mapPartitions { it =>
-              val qs = bQs.value
-              it.flatMap { case (id, v) =>
-                qs.keysIterator.flatMap(qid => cutStaticRaw(qs, qid, id, v, metric))
-              }
-            }.toDF("qid", "id", "dist")
-      })
-    scanned.map(s => scored.unionByName(s)).getOrElse(scored)
-      .orderBy("qid", "dist", "id")
-  }
+                  rerankTable: Option[(DataFrame, String, String)] = None): DataFrame =
+    IvfIndex.rangeSearchManyMulti(Seq(this), Array((0L, center, radius)),
+        epsilon, rerankTable)
+      .select("id", "dist")
 
   /**
    * Batch ANN: all `queries` served by TWO Spark jobs total, independent
@@ -3207,8 +2727,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
         }
         out.iterator
       }
-    val dbg = sys.env.contains("GRAFT_SEARCH_DEBUG")
-    val tEst0 = System.nanoTime()
     // per-query top-nCand fold (job 1) — r18: the RDD heap fold replaces
     // the former toDF + row_number window + collect, whose per-call
     // Catalyst planning and codegen dominated the sliced KNN-join's
@@ -3246,7 +2764,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
           (qid, id, i + 1, lb)
         }
       }
-    if (dbg) System.err.println(s"[searchMany] est+fold+collect: ${(System.nanoTime()-tEst0)/1e9}s, pairs=${candRows.length}")
     if (candRows.isEmpty)
       return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
     // budgeted mode: only the first exactBudget candidates per query (in
@@ -3269,7 +2786,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     // rerank (job 2): InternalRow scan of the probed clusters; candidate
     // membership via a sorted-id binary search (no giant In list, no join
     // machinery); scored pairs (B x nCand at most) merge on the driver
-    val tRr = System.nanoTime()
     val qidToQi = preps.zipWithIndex.map { case ((qid, _, _), qi) => qid -> qi }.toMap
     val idToQi = new java.util.HashMap[java.lang.Long, Array[Int]]()
     candPairs.groupBy(_._2).foreach { case (id, qs) =>
@@ -3324,7 +2840,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
               .map(qi => (qi.toLong, id, kern(v, bRaw.value(qi))))
           }.collect().map { case (qi, id, d) => (preps(qi.toInt)._1, id, d) }
     }
-    if (dbg) System.err.println(s"[searchMany] rerank scan: ${(System.nanoTime()-tRr)/1e9}s, scored=${scored.length}")
     // driver-side final top-k per query (at most B x nCand rows); in
     // budgeted mode the rough remainder merges in with estimate distances
     val out = (scored ++ roughRows).groupBy(_._1).toSeq.flatMap { case (qid, rows) =>

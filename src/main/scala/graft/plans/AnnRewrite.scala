@@ -1216,7 +1216,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if spark.conf.get("graft.ann.range.enable", "true").toBoolean =>
         serveRange(f, metric, attr, cv, radius, rel).getOrElse(f)
 
-      // BATCH range as a JOIN (the SQL surface of rangeSearchMany):
+      // BATCH range as a JOIN (the SQL surface of rangeSearchManyMulti):
       //   SELECT ... FROM queries q JOIN docs d
       //     ON vec_l2(d.vec, q.center) < q.radius
       // — an index nested-loop range join. The queries side is collected
@@ -2014,12 +2014,11 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * bounded driver-blocking jobs regardless of query-row count AND root
     * count (both counted in [[AnnTopKRewrite.planningJobs]]) — one
     * collect of the capped queries side, then ONE pooled codes pass
-    * answering every sphere ([[IvfIndex.rangeCandidateIdsMany]] on a
-    * single index; the flat multi-root relation of
-    * [[IvfIndex.multiRangeCandidateIds]] on a partitioned side). The old
-    * shape serialized one probe job per query row (up to maxQueries=256
-    * planner-stalling jobs per range-join plan). For bulk M past the cap
-    * use the DSL's `rangeSearchMany`. */
+    * answering every sphere over one flat relation spanning every root's
+    * intersecting cells ([[IvfIndex.multiRangeCandidateIds]], one root or
+    * many). The old shape serialized one probe job per query row (up to
+    * maxQueries=256 planner-stalling jobs per range-join plan). For bulk
+    * M past the cap use [[IvfIndex.rangeSearchManyMulti]]. */
   private def serveRangeJoin(j: Join): Option[LogicalPlan] = {
     val cond = j.condition.get
     val sphere = conjuncts(cond).collectFirst(Function.unlift[Expression,
@@ -2103,7 +2102,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           logWarning(s"range-join serve declined: queries side exceeds " +
             s"$maxQ rows (graft.ann.range.join.maxQueries[Total]) — the " +
             "exact nested-loop join will run. For bulk sphere tables use " +
-            "IvfIndex.rangeSearchMany/rangeSearchManyMulti or " +
+            "IvfIndex.rangeSearchManyMulti or " +
             "AnnCatalog.servedRangeMany, or raise the cap.")
           None
         }
@@ -2117,18 +2116,13 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if (spheres.isEmpty) Some(LocalRelation(j.output))
           else {
             // ONE pooled candidate job for the whole batch: every
-            // sphere's estimate survivors from a single codes pass
-            // (single index) or one flat multi-root relation spanning
-            // every child's intersecting cells (partitioned side) —
-            // distinct, capped so overflow detection is itself bounded
+            // sphere's estimate survivors from one flat relation spanning
+            // every root's intersecting cells, capped so overflow
+            // detection is itself bounded
             AnnTopKRewrite.planningJobs.incrementAndGet()
-            val ids =
-              if (idxs.length == 1)
-                idxs.head.rangeCandidateIdsMany(spheres, eps, maxInList)
-              else
-                IvfIndex.multiRangeCandidateIds(idxs, spheres, eps, maxInList)
-            // overflow BEFORE dedup (the flat multi-root rows may carry
-            // gen+delta duplicates): a truncated-then-deduped list could
+            val ids = IvfIndex.multiRangeCandidateIds(idxs, spheres, eps, maxInList)
+            // overflow BEFORE dedup (the flat rows may carry gen+delta
+            // duplicates): a truncated-then-deduped list could
             // sneak under the cap while missing candidates past it
             if (ids.length > maxInList) None
             else if (ids.isEmpty) Some(LocalRelation(j.output))
@@ -2185,17 +2179,11 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // cluster dirs read as a single scan, the union-level limit makes
         // overflow detection itself bounded — a sphere covering most of a
         // 500-child corpus stops after maxInList+1 ids instead of
-        // materializing every root's pool. A single root keeps the
-        // cache-aware per-index frame.
+        // materializing every root's pool
         AnnTopKRewrite.planningJobs.incrementAndGet()
-        val raw =
-          if (es.length == 1)
-            AnnCatalog.index(spark, es.head)
-              .rangeCandidateFrame(cv.toFloatArray(), radius, eps, maxInList)
-              .collect()
-          else
-            IvfIndex.multiRangeCandidateIds(es.map(AnnCatalog.index(spark, _)),
-              Array((cv.toFloatArray(), radius)), eps, maxInList)
+        val raw = IvfIndex.multiRangeCandidateIds(
+          es.map(AnnCatalog.index(spark, _)),
+          Array((cv.toFloatArray(), radius)), eps, maxInList)
         // overflow check BEFORE dedup: a truncated-then-deduped list could
         // sneak under the cap while silently missing candidates past the
         // limit — serving it would drop qualifying rows.
@@ -2203,15 +2191,15 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // plan rather than escalating. Unlike top-k, a range's output is
         // every qualifying row — there is no k-floor to fill toward, and
         // past maxInList candidates the IN plan loses to the exact
-        // cell-pruned scan anyway (the same economics that cap the
-        // single-root path). Callers with genuinely huge spheres have the
-        // DSL's rangeSearch/rangeSearchMany, which serve the >maxInList
-        // regime with a DISTRIBUTED candidate join and a no-prune scan
-        // fallback — machinery a planner rewrite cannot express as an IN.
-        val all = if (raw.length > maxInList) raw else raw.distinct
+        // cell-pruned scan anyway. Callers with genuinely huge spheres
+        // have IvfIndex.rangeSearch / rangeSearchManyMulti, which serve
+        // that regime with a DISTRIBUTED candidate join and a no-prune
+        // scan fallback — machinery a planner rewrite cannot express as
+        // an IN.
         if (raw.length > maxInList) None
-        else if (all.isEmpty) Some(LocalRelation(f.output))
+        else if (raw.isEmpty) Some(LocalRelation(f.output))
         else {
+          val all = raw.distinct
           ensureInPushdown(all.length)
           Some(stamped(Filter(And(f.condition,
             AnnTopKRewrite.idsInExpr(idAttr, all, idLit)),
@@ -2732,15 +2720,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                  sphAttr.name == es.head.vecCol =>
             val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
             AnnTopKRewrite.planningJobs.incrementAndGet()
-            // >1 roots: one flat read over every root's sphere-intersecting
-            // cluster dirs (no per-root union branches — see unionPool)
-            val raw =
-              if (idxs.length == 1)
-                idxs.head._2.rangeCandidateFrame(sphCv.toFloatArray(),
-                  sphRadius, eps, maxInList).collect()
-              else
-                IvfIndex.multiRangeCandidateIds(idxs.map(_._2),
-                  Array((sphCv.toFloatArray(), sphRadius)), eps, maxInList)
+            // one flat read over every root's sphere-intersecting cluster
+            // dirs (no per-root union branches — see unionPool)
+            val raw = IvfIndex.multiRangeCandidateIds(idxs.map(_._2),
+              Array((sphCv.toFloatArray(), sphRadius)), eps, maxInList)
             // overflow BEFORE dedup: a truncated-then-deduped list could
             // silently miss qualifying candidates past the limit
             if (raw.length > maxInList) escalateMulti()

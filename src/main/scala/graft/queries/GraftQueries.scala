@@ -1171,8 +1171,8 @@ object GraftQueries {
 
     // INDEX-SERVED sphere range + order-by (reference opclass strategy 2
     // WITH sort, pushdown_range.slt): same rows as range_order, but the
-    // sphere filter's candidates come from IvfIndex.rangeCandidateIds at
-    // planning time — cell-pruned codes-only scan, IN pushed to parquet.
+    // sphere filter's candidates come from IvfIndex.multiRangeCandidateIds
+    // at planning time — cell-pruned codes-only scan, IN pushed to parquet.
     // Served against the registered PRIVATE table copy (see
     // ivf_knn_prefilter for why the original path is never registered).
     "range_order_indexed" -> Q(
@@ -1217,15 +1217,16 @@ object GraftQueries {
               |ORDER BY vec_id""".stripMargin)),
 
     // BATCH range (the M-sphere form of strategy 2): three probe centers
-    // answered in one plan via IvfIndex.rangeSearchMany — union-of-cells
-    // codes scan, per-cell query lists, distributed exact cutoff (no
-    // driver candidate collect).
+    // answered by the batched range fold over the one index
+    // (IvfIndex.rangeSearchManyMulti with R = 1) — one codes pass over the
+    // union of intersecting cells, per-cell sphere lists, then the exact
+    // cutoff over the survivors.
     "range_batch_indexed" -> Q(
       (s, d) => {
         val idx = IvfCache.get(s, d)
         val qv = qvecs(s, d, 0L to 2L)
         val qs = Array(0, 1, 2).map(i => (i.toLong, qv(i.toLong), 1.3))
-        idx.rangeSearchMany(qs)
+        IvfIndex.rangeSearchManyMulti(Seq(idx), qs)
           .select(col("qid"), col("id").as("vec_id"), col("dist").as("raw"))
           .orderBy(col("qid"), col("raw"), col("vec_id"))
           .select(col("qid"), col("vec_id"), round(col("raw"), 3).as("dist")) },

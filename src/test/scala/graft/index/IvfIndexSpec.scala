@@ -53,32 +53,36 @@ class IvfIndexSpec extends SparkSpec {
       .select("id").as[Long].collect().toSeq
     assert(viaTable ==
       idx.rangeSearch(q, 1.2).select("id").as[Long].collect().toSeq)
-    // LOW-SELECTIVITY sphere (survivors >> maxInList): the candidate set
-    // must never be collected to the driver — the plan delegates to the
-    // distributed join shape (a Join over the candidate frame, no id IN
-    // list) and still returns the exact sphere contents
-    val d0 = IvfIndex.rangeDelegations.get()
-    // scanFallbackFrac = 2: keep the JOIN shape observable even though a
-    // radius-100 sphere keeps every row (the no-prune fallback below
-    // would otherwise take over, by design)
-    val wide = idx.rangeSearch(q, 100.0, maxInList = 10, scanFallbackFrac = 2.0)
-    assert(IvfIndex.rangeDelegations.get() == d0 + 1,
-      "expected the distributed-candidate delegation")
-    val plan = wide.queryExecution.optimizedPlan.toString
-    assert(plan.contains("Join"), s"expected candidate join shape:\n$plan")
-    val wideGot = wide.select("id").as[Long].collect().toSeq
+    // DISTRIBUTED survivor tier (maxDriverSurvivors = 0): the candidate
+    // set is never collected to the driver — the plan joins the
+    // distributed candidate frame (no id IN list) and still returns the
+    // exact sphere contents. The radius sits between the 100th and 101st
+    // nearest row, so the code bound prunes (no scan fallback).
+    val ds = rows.map { case (_, v) => K.l2(v.toArray, q) }.sorted
+    val rMid = (ds(99) + ds(100)) / 2.0
+    val midWant = rows.map { case (id, v) => (K.l2(v.toArray, q), id) }
+      .filter(_._1 < rMid).sortBy(w => (w._1, w._2)).map(_._2)
+    assert(midWant.length == 100)
+    graft.core.Confs.withConfs(spark, "graft.ann.range.maxDriverSurvivors" -> "0") {
+      val f0 = IvfIndex.rangeScanFallbacks.get()
+      val mid = idx.rangeSearch(q, rMid)
+      val plan = mid.queryExecution.optimizedPlan.toString
+      assert(plan.contains("Join"), s"expected candidate join shape:\n$plan")
+      assert(mid.select("id").as[Long].collect().toSeq == midWant,
+        "distributed tier must equal brute force")
+      // same tier through rerank-in-table
+      val midTbl = idx.rangeSearch(q, rMid, rerankTable = Some((df, "id", "vec")))
+        .select("id").as[Long].collect().toSeq
+      assert(midTbl == midWant, "distributed rerank-in-table path")
+      assert(IvfIndex.rangeScanFallbacks.get() == f0, "a pruning sphere must not fall back")
+    }
+    // NO-PRUNE FALLBACK: a sphere that keeps every row abandons the
+    // candidate join for a straight exact scan — no Join in the plan,
+    // identical rows, counter observable
     val wideWant = rows.map { case (id, v) => (K.l2(v.toArray, q), id) }
       .filter(_._1 < 100.0).sortBy(w => (w._1, w._2)).map(_._2)
-    assert(wideGot == wideWant, "delegated path must equal brute force")
-    // same delegation through rerank-in-table
-    val wideTbl = idx.rangeSearch(q, 100.0, rerankTable = Some((df, "id", "vec")),
-        maxInList = 10, scanFallbackFrac = 2.0).select("id").as[Long].collect().toSeq
-    assert(wideTbl == wideWant, "delegated rerank-in-table path")
-    // NO-PRUNE FALLBACK (default threshold): the same all-keeping sphere
-    // abandons the candidate join for a straight exact scan — no Join in
-    // the plan, identical rows, counter observable
     val f0 = IvfIndex.rangeScanFallbacks.get()
-    val flat = idx.rangeSearch(q, 100.0, maxInList = 10)
+    val flat = idx.rangeSearch(q, 100.0)
     assert(IvfIndex.rangeScanFallbacks.get() == f0 + 1,
       "expected the no-prune scan fallback")
     assert(!flat.queryExecution.optimizedPlan.toString.contains("Join"),
@@ -87,8 +91,8 @@ class IvfIndexSpec extends SparkSpec {
       "fallback path must equal brute force")
     // fallback through rerank-in-table too
     val f1 = IvfIndex.rangeScanFallbacks.get()
-    val flatTbl = idx.rangeSearch(q, 100.0, rerankTable = Some((df, "id", "vec")),
-        maxInList = 10).select("id").as[Long].collect().toSeq
+    val flatTbl = idx.rangeSearch(q, 100.0, rerankTable = Some((df, "id", "vec")))
+      .select("id").as[Long].collect().toSeq
     assert(IvfIndex.rangeScanFallbacks.get() == f1 + 1)
     assert(flatTbl == wideWant, "fallback rerank-in-table path")
   }
@@ -138,40 +142,36 @@ class IvfIndexSpec extends SparkSpec {
       (11L, Array.fill(12)(-0.3f), 0.9),
       (12L, Array.fill(12)(0.05f), 1.5),
       (13L, Array.fill(12)(40f), 0.5)) // empty sphere rides the batch too
-    val got = idx.rangeSearchMany(queries)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+    // a batch over one index is the batched range fold with R = 1,
+    // graded per query against the brute strict-< cutoff
+    def batch(ix: IvfIndex, qs: Array[(Long, Array[Float], Double)]) =
+      IvfIndex.rangeSearchManyMulti(Seq(ix), qs)
+        .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
+        .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+    val got = batch(idx, queries)
     queries.foreach { case (qid, c, r) =>
-      val want = idx.rangeSearch(c, r)
-        .select("id", "dist").as[(Long, Double)].collect().toSeq
+      val want = RangeBruteOracle.brute(rows, c, r, "l2", "f32")
       assert(got.getOrElse(qid, Seq.empty) == want, s"qid $qid")
     }
     // f16 storage: same equality through the decode path
     val idx16 = IvfIndex.build(df, "id", "vec", freshDir(),
       IvfConfig(lists = 16, storage = "f16"))
-    val got16 = idx16.rangeSearchMany(queries.take(2))
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+    val got16 = batch(idx16, queries.take(2))
     queries.take(2).foreach { case (qid, c, r) =>
-      val want = idx16.rangeSearch(c, r)
-        .select("id", "dist").as[(Long, Double)].collect().toSeq
+      val want = RangeBruteOracle.brute(rows, c, r, "l2", "f16")
       assert(got16.getOrElse(qid, Seq.empty) == want, s"f16 qid $qid")
     }
     // MIXED batch with a no-prune query (radius 100 keeps every row): the
     // wide query takes the direct-scan fallback, the selective ones keep
-    // the candidate join — same rows as brute per query either way
+    // the candidate path — same rows as brute per query either way
     val f0 = IvfIndex.rangeScanFallbacks.get()
     val mixed = queries.take(2) :+ ((99L, Array.fill(12)(0.1f), 100.0))
-    val gotMix = idx.rangeSearchMany(mixed)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toSeq).toMap
+    val gotMix = batch(idx, mixed)
     assert(IvfIndex.rangeScanFallbacks.get() == f0 + 1,
       "exactly the wide query falls back to the direct scan")
     mixed.foreach { case (qid, c, r) =>
-      val want = rows.map { case (id, v) => (id, K.l2(v.toArray, c)) }
-        .filter(_._2 < r).sortBy { case (id, d) => (d, id) }
-      assert(gotMix.getOrElse(qid, Seq.empty).map(_._1) == want.map(_._1),
-        s"mixed-batch qid $qid")
+      val want = RangeBruteOracle.brute(rows, c, r, "l2", "f32")
+      assert(gotMix.getOrElse(qid, Seq.empty) == want, s"mixed-batch qid $qid")
     }
   }
 

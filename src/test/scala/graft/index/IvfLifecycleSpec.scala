@@ -147,7 +147,7 @@ class IvfLifecycleSpec extends SparkSpec {
     assert(idx.search(q, 10).isEmpty)
     assert(idx.rangeSearch(q, 0.5).isEmpty)
     assert(idx.searchMany(Array(1L -> q), 10).isEmpty)
-    assert(idx.rangeSearchMany(Array((1L, q, 0.5))).isEmpty)
+    assert(IvfIndex.rangeSearchManyMulti(Seq(idx), Array((1L, q, 0.5))).isEmpty)
     // the create-then-insert lifecycle the reference's AM serves
     val extra = rows.take(50)
     idx.appendDelta(extra.toDF("id", "vec"), "id", "vec")

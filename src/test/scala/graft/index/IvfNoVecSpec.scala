@@ -55,7 +55,7 @@ class IvfNoVecSpec extends SparkSpec {
         () => idx.search(q, 5),
         () => idx.searchExact(q, 5),
         () => idx.rangeSearch(q, 1.0),
-        () => idx.rangeSearchMany(Array((0L, q, 1.0))),
+        () => IvfIndex.rangeSearchManyMulti(Seq(idx), Array((0L, q, 1.0))),
         () => idx.searchMany(Array(0L -> q), 5))) {
       val e = intercept[IllegalArgumentException](thunk())
       assert(e.getMessage.contains("rerankTable"), e.getMessage)
@@ -111,16 +111,58 @@ class IvfNoVecSpec extends SparkSpec {
     assert(in.map(_._1) == expect.map(_._1))
     // distances from the SOURCE table are the raw f32 kernel values
     in.zip(expect).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-5) }
-    // force the distributed join shape (survivors > maxInList)
-    val before = IvfIndex.rangeDelegations.get()
-    val deleg = idx.rangeSearch(q, r, rerankTable = rt, maxInList = 3)
-      .as[(Long, Double)].collect().toSeq
-    assert(IvfIndex.rangeDelegations.get() == before + 1, "must delegate past maxInList")
-    assert(deleg.map(_._1) == expect.map(_._1), "delegated shape must match IN shape")
+    // force the distributed survivor tier (no driver candidate collect)
+    val deleg = graft.core.Confs.withConfs(spark,
+        "graft.ann.range.maxDriverSurvivors" -> "0") {
+      idx.rangeSearch(q, r, rerankTable = rt).as[(Long, Double)].collect().toSeq
+    }
+    assert(deleg.map(_._1) == expect.map(_._1), "distributed tier must match brute")
+    deleg.zip(expect).foreach { case ((_, a), (_, b)) => assert(math.abs(a - b) < 1e-5) }
     // batch shape
-    val many = idx.rangeSearchMany(Array((7L, q, r)), rerankTable = rt)
+    val many = IvfIndex.rangeSearchManyMulti(Seq(idx), Array((7L, q, r)), rerankTable = rt)
       .as[(Long, Long, Double)].collect().toSeq
     assert(many.map(_._2) == expect.map(_._1), "batch range must match brute")
+  }
+
+  test("range point-fetches rerank-table rows: candidate IN pushed to the " +
+       "parquet source scan for one root and for two") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft-ivf-novec-src").resolve("t").toString
+    df.write.parquet(src)
+    val srcDf = spark.read.parquet(src)
+    val srt = Some((srcDf, "id", "vec"))
+    val (a, b) = rows.splitAt(300)
+    val one = IvfIndex.build(df, "id", "vec", freshDir(),
+      IvfConfig(lists = 8, storeVectors = false))
+    val two = Seq(a, b).map(p => IvfIndex.build(p.toDF("id", "vec"), "id", "vec",
+      freshDir(), IvfConfig(lists = 4, storeVectors = false)))
+    val q = Array.fill(16)(0.0f)
+    val ds = rows.map { case (_, v) => K.l2(v.toArray, q) }.sorted
+    val r = (ds(49) + ds(50)) / 2.0
+    val expect = bruteRange(q, r)
+    assert(expect.length == 50, s"bad radius: ${expect.length}")
+    // R = 1 through the single-root face, R = 2 through the batched fold
+    Seq(Seq(one), two).foreach { idxs =>
+      val out =
+        if (idxs.length == 1) one.rangeSearch(q, r, rerankTable = srt)
+        else IvfIndex.rangeSearchManyMulti(idxs, Array((0L, q, r)), rerankTable = srt)
+      // the source scan carries the candidate set as a pushed parquet IN
+      // (an InSet past the optimizer's conversion threshold prints the
+      // same source filter), not a broadcast join that reads every row
+      val scans = out.queryExecution.sparkPlan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.endsWith("/t")) => s
+      }
+      assert(scans.nonEmpty, s"no source scan:\n${out.queryExecution.sparkPlan}")
+      scans.foreach { s =>
+        val pushed = s.metadata.getOrElse("PushedFilters", "")
+        assert(pushed.contains("In(id,"),
+          s"R=${idxs.length}: candidate IN not pushed to the source scan: $pushed")
+      }
+      val got = out.select("id", "dist").as[(Long, Double)].collect().toSeq
+      assert(got.map(_._1) == expect.map(_._1), s"R=${idxs.length}")
+      got.zip(expect).foreach { case ((_, x), (_, y)) => assert(math.abs(x - y) < 1e-5) }
+    }
   }
 
   test("searchMany batch equals single-query results on a codes-only index") {

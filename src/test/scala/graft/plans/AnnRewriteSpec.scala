@@ -470,7 +470,7 @@ class AnnRewriteSpec extends SparkSpec {
       GraftFunctions.registerAll(spark)
       val data = spark.read.parquet(tableDir).as[(Long, Seq[Float])].collect()
       // three query rows drawn from the table itself, each with its OWN
-      // radius — the shape rangeSearchMany answers in the DSL
+      // radius — the shape rangeSearchManyMulti answers in the DSL
       val sql =
         """SELECT q.qid, e.id
           |FROM (SELECT id AS qid, vec AS center,
