@@ -761,19 +761,15 @@ object IvfIndex {
   // Trade, documented: the direct file read bypasses a prewarm() /
   // prewarmCodes() cache on the indexes it reads (probed cells come
   // from the OS page cache instead). Every IVF range path — single-root
-  // included — reads flat, so range never uses those caches; single-root
-  // top-k (search / searchMany / estimateCandidates) keeps the
-  // cache-aware per-index path.
+  // included — reads flat, so range never uses those caches. Top-k picks
+  // its row source by root count (PoolPlan): one root reads its own
+  // cache-aware relations, more roots read flat.
   // ------------------------------------------------------------------
 
   /** Per-dir structural info for the flat read: (root, clusterId, bits,
     * dim, isL2, isCos). Query preps ride a separate broadcast keyed
     * (root, cid, query). */
   private type DirInfo = (Int, Int, Int, Int, Boolean, Boolean)
-
-  /** Per-(cluster, query) scoring prep: (queryIdx, qr, qSum, qNormSq,
-    * clusterDot). */
-  private type QPrep = (Int, Array[Float], Double, Double, Double)
 
   /** Register the probed-cluster leaf dirs of `ix` (current generation +
     * delta): structural info into `into`, and the dirs' pre-listed data
@@ -852,168 +848,208 @@ object IvfIndex {
     r.intValue()
   }
 
-  /** One-read multi-root MULTI-QUERY estimate pools: per (root, query),
-    * the exact top `nCand` (id, lb) by epsilon-scaled code lower bound
-    * over that root's probed cells for that query — from a SINGLE
-    * parquet relation spanning every root's probed cluster dirs (union
-    * over queries). Partition-local [[graft.core.BoundedTopK]] heaps
-    * bound each partition's output; the driver collect is bounded by
-    * the fixed direct-collect budget (4M tuples, conf-overridable) on
-    * narrow scans, and EXACTLY ≤ roots x queries x nCand past it, when
-    * a map-side-combined aggregateByKey merges the heaps per
-    * (root, query) slot ON EXECUTORS first — so no scan width can push
-    * the collect past max(4M, the figure the serve-side maxPoolTuples
-    * budget checks).
-    * Returns (root, queryIdx, id, lb) — lb WITHOUT the
-    * cosdist output shift (ordering-only, like estimateCandidates).
-    * One Spark job for R roots x T queries: the partitioned MaxSim
-    * serve's shape (T = query tokens) and, at T = 1, serveMulti's. */
-  /** Driver-side planning artifacts [[multiEstimatePools]] computes and
-    * a rerank-capable caller can REUSE instead of re-probing: per-root
-    * PREPPED queries, the dir-info map, and the probed cells' files. */
-  private[graft] final class MultiPoolArtifacts {
-    var qq: Array[Array[Array[Float]]] = _
-    var info: Map[String, DirInfo] = _
-    var files: Array[org.apache.hadoop.fs.FileStatus] = _
+  /** One query set's scoring preps for one (root, cell), as parallel
+    * arrays — the scan loop reads primitives, with no map lookup or
+    * tuple unpacking per (row, query) pair: query index, prepped
+    * (residual) query, its sum and squared norm, and the dot-family
+    * cluster term dot(q, c). */
+  private final class CellPreps(val qis: Array[Int], val qr: Array[Array[Float]],
+      val qSum: Array[Double], val qNormSq: Array[Double], val cDot: Array[Double])
+      extends Serializable
+
+  /** What one pool pass plans on the driver and its rerank reuses (no
+    * re-probing): per root the prepped queries (`qq(root)(qi)`) and the
+    * union of probed cells; past one root, the flat read's dir map and
+    * the probed cells' files. */
+  private final class PoolPlan(val idxs: Seq[IvfIndex],
+      val qq: Array[Array[Array[Float]]], val probed: Array[Array[Int]],
+      val info: Map[String, DirInfo],
+      val files: Array[org.apache.hadoop.fs.FileStatus]) {
+    /** Row source, chosen by root count. One root reads its own
+      * cache-aware relations (a prewarm() / prewarmCodes() cache when
+      * valid; `cluster_id` is a column); more roots read ONE flat parquet
+      * relation over every root's probed cell dirs, resolving
+      * (root, cell) from each row's file path. */
+    def flat: Boolean = idxs.length > 1
+    def empty: Boolean = if (flat) files.isEmpty else probed(0).isEmpty
+    /** Pool rows: (id, cmeta, codes, cluster_id | file path). */
+    def codes: DataFrame =
+      if (flat) flatCodesFor(idxs.head.spark, files).toDF()
+      else idxs.head.poolScan(probed(0))
+    /** Rerank rows: (id, vec[, file path]). */
+    def vecs: DataFrame =
+      if (flat) flatVecsDf(idxs.head.spark, files, idxs.head.meta.cfg.storage == "f16")
+      else idxs.head.rerankScan(probed(0))
   }
 
-  private[graft] def multiEstimatePools(idxs: Seq[IvfIndex],
-      queries: Array[Array[Float]], nCand: Int, probes: Seq[Int],
-      epsilon: Double,
-      artifacts: MultiPoolArtifacts = null): Array[(Int, Int, Long, Double)] = {
+  /** The ONE IVF top-k estimate pool (reference crates/vchordrq/src/
+    * search.rs:36-196: probe, then RaBitQ lower bound rough - eps*err):
+    * per (root, query), the exact top `nCand` (id, lb) by (lb, id) over
+    * that root's probed cells, from ONE Spark job for R roots x B
+    * queries. Each row's codes unpack ONCE and every query probing its
+    * cell scores against that scratch (bit-identical to
+    * [[RaBitQ.estimateDot]]); partition-local [[graft.core.BoundedTopK]]
+    * heaps bound each partition's output, and [[collectPools]] bounds the
+    * driver collect. Queries are prepped PER ROOT (roots may differ in
+    * bits, storage and rotation). `lb` carries no cosdist output shift
+    * (ordering only). Returns the plan for the rerank plus
+    * (root, queryIdx, id, lb) rows, sorted by (lb, id) within each
+    * (root, query). */
+  private def pools(idxs: Seq[IvfIndex], queries: Array[Array[Float]],
+      nCand: Int, probes: Seq[Int], epsilon: Double,
+      probes1: Int = -1): (PoolPlan, Array[(Int, Int, Long, Double)]) = {
     require(idxs.nonEmpty && probes.length == idxs.length,
       "one probe budget per root index")
     require(queries.nonEmpty, "empty query batch")
     val spark = idxs.head.spark
-    import spark.implicits._
     val nQ = queries.length
+    val nRoots = idxs.length
     val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
     val files =
       scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    // per root: cid -> the preps of queries probing it
-    val prepByRoot = Array.fill(idxs.length)(
-      scala.collection.mutable.HashMap.empty[Int, List[QPrep]])
-    val qqOut =
-      if (artifacts != null) Array.ofDim[Array[Float]](idxs.length, nQ) else null
+    val qq = Array.ofDim[Array[Float]](nRoots, nQ)
+    val probed = new Array[Array[Int]](nRoots)
+    // per root, dense over cells: the preps of the queries probing each
+    val preps = new Array[Array[CellPreps]](nRoots)
     idxs.zipWithIndex.foreach { case (ix, r) =>
-      val allProbed = scala.collection.mutable.LinkedHashSet.empty[Int]
+      val byCell = scala.collection.mutable.HashMap.empty[Int,
+        scala.collection.mutable.ArrayBuffer[(Int, (Array[Float], Double, Double, Double))]]
       queries.zipWithIndex.foreach { case (q, qi) =>
         graft.eval.QueryRecorder.record(ix.dir, q)
-        val qq = ix.prepQuery(q)
-        if (qqOut != null) qqOut(r)(qi) = qq
-        val probed = ix.probe(q, probes(r))
-        val pc = ix.clusterPrep(qq, probed)
-        probed.foreach { cid =>
-          val (qr, qSum, qNormSq, cDot) = pc(cid)
-          prepByRoot(r)(cid) = (qi, qr, qSum, qNormSq, cDot) ::
-            prepByRoot(r).getOrElse(cid, Nil)
-          allProbed += cid
+        qq(r)(qi) = ix.prepQuery(q)
+        val cells = ix.probe(q, probes(r), probes1)
+        val pc = ix.clusterPrep(qq(r)(qi), cells)
+        cells.foreach { cid =>
+          byCell.getOrElseUpdate(cid,
+            scala.collection.mutable.ArrayBuffer.empty) += ((qi, pc(cid)))
         }
       }
-      probedDirs(ix, r, allProbed, info, files)
+      probed(r) = byCell.keys.toArray.sorted
+      preps(r) = new Array[CellPreps](ix.meta.centroids.length)
+      byCell.foreach { case (cid, ps) =>
+        preps(r)(cid) = new CellPreps(ps.map(_._1).toArray, ps.map(_._2._1).toArray,
+          ps.map(_._2._2).toArray, ps.map(_._2._3).toArray, ps.map(_._2._4).toArray)
+      }
+      if (nRoots > 1) probedDirs(ix, r, probed(r), info, files)
     }
-    if (artifacts != null) {
-      artifacts.qq = qqOut
-      artifacts.info = info.toMap
-      artifacts.files = files.toArray
-    }
-    if (files.isEmpty) return Array.empty
-    val nRoots = idxs.length
+    val plan = new PoolPlan(idxs, qq, probed, info.toMap, files.toArray)
+    if (plan.empty) return (plan, Array.empty)
+    val flat = plan.flat
+    val bits = idxs.map(_.meta.cfg.bits).toArray
+    val dims = idxs.map(_.meta.dim).toArray
+    val isL2 = idxs.map(_.meta.cfg.metric == "l2").toArray
     val eps = epsilon
-    val bInfo = spark.sparkContext.broadcast(info.toMap)
-    val bPreps = spark.sparkContext.broadcast(
-      prepByRoot.map(_.view.mapValues(_.toArray).toMap))
-    val pruned = flatCodesFor(spark, files.toArray)
-    val partials = pruned
-      .mapPartitions { it =>
-        val info = bInfo.value
-        val preps = bPreps.value
-        val dirCache = new java.util.HashMap[String, DirInfo]()
-        val heaps = new Array[graft.core.BoundedTopK](nRoots * nQ)
-        it.foreach { case (id, cm, codes, path) =>
-          val (root, cid, bits, dim, isL2, _) = dirInfoFor(info, dirCache, path)
-          val qps = preps(root).getOrElse(cid, Array.empty[QPrep])
-          if (qps.nonEmpty) {
-            val code = RaBitQ.Code(cm, codes, bits, dim)
-            var i = 0
-            while (i < qps.length) {
-              val (qi, qr, qSum, qNormSq, cDot) = qps(i)
-              val lb = lbOf(code, bits, dim, isL2, qr, qSum, qNormSq, cDot, eps)
-              val slot = root * nQ + qi
-              var h = heaps(slot)
-              if (h == null) { h = new graft.core.BoundedTopK(nCand); heaps(slot) = h }
-              h.offer(lb, id)
-              i += 1
-            }
+    val bState = spark.sparkContext.broadcast((preps, plan.info))
+    val partials = ColumnBridge.toInternalRdd(plan.codes).mapPartitions { it =>
+      val (preps, info) = bState.value
+      val dirCache = new java.util.HashMap[String, DirInfo]()
+      val heaps = new Array[graft.core.BoundedTopK](nRoots * nQ)
+      val scratch = new Array[Float](dims.max)
+      val bias = bits.map(RaBitQ.biasOf)
+      val sqrtDim = dims.map(d => math.sqrt(d.toDouble))
+      it.foreach { row =>
+        var root = 0
+        var cid = 0
+        if (flat) {
+          val d = dirInfoFor(info, dirCache, row.getString(3))
+          root = d._1; cid = d._2
+        } else cid = row.getInt(3)
+        val rp = preps(root)
+        val cp = if (cid >= 0 && cid < rp.length) rp(cid) else null
+        if (cp != null) {
+          val id = row.getLong(0)
+          val cm = row.getArray(1)
+          val disU2 = cm.getFloat(0)
+          val scale = RaBitQ.scaleOf(disU2, cm.getFloat(1))
+          val dim = dims(root)
+          RaBitQ.unpackTo(row.getBinary(2), bits(root), dim, scratch)
+          var i = 0
+          while (i < cp.qis.length) {
+            val qNormSq = cp.qNormSq(i)
+            val d = RaBitQ.estimateDotUnpacked(scratch, dim, scale, bias(root),
+              cp.qr(i), cp.qSum(i))
+            val err = math.sqrt(qNormSq) * scale * sqrtDim(root)
+            // the lbOf bound: L2 from the residual estimate; dot-family
+            // adds the cluster term dot(q, c) back
+            val lb =
+              if (isL2(root)) {
+                val e = math.max(qNormSq + disU2 - 2.0 * d, 0.0)
+                math.sqrt(math.max(e - eps * err, 0.0))
+              } else -(d + cp.cDot(i)) - eps * err
+            val slot = root * nQ + cp.qis(i)
+            var h = heaps(slot)
+            if (h == null) { h = new graft.core.BoundedTopK(nCand); heaps(slot) = h }
+            h.offer(lb, id)
+            i += 1
           }
         }
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Double)]
-        var s = 0
-        while (s < heaps.length) {
-          val h = heaps(s)
-          if (h != null) {
-            val r = s / nQ; val qi = s % nQ
-            h.foreachPair((lb, id) => out += ((r, qi, id, lb)))
-          }
-          s += 1
-        }
-        out.iterator
       }
-    // The driver collect must not grow with the scan's partition count:
-    // each partition emits up to roots x queries x nCand heap rows, so a
-    // wide scan's direct collect would be 1-2 orders over the
-    // roots x queries x nCand figure the serve-side maxPoolTuples guard
-    // budgets. Narrow scans (the common planning-latency path) keep the
-    // one-stage direct collect; past the budget, a map-side-combined
-    // aggregateByKey merges heaps per (root, query) slot ON EXECUTORS
-    // first, making the collect exactly ≤ roots x queries x nCand at one
-    // extra (tiny) shuffle stage. Both paths are exact and identically
-    // tie-ordered: the heap's (lb, id) order is total, so merge order is
-    // irrelevant.
-    val prdd = partials.rdd
-    val directBound = prdd.getNumPartitions.toLong * nRoots * nQ * nCand
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
+      var s = 0
+      while (s < heaps.length) {
+        val h = heaps(s)
+        if (h != null) h.foreachPair((lb, id) => out += ((s, id, lb)))
+        s += 1
+      }
+      out.iterator
+    }
+    (plan, collectPools(spark, partials, nRoots * nQ, nCand)
+      .map { case (slot, id, lb) => (slot / nQ, slot % nQ, id, lb) })
+  }
+
+  /** The pool's driver collect, exact top `nCand` per slot sorted by
+    * (lb, id). It must not grow with the scan's partition count: each
+    * partition emits up to slots x nCand heap rows. Narrow scans (the
+    * planning-latency path) collect directly in one stage; past
+    * `graft.ann.flat.directCollectMax` (default [[directPoolCollectMax]])
+    * a map-side-combined aggregateByKey merges heaps per slot ON
+    * EXECUTORS first, making the collect exactly ≤ slots x nCand at one
+    * extra (tiny) shuffle stage. Both are exact and identically
+    * tie-ordered: the heap's (lb, id) order is total. */
+  private def collectPools(spark: SparkSession,
+      partials: org.apache.spark.rdd.RDD[(Int, Long, Double)], nSlots: Int,
+      nCand: Int): Array[(Int, Long, Double)] = {
     val directMax = scala.util.Try(
         spark.conf.get("graft.ann.flat.directCollectMax").toLong)
-      .getOrElse(IvfIndex.directPoolCollectMax)
-    if (directBound <= directMax)
-      prdd.collect().groupBy(t => (t._1, t._2)).valuesIterator
-        .flatMap { rows => rows.sortBy(t => (t._4, t._3)).take(nCand) }.toArray
+      .getOrElse(directPoolCollectMax)
+    if (partials.getNumPartitions.toLong * nSlots * nCand <= directMax)
+      partials.collect().groupBy(_._1).valuesIterator
+        .flatMap(_.sortBy(t => (t._3, t._2)).take(nCand)).toArray
     else {
       // reducer count sized to the SLOT count, not inherited from the
-      // wide scan: the default partitioner would schedule one reduce
-      // task per scan partition (thousands, on exactly the wide-scan
-      // path this branch exists for) for at most roots x queries keys
-      val reducers = math.max(1, math.min(nRoots * nQ,
+      // wide scan (one reduce task per scan partition for ≤ slots keys)
+      val reducers = math.max(1, math.min(nSlots,
         spark.sparkContext.defaultParallelism))
-      prdd
-        .map { case (r, qi, id, lb) => (r * nQ + qi, (lb, id)) }
+      partials
+        .map { case (slot, id, lb) => (slot, (lb, id)) }
         .aggregateByKey(new graft.core.BoundedTopK(nCand), reducers)(
           (h, t) => { h.offer(t._1, t._2); h },
           (a, b) => a.mergeFrom(b))
         .collect()
-        .flatMap { case (slot, h) =>
-          val r = slot / nQ; val qi = slot % nQ
-          h.sorted().map { case (lb, id) => (r, qi, id, lb) }
-        }
+        .flatMap { case (slot, h) => h.sorted().map { case (lb, id) => (slot, id, lb) } }
     }
   }
 
-  /** Worst-case driver tuple count under which [[multiEstimatePools]]
-    * collects partition-local heap rows directly (one stage); above it,
-    * heaps merge on executors first. ~4M tuples ≈ 130 MB boxed —
-    * comfortably inside any driver sized for planning work. Session
-    * conf `graft.ann.flat.directCollectMax` overrides (the merge-path
-    * equality spec forces 0). */
+  /** Worst-case driver tuple count under which [[collectPools]] collects
+    * partition-local heap rows directly (one stage); above it, heaps
+    * merge on executors first. ~4M tuples ≈ 130 MB boxed — comfortably
+    * inside any driver sized for planning work. */
   private val directPoolCollectMax: Long = 4000000L
 
-  /** One-read multi-root top-k candidate pool (the T = 1 face of
-    * [[multiEstimatePools]]): per root, the exact top `nCand` (id, lb)
-    * — the same rows (and (lb, id) tie order) as unioning per-root
-    * `estimateCandidates` frames. Returns (id, lb, root). */
+  /** Per-(root, query) estimate pools for callers that score them
+    * themselves (the partitioned MaxSim serves, T = query tokens):
+    * (root, queryIdx, id, lb), lb without the cosdist shift. */
+  private[graft] def multiEstimatePools(idxs: Seq[IvfIndex],
+      queries: Array[Array[Float]], nCand: Int, probes: Seq[Int],
+      epsilon: Double): Array[(Int, Int, Long, Double)] =
+    pools(idxs, queries, nCand, probes, epsilon)._2
+
+  /** The planner's top-k candidate pool (one query): per root the exact
+    * top `nCand` (id, lb, root) in (lb, id) order. */
   private[graft] def multiEstimateCandidates(idxs: Seq[IvfIndex], q: Array[Float],
       nCand: Int, probes: Seq[Int],
       epsilon: Double = 1.9): Array[(Long, Double, Int)] =
-    multiEstimatePools(idxs, Array(q), nCand, probes, epsilon)
+    pools(idxs, Array(q), nCand, probes, epsilon)._2
       .map { case (r, _, id, lb) => (id, lb, r) }
 
   /** Driver-side range prep of every root plus the code-estimate
@@ -1211,30 +1247,25 @@ object IvfIndex {
       .select(col("id"), col("vec"), col("_metadata.file_path").as("__path"))
   }
 
-  /** Batched MULTI-ROOT top-k — the partitioned analogue of
-    * [[IvfIndex.searchMany]] and the amortized form of the planner's
-    * per-query partitioned serve: R roots x B queries answered in TWO
-    * flat jobs. Job 1 pools exact per-(root, query) top-nCand estimate
-    * candidates over every root's probed cells
-    * ([[multiEstimatePools]]); job 2 re-scores candidates EXACTLY from
-    * the roots' stored vectors through a file-pruned flat read —
-    * queries are prepped PER ROOT, so per-root rotation and cosine
-    * normalization are honored. Children must share dim and metric (one
-    * query vector, one comparable distance); STORAGE-mixed corpora
-    * (f32 + f16 children, or full + codes-only with a rerank table)
-    * serve by homogeneous group — one pooled two-pass serve per
-    * (storage, storeVectors) group, merged exactly in the shared final
-    * per-query fold (2 x G flat jobs for G groups).
-    * Output (qid, id, dist, rn), the [[IvfIndex.searchMany]] contract. */
+  /** Batched MULTI-ROOT top-k, the one IVF top-k face every other
+    * serves through: R roots x B queries answered by [[pools]] (one job)
+    * plus [[rerank]] (one job). Queries are prepped PER ROOT, so per-root
+    * rotation and cosine normalization are honored. Children must share
+    * dim and metric (one query vector, one comparable distance);
+    * STORAGE-mixed corpora (f32 + f16 children, or full + codes-only
+    * with a rerank table) serve by homogeneous (storage, storeVectors)
+    * group — the flat reads pin one schema per relation — merged exactly
+    * in the shared final fold (2 x G jobs for G groups). The driver pool
+    * is budgeted by `graft.ann.batch.maxPoolTuples` (a loud refusal past
+    * it). Output (qid, id, dist, rn): per query the k best DISTINCT ids
+    * in (dist, id) order. */
   def searchManyMulti(idxs: Seq[IvfIndex], queries: Array[(Long, Array[Float])],
                       k: Int, probes: Int = 4, refine: Int = 8,
                       epsilon: Double = 1.9,
                       rerankTable: Option[(org.apache.spark.sql.DataFrame, String, String)] = None)
       : org.apache.spark.sql.DataFrame = {
     require(idxs.nonEmpty, "no root indexes")
-    require(queries.nonEmpty, "empty query batch")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "duplicate qids in query batch — results would silently merge")
+    requireBatch(queries.map(_._1))
     val h = idxs.head
     // dim and metric must agree across ALL children — one query vector
     // cannot probe two dims, and distances under different metrics are
@@ -1248,151 +1279,148 @@ object IvfIndex {
       "codes-only children (storeVectors=false) store no vectors: pass " +
       "rerankTable=Some((sourceDf, idCol, vecCol)) so the exact phase " +
       "fetches original vectors from the source table")
-    val spark = h.spark
-    import spark.implicits._
-    val qvecs = queries.map(_._2)
-    val qidArr = queries.map(_._1)
     val nCand = math.max(k * refine, k)
-    // driver-pool budget, the no-silent-caps rule: the pools collect,
-    // the candidate broadcast, and the rerank output all scale as
-    // roots x B x nCand (summed across storage groups) — a DSL caller
-    // gets a LOUD refusal, not an OOM (lower refine or split the batch;
-    // conf-raise for big drivers)
-    val maxPool = scala.util.Try(
-        spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-      .getOrElse(4000000L)
-    require(idxs.length.toLong * queries.length * nCand <= maxPool,
-      s"searchManyMulti pool budget exceeded: ${idxs.length} roots x " +
-      s"${queries.length} queries x $nCand candidates > $maxPool " +
-      "(graft.ann.batch.maxPoolTuples) — lower refine or split the batch")
-    // STORAGE-heterogeneous corpora serve by GROUP: the flat reads pin
-    // one schema per relation (f32 array vs f16 bytes) and one vec
-    // decode per scan, so each homogeneous (storage, storeVectors) group
-    // runs its own two-pass serve; per-group rows are EXACT distances of
-    // that group's candidates, so concatenating before the shared final
-    // per-query fold + top-k is exact — G groups cost 2 x G flat jobs
-    // instead of a refusal
+    requirePoolBudget(h.spark, "searchManyMulti", idxs.length, queries.length, nCand)
+    val qvecs = queries.map(_._2)
     val groups: Seq[Seq[IvfIndex]] =
       idxs.groupBy(ix => (ix.meta.cfg.storage, ix.meta.cfg.storeVectors))
         .toSeq.sortBy(_._1).map(_._2)
-    val scoredAll: Array[(Int, Long, Double)] = groups.toArray.flatMap { g =>
-      // group-local query index == global (queries are shared)
-      scoredManyMulti(g, queries, nCand, probes, epsilon, rerankTable)
+    val scored = groups.toArray.flatMap { g =>
+      val (plan, pool) = pools(g, qvecs, nCand, Seq.fill(g.length)(probes), epsilon)
+      rerank(plan, pool.map(t => (t._1, t._2, t._3)), qvecs, rerankTable)
     }
-    // driver-side final top-k per query, DISTINCT ids: an id living in
-    // both gen and delta of a root (append-without-delete) scores twice
-    // — keep its best row so one id never occupies two of the k slots
-    // (the searchMany output contract); the same fold merges groups
-    val out = scoredAll.groupBy(_._1).toSeq.flatMap { case (qi, rows) =>
-      rows.groupBy(_._2).valuesIterator
-        .map(dups => dups.minBy(r => (r._3, r._2)))
-        .map(r => (r._3, r._2)).toSeq
-        .sorted.take(k).zipWithIndex
-        .map { case ((d, id), i) => (qidArr(qi), id, d, (i + 1).toLong) }
-    }
-    out.toDF("qid", "id", "dist", "rn")
+    topKFold(h.spark, scored, k, queries.map(_._1))
   }
 
-  /** One HOMOGENEOUS group's half of [[searchManyMulti]]: the two-flat-job
-    * pool + exact-rescore pipeline over children sharing (storage,
-    * storeVectors), returning raw (queryIdx, id, exactDist) rows BEFORE
-    * the per-query fold/top-k (the caller merges groups there). */
-  private def scoredManyMulti(idxs: Seq[IvfIndex],
-      queries: Array[(Long, Array[Float])], nCand: Int, probes: Int,
-      epsilon: Double,
-      rerankTable: Option[(org.apache.spark.sql.DataFrame, String, String)])
-      : Array[(Int, Long, Double)] = {
-    val h = idxs.head
+  private def requireBatch(qids: Array[Long]): Unit = {
+    require(qids.nonEmpty, "empty query batch")
+    require(qids.distinct.length == qids.length,
+      "duplicate qids in query batch — results would silently merge")
+  }
+
+  /** Driver-pool budget, the no-silent-caps rule: the pool collect, the
+    * candidate broadcast and the rerank output all scale as
+    * roots x queries x nCand — a caller gets a LOUD refusal, not an OOM
+    * (lower refine or split the batch; conf-raise for big drivers). */
+  private def requirePoolBudget(spark: SparkSession, face: String, roots: Int,
+      nQ: Int, nCand: Int): Unit = {
+    val maxPool = scala.util.Try(
+        spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
+      .getOrElse(4000000L)
+    require(roots.toLong * nQ * nCand <= maxPool,
+      s"$face pool budget exceeded: $roots roots x $nQ queries x $nCand " +
+      s"candidates > $maxPool (graft.ann.batch.maxPoolTuples) — lower " +
+      "refine or split the batch")
+  }
+
+  /** The ONE IVF exact rerank (reference crates/vchordrq/src/rerank.rs:
+    * 34-110 in-index, 111+ in-table): exact distances for pooled
+    * (root, queryIdx, id) candidates, as raw (queryIdx, id, dist) rows.
+    * In-index, one scan of the probed cells' vectors checks membership
+    * on the raw InternalRow (sorted-id binary search per root) BEFORE any
+    * vector decode and scores against the root-prepped query. In-table,
+    * candidates from any root only gate membership: the source table's
+    * rows are the single exact truth, point-fetched ([[pointFetch]]) and
+    * scored against the RAW queries. Rows are not folded: a gen+delta
+    * double row scores twice ([[topKFold]] keeps its best). */
+  private def rerank(p: PoolPlan, cands: Array[(Int, Int, Long)],
+      raw: Array[Array[Float]],
+      rerankTable: Option[(DataFrame, String, String)]): Array[(Int, Long, Double)] = {
+    if (cands.isEmpty) return Array.empty
+    val h = p.idxs.head
     val spark = h.spark
     import spark.implicits._
-    val metric = h.meta.cfg.metric
-    val f16 = h.meta.cfg.storage == "f16"
-    val qvecs = queries.map(_._2)
-    val arts = new MultiPoolArtifacts
-    val pools = multiEstimatePools(idxs, qvecs, nCand,
-      Seq.fill(idxs.length)(probes), epsilon, arts)
-    if (pools.isEmpty) return Array.empty
-    // (root, id) -> candidate query slots; ids may repeat ACROSS roots
-    // (no global-uniqueness assumption — each row scores under its own
-    // root's candidates only)
-    val cands: Map[(Int, Long), Array[Int]] =
-      pools.groupBy(t => (t._1, t._3)).view
-        .mapValues(_.map(_._2).distinct).toMap
-    // planning artifacts REUSED from the pool pass: prepped queries,
-    // dir-info map, probed files (re-probing doubled the O(R*B*lists)
-    // driver math on this latency path)
-    val qq = arts.qq
-    if (arts.files.isEmpty) return Array.empty
-    val met = metric
-    // rerank-in-TABLE (codes-only children or caller preference): exact
-    // distances from ORIGINAL source-table vectors against the RAW
-    // queries — candidates from any root only gate membership (the
-    // table's rows are the single source of truth, so per-root prep is
-    // irrelevant here), matching searchMany's in-table semantics
-    rerankTable.foreach { case (src, idCol, vecCol) =>
-      import org.apache.spark.sql.functions.broadcast
-      val candIds = cands.keysIterator.map(_._2).toArray.distinct.sorted
-      val id2q: Map[Long, Array[Int]] = cands.toSeq
-        .groupBy(_._1._2).view
-        .mapValues(_.flatMap(_._2).distinct.toArray).toMap
-      val bI2Q = spark.sparkContext.broadcast(id2q)
-      val bRaw = spark.sparkContext.broadcast(qvecs)
-      val kern: (Array[Float], Array[Float]) => Double = met match {
-        case "l2"      => graft.core.VectorKernels.l2
-        case "negdot"  => graft.core.VectorKernels.negdot
-        case "cosdist" => graft.core.VectorKernels.cosdist
-      }
-      return src
-        .join(broadcast(candIds.toSeq.toDF("__cand_id")),
-          col(idCol).cast("long") === col("__cand_id"))
-        .select(col(idCol).cast("long"), col(vecCol))
-        .as[(Long, Seq[Float])]
-        .flatMap { case (id, v) =>
-          val va = v.toArray
-          bI2Q.value.getOrElse(id, Array.empty[Int]).iterator
-            .map(qi => (qi, id, kern(va, bRaw.value(qi))))
-        }.collect()
-    }
-    val bInfo = spark.sparkContext.broadcast(arts.info)
-    val bCands = spark.sparkContext.broadcast(cands)
-    val bQq = spark.sparkContext.broadcast(qq)
-    val isF16 = f16
-    // InternalRow scan (the searchMany rerank pattern): candidate
-    // membership checks on the raw row BEFORE any vector decode — the
-    // typed-Dataset form boxed every scanned row's vector into a
-    // Seq[Float] first, a per-row allocation storm at real dims
-    val scored: Array[(Int, Long, Double)] =
-      org.apache.spark.sql.graft.ColumnBridge
-        .toInternalRdd(flatVecsDf(spark, arts.files, f16))
-        .mapPartitions { it =>
-          val info = bInfo.value
-          val cands = bCands.value
-          val qq = bQq.value
+    rerankTable match {
+      case Some((src, idCol, vecCol)) =>
+        val id2q: Map[Long, Array[Int]] =
+          cands.groupBy(_._3).view.mapValues(_.map(_._2).distinct).toMap
+        val kern = exactKernel(h.meta.cfg.metric, stored = false)
+        val bState = spark.sparkContext.broadcast((id2q, raw))
+        pointFetch(src, idCol, id2q.keys.toArray.sorted)
+          .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+          .as[(Long, Array[Float])]
+          .flatMap { case (id, v) =>
+            val (i2q, qs) = bState.value
+            i2q.getOrElse(id, Array.empty[Int]).iterator.map(qi => (qi, id, kern(v, qs(qi))))
+          }.collect()
+      case None =>
+        // per root: sorted candidate ids + each id's query slots
+        val ids = Array.fill(p.idxs.length)(Array.empty[Long])
+        val qis = Array.fill(p.idxs.length)(Array.empty[Array[Int]])
+        cands.groupBy(_._1).foreach { case (r, cs) =>
+          val byId = cs.groupBy(_._3).toArray.sortBy(_._1)
+          ids(r) = byId.map(_._1)
+          qis(r) = byId.map(_._2.map(_._2).distinct)
+        }
+        val kern = exactKernel(h.meta.cfg.metric, stored = true)
+        val f16 = h.meta.cfg.storage == "f16"
+        val flat = p.flat
+        val bState = spark.sparkContext.broadcast((ids, qis, p.qq, p.info))
+        ColumnBridge.toInternalRdd(p.vecs).mapPartitions { it =>
+          val (ids, qis, qq, info) = bState.value
           val dirCache = new java.util.HashMap[String, DirInfo]()
           it.flatMap { row =>
             val id = row.getLong(0)
-            val path = row.getString(2)
-            val root = dirInfoFor(info, dirCache, path)._1
-            cands.get((root, id)) match {
-              case None => Iterator.empty
-              case Some(qis) =>
-                val v: Array[Float] =
-                  if (isF16) graft.core.Half.decodeBytes(row.getBinary(1))
-                  else row.getArray(1).toFloatArray()
-                qis.iterator.map { qi =>
-                  val d = met match {
-                    case "l2"     => graft.core.VectorKernels.l2(v, qq(root)(qi))
-                    case "negdot" => graft.core.VectorKernels.negdot(v, qq(root)(qi))
-                    // stored vectors are normalized: cosdist = 1 + negdot
-                    case _        => 1.0 + graft.core.VectorKernels.negdot(v, qq(root)(qi))
-                  }
-                  (qi, id, d)
-                }
+            val root = if (flat) dirInfoFor(info, dirCache, row.getString(2))._1 else 0
+            val at = java.util.Arrays.binarySearch(ids(root), id)
+            if (at < 0) Iterator.empty
+            else {
+              val v =
+                if (f16) graft.core.Half.decodeBytes(row.getBinary(1))
+                else row.getArray(1).toFloatArray()
+              qis(root)(at).iterator.map(qi => (qi, id, kern(v, qq(root)(qi))))
             }
           }
         }.collect()
-    scored
+    }
   }
+
+  /** The top-k faces' final driver fold: per query, ONE row per id at
+    * its best distance (an id in both gen and delta, append-without-
+    * delete, or in two storage groups scores twice), then the k best by
+    * (dist, id). Output (qid, id, dist, rn). */
+  private def topKFold(spark: SparkSession, rows: Array[(Int, Long, Double)],
+      k: Int, qids: Array[Long]): DataFrame = {
+    import spark.implicits._
+    rows.groupBy(_._1).toSeq.flatMap { case (qi, rs) =>
+      rs.groupBy(_._2).valuesIterator
+        .map(dups => dups.minBy(r => (r._3, r._2)))
+        .map(r => (r._3, r._2)).toSeq
+        .sorted.take(k).zipWithIndex
+        .map { case ((d, id), i) => (qids(qi), id, d, (i + 1).toLong) }
+    }.toDF("qid", "id", "dist", "rn")
+  }
+
+  /** The rerank-table POINT FETCH, shared by top-k and range: source
+    * rows whose id is a candidate. While the id set fits a pushed parquet
+    * IN (≤ [[inPushdownCap]]) the exact set reaches row-group/page
+    * pruning, so the fetch reads only the pages the candidates live in
+    * (measured 7x on the 10M x 768d codes-only anchor — see
+    * [[ensureInPushdown]]); past the cap the pushed set would overflow
+    * parquet's or-chain visitor, so larger sets broadcast-join instead. */
+  private def pointFetch(src: DataFrame, idCol: String, ids: Array[Long]): DataFrame = {
+    val spark = src.sparkSession
+    import spark.implicits._
+    if (ids.length <= inPushdownCap) {
+      ensureInPushdown(spark, ids.length)
+      src.filter(col(idCol).isin(ids.map(java.lang.Long.valueOf): _*))
+    } else
+      src.join(broadcast(ids.toSeq.toDF("__cand_id")),
+        col(idCol).cast("long") === col("__cand_id"))
+  }
+
+  /** The one exact-distance kernel. `stored` = the index's own stored
+    * vectors against the root-prepped query: normalized under cosdist,
+    * so cosdist = 1 + negdot. Otherwise raw table vectors against the
+    * raw query, where cosdist renormalizes. */
+  private def exactKernel(metric: String,
+      stored: Boolean): (Array[Float], Array[Float]) => Double =
+    metric match {
+      case "l2"                => K.l2
+      case "negdot"            => K.negdot
+      case "cosdist" if stored => (v, q) => 1.0 + K.negdot(v, q)
+      case "cosdist"           => K.cosdist
+    }
 
   /** Batched MULTI-ROOT sphere range — the ONE IVF range implementation
     * (reference opclass strategy 2, scanners/default.rs:111-117 cutoff):
@@ -1430,9 +1458,7 @@ object IvfIndex {
       rerankTable: Option[(org.apache.spark.sql.DataFrame, String, String)] = None)
       : org.apache.spark.sql.DataFrame = {
     require(idxs.nonEmpty, "no root indexes")
-    require(queries.nonEmpty, "empty query batch")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "duplicate qids in query batch — results would silently merge")
+    requireBatch(queries.map(_._1))
     val h = idxs.head
     // dim and metric must agree (one sphere center, one comparable
     // cutoff); STORAGE-mixed corpora serve by homogeneous group below —
@@ -1564,35 +1590,28 @@ object IvfIndex {
     val bRad = spark.sparkContext.broadcast(queries.map(_._3))
     val isF16 = f16
     // exact strict-< cutoff for (qi, root, id, vec) rows against the
-    // root-prepped query — stored vectors are in index space (normalized
-    // for cosine), so cosdist = 1 + negdot, the searchManyMulti kernel
+    // root-prepped query (stored vectors are in index space)
+    val kStored = exactKernel(met, stored = true)
     def cutRows(it: Iterator[(Int, Int, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
       val qq = bQq.value
       val qids = bQid.value
       val rads = bRad.value
       it.flatMap { case (qi, root, id, v) =>
-        val d = met match {
-          case "l2"     => K.l2(v, qq(root)(qi))
-          case "negdot" => K.negdot(v, qq(root)(qi))
-          case _        => 1.0 + K.negdot(v, qq(root)(qi))
-        }
+        val d = kStored(v, qq(root)(qi))
         if (d < rads(qi)) Iterator.single((qids(qi), id, d)) else Iterator.empty
       }
     }
-    // in-table exact kernel: RAW queries against original vectors —
-    // cosine renormalizes; candidates from any root gate membership only
-    // (the source table's rows are the single exact truth)
+    // in-table exact kernel: RAW queries against original vectors;
+    // candidates from any root gate membership only (the source table's
+    // rows are the single exact truth)
+    val kRaw = exactKernel(met, stored = false)
     val bQs = spark.sparkContext.broadcast(queries.map(q => (q._2, q._3)))
     def cutRaw(it: Iterator[(Int, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
       val qs = bQs.value
       val qids = bQid.value
       it.flatMap { case (qi, id, va) =>
         val (q, r) = qs(qi)
-        val d = met match {
-          case "l2"      => K.l2(va, q)
-          case "negdot"  => K.negdot(va, q)
-          case "cosdist" => K.cosdist(va, q)
-        }
+        val d = kRaw(va, q)
         if (d < r) Iterator.single((qids(qi), id, d)) else Iterator.empty
       }
     }
@@ -1600,8 +1619,8 @@ object IvfIndex {
     val scored: org.apache.spark.sql.DataFrame = if (probeRows != null) {
       // DRIVER-survivor tier: membership maps ship as broadcasts; the
       // flat vector read is scanned ONCE with per-row membership checks
-      // (the searchManyMulti rerank shape — same I/O as the broadcast
-      // join, none of the exchange machinery)
+      // (the [[rerank]] shape — same I/O as the broadcast join, none
+      // of the exchange machinery)
       val surv = probeRows.filter(t => !scanQis.contains(t._1))
       if (surv.isEmpty) emptyScored
       else rerankTable match {
@@ -1609,7 +1628,7 @@ object IvfIndex {
           val cmap: Map[(Int, Long), Array[Int]] =
             surv.groupBy(t => (t._2, t._3)).view.mapValues(_.map(_._1)).toMap
           val bC = spark.sparkContext.broadcast(cmap)
-          // InternalRow scan (the searchManyMulti rerank pattern):
+          // InternalRow scan (the [[rerank]] pattern):
           // membership on the raw row BEFORE any vector decode — the
           // typed-Dataset form decoded f16 bytes / boxed f32 Seqs for
           // EVERY scanned row first, a per-row allocation storm the
@@ -1638,21 +1657,7 @@ object IvfIndex {
           val id2q: Map[Long, Array[Int]] =
             surv.groupBy(_._3).view.mapValues(_.map(_._1).distinct).toMap
           val bI2Q = spark.sparkContext.broadcast(id2q)
-          val candIds = id2q.keysIterator.toArray.sorted
-          // POINT FETCH while the id set fits a pushed parquet IN: the
-          // exact set then reaches row-group/page pruning, so the fetch
-          // reads only the pages the candidates live in (measured 7x on
-          // the 10M x 768d codes-only anchor — see ensureInPushdown).
-          // Past inPushdownCap the pushed set would overflow parquet's
-          // or-chain visitor, so larger sets broadcast-join instead.
-          val fetched =
-            if (candIds.length <= IvfIndex.inPushdownCap) {
-              ensureInPushdown(spark, candIds.length)
-              src.filter(col(idCol).isin(candIds.map(java.lang.Long.valueOf): _*))
-            } else
-              src.join(broadcast(candIds.toSeq.toDF("__cand_id")),
-                col(idCol).cast("long") === col("__cand_id"))
-          fetched
+          pointFetch(src, idCol, id2q.keysIterator.toArray.sorted)
             .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
             .as[(Long, Seq[Float])]
             .mapPartitions { it =>
@@ -1765,27 +1770,15 @@ object IvfIndex {
                     (id, v.toArray, p) }, bSInfo.value))
                 }.toDF("qid", "id", "dist")
             case Some((src, idCol, vecCol)) =>
-              val bQs = spark.sparkContext.broadcast(queries.map(q => (q._2, q._3)))
               src.select(col(idCol).cast("long").as("id"),
                   col(vecCol).cast("array<float>").as("__v"))
                 .as[(Long, Seq[Float])]
                 .mapPartitions { it =>
-                  val qs = bQs.value
-                  val qids = bQid.value
                   val qis = bScan.value
-                  it.flatMap { case (id, v) =>
+                  cutRaw(it.flatMap { case (id, v) =>
                     val va = v.toArray
-                    qis.iterator.flatMap { qi =>
-                      val (q, r) = qs(qi)
-                      val d = met match {
-                        case "l2"      => K.l2(va, q)
-                        case "negdot"  => K.negdot(va, q)
-                        case "cosdist" => K.cosdist(va, q)
-                      }
-                      if (d < r) Iterator.single((qids(qi), id, d))
-                      else Iterator.empty
-                    }
-                  }
+                    qis.iterator.map(qi => (qi, id, va))
+                  })
                 }.toDF("qid", "id", "dist")
           }
         }
@@ -1811,11 +1804,11 @@ object IvfIndex {
     inf
   }
 
-  /** The estFrame estimator: epsilon-scaled code lower bound in the
-    * root's own metric (dot-family WITHOUT the cosdist output shift —
-    * ordering-only callers match estimateCandidates; range callers
-    * apply the shift at the cutoff). */
-  private def lbOf(code: RaBitQ.Code, bits: Int, dim: Int, isL2: Boolean,
+  /** The RaBitQ estimator on a packed code: epsilon-scaled code lower
+    * bound in the root's own metric (dot-family WITHOUT the cosdist
+    * output shift — range callers apply it at the cutoff). The top-k
+    * pool computes the same bound over codes unpacked once per row. */
+  private[index] def lbOf(code: RaBitQ.Code, bits: Int, dim: Int, isL2: Boolean,
                    qr: Array[Float], qSum: Double, qNormSq: Double,
                    cDot: Double, epsilon: Double): Double =
     if (isL2) {
@@ -1830,28 +1823,6 @@ object IvfIndex {
 
 final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta) {
 
-  /** Point-fetch pushdown guard. Spark pushes an `In` filter to Parquet
-    * as the exact value set only while the list is at most
-    * `spark.sql.parquet.pushdown.inFilterThreshold` (default 10); past
-    * it the pushed filter DEGRADES to the min/max range, which for a
-    * bounded candidate set scattered across a big table prunes nothing —
-    * measured on the 10M x 768d codes-only anchor: the k*refine=80-id
-    * rerank-in-table fetch scanned the entire 29 GB source (89.8s)
-    * instead of the ~80 pages the ids live in. Raising the threshold
-    * (never lowering it, never touching semantics — it is purely a
-    * pushdown-form knob) keeps the exact set pushed, so Parquet
-    * row-group stats and page column indexes prune the fetch to the
-    * touched pages. Session-level set: the returned DataFrames plan
-    * lazily at action time, so the conf must outlive this call.
-    *
-    * Capped at [[IvfIndex.inPushdownCap]]: parquet evaluates the pushed
-    * value set as a left-deep or-chain whose recursive visitor OVERFLOWS
-    * THE TASK STACK past ~1-2k values (measured on this JVM: 1024 ok,
-    * 2048 StackOverflowError) — a big candidate list then keeps the
-    * min/max range push plus the exact Catalyst filter instead of
-    * crashing the scan. */
-  private def ensureInPushdown(n: Int): Unit =
-    IvfIndex.ensureInPushdown(spark, n)
   import spark.implicits._
 
   private def currentGen: String =
@@ -2212,6 +2183,17 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     else dataDf.select(dataCols.filter(_ != "vec").map(col): _*)
   }
 
+  /** The one-root top-k pool's rows over `cells`: (id, cmeta, codes,
+    * cluster_id) from [[codesDf]] — cached when warm, else a
+    * partition-pruned parquet scan without the vec column. */
+  private[index] def poolScan(cells: Array[Int]): DataFrame =
+    codesDf.filter(IvfIndex.inCells(cells)).select("id", "cmeta", "codes", "cluster_id")
+
+  /** The one-root top-k rerank's rows over `cells`: (id, vec) from
+    * [[dataDf]] (the prewarm() cache when warm). */
+  private[index] def rerankScan(cells: Array[Int]): DataFrame =
+    dataDf.filter(IvfIndex.inCells(cells)).select("id", "vec")
+
   /** Codes-only indexes have no stored vectors to rerank against — every
     * exact-distance phase must fetch from the source table, the pairing
     * the reference enforces for its small-index mode (rerank_in_table,
@@ -2371,107 +2353,20 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
       .map(_._2)
   }
 
-  /** Estimate-phase frame for a prepped query over the given probed
-    * cells: LAZY (id, cluster_id, lb) rows, lb = epsilon-scaled code
-    * lower bound in metric order. Codes only — the vec column is pruned
-    * from this scan (and served from the codes cache when prewarmCodes()
-    * ran). Shared by [[search]] (which collects the top-nCand) and
-    * [[estimateCandidates]] (which returns the frame for callers that
-    * union MANY indexes' candidates into one job). */
-  private def estFrame(qq: Array[Float], probed: Array[Int],
-                       epsilon: Double): DataFrame = {
-    val perCluster = clusterPrep(qq, probed)
-    val bpc = spark.sparkContext.broadcast(perCluster)
-    val bits = meta.cfg.bits
-    val dim = meta.dim
-    val isL2 = meta.cfg.metric == "l2"
-    codesDf.filter(IvfIndex.inCells(probed))
-      .as[(Int, Long, Array[Float], Array[Byte])]
-      .mapPartitions { it =>
-        val pc = bpc.value
-        it.map { case (cid, id, cm, codes) =>
-          val (qr, qSum, qNormSq, clusterDot) = pc(cid)
-          // dot-family estimate inside lbOf: residual codes contribute
-          // dot(q, v-c), clusterDot adds the dot(q, c) remainder
-          val lb = IvfIndex.lbOf(RaBitQ.Code(cm, codes, bits, dim), bits, dim,
-            isL2, qr, qSum, qNormSq, clusterDot, epsilon)
-          (id, cid, lb)
-        }
-      }.toDF("id", "cluster_id", "lb")
-  }
-
-  /** Lazy top-`nCand` estimate candidates `(id, lb)` — [[search]]'s
-    * estimate stage WITHOUT the collect. The partitioned-table planner
-    * ([[graft.plans.AnnTopKRewrite]] serveMulti) unions one of these per
-    * per-root index and collects ONCE, so planning cost stays one Spark
-    * job however many children a date-partitioned corpus has; exactness
-    * then comes from the rewritten plan's own Sort+Limit over the
-    * IN-restricted scan (the same rerank the reference does in-table).
-    * `lb` rides along so callers over many roots can budget a bounded
-    * global candidate set by estimate order instead of truncating each
-    * root blindly. */
-  def estimateCandidates(q: Array[Float], nCand: Int, probes: Int = 4,
-                         epsilon: Double = 1.9, probes1: Int = -1): DataFrame = {
-    graft.eval.QueryRecorder.record(dir, q)
-    val qq = prepQuery(q)
-    val probed = probe(q, probes, probes1)
-    estFrame(qq, probed, epsilon).orderBy($"lb", $"id")
-      .limit(math.max(nCand, 1)).select($"id", $"lb")
-  }
-
   /**
-   * ANN top-k. `probes` = clusters scanned; `epsilon` scales the code
-   * error bound (reference default 1.9, src/index/gucs.rs:66); `refine` =
-   * candidate multiplier for the exact rerank (refine*k candidates).
+   * ANN top-k for one query: [[searchMany]] with one query. `probes` =
+   * clusters scanned; `epsilon` scales the code error bound (reference
+   * default 1.9, src/index/gucs.rs:66); `refine` = candidate multiplier
+   * for the exact rerank (refine*k candidates). Runs its two jobs at call
+   * time and returns a local frame.
    * Output: (id, dist) ascending, deterministic (dist, id) ties.
    */
   def search(q: Array[Float], k: Int, probes: Int = 4, epsilon: Double = 1.9,
              refine: Int = 8,
              rerankTable: Option[(DataFrame, String, String)] = None,
-             probes1: Int = -1): DataFrame = {
-    requireRerankSource(rerankTable)
-    graft.eval.QueryRecorder.record(dir, q)
-    val qq = prepQuery(q)
-    val probed = probe(q, probes, probes1)
-    val data = dataDf.filter(IvfIndex.inCells(probed))
-    val nCand = math.max(k * refine, k)
-    val cand = estFrame(qq, probed, epsilon).orderBy($"lb", $"id").limit(nCand)
-      .select($"id").as[Long].collect()
-    ensureInPushdown(cand.length)
-    rerankTable match {
-      case None =>
-        // rerank-in-index (reference RerankMethod::Index): exact distances
-        // for just the candidates — vec column read only here, with id +
-        // partition filters pushed to Parquet
-        val exact = exactDistCol(qq)
-        // per-id min BEFORE the top-k — but ONLY when a delta area
-        // exists: an id living in both gen and delta
-        // (append-without-delete) has two physical rows here, and
-        // without the fold one id could occupy two of the k slots, one
-        // at the stale vector's distance. A generation alone holds one
-        // row per id (build contract), and the fold's exchange costs a
-        // whole extra stage, measured ~0.1-0.2 s on every delta-free
-        // serve — so delta-free indexes keep the two-stage plan.
-        val scoredRows = data
-          .filter(col("id").isin(cand.map(java.lang.Long.valueOf): _*))
-          .select($"id", exact($"vec").as("dist"))
-        val folded =
-          if (deltaExists)
-            scoredRows.groupBy($"id")
-              .agg(org.apache.spark.sql.functions.min($"dist").as("dist"))
-          else scoredRows
-        folded.orderBy($"dist", $"id").limit(k)
-      case Some((src, idCol, vecCol)) =>
-        // rerank-in-table (reference rerank_heap / rerank_in_table=true,
-        // crates/vchordrq/src/rerank.rs:111+): fetch ORIGINAL vectors from
-        // the source table by row key; smaller index, one extra fetch
-        val exact = rawDistCol(q)
-        src.filter(col(idCol).isin(cand.map(java.lang.Long.valueOf): _*))
-          .select(col(idCol).cast("long").as("id"), exact(col(vecCol)).as("dist"))
-          .orderBy(col("dist"), col("id"))
-          .limit(k)
-    }
-  }
+             probes1: Int = -1): DataFrame =
+    searchMany(Array(0L -> q), k, probes, epsilon, refine, rerankTable, probes1)
+      .select("id", "dist")
 
   /** Per-cell radius: max stored-space L2 distance from a member to its
     * centroid, cached with dataDf's invalidation key. The cell-level
@@ -2593,265 +2488,50 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
       .select("id", "dist")
 
   /**
-   * Batch ANN: all `queries` served by TWO Spark jobs total, independent
-   * of batch size — the throughput shape Spark is built for (the
-   * single-query `search` pays per-job scheduling that dominates at low
-   * latency; BASELINE.md: the Spark engine targets batch KNN-join
-   * queries/sec, not point-query latency).
+   * Batch ANN over this index: the multi-root core
+   * ([[IvfIndex.searchManyMulti]]'s pool and rerank) at one root, so all
+   * `queries` cost TWO Spark jobs whatever the batch size — the
+   * throughput shape Spark is built for (BASELINE.md: the Spark engine
+   * targets batch KNN-join queries/sec, not point-query latency). The
+   * pool reads this index's codes relation and the rerank its data
+   * relation, both cell-pruned and served from a prewarm() /
+   * prewarmCodes() cache when one is valid. Refuses loudly past
+   * `graft.ann.batch.maxPoolTuples` pooled tuples.
    *
-   *   job 1: one pass over the union of all probed clusters; each
-   *          partition keeps a bounded per-query heap of code-estimate
-   *          lower bounds (map-side top-nCand), then a window takes the
-   *          global nCand per query
-   *   job 2: exact rerank of each query's candidates (vec column read
-   *          only for candidate rows), window takes top k
-   *
-   * Same estimator, bounds, and (dist, id) tie-breaks as `search` — for
-   * a single query the two return identical rows.
+   * `exactBudget >= 0` switches to the reference's per-query refine
+   * budget (maxsim_refine, src/index/vchordrq/scanners/maxsim.rs:99-260):
+   * the output set is the top-k BY ESTIMATE, of which only the first
+   * exactBudget rows per query are re-scored exactly — the remainder keep
+   * their estimate as the distance (callers wanting honest mixing pass
+   * epsilon = 0). `exactBudget = 0` runs no exact phase, so a codes-only
+   * index serves it without a rerank table.
    * Output: (qid, id, dist, rn).
    */
   def searchMany(queries: Array[(Long, Array[Float])], k: Int, probes: Int = 4,
                  epsilon: Double = 1.9, refine: Int = 8,
                  rerankTable: Option[(DataFrame, String, String)] = None,
                  probes1: Int = -1, exactBudget: Int = -1): DataFrame = {
-    require(queries.nonEmpty, "empty query batch")
-    require(queries.map(_._1).distinct.length == queries.length,
-      "duplicate qids in query batch — results would silently merge")
-    // exactBudget == 0 is pure-estimate output (maxsim_refine = 0): no
-    // exact phase runs, so a codes-only index serves it without a source
+    IvfIndex.requireBatch(queries.map(_._1))
     if (exactBudget != 0) requireRerankSource(rerankTable)
-    // exactBudget >= 0 switches to the reference's per-query refine budget
-    // (maxsim_refine, src/index/vchordrq/scanners/maxsim.rs:99-260): the
-    // output set is the top-k BY ESTIMATE, of which only the first
-    // exactBudget rows per query are re-scored exactly — the remainder
-    // keep their estimate as the distance. Callers wanting honest mixing
-    // should pass epsilon = 0 so the estimate carries no lower-bound slack.
     val budgeted = exactBudget >= 0
     val nCand = if (budgeted) k else math.max(k * refine, k)
-    val residual = meta.cfg.residual
-    val isL2 = meta.cfg.metric == "l2"
-    val bits = meta.cfg.bits
-    val dim = meta.dim
-    // per-query prep (driver): probed clusters + per-cluster query
-    // residual/sums — the same precompute `search` does for one query
-    val preps: Array[(Long, Array[Float], Map[Int, (Array[Float], Double, Double, Double)])] =
-      queries.map { case (qid, q) =>
-        val qq = prepQuery(q)
-        val probed = probe(q, probes, probes1)
-        (qid, qq, clusterPrep(qq, probed))
-      }
-    // dense lookup tables for the scan loop: no Map lookups or tuple
-    // allocations per (row, query) — [cid] -> probing query indices, and
-    // per (query, cid) the prepped residual query + sums
-    val nLists = meta.cfg.lists
-    val nQ = preps.length
-    val qrTab = Array.ofDim[Array[Float]](nQ, nLists)
-    val qSumTab = Array.ofDim[Double](nQ, nLists)
-    val qNormSqTab = Array.ofDim[Double](nQ, nLists)
-    val cDotTab = Array.ofDim[Double](nQ, nLists)
-    val c2qBuf = Array.fill(nLists)(new scala.collection.mutable.ArrayBuffer[Int]())
-    preps.zipWithIndex.foreach { case ((_, _, pc), qi) =>
-      pc.foreach { case (cid, (qr, s, ns, cd)) =>
-        qrTab(qi)(cid) = qr; qSumTab(qi)(cid) = s
-        qNormSqTab(qi)(cid) = ns; cDotTab(qi)(cid) = cd
-        c2qBuf(cid) += qi
-      }
-    }
-    val clusterToQ: Array[Array[Int]] = c2qBuf.map(_.toArray)
-    val allProbed = clusterToQ.indices.filter(clusterToQ(_).nonEmpty).toArray
-    val bPrep = spark.sparkContext.broadcast(preps)
-    val bTabs = spark.sparkContext.broadcast((qrTab, qSumTab, qNormSqTab, cDotTab))
-    val bC2Q = spark.sparkContext.broadcast(clusterToQ)
-    val data = dataDf.filter(IvfIndex.inCells(allProbed))
-    // InternalRow scan: primitive accessors, no Seq boxing — this pass
-    // touches every row of every probed cluster and is the batch's hot loop
-    // (reads the codes cache when prewarmCodes() ran)
-    val estRdd = org.apache.spark.sql.graft.ColumnBridge
-      .toInternalRdd(codesDf
-        .filter(IvfIndex.inCells(allProbed)))
-      .mapPartitions { it =>
-        val preps = bPrep.value
-        val (qrT, qSumT, qNormSqT, cDotT) = bTabs.value
-        val c2q = bC2Q.value
-        // bounded per-query primitive heaps: keep the nCand smallest
-        // (lb, id) with zero boxing in the scan loop
-        val heaps = new Array[graft.core.BoundedTopK](preps.length)
-        val scratch = new Array[Float](dim)
-        val bias = RaBitQ.biasOf(bits)
-        val sqrtDim = math.sqrt(dim.toDouble)
-        it.foreach { row =>
-          val cid = row.getInt(0)
-          if (cid < c2q.length) {
-            val qis = c2q(cid)
-            if (qis.nonEmpty) {
-              val id = row.getLong(1)
-              // unpack codes ONCE per row; every probing query then runs a
-              // float-dot over the scratch (bit-identical to the
-              // single-query estimator, amortized across the batch)
-              val cm = row.getArray(2)
-              val disU2 = cm.getFloat(0)
-              val scale = RaBitQ.scaleOf(disU2, cm.getFloat(1))
-              RaBitQ.unpackTo(row.getBinary(3), bits, dim, scratch)
-              var i = 0
-              while (i < qis.length) {
-                val qi = qis(i)
-                val qr = qrT(qi)(cid)
-                val qSum = qSumT(qi)(cid)
-                val qNormSq = qNormSqT(qi)(cid)
-                val d = RaBitQ.estimateDotUnpacked(scratch, dim, scale, bias, qr, qSum)
-                val err = math.sqrt(qNormSq) * scale * sqrtDim
-                val lb =
-                  if (isL2) {
-                    val e = math.max(qNormSq + disU2 - 2.0 * d, 0.0)
-                    math.sqrt(math.max(e - epsilon * err, 0.0))
-                  } else {
-                    -(d + cDotT(qi)(cid)) - epsilon * err
-                  }
-                var h = heaps(qi)
-                if (h == null) { h = new graft.core.BoundedTopK(nCand); heaps(qi) = h }
-                h.offer(lb, id)
-                i += 1
-              }
-            }
-          }
+    IvfIndex.requirePoolBudget(spark, "searchMany", 1, queries.length, nCand)
+    val qvecs = queries.map(_._2)
+    val (plan, pool) =
+      IvfIndex.pools(Seq(this), qvecs, nCand, Seq(probes), epsilon, probes1)
+    // budgeted: the first exactBudget candidates per query in estimate
+    // order rerank; the rest keep their lower bound as the distance
+    val (exact, rough) =
+      if (!budgeted) (pool, Array.empty[(Int, Int, Long, Double)])
+      else pool.groupBy(_._2).valuesIterator
+        .flatMap(_.sortBy(t => (t._4, t._3)).zipWithIndex).toArray
+        .partition(_._2 < exactBudget) match {
+          case (e, r) => (e.map(_._1), r.map(_._1))
         }
-        val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-        var qi = 0
-        while (qi < heaps.length) {
-          val h = heaps(qi)
-          if (h != null) {
-            val qid = preps(qi)._1
-            h.foreachPair((lb, id) => out += ((qid, id, lb)))
-          }
-          qi += 1
-        }
-        out.iterator
-      }
-    // per-query top-nCand fold (job 1) — r18: the RDD heap fold replaces
-    // the former toDF + row_number window + collect, whose per-call
-    // Catalyst planning and codegen dominated the sliced KNN-join's
-    // driver gaps (JobProfile: ~0.1 s planning + a second exchange job
-    // per slice). Same shape as multiEstimatePools: partition-local
-    // heaps already bound emissions to nCand per (partition, query), so
-    // a narrow scan collects directly; a wide scan merges heaps per qid
-    // on executors first (exact and identically tie-ordered — the
-    // (lb, id) order is total, so merge order is irrelevant). Sorting
-    // by (lb, id) and ranking 1..nCand reproduces the window's
-    // row_number exactly.
-    val directMax = scala.util.Try(
-        spark.conf.get("graft.ann.flat.directCollectMax").toLong)
-      .getOrElse(IvfIndex.directPoolCollectMax)
-    val directBound = estRdd.getNumPartitions.toLong * nQ * nCand
-    val topPairs: Array[(Long, Array[(Double, Long)])] =
-      if (directBound <= directMax)
-        estRdd.collect().groupBy(_._1).iterator.map { case (qid, rows) =>
-          qid -> rows.map(r => (r._3, r._2))
-            .sortBy(identity)(Ordering.Tuple2[Double, Long]).take(nCand)
-        }.toArray
-      else {
-        val reducers = math.max(1, math.min(nQ,
-          spark.sparkContext.defaultParallelism))
-        estRdd.map { case (qid, id, lb) => (qid, (lb, id)) }
-          .aggregateByKey(new graft.core.BoundedTopK(nCand), reducers)(
-            (h, t) => { h.offer(t._1, t._2); h },
-            (a, b) => a.mergeFrom(b))
-          .collect()
-          .map { case (qid, h) => qid -> h.sorted() }
-      }
-    val candRows: Array[(Long, Long, Int, Double)] =
-      topPairs.flatMap { case (qid, arr) =>
-        arr.iterator.zipWithIndex.map { case ((lb, id), i) =>
-          (qid, id, i + 1, lb)
-        }
-      }
-    if (candRows.isEmpty)
-      return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
-    // budgeted mode: only the first exactBudget candidates per query (in
-    // estimate order) are re-scored exactly; the rest keep the estimate
-    val exactPairs =
-      if (budgeted) candRows.filter(_._3 <= exactBudget).map(r => (r._1, r._2))
-      else candRows.map(r => (r._1, r._2))
-    val roughRows: Array[(Long, Long, Double)] =
-      if (budgeted) candRows.filter(_._3 > exactBudget).map(r => (r._1, r._2, r._4))
-      else Array.empty
-    if (exactPairs.isEmpty) {
-      // pure-estimate output (maxsim_refine = 0)
-      val out = roughRows.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-        rows.map(r => (r._3, r._2)).sorted.take(k).zipWithIndex
-          .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-      }
-      return out.toDF("qid", "id", "dist", "rn")
-    }
-    val candPairs = exactPairs
-    // rerank (job 2): InternalRow scan of the probed clusters; candidate
-    // membership via a sorted-id binary search (no giant In list, no join
-    // machinery); scored pairs (B x nCand at most) merge on the driver
-    val qidToQi = preps.zipWithIndex.map { case ((qid, _, _), qi) => qid -> qi }.toMap
-    val idToQi = new java.util.HashMap[java.lang.Long, Array[Int]]()
-    candPairs.groupBy(_._2).foreach { case (id, qs) =>
-      idToQi.put(id, qs.map(p => qidToQi(p._1)))
-    }
-    val sortedIds = candPairs.map(_._2).distinct.sorted
-    val bI2Q = spark.sparkContext.broadcast(idToQi)
-    val bSorted = spark.sparkContext.broadcast(sortedIds)
-    val bQ = spark.sparkContext.broadcast(preps.map(_._2))
-    val metric = meta.cfg.metric
-    val f16 = meta.cfg.storage == "f16"
-    val scored: Array[(Long, Long, Double)] = rerankTable match {
-      case None =>
-        org.apache.spark.sql.graft.ColumnBridge
-          .toInternalRdd(data.select($"id", $"vec"))
-          .mapPartitions { it =>
-            val sorted = bSorted.value
-            val i2q = bI2Q.value
-            val qqs = bQ.value
-            val kern: (Array[Float], Array[Float]) => Double = metric match {
-              case "l2"      => K.l2
-              case "negdot"  => K.negdot
-              case "cosdist" => (v, q) => 1.0 + K.negdot(v, q)
-            }
-            it.flatMap { row =>
-              val id = row.getLong(0)
-              if (java.util.Arrays.binarySearch(sorted, id) < 0) Iterator.empty
-              else {
-                val v =
-                  if (f16) graft.core.Half.decodeBytes(row.getBinary(1))
-                  else row.getArray(1).toFloatArray()
-                i2q.get(id).iterator.map(qi => (qi.toLong, id, kern(v, qqs(qi))))
-              }
-            }
-          }.collect().map { case (qi, id, d) => (preps(qi.toInt)._1, id, d) }
-      case Some((src, srcIdCol, srcVecCol)) =>
-        // rerank-in-table (reference rerank_in_table=true): exact distances
-        // from ORIGINAL table vectors against the RAW queries — same
-        // kernels as the single-query rerankTable path, so batch == single
-        val bRaw = spark.sparkContext.broadcast(queries.map(_._2))
-        val kern: (Array[Float], Array[Float]) => Double = metric match {
-          case "l2"      => K.l2
-          case "negdot"  => K.negdot
-          case "cosdist" => K.cosdist
-        }
-        src.join(broadcast(sortedIds.toSeq.toDF("__cand_id")),
-            col(srcIdCol).cast("long") === col("__cand_id"))
-          .select(col(srcIdCol).cast("long"), col(srcVecCol))
-          .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            Option(bI2Q.value.get(id)).toSeq.flatten
-              .map(qi => (qi.toLong, id, kern(v, bRaw.value(qi))))
-          }.collect().map { case (qi, id, d) => (preps(qi.toInt)._1, id, d) }
-    }
-    // driver-side final top-k per query (at most B x nCand rows); in
-    // budgeted mode the rough remainder merges in with estimate distances
-    val out = (scored ++ roughRows).groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-      // distinct ids per query: gen+delta double rows fold to their best
-      // distance (same contract as search / searchManyMulti)
-      rows.groupBy(_._2).valuesIterator
-        .map(dups => dups.minBy(r => (r._3, r._2)))
-        .map(r => (r._3, r._2)).toSeq
-        .sorted.take(k).zipWithIndex
-        .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-    }
-    out.toDF("qid", "id", "dist", "rn")
+    val scored = IvfIndex.rerank(plan, exact.map(t => (t._1, t._2, t._3)),
+      qvecs, rerankTable)
+    IvfIndex.topKFold(spark, scored ++ rough.map(t => (t._2, t._3, t._4)), k,
+      queries.map(_._1))
   }
 
   /**

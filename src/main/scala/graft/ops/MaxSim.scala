@@ -180,9 +180,10 @@ object MaxSim {
     val spark = idx.spark
     import spark.implicits._
     // ALL tokens retrieve through ONE batch call (qid = token index):
-    // searchMany is bit-equal to per-token `search` but costs 2 Spark jobs
-    // total instead of 2 per token — a 100-token ColBERT query would
-    // otherwise serialize 200 driver-scheduled jobs. With a per-token
+    // per-token `search` is searchMany with one query, so the batch
+    // answers the same rows for 2 Spark jobs total instead of 2 per
+    // token — a 100-token ColBERT query would otherwise serialize 200
+    // driver-scheduled jobs. With a per-token
     // budget the batch runs in mixed exact/estimate mode (epsilon = 0 so
     // the estimate stand-ins carry no lower-bound slack).
     val tokQueries = query.zipWithIndex.map { case (q, i) => (i.toLong, q) }
@@ -567,7 +568,7 @@ object MaxSim {
     // codegen-compilable coarse spans 2.7 s/query — pruning is the whole
     // game). Admitted foreign rows fall to the membership check.
     // InternalRow
-    // scan (the searchMany rerank pattern): candidate membership checks
+    // scan (the IvfIndex.rerank pattern): candidate membership checks
     // on the raw row BEFORE any vector decode — the typed-Dataset form
     // boxed every scanned row's vector first, which at 100k-doc corpora
     // made the rescore read dominate the whole batch (measured 3.1

@@ -1239,13 +1239,13 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       //     FROM queries q JOIN docs e) WHERE rn <= k
       // — the lateral "k nearest per query row". The bounded queries side
       // is collected at planning time, per-query candidates come from ONE
-      // batched index job (searchMany on a single root, searchManyMulti on
-      // a partitioned corpus), and the indexed side is restricted to the
-      // candidate UNION; the window reranks with the ORIGINAL distance
-      // expression, so each query's output is the exact top-k of its
-      // candidate superset (the standard ANN serve contract). Without the
-      // serve this shape is a broadcast nested-loop cross join over the
-      // full table per query row.
+      // batched searchManyMulti call (one root or a partitioned corpus),
+      // the indexed side is restricted to the candidate UNION, and the
+      // window reranks with the ORIGINAL distance expression, so each
+      // query's output is the exact top-k of its candidate superset (the
+      // standard ANN serve contract). Without the serve this shape is a
+      // broadcast nested-loop cross join over the full table per query
+      // row.
       case f @ Filter(_, _: Window)
           if spark.conf.get("graft.ann.knn.join.enable", "true").toBoolean &&
             !isServedPlan(f) =>
@@ -1859,11 +1859,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             "graft.ann.refine (the 1M-row anchor measured recall " +
             "0.93 -> 0.98 going refine 16 -> 64)")
         }
-        // searchManyMulti reranks from the roots' own stored vectors;
-        // codes-only children would need a union rerank table the
-        // per-child entries cannot supply — single-root codes-only serves
-        // through its entry's tablePath below
-        val multiOk = idxs.length == 1 || idxs.forall(_.meta.cfg.storeVectors)
+        // searchManyMulti reranks from the roots' own stored vectors or
+        // from one rerank table: codes-only children would need a union
+        // table the per-child entries cannot supply, so codes-only serves
+        // only on one root with a tablePath (rtOf below)
+        val multiOk = idxs.forall(_.meta.cfg.storeVectors) ||
+          (idxs.length == 1 && es.head.tablePath.nonEmpty)
         // batched-face driver-pool budget (the face itself refuses
         // loudly past it; the planner declines instead of throwing)
         val maxPool = scala.util.Try(
@@ -1893,14 +1894,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               val probes = idxs.map(ix =>
                 math.min(ix.meta.cfg.lists,
                   probesFor(ix.meta.cfg.lists) * probeScale)).max
-              val df =
-                if (idxs.length == 1)
-                  idxs.head.searchMany(queries, nCand, probes = probes,
-                    refine = 1, rerankTable = rtOf)
-                else
-                  IvfIndex.searchManyMulti(idxs, queries, nCand,
-                    probes = probes, refine = 1)
-              Some(df.select("qid", "id").as[(Long, Long)].collect()
+              Some(IvfIndex.searchManyMulti(idxs, queries, nCand,
+                  probes = probes, refine = 1, rerankTable = rtOf)
+                .select("qid", "id").as[(Long, Long)].collect()
                 .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
             }
           }
@@ -1913,15 +1909,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               else {
                 AnnTopKRewrite.planningJobs.incrementAndGet()
                 val probes = idxs.map(ix => probesFor(ix.meta.cfg.lists)).max
-                Some(
-                  if (idxs.length == 1)
-                    idxs.head.searchMany(queries, k, probes = probes,
-                        refine = refine, rerankTable = rtOf)
-                      .select("id").as[Long].collect()
-                  else
-                    IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
-                        refine = refine)
-                      .select("id").as[Long].collect())
+                Some(IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
+                    refine = refine, rerankTable = rtOf)
+                  .select("id").as[Long].collect())
               }
             case Some(_) =>
               // PREFILTER on the indexed side — the escalation contract of
@@ -1951,7 +1941,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               // coverage = "the pool provably holds EVERY row": full
               // probes per root AND k*r at least the SUMMED corpus row
               // count — pools() truncates to k*r candidates per query
-              // GLOBALLY across roots (searchMany/searchManyMulti's final
+              // GLOBALLY across roots (searchManyMulti's final
               // fold), so a per-root rowCount comparison would declare
               // coverage with rows of the larger corpus missing and skip
               // the survivor floor
@@ -2576,7 +2566,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           ix.meta.cfg.lists, probesFor(ix.meta.cfg.lists)) }, k, refine0))
       return None
     val qArr = qv.toFloatArray()
-    import spark.implicits._
     // ONE planning job AND one analyzed relation however many roots: all
     // roots' probed cluster dirs read as a single flat parquet scan
     // (IvfIndex.multiEstimateCandidates), each row scored with its own
@@ -2590,8 +2579,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // the IN-restricted scan reranks the pooled candidates exactly, and
     // the full-depth pool per root is a superset of what per-root rerank
     // would have kept — end-to-end recall is the old path's or better.
-    // A SINGLE root keeps the per-index frame (cache-aware and
-    // branch-free anyway).
+    // A single root reads its own cache-aware codes relation instead of
+    // the flat files (the pool picks its row source by root count).
     // the k-floor is the serve/decline line, as in the old per-root
     // shape: if even k ids per root overflow maxInList, decline to exact
     if (idxs.length.toLong * k > maxInList) return Some(gl)
@@ -2602,12 +2591,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val nCand = math.max(k * refineScale, k)
       val prs = idxs.map { case (_, ix) =>
         math.min(ix.meta.cfg.lists, probesFor(ix.meta.cfg.lists) * probeScale) }
-      if (idxs.length == 1)
-        idxs.head._2.estimateCandidates(qArr, nCand, probes = prs.head)
-          .withColumn("root", org.apache.spark.sql.functions.lit(0))
-          .as[(Long, Double, Int)].collect()
-      else
-        IvfIndex.multiEstimateCandidates(idxs.map(_._2), qArr, nCand, prs)
+      IvfIndex.multiEstimateCandidates(idxs.map(_._2), qArr, nCand, prs)
     }
     // dedup ids across roots, and within a root across generation and
     // delta (keep the best lb for budgeting): one id must not take two of

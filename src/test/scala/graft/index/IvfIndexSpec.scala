@@ -252,11 +252,14 @@ class IvfIndexSpec extends SparkSpec {
     val idx = IvfIndex.build(df, "id", "vec", freshDir(), IvfConfig(lists = 8))
     val q = Array.fill(12)(0.1f)
     assert(idx.probe(q, 2).length == 2)
-    // the physical scan the estimate phase runs on an uncached index:
-    // cluster_id is a partition column pruned at the source through the
-    // cell restriction, vec is absent from the read schema
-    val scan = idx.estimateCandidates(q, 5, probes = 2)
-    assert(scan.collect().length == 5)
+    // the physical scan the one-root top-k pool runs on an uncached
+    // index: cluster_id is a partition column pruned at the source
+    // through the cell restriction, vec is absent from the read schema
+    val probed = idx.probe(q, 2)
+    val scan = idx.poolScan(probed)
+    val inCells = idx.dataDf.filter(IvfIndex.inCells(probed)).count()
+    assert(org.apache.spark.sql.graft.ColumnBridge.toInternalRdd(scan).count() == inCells)
+    assert(idx.search(q, 5, probes = 2).count() == 5)
     val plan = scan.queryExecution.executedPlan
     val phys = plan.toString
     val partFilters = phys.split("PartitionFilters: ")
@@ -298,6 +301,29 @@ class IvfIndexSpec extends SparkSpec {
     assert(got == want)
   }
 
+  // The parity specs below grade BOTH top-k faces against TopKReplay, a
+  // driver-side replay of the estimate pool and exact rerank that runs
+  // none of the serve's jobs.
+  private def gradeFaces(idx: IvfIndex, queries: Seq[(Long, Array[Float])], k: Int,
+      probes: Int, refine: Int,
+      rerankTable: Option[(org.apache.spark.sql.DataFrame, String, String)] = None): Unit = {
+    val table = rerankTable.map { case (t, idCol, vecCol) =>
+      t.select(idCol, vecCol).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+    }
+    val batch = TopKReplay.byQid(idx.searchMany(queries.toArray, k, probes = probes,
+      refine = refine, rerankTable = rerankTable))
+    val want = TopKReplay.topK(idx, queries, k, probes, refine, table = table)
+    queries.foreach { case (qid, q) =>
+      assert(want(qid).length == k, s"query $qid: replay kept ${want(qid)}")
+      TopKReplay.check(batch(qid), want(qid), s"searchMany query $qid")
+      val single = TopKReplay.rowsOfSearch(idx.search(q, k, probes = probes,
+        refine = refine, rerankTable = rerankTable))
+      TopKReplay.check(single, TopKReplay.topK(idx, Seq(qid -> q), k, probes, refine,
+        table = table)(qid), s"search query $qid")
+    }
+  }
+
   test("searchMany equals per-query search (two jobs for the whole batch)") {
     import spark.implicits._
     val df = rows.toDF("id", "vec")
@@ -305,14 +331,8 @@ class IvfIndexSpec extends SparkSpec {
     val rng = new scala.util.Random(7)
     val queries = Array.tabulate(8)(i =>
       i.toLong -> Array.fill(12)(rng.nextFloat() * 2 - 1))
-    val batch = idx.searchMany(queries, k = 5, probes = 6, refine = 8)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(t => (t._3, t._2)).map(t => (t._2, t._3)).toSeq).toMap
-    queries.foreach { case (qid, q) =>
-      val single = idx.search(q, 5, probes = 6, refine = 8)
-        .as[(Long, Double)].collect().toSeq
-      assert(batch(qid) == single, s"batch/single mismatch for query $qid")
-    }
+    // probes < lists and k*refine < the probed rows: both truncations bite
+    gradeFaces(idx, queries.toSeq, k = 5, probes = 6, refine = 8)
   }
 
   test("searchMany on an f16-storage index matches per-query search") {
@@ -322,14 +342,7 @@ class IvfIndexSpec extends SparkSpec {
       IvfConfig(lists = 8, storage = "f16"))
     val q0 = Array.fill(12)(0.25f)
     val q1 = Array.tabulate(12)(j => (5 - j) * 0.08f)
-    val batch = idx.searchMany(Array(0L -> q0, 1L -> q1), k = 5, probes = 8, refine = 20)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(t => (t._3, t._2)).map(t => (t._2, t._3)).toSeq).toMap
-    Seq(0L -> q0, 1L -> q1).foreach { case (qid, q) =>
-      val single = idx.search(q, 5, probes = 8, refine = 20)
-        .as[(Long, Double)].collect().toSeq
-      assert(batch(qid) == single)
-    }
+    gradeFaces(idx, Seq(0L -> q0, 1L -> q1), k = 5, probes = 8, refine = 20)
   }
 
   test("searchMany rerank-in-table matches per-query rerank-in-table search") {
@@ -338,16 +351,8 @@ class IvfIndexSpec extends SparkSpec {
     val idx = IvfIndex.build(df, "id", "vec", freshDir(), IvfConfig(lists = 8))
     val q0 = Array.fill(12)(0.1f)
     val q1 = Array.tabulate(12)(j => (j - 4) * 0.07f)
-    val batch = idx.searchMany(Array(0L -> q0, 1L -> q1), k = 5, probes = 8,
-        refine = 20, rerankTable = Some((df, "id", "vec")))
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(t => (t._3, t._2)).map(t => (t._2, t._3)).toSeq).toMap
-    Seq(0L -> q0, 1L -> q1).foreach { case (qid, q) =>
-      val single = idx.search(q, 5, probes = 8, refine = 20,
-          rerankTable = Some((df, "id", "vec")))
-        .as[(Long, Double)].collect().toSeq
-      assert(batch(qid) == single)
-    }
+    gradeFaces(idx, Seq(0L -> q0, 1L -> q1), k = 5, probes = 8, refine = 20,
+      rerankTable = Some((df, "id", "vec")))
   }
 
   test("searchMany on a cosdist index matches per-query search") {
@@ -357,14 +362,7 @@ class IvfIndexSpec extends SparkSpec {
       IvfConfig(lists = 8, metric = "cosdist"))
     val q0 = Array.fill(12)(0.3f)
     val q1 = Array.tabulate(12)(j => (j - 6) * 0.1f)
-    val batch = idx.searchMany(Array(0L -> q0, 1L -> q1), k = 5, probes = 8, refine = 20)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(t => (t._3, t._2)).map(t => (t._2, t._3)).toSeq).toMap
-    Seq(0L -> q0, 1L -> q1).foreach { case (qid, q) =>
-      val single = idx.search(q, 5, probes = 8, refine = 20)
-        .as[(Long, Double)].collect().toSeq
-      assert(batch(qid) == single)
-    }
+    gradeFaces(idx, Seq(0L -> q0, 1L -> q1), k = 5, probes = 8, refine = 20)
   }
 
   test("candidate pools past the parquet IN-pushdown cap (1000) do not " +
@@ -473,5 +471,69 @@ class IvfIndexSpec extends SparkSpec {
     assert(batch.map(_._1).distinct.length == batch.length &&
       batch.head._1 == 11L && batch.head._2 < 1e-6,
       s"searchMany must fold the double row too: ${batch.toSeq}")
+    // both faces equal the replay, which scores both physical rows
+    gradeFaces(idx, Seq(0L -> q, 1L -> base(40)._2.toArray), k = 5, probes = 2,
+      refine = 50)
+  }
+
+  test("the one-root pool and rerank read the prewarm() and prewarmCodes() caches") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    val dir = freshDir()
+    IvfIndex.build(rows.toDF("id", "vec"), "id", "vec", dir, IvfConfig(lists = 8))
+    val q = Array.fill(12)(0.1f)
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def scans(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.executedPlan
+      (aqe.collect(plan) { case s: InMemoryTableScanExec => s }.length,
+        aqe.collect(plan) { case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s }.length)
+    }
+    def served(ix: IvfIndex): Unit =
+      TopKReplay.check(TopKReplay.rowsOfSearch(ix.search(q, 5, probes = 3)),
+        TopKReplay.topK(ix, Seq(0L -> q), 5, 3, 8)(0L), "warm search")
+    // full prewarm: both the pool's codes and the rerank's vectors
+    val full = IvfIndex.load(spark, dir)
+    val cells = full.probe(q, 3)
+    assert(scans(full.poolScan(cells)) == (0, 1), "cold pool reads the files")
+    full.prewarm()
+    try {
+      assert(scans(full.poolScan(cells)) == (1, 0),
+        s"prewarm(): pool must read the cache:\n${full.poolScan(cells).queryExecution.executedPlan}")
+      assert(scans(full.rerankScan(cells)) == (1, 0),
+        s"prewarm(): rerank must read the cache:\n${full.rerankScan(cells).queryExecution.executedPlan}")
+      served(full)
+    } finally full.release()
+    // codes-only prewarm: the pool reads the cache, the rerank streams vec
+    val codes = IvfIndex.load(spark, dir)
+    codes.prewarmCodes()
+    try {
+      assert(scans(codes.poolScan(cells)) == (1, 0),
+        s"prewarmCodes(): pool must read the cache:\n${codes.poolScan(cells).queryExecution.executedPlan}")
+      served(codes)
+    } finally codes.release()
+  }
+
+  test("search with a new query vector compiles no new code on a warm session") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val idx = IvfIndex.build(rows.toDF("id", "vec"), "id", "vec", freshDir(),
+      IvfConfig(lists = 8))
+    val rng = new scala.util.Random(97)
+    // a 10-id pool: a literal id IN list this short stays an In
+    // expression (not a referenced InSet), so it would compile per query
+    def query(): Unit =
+      assert(idx.search(Array.fill(12)(rng.nextFloat() * 2 - 1), 5, probes = 3,
+        refine = 2).collect().length == 5)
+    // uncached, then prewarmed: both scan shapes must reuse their code
+    try Seq(false, true).foreach { warm =>
+      if (warm) idx.prewarm()
+      (0 until 3).foreach(_ => query())
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      query()
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(compiled == 0, s"prewarmed=$warm: $compiled new classes compiled")
+    } finally idx.release()
   }
 }

@@ -165,6 +165,54 @@ class IvfNoVecSpec extends SparkSpec {
     }
   }
 
+  test("top-k point-fetches rerank-table rows: candidate IN pushed to the " +
+       "parquet source scan for one root and for two") {
+    import spark.implicits._
+    val src = Files.createTempDirectory("graft-ivf-novec-src").resolve("t").toString
+    df.write.parquet(src)
+    val srt = Some((spark.read.parquet(src), "id", "vec"))
+    val (a, b) = rows.splitAt(300)
+    val one = IvfIndex.build(df, "id", "vec", freshDir(),
+      IvfConfig(lists = 8, storeVectors = false))
+    val two = Seq(a, b).map(p => IvfIndex.build(p.toDF("id", "vec"), "id", "vec",
+      freshDir(), IvfConfig(lists = 4, storeVectors = false)))
+    val qs = Array(1L -> Array.fill(16)(0.1f), 2L -> Array.fill(16)(-0.2f))
+    // the faces collect eagerly: record every executed plan's source scans
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        aqe.foreach(qe.executedPlan) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString.endsWith("/t")) =>
+            plans.add(s.metadata.getOrElse("PushedFilters", ""))
+          case _ =>
+        }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Seq(Seq(one), two).foreach { idxs =>
+      plans.clear()
+      val out =
+        if (idxs.length == 1) one.searchMany(qs, 8, probes = 8, refine = 16, rerankTable = srt)
+        else IvfIndex.searchManyMulti(idxs, qs, 8, probes = 4, refine = 16, rerankTable = srt)
+      val got = out.select("qid", "id").as[(Long, Long)].collect().groupBy(_._1)
+      qs.foreach { case (qid, q) =>
+        assert(got(qid).map(_._2).toSeq == brute(rows, q, 8), s"R=${idxs.length} qid $qid")
+      }
+      // listener events arrive asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (plans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(!plans.isEmpty, s"R=${idxs.length}: no source scan ran")
+      plans.forEach { pushed =>
+        assert(pushed.contains("In(id,"),
+          s"R=${idxs.length}: candidate IN not pushed to the source scan: $pushed")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("searchMany batch equals single-query results on a codes-only index") {
     import spark.implicits._
     val dir = freshDir()
