@@ -334,9 +334,15 @@ object Dedup {
   }
 
   /** MinHash-LSH near-dup pairs with exact-Jaccard verification.
-    * Signatures come straight from text (no shingle-table shuffle); the
-    * exact shingle pass runs only over docs that appear in some LSH
-    * candidate pair — at scale the n^2 pair space never materializes.
+    * Signatures come straight from text (no shingle-table shuffle), and
+    * the verify is PAIR-LOCAL: only docs that appear in some LSH
+    * candidate pair are re-read, each as one sorted shingle-hash set,
+    * and every candidate pair merges its two sets with [[jaccardSorted]]
+    * — the n^2 pair space never materializes and no per-shingle table is
+    * exploded or shuffled. A pair is kept when `jac > 0` and
+    * `jac >= threshold`: it must share at least one shingle, as in
+    * [[jaccardPairs]], even at `threshold <= 0`; `jac` is bit-identical
+    * to [[jaccardPairs]]' value.
     *
     * Exact duplicates are COLLAPSED before LSH: a crawl with 10^6 copies
     * of one page contributes ONE signature (a 10^6-id bucket would want
@@ -378,14 +384,12 @@ object Dedup {
     val repSigs = grouped.select(col("id"), col("sig"))
     val multi = grouped.filter(size(col("members")) > 1)
       .select(col("id").as("gid"), col("members"))
-    val cand = bandPairs(repSigs, numHashes, bands, maxBucket).cache()
-    // no distinct: the left-semi join below dedups implicitly (one fewer
-    // shuffle)
-    val candDocs = cand.select(col("da").as("cid"))
-      .union(cand.select(col("db").as("cid")))
-    val candRows = df.join(candDocs, col(idCol).cast("long") === col("cid"), "left_semi")
-    val verifiedReps = jaccardPairs(shingles(candRows, idCol, textCol, n), threshold)
-      .join(cand, Seq("da", "db")) // exact-verified, LSH-pruned
+    // pair-local exact verify: each candidate rep pair merges the two
+    // reps' sorted shingle sets (only candidate docs are re-read); the
+    // jac > 0 guard keeps the shared-shingle rule at threshold <= 0
+    val verifiedReps = verifySorted(
+        bandPairs(repSigs, numHashes, bands, maxBucket), n, (df, idCol, textCol))
+      .filter(col("jac") > 0 && col("jac") >= threshold)
     // expand rep-level pairs across exact-duplicate groups (native
     // explode, no UDF); singleton reps fall through the left joins
     val crossed = verifiedReps
@@ -406,6 +410,44 @@ object Dedup {
           yield (ms(i), ms(j), 1.0)
     }.toDF("da", "db", "jac")
     crossed.unionByName(internal)
+  }
+
+  /** Exact Jaccard of candidate pairs, computed PAIR-LOCALLY: the
+    * `(id, sortedShingleSet)` rows of candidate docs only are fetched
+    * through a left-semi re-read of their corpus, and each pair joins
+    * both sides' sets and merges them with [[jaccardSorted]].
+    *
+    * `pairs` holds the pair's two Long id columns; the first column's
+    * docs come from `a`, the second's from `b`, each given as (corpus,
+    * id column, text column). `b = None` means both columns index `a`,
+    * whose candidate docs are then read and shingled once.
+    * Output: the two id columns plus `jac`, unfiltered. */
+  private def verifySorted(pairs: DataFrame, n: Int,
+                           a: (DataFrame, String, String),
+                           b: Option[(DataFrame, String, String)] = None): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val Array(pa, pb) = pairs.columns
+    def sets(side: (DataFrame, String, String), ids: DataFrame): DataFrame = {
+      val (d, id, t) = side
+      d.join(ids, d(id).cast("long") === ids("__cid"), "left_semi")
+        .select(col(id).cast("long"), col(t).cast("string")).as[(Long, String)]
+        .map { case (i, text) =>
+          (i, sortedShingleSet(text.split(' ').map(hash64), n)) }
+        .toDF("__cid", "__set")
+    }
+    def ids(c: String) = pairs.select(col(c).as("__cid"))
+    val (aSets, bSets) = b match {
+      // no distinct: the left-semi join dedups the union implicitly
+      case None => val s = sets(a, ids(pa).union(ids(pb))); (s, s)
+      case Some(r) => (sets(a, ids(pa)), sets(r, ids(pb)))
+    }
+    pairs.join(aSets.toDF(pa, "__sa"), pa)
+      .join(bSets.toDF(pb, "__sb"), pb)
+      .select(pa, pb, "__sa", "__sb")
+      .as[(Long, Long, Array[Long], Array[Long])]
+      .map { case (x, y, sa, sb) => (x, y, jaccardSorted(sa, sb)) }
+      .toDF(pa, pb, "jac")
   }
 
   /**
@@ -466,23 +508,9 @@ object Dedup {
         else na.iterator.flatMap(x => nb.iterator.map(y => (x, y)))
       }
     }.toDF("na", "rb").distinct()
-    // exact verify: hashed shingle sets for CANDIDATE docs only (left-semi
-    // against the candidate ids), joined pairwise — the jac is computed by
-    // the same sorted-set kernel the within-corpus verify uses
-    def sets(d: DataFrame, id: String, t: String, ids: DataFrame,
-             as_ : String): DataFrame =
-      d.join(ids, d(id).cast("long") === ids(as_), "left_semi")
-        .select(col(id).cast("long"), col(t).cast("string")).as[(Long, String)]
-        .map { case (i, text) =>
-          (i, sortedShingleSet(text.split(' ').map(hash64), n)) }
-        .toDF(as_, s"__s$as_")
-    val aSets = sets(df, idCol, textCol, cand.select("na"), "na")
-    val bSets = sets(refDf, refIdCol, refTextCol, cand.select("rb"), "rb")
-    val verified = cand.join(aSets, "na").join(bSets, "rb")
-      .select(col("na"), col("rb"), col("__sna"), col("__srb"))
-      .as[(Long, Long, Array[Long], Array[Long])]
-      .map { case (na, rb, sa, sb) => (na, rb, jaccardSorted(sa, sb)) }
-      .toDF("na", "rb", "jac")
+    // exact verify: the same pair-local sorted-set kernel as minhashDedup
+    val verified = verifySorted(cand, n, (df, idCol, textCol),
+        Some((refDf, refIdCol, refTextCol)))
       .filter(col("jac") >= threshold)
     val aMulti = a.filter(size(col("members")) > 1)
       .select(col("id").as("na"), col("members").as("ma"))

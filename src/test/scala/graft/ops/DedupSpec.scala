@@ -83,6 +83,89 @@ class DedupSpec extends SparkSpec {
     assert(got.contains((0L, 300L, 1.0)) && got.contains((300L, 301L, 1.0)))
   }
 
+  test("minhashDedup threshold: Jaccard exactly at threshold kept bit-identically, just below dropped") {
+    import spark.implicits._
+    // distinct tokens make the shingle counts closed-form: trigrams over
+    // a shared k-token prefix are the only shared shingles
+    def toks(p: String, n: Int) = (0 until n).map(i => s"$p$i")
+    val a = toks("a", 22)                       // 20 shingles
+    val b = a.take(20) ++ toks("b", 2)          // 20 shingles, 18 shared
+    val c = toks("c", 21)                       // 19 shingles
+    val d = c.take(19) ++ toks("d", 2)          // 19 shingles, 17 shared
+    val atJac = 18.0 / (20 + 20 - 18)
+    val belowJac = 17.0 / (19 + 19 - 17)
+    assert(belowJac < atJac)
+    val corpus = Seq(1L -> a, 2L -> b, 3L -> c, 4L -> d)
+      .map { case (i, t) => i -> t.mkString(" ") } ++
+      docs.map { case (i, t) => (1000L + i, t) }
+    val df = corpus.toDF("doc_id", "text")
+    val sh = Dedup.shingles(df, "doc_id", "text", 3)
+    val cand = Dedup.minhashCandidates(sh)
+      .select("da", "db").as[(Long, Long)].collect().toSet
+    assert(cand.contains((1L, 2L)) && cand.contains((3L, 4L)),
+      "both crafted pairs must be LSH candidates, so only the verify decides")
+    val got = Dedup.minhashDedup(df, "doc_id", "text", atJac)
+      .select("da", "db", "jac").as[(Long, Long, Double)].collect()
+      .map(t => (t._1, t._2) -> t._3).toMap
+    val exact = Dedup.jaccardPairs(sh, 0.0)
+      .select("da", "db", "jac").as[(Long, Long, Double)].collect()
+      .map(t => (t._1, t._2) -> t._3).toMap
+    assert(exact((1L, 2L)) == atJac && exact((3L, 4L)) == belowJac)
+    assert(got.contains((1L, 2L)), "a pair exactly at the threshold is kept")
+    assert(java.lang.Double.doubleToRawLongBits(got((1L, 2L))) ==
+      java.lang.Double.doubleToRawLongBits(exact((1L, 2L))))
+    assert(!got.contains((3L, 4L)), "a pair just below the threshold is dropped")
+    // threshold 0: exactly the exhaustive operator's pairs among the LSH
+    // candidates — every kept pair shares a shingle
+    val zero = Dedup.minhashDedup(df, "doc_id", "text", 0.0)
+      .select("da", "db", "jac").as[(Long, Long, Double)].collect().toSet
+    val want = exact.iterator.collect {
+      case (k, j) if cand.contains(k) => (k._1, k._2, j) }.toSet
+    assert(zero.nonEmpty && zero == want)
+    assert(zero.forall(_._3 > 0))
+  }
+
+  test("minhashDedup pins no cached relation across calls") {
+    import spark.implicits._
+    val df = docs.toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    Dedup.minhashDedup(df, "doc_id", "text", 0.6).count()
+    Dedup.minhashDedup(df, "doc_id", "text", 0.6).count()
+    val after = sc.getPersistentRDDs.size
+    assert(after == before, s"persistent RDDs $before -> $after")
+  }
+
+  test("minhashDedup runs at most 12 Spark jobs on the fixture") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val df = docs.toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    val marker = "minhashDedup job-count marker"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        descs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    Dedup.minhashDedup(df, "doc_id", "text", 0.6).collect() // warm
+    sc.addSparkListener(listener)
+    try {
+      Dedup.minhashDedup(df, "doc_id", "text", 0.6).collect()
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every job the operator ran has been counted
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!descs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(descs.contains(marker), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    val jobs = descs.size - 1
+    assert(jobs <= 12, s"minhashDedup ran $jobs Spark jobs")
+  }
+
   test("simhash collapse is lossless and banding survives duplicates") {
     import spark.implicits._
     val withDups = docs ++ Seq(300L -> docs(0)._2, 301L -> docs(0)._2)
