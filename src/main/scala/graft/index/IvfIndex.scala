@@ -1001,7 +1001,8 @@ object IvfIndex {
     * (lb, id). It must not grow with the scan's partition count: each
     * partition emits up to slots x nCand heap rows. Narrow scans (the
     * planning-latency path) collect directly in one stage; past
-    * `graft.ann.flat.directCollectMax` (default [[directPoolCollectMax]])
+    * `graft.ann.flat.directCollectMax` (default 4M tuples ≈ 130 MB
+    * boxed — comfortably inside any driver sized for planning work)
     * a map-side-combined aggregateByKey merges heaps per slot ON
     * EXECUTORS first, making the collect exactly ≤ slots x nCand at one
     * extra (tiny) shuffle stage. Both are exact and identically
@@ -1009,9 +1010,7 @@ object IvfIndex {
   private def collectPools(spark: SparkSession,
       partials: org.apache.spark.rdd.RDD[(Int, Long, Double)], nSlots: Int,
       nCand: Int): Array[(Int, Long, Double)] = {
-    val directMax = scala.util.Try(
-        spark.conf.get("graft.ann.flat.directCollectMax").toLong)
-      .getOrElse(directPoolCollectMax)
+    val directMax = graft.core.AnnConf(spark).flatDirectCollectMax
     if (partials.getNumPartitions.toLong * nSlots * nCand <= directMax)
       partials.collect().groupBy(_._1).valuesIterator
         .flatMap(_.sortBy(t => (t._3, t._2)).take(nCand)).toArray
@@ -1029,12 +1028,6 @@ object IvfIndex {
         .flatMap { case (slot, h) => h.sorted().map { case (lb, id) => (slot, id, lb) } }
     }
   }
-
-  /** Worst-case driver tuple count under which [[collectPools]] collects
-    * partition-local heap rows directly (one stage); above it, heaps
-    * merge on executors first. ~4M tuples ≈ 130 MB boxed — comfortably
-    * inside any driver sized for planning work. */
-  private val directPoolCollectMax: Long = 4000000L
 
   /** Per-(root, query) estimate pools for callers that score them
     * themselves (the partitioned MaxSim serves, T = query tokens):
@@ -1304,9 +1297,7 @@ object IvfIndex {
     * (lower refine or split the batch; conf-raise for big drivers). */
   private def requirePoolBudget(spark: SparkSession, face: String, roots: Int,
       nQ: Int, nCand: Int): Unit = {
-    val maxPool = scala.util.Try(
-        spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-      .getOrElse(4000000L)
+    val maxPool = graft.core.AnnConf(spark).batchMaxPoolTuples
     require(roots.toLong * nQ * nCand <= maxPool,
       s"$face pool budget exceeded: $roots roots x $nQ queries x $nCand " +
       s"candidates > $maxPool (graft.ann.batch.maxPoolTuples) — lower " +
@@ -1541,9 +1532,8 @@ object IvfIndex {
     // while bounded. Both tiers are exact and spec'd equal. The bound
     // counts collected tuples before the driver dedup, so gen+delta
     // doubles can tip a sphere near it into the distributed tier.
-    val maxDriver = scala.util.Try(
-        spark.conf.get("graft.ann.range.maxDriverSurvivors").toLong)
-      .getOrElse(1000000L) / math.max(1, capDivisor)
+    val maxDriver = graft.core.AnnConf(spark).rangeMaxDriverSurvivors /
+      math.max(1, capDivisor)
     val probeRows: Array[(Int, Int, Long)] =
       if (maxDriver <= 0) null
       else {

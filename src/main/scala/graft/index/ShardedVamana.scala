@@ -244,9 +244,7 @@ object ShardedVamana {
         "semantics), or allowEstimates=true to opt in")
       if (queries.isEmpty)
         return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-      val maxPool = scala.util.Try(
-          spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-        .getOrElse(4000000L)
+      val maxPool = graft.core.AnnConf(spark).batchMaxPoolTuples
       val perQueryBudget = math.max(1L, maxPool / queries.length)
       val bq = spark.sparkContext.broadcast(queries)
       val metric = cfg.metric

@@ -468,9 +468,8 @@ object VamanaGraph {
     // driver-pool budget, the no-silent-caps rule (the searchManyMulti
     // guard): the beam fan-out collects up to B x sum-of-per-graph
     // budgets candidate rows — refuse loudly instead of OOMing
-    val maxPool = scala.util.Try(
-        spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-      .getOrElse(4000000L)
+    val conf = graft.core.AnnConf(spark)
+    val maxPool = conf.batchMaxPoolTuples
     val perGraphBudget = graphs.map { g =>
       val efUse = math.max(if (ef <= 0) g.cfg.efSearch else ef, k)
       if (g.quantized || rerankTable.nonEmpty) efUse.toLong else k.toLong
@@ -483,9 +482,7 @@ object VamanaGraph {
     // graphs ship to every executor as ONE broadcast value — estimate
     // the footprint and refuse loudly past the cap instead of stalling
     // the fan-out on a multi-GB torrent or OOMing executors
-    val maxBytes = scala.util.Try(
-        spark.conf.get("graft.ann.graph.batch.maxBroadcastBytes").toLong)
-      .getOrElse(4L << 30)
+    val maxBytes = conf.graphBatchMaxBroadcastBytes
     val totBytes = graphs.map(_.approxBytes).sum
     require(totBytes <= maxBytes,
       s"graph searchManyMulti broadcast budget exceeded: ${graphs.length} " +
@@ -599,9 +596,8 @@ object VamanaGraph {
     require(metrics.length == 1,
       s"rangeSearchManyMulti requires one metric across graphs, got " +
       s"$metrics — sphere membership under different metrics cannot merge")
-    val maxBytes = scala.util.Try(
-        spark.conf.get("graft.ann.graph.batch.maxBroadcastBytes").toLong)
-      .getOrElse(4L << 30)
+    val conf = graft.core.AnnConf(spark)
+    val maxBytes = conf.graphBatchMaxBroadcastBytes
     val totBytes = graphs.map(_.approxBytes).sum
     require(totBytes <= maxBytes,
       s"graph rangeSearchManyMulti broadcast budget exceeded: " +
@@ -612,9 +608,7 @@ object VamanaGraph {
     // data-dependent — a sphere covering the whole corpus yields O(N)
     // rows per query — so the bound is enforced INSIDE the task, loudly,
     // instead of silently truncating the sphere
-    val maxPool = scala.util.Try(
-        spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-      .getOrElse(4000000L)
+    val maxPool = conf.batchMaxPoolTuples
     val perQueryBudget = math.max(1L, maxPool / queries.length)
     val bgs = spark.sparkContext.broadcast(graphs.toIndexedSeq)
     val rerank = rerankTable.nonEmpty

@@ -444,7 +444,7 @@ object MaxSim {
     val spark = h.spark
     import spark.implicits._
     val prb = if (probes.nonEmpty) probes else idxs.map(ix =>
-      math.max(1, math.ceil(math.sqrt(ix.meta.cfg.lists.toDouble)).toInt))
+      graft.core.AnnConf.autoProbes(ix.meta.cfg.lists))
     require(prb.length == idxs.length, "one probe budget per root index")
     val nQ = queries.length
     val qidArr = queries.map(_._1)
@@ -455,9 +455,7 @@ object MaxSim {
     val allTokens: Array[Array[Float]] = queries.flatMap(_._2)
     // driver-pool budget (the serveMaxSimMulti guard, loud): the pooled
     // retrieval collects ≤ roots x totalTokens x kPerToken tuples
-    val maxPool = scala.util.Try(
-        spark.conf.get("graft.ann.maxsim.maxPoolTuples").toLong)
-      .getOrElse(4000000L)
+    val maxPool = graft.core.AnnConf(spark).maxsimMaxPoolTuples
     require(idxs.length.toLong * allTokens.length * kPerToken <= maxPool,
       s"maxsimManyMulti pool budget exceeded: ${idxs.length} roots x " +
       s"${allTokens.length} tokens x $kPerToken > $maxPool " +

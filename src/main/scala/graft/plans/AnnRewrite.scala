@@ -8,8 +8,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graft.ColumnBridge
 
+import graft.core.AnnConf
 import graft.functions.{VecCosDistExpr, VecL2Expr, VecMaxSimExpr, VecNegDotExpr}
 import graft.index.IvfIndex
+import graft.plans.AnnCatalog.Kind
 
 /**
  * The `CREATE INDEX` planner integration (SURVEY §4.1 row 1 / build plan
@@ -57,63 +59,98 @@ import graft.index.IvfIndex
  * or globally with spark.sql.extensions=graft.plans.GraftSparkExtensions.
  */
 object AnnCatalog {
-  /** `tablePath` kept on the entry so a CODES-ONLY index (storeVectors =
-    * false) can fetch rerank vectors from its source table at serve time. */
+  /** One registration: reads of a table (or of one partition child) may
+    * be served by the index at `indexDir`, whose rows key on `idCol` and
+    * index `vecCol` (for a MaxSim token index: the doc column and the
+    * token-array column). `tablePath` is kept on IVF entries so a
+    * CODES-ONLY index (storeVectors = false) can fetch rerank vectors
+    * from its source table at serve time. */
   final case class Entry(indexDir: String, idCol: String, vecCol: String,
                          tablePath: String = "")
 
-  private val entries = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  /** Index families, in the order [[resolve]] tries them. */
+  sealed abstract class Kind
+  object Kind {
+    case object Ivf extends Kind
+    /** Driver-resident Vamana graphs (vchordg). */
+    case object Graph extends Kind
+    /** The distributed graph tier ([[graft.index.ShardedVamana]]). */
+    case object Sharded extends Kind
+    /** MaxSim token indexes (opclass strategy 3). */
+    case object Tokens extends Kind
+    /** The vector-column families, in serve order. */
+    val vectors: Seq[Kind] = Seq(Ivf, Graph, Sharded)
+  }
+
+  /** A resolved cover: the family, and the entry of every root it serves. */
+  final case class Tier(kind: Kind, entries: Seq[Entry])
+
+  private val regs: Map[Kind, java.util.concurrent.ConcurrentHashMap[String, Entry]] =
+    (Kind.vectors :+ Kind.Tokens).map(k =>
+      k -> new java.util.concurrent.ConcurrentHashMap[String, Entry]()).toMap
   private val indexes = new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]()
 
-  /** Serializes catalog MUTATIONS (register/unregister across the plain,
-    * partial, and maxsim maps, and the eviction's check-then-act over all
-    * three): without it, a registration for the same indexDir landing
-    * between [[maybeEvictIndex]]'s stillUsed scan and its remove would
-    * have its freshly memoized instance evicted and its persisted plans
-    * dropped. Lookups and serves stay lock-free on the concurrent maps —
-    * so an unregister racing an IN-FLIGHT query on the same index can
-    * still release that query's cache mid-run (it recomputes, correct but
-    * slower); don't unregister an index while queries it serves run. */
+  /** Serializes catalog MUTATIONS (register/unregister of every family,
+    * and the release's check-then-act over them): without it, a
+    * registration for the same indexDir landing between [[release]]'s
+    * stillUsed scan and its remove would have its freshly memoized
+    * instance evicted and its persisted plans dropped. Lookups and
+    * serves stay lock-free on the concurrent maps — so an unregister
+    * racing an IN-FLIGHT query on the same index can still release that
+    * query's cache mid-run (it recomputes, correct but slower); don't
+    * unregister an index while queries it serves run. */
   private val mutationLock = new Object
 
   private def norm(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  /** Register: reads of `tablePath` may be served by the index at `indexDir`. */
-  def register(tablePath: String, indexDir: String, idCol: String, vecCol: String): Unit =
+  private def put(kind: Kind, tablePath: String, e: Entry): Unit =
     mutationLock.synchronized {
-      entries.put(norm(tablePath), Entry(indexDir, idCol, vecCol, tablePath))
+      regs(kind).put(norm(tablePath), e)
       coverCache.clear() // catalog changed: every cached cover decision is stale
     }
 
-  def unregister(tablePath: String): Unit = mutationLock.synchronized {
-    val old = entries.remove(norm(tablePath))
-    coverCache.clear()
-    if (old != null) maybeEvictIndex(old.indexDir)
-  }
+  private def remove(kind: Kind, tablePath: String): Unit =
+    mutationLock.synchronized {
+      val old = regs(kind).remove(norm(tablePath))
+      coverCache.clear()
+      if (old != null) release(kind, old.indexDir)
+    }
 
-  /** Evict the memoized IvfIndex for `indexDir` unless another live
-    * registration (plain, partial, or maxsim — they share the instance
-    * cache) still references it, releasing its persisted plans: a
-    * prewarm-persisted dataDf is pinned by Spark's CacheManager until
-    * explicitly unpersisted, so dropping only the catalog entry would
-    * leak the executor-memory copy for every dropped index forever.
-    * Callers hold [[mutationLock]] — the stillUsed scan plus the remove
-    * must be atomic against concurrent registrations of the same dir. */
-  private def maybeEvictIndex(indexDir: String): Unit = {
+  /** Register: reads of `tablePath` may be served by the index at `indexDir`. */
+  def register(tablePath: String, indexDir: String, idCol: String, vecCol: String): Unit =
+    put(Kind.Ivf, tablePath, Entry(indexDir, idCol, vecCol, tablePath))
+
+  def unregister(tablePath: String): Unit = remove(Kind.Ivf, tablePath)
+
+  /** Release the memoized instance behind `dir` once no live
+    * registration still references it. IVF, partial and token indexes
+    * share one IvfIndex cache: a prewarm-persisted dataDf is pinned by
+    * Spark's CacheManager until explicitly unpersisted, so dropping only
+    * the catalog entry would leak the executor-memory copy for every
+    * dropped index forever. A graph dir drops its driver-resident graph;
+    * a sharded dir unpersists its resident shard RDD. Callers hold
+    * [[mutationLock]] — the stillUsed scan plus the remove must be atomic
+    * against concurrent registrations of the same dir. */
+  private def release(kind: Kind, dir: String): Unit = {
     import scala.jdk.CollectionConverters._
-    val stillUsed =
-      entries.values.asScala.exists(_.indexDir == indexDir) ||
-      partials.values.asScala.exists(_.exists(_.entry.indexDir == indexDir)) ||
-      msEntries.values.asScala.exists(_.indexDir == indexDir)
-    if (!stillUsed)
-      Option(indexes.remove(indexDir)).foreach(_.release())
+    def used(k: Kind) = regs(k).values.asScala.exists(_.indexDir == dir)
+    kind match {
+      case Kind.Graph => if (!used(Kind.Graph)) graphs.remove(dir)
+      case Kind.Sharded =>
+        if (!used(Kind.Sharded))
+          Option(sgHandles.remove(dir)).foreach(_._2.unpersist())
+      case _ =>
+        val stillUsed = used(Kind.Ivf) || used(Kind.Tokens) ||
+          partials.values.asScala.exists(_.exists(_.entry.indexDir == dir))
+        if (!stillUsed) Option(indexes.remove(dir)).foreach(_.release())
+    }
   }
 
   /** An entry may serve a relation only when it covers EVERY root:
     * first-match semantics on a multi-root read would silently restrict
     * the scan to one root's candidates and drop the other roots' rows
-    * from the top-k (distinct per-root entries are the [[lookupAll]] /
+    * from the top-k (distinct per-root entries are [[resolve]]'s
     * union-serve case instead). */
   private def covering[T](rootPaths: Seq[String], get: String => T): Option[T] = {
     val vs = rootPaths.map(norm).map(p => Option(get(p)))
@@ -124,25 +161,55 @@ object AnnCatalog {
   }
 
   def lookup(rootPaths: Seq[String]): Option[Entry] =
-    covering(rootPaths, entries.get)
+    covering(rootPaths, regs(Kind.Ivf).get)
 
-  /** Multi-root relation (`spark.read.parquet(rootA, rootB)` over a
-    * manually-partitioned table): every root resolves to its own entry.
-    * None unless EVERY root is registered — serving a subset would
-    * silently drop the unindexed roots' rows from the result. */
-  def lookupAll(rootPaths: Seq[String]): Option[Seq[Entry]] = {
-    val es = rootPaths.map(p => Option(entries.get(norm(p))))
-    if (es.nonEmpty && es.forall(_.isDefined)) Some(es.flatten.distinct)
-    else None
+  /** The ONE catalog resolve every serve shares: the first family in
+    * `kinds` whose registrations cover the scan, and that indexes column
+    * `col` in `metric` (None = any) under one id column. A family covers
+    * the scan through
+    *  - one entry per root path (a single registered table, or a
+    *    multi-root `spark.read.parquet(rootA, rootB)` read over a
+    *    manually-partitioned table — None unless EVERY root is
+    *    registered: serving a subset would silently drop the unindexed
+    *    roots' rows), or
+    *  - per-child entries jointly covering every file the scan reads
+    *    (a `part=*` table under one root, see [[coverByFilesIn]]).
+    * The sharded tier serves one covering entry only — it has no
+    * cross-root merge. `files` is forced at most once, and only when
+    * some entry of a tried family sits under the roots. */
+  def resolve(spark: SparkSession, roots: Seq[String], files: => Seq[String],
+      kinds: Seq[Kind], col: Option[String] = None,
+      metric: Option[String] = None): Option[Tier] = {
+    lazy val fileSeq = files
+    kinds.iterator.flatMap { kind =>
+      val byRoot = roots.map(p => Option(regs(kind).get(norm(p))))
+      val es =
+        if (byRoot.nonEmpty && byRoot.forall(_.isDefined))
+          Some(byRoot.flatten.distinct)
+            .filter(es => kind != Kind.Sharded || es.size == 1)
+        else if (kind == Kind.Sharded) None
+        else coverByFilesIn(kind, roots, fileSeq)
+      es.filter(es => col.forall(c => es.forall(_.vecCol == c)) &&
+          es.map(_.idCol).distinct.size == 1 &&
+          metric.forall(m => es.forall(metricOf(spark, kind, _) == m)))
+        .map(Tier(kind, _))
+    }.nextOption()
   }
 
-  /** Partitioned-table serving under ONE discovered root (a `tableDir`
+  private def metricOf(spark: SparkSession, kind: Kind, e: Entry): String =
+    kind match {
+      case Kind.Graph   => graph(spark, e).cfg.metric
+      case Kind.Sharded => shardedGraph(spark, e).cfg.metric
+      case _            => index(spark, e).meta.cfg.metric
+    }
+
+  /** Partitioned-table cover under ONE discovered root (a `tableDir`
     * whose `part=*` children each carry their own index, the reference's
     * per-partition indexes — tests/vchordrq/partition.slt:1-35): Some
-    * iff every FILE the scan would read lies under a registered child
-    * path, i.e. the per-child indexes jointly cover the whole scan.
+    * iff every FILE the scan would read lies under a registered path of
+    * `kind`, i.e. the per-child indexes jointly cover the whole scan.
     *
-    * Only entries STRICTLY BELOW one of the scan's root paths are
+    * Only entries at or below one of the scan's root paths are
     * considered: an entry above the root (an index registered for the
     * whole table while the scan reads one child dir) indexes MORE rows
     * than the scan — its global top-k is not the subset's top-k, so
@@ -158,19 +225,14 @@ object AnnCatalog {
     * (cheap: re-deciding a directory is one prefix scan). Appends add
     * files to EXISTING partition dirs or new dirs — cached dirs stay
     * valid, new dirs get decided and cached on first sight. */
-  def coverByFiles(rootPaths: Seq[String], files: => Seq[String]): Option[Seq[Entry]] =
-    coverByFilesIn(rootPaths, files, entries, coverCache)
-
-  /** [[coverByFiles]] generalized over an entry map + decision cache (the
-    * same machinery serves the MaxSim catalog). */
-  private def coverByFilesIn[E <: AnyRef](rootPaths: Seq[String], files: => Seq[String],
-      all: java.util.concurrent.ConcurrentHashMap[String, E],
-      cache: java.util.concurrent.ConcurrentHashMap[String, Option[E]]): Option[Seq[E]] = {
+  private def coverByFilesIn(kind: Kind, rootPaths: Seq[String],
+      files: => Seq[String]): Option[Seq[Entry]] = {
     import scala.jdk.CollectionConverters._
+    val all = regs(kind)
     if (all.isEmpty) return None
     val rootPrefixes = rootPaths.map(p => norm(p) + "/")
-    val rootsKey = rootPrefixes.sorted.mkString("|")
-    val regs = all.asScala.toSeq.collect {
+    val rootsKey = kind.toString + "|" + rootPrefixes.sorted.mkString("|")
+    val under = all.asScala.toSeq.collect {
       case (p, e) if rootPrefixes.exists(r => (p + "/").startsWith(r)) =>
         (p + "/", e)
     }
@@ -180,10 +242,10 @@ object AnnCatalog {
     // materialization the caller passes by name — at 50k-file tables
     // that array build is the only per-plan cost that scales with the
     // table, and it buys nothing when no entry sits under the roots
-    if (regs.isEmpty) return None
+    if (under.isEmpty) return None
     val fileSeq = files
     if (fileSeq.isEmpty) return None
-    val out = scala.collection.mutable.LinkedHashSet.empty[E]
+    val out = scala.collection.mutable.LinkedHashSet.empty[Entry]
     val seenDirs = scala.collection.mutable.HashSet.empty[String]
     val it = fileSeq.iterator
     while (it.hasNext) {
@@ -197,11 +259,11 @@ object AnnCatalog {
       if (seenDirs.add(rawDir)) { // each distinct leaf dir decided once per plan
         val dir = norm(rawDir) + "/"
         val key = rootsKey + "|#|" + dir
-        var dec = cache.get(key)
+        var dec = coverCache.get(key)
         if (dec == null) {
-          dec = regs.find { case (prefix, _) => dir.startsWith(prefix) }
+          dec = under.find { case (prefix, _) => dir.startsWith(prefix) }
             .map(_._2)
-          cache.put(key, dec)
+          coverCache.put(key, dec)
         }
         dec match {
           case Some(e) => out += e
@@ -212,10 +274,11 @@ object AnnCatalog {
     Some(out.toSeq)
   }
 
-  /** Memoized per-directory cover decisions: key = rootsKey + leaf dir,
-    * value = the covering entry (or None = provably uncovered). Cleared on
-    * any catalog mutation. Bounded by distinct (roots, partition-dir)
-    * pairs actually planned — partitions, not files. */
+  /** Memoized per-directory cover decisions: key = family + rootsKey +
+    * leaf dir, value = the covering entry (or None = provably
+    * uncovered). Cleared on any catalog mutation. Bounded by distinct
+    * (family, roots, partition-dir) triples actually planned —
+    * partitions, not files. */
   private val coverCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Entry]]()
 
@@ -250,7 +313,7 @@ object AnnCatalog {
           case Nil => null
           case rest => rest
         })
-      maybeEvictIndex(indexDir)
+      release(Kind.Ivf, indexDir)
     }
 
   /** Covering semantics like [[lookup]]: every root must resolve to the
@@ -260,15 +323,13 @@ object AnnCatalog {
   def lookupPartials(rootPaths: Seq[String]): Seq[PartialEntry] =
     covering(rootPaths, partials.get).getOrElse(Nil)
 
+  /** The memoized IVF (or token) index behind an entry. */
   def index(spark: SparkSession, e: Entry): IvfIndex =
     indexes.computeIfAbsent(e.indexDir, d => IvfIndex.load(spark, d))
 
   // ---- graph-index (vchordg) entries: same ORDER BY <-> LIMIT k shape,
   // served by beam search over the broadcast Vamana graph ----
 
-  final case class GraphEntry(graphDir: String, idCol: String, vecCol: String)
-
-  private val gEntries = new java.util.concurrent.ConcurrentHashMap[String, GraphEntry]()
   // dir -> (stamp, graph): a rebuild REPLACES the stale entry (the old
   // driver-resident graph becomes garbage) — a stamp-IN-KEY cache would
   // retain one full graph per rebuild forever, the leak the sharded
@@ -276,40 +337,10 @@ object AnnCatalog {
   private val graphs =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, graft.index.VamanaGraph)]()
 
-  def registerGraph(tablePath: String, graphDir: String, idCol: String, vecCol: String): Unit = {
-    gEntries.put(norm(tablePath), GraphEntry(graphDir, idCol, vecCol))
-    gCoverCache.clear()
-  }
+  def registerGraph(tablePath: String, graphDir: String, idCol: String, vecCol: String): Unit =
+    put(Kind.Graph, tablePath, Entry(graphDir, idCol, vecCol))
 
-  def unregisterGraph(tablePath: String): Unit = {
-    val old = gEntries.remove(norm(tablePath))
-    gCoverCache.clear()
-    if (old != null) {
-      import scala.jdk.CollectionConverters._
-      if (!gEntries.values.asScala.exists(_.graphDir == old.graphDir))
-        graphs.remove(old.graphDir)
-    }
-  }
-
-  def lookupGraph(rootPaths: Seq[String]): Option[GraphEntry] =
-    covering(rootPaths, gEntries.get)
-
-  /** Multi-root graph lookups (a partitioned corpus with one driver-tier
-    * graph per child — the graph-tier analogue of [[lookupAll]] /
-    * [[coverByFiles]]): every root, or every scanned child dir, must
-    * resolve to its own registered graph. */
-  def lookupAllGraphs(rootPaths: Seq[String]): Option[Seq[GraphEntry]] = {
-    val es = rootPaths.map(p => Option(gEntries.get(norm(p))))
-    if (es.nonEmpty && es.forall(_.isDefined)) Some(es.flatten.distinct)
-    else None
-  }
-
-  def coverGraphsByFiles(rootPaths: Seq[String],
-                         files: => Seq[String]): Option[Seq[GraphEntry]] =
-    coverByFilesIn(rootPaths, files, gEntries, gCoverCache)
-
-  private val gCoverCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[GraphEntry]]()
+  def unregisterGraph(tablePath: String): Unit = remove(Kind.Graph, tablePath)
 
   /** Latest modification stamp under a graph dir — a rebuild+save into the
     * same dir (the deleteAndRebuild vacuum flow) must not be served stale. */
@@ -323,20 +354,17 @@ object AnnCatalog {
     }
   }
 
-  def graph(spark: SparkSession, e: GraphEntry): graft.index.VamanaGraph = {
-    val stamp = graphStamp(e.graphDir)
-    graphs.compute(e.graphDir, (_, cur) =>
+  def graph(spark: SparkSession, e: Entry): graft.index.VamanaGraph = {
+    val stamp = graphStamp(e.indexDir)
+    graphs.compute(e.indexDir, (_, cur) =>
       if (cur != null && cur._1 == stamp) cur
-      else (stamp, graft.index.VamanaGraph.load(spark, e.graphDir)))._2
+      else (stamp, graft.index.VamanaGraph.load(spark, e.indexDir)))._2
   }
 
   // ---- SHARDED graph entries: the distributed graph tier serves the
   // same ORDER BY <-> LIMIT k shape when the driver-tier graph can't
   // hold the table ----
 
-  final case class ShardedGraphEntry(dir: String, idCol: String, vecCol: String)
-
-  private val sgEntries = new java.util.concurrent.ConcurrentHashMap[String, ShardedGraphEntry]()
   // dir -> (stamp, handle): a rebuild EVICTS and unpersists the stale
   // handle (it holds executor memory via its persisted RDD — a stamp-keyed
   // cache would leak one resident graph per rebuild)
@@ -344,85 +372,56 @@ object AnnCatalog {
     new java.util.concurrent.ConcurrentHashMap[String, (Long, graft.index.ShardedVamana.Handle)]()
 
   def registerShardedGraph(tablePath: String, dir: String, idCol: String, vecCol: String): Unit =
-    sgEntries.put(norm(tablePath), ShardedGraphEntry(dir, idCol, vecCol))
+    put(Kind.Sharded, tablePath, Entry(dir, idCol, vecCol))
 
-  def unregisterShardedGraph(tablePath: String): Unit = {
-    val old = sgEntries.remove(norm(tablePath))
-    if (old != null) {
-      import scala.jdk.CollectionConverters._
-      if (!sgEntries.values.asScala.exists(_.dir == old.dir))
-        Option(sgHandles.remove(old.dir)).foreach(_._2.unpersist())
-    }
-  }
+  def unregisterShardedGraph(tablePath: String): Unit =
+    remove(Kind.Sharded, tablePath)
 
-  def lookupShardedGraph(rootPaths: Seq[String]): Option[ShardedGraphEntry] =
-    covering(rootPaths, sgEntries.get)
-
-  def shardedGraph(spark: SparkSession, e: ShardedGraphEntry): graft.index.ShardedVamana.Handle = {
-    val stamp = graphStamp(e.dir)
-    sgHandles.compute(e.dir, (_, cur) =>
+  def shardedGraph(spark: SparkSession, e: Entry): graft.index.ShardedVamana.Handle = {
+    val stamp = graphStamp(e.indexDir)
+    sgHandles.compute(e.indexDir, (_, cur) =>
       if (cur != null && cur._1 == stamp) cur
       else {
         if (cur != null) cur._2.unpersist()
-        (stamp, graft.index.ShardedVamana.load(spark, e.dir))
+        (stamp, graft.index.ShardedVamana.load(spark, e.indexDir))
       })._2
   }
 
   // ---- multi-vector (MaxSim, reference opclass strategy 3) entries ----
-
-  final case class MaxSimEntry(indexDir: String, docCol: String, tokensCol: String)
-
-  private val msEntries = new java.util.concurrent.ConcurrentHashMap[String, MaxSimEntry]()
 
   /** Register: `tablePath` rows are (docCol, tokensCol: array<array<float>>)
     * documents whose exploded tokens were indexed (MaxSim.buildTokenIndex)
     * at `indexDir`. */
   def registerMaxSim(tablePath: String, indexDir: String,
                      docCol: String, tokensCol: String): Unit =
-    mutationLock.synchronized {
-      msEntries.put(norm(tablePath), MaxSimEntry(indexDir, docCol, tokensCol))
-      msCoverCache.clear()
-    }
+    put(Kind.Tokens, tablePath, Entry(indexDir, docCol, tokensCol))
 
-  def unregisterMaxSim(tablePath: String): Unit = mutationLock.synchronized {
-    val old = msEntries.remove(norm(tablePath))
-    if (old != null) maybeEvictIndex(old.indexDir)
-    msCoverCache.clear()
-  }
+  def unregisterMaxSim(tablePath: String): Unit = remove(Kind.Tokens, tablePath)
 
-  def lookupMaxSim(rootPaths: Seq[String]): Option[MaxSimEntry] =
-    covering(rootPaths, msEntries.get)
-
-  /** Multi-root MaxSim lookups (the partitioned multivector corpus,
-    * strategy-3 analogue of [[lookupAll]] / [[coverByFiles]]): every
-    * root — or every scanned child dir — must resolve to its own
-    * registered per-child token index. */
-  def lookupAllMaxSim(rootPaths: Seq[String]): Option[Seq[MaxSimEntry]] = {
-    val es = rootPaths.map(p => Option(msEntries.get(norm(p))))
-    if (es.nonEmpty && es.forall(_.isDefined)) Some(es.flatten.distinct)
-    else None
-  }
-
-  def coverMaxSimByFiles(rootPaths: Seq[String],
-                         files: => Seq[String]): Option[Seq[MaxSimEntry]] =
-    coverByFilesIn(rootPaths, files, msEntries, msCoverCache)
-
-  private val msCoverCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[MaxSimEntry]]()
-
-  def maxSimIndex(spark: SparkSession, e: MaxSimEntry): IvfIndex =
-    indexes.computeIfAbsent(e.indexDir, d => IvfIndex.load(spark, d))
-
-  /** Shared resolution for the served batch entry points: the corpus's
-    * file relation + root paths (the exact inputs the planner's serves
-    * resolve registrations from). */
-  private def resolveFs(spark: SparkSession, tablePath: String,
-      face: String): HadoopFsRelation =
-    spark.read.parquet(tablePath).queryExecution.analyzed.collectFirst {
+  /** The served batch entry points' resolve: the corpus's file relation
+    * resolves EXACTLY as the planner's serves do (first covering family
+    * of `kinds`); unregistered corpora refuse loudly. */
+  private def resolveServed(spark: SparkSession, tablePath: String,
+      face: String, kinds: Seq[Kind]): Tier = {
+    val fsRel = spark.read.parquet(tablePath).queryExecution.analyzed.collectFirst {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
         lr.relation.asInstanceOf[HadoopFsRelation]
     }.getOrElse(throw new IllegalArgumentException(
       s"$face: '$tablePath' did not resolve to a file-backed relation"))
+    resolve(spark, fsRel.location.rootPaths.map(_.toString),
+        fsRel.location.inputFiles.toSeq, kinds)
+      .getOrElse(throw new IllegalArgumentException(
+        if (kinds == Seq(Kind.Tokens))
+          s"$face: no registered token index covers '$tablePath' — " +
+          "register the corpus (or every partition child) with " +
+          "AnnCatalog.registerMaxSim first"
+        else
+          s"$face: no registered index, graph, or sharded graph covers " +
+          s"'$tablePath' — register the table (or every partition child) " +
+          "with AnnCatalog.register / registerGraph / registerShardedGraph " +
+          "first; unregistered corpora have the exact DSL faces instead of " +
+          "a silent full scan"))
+  }
 
   /** Bounded queries-side collect for the served entry points: the cap
     * is LOUD (the batch collects to the driver, the join-serve policy). */
@@ -435,10 +434,24 @@ object AnnCatalog {
     rows
   }
 
-  private def probesFor(spark: SparkSession, lists: Int): Int =
-    spark.conf.get("graft.ann.probes", "auto") match {
-      case "auto" => math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-      case s      => s.toInt
+  /** The rerank table of a graph or sharded tier whose vertices are
+    * quantized: the corpus itself (estimate distances never reach the
+    * caller). */
+  private def quantizedRerank(spark: SparkSession, quantized: Boolean,
+      tablePath: String, e: Entry): Option[(org.apache.spark.sql.DataFrame, String, String)] =
+    if (quantized) Some((spark.read.parquet(tablePath), e.idCol, e.vecCol))
+    else None
+
+  /** Codes-only IVF children rerank from their registered source table —
+    * expressible only when every entry shares ONE table (the per-child
+    * entries of a partitioned corpus each point at their own child; the
+    * batched faces refuse those loudly). */
+  private def ivfRerank(spark: SparkSession, es: Seq[Entry], idxs: Seq[IvfIndex])
+      : Option[(org.apache.spark.sql.DataFrame, String, String)] =
+    if (idxs.forall(_.meta.cfg.storeVectors)) None
+    else es.map(_.tablePath).filter(_.nonEmpty).distinct match {
+      case Seq(tp) => Some((spark.read.parquet(tp), es.head.idCol, es.head.vecCol))
+      case _ => None
     }
 
   /** "SQL in, batch out" (round 15): answer a bounded queries TABLE of
@@ -475,31 +488,12 @@ object AnnCatalog {
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       centerCol: String, radiusCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val fsRel = resolveFs(spark, tablePath, "servedRangeMany")
-    val roots = fsRel.location.rootPaths.map(_.toString)
-    lazy val files = fsRel.location.inputFiles.toSeq
-    val esOpt = lookup(roots).map(Seq(_))
-      .orElse(lookupAll(roots))
-      .orElse(coverByFiles(roots, files))
-    val gesOpt =
-      if (esOpt.isDefined) None
-      else lookupGraph(roots).map(Seq(_))
-        .orElse(lookupAllGraphs(roots).filter(_.size > 1))
-        .orElse(coverGraphsByFiles(roots, files))
-    val seOpt =
-      if (esOpt.isDefined || gesOpt.isDefined) None
-      else lookupShardedGraph(roots)
-    if (esOpt.isEmpty && gesOpt.isEmpty && seOpt.isEmpty)
-      throw new IllegalArgumentException(
-        s"servedRangeMany: no registered index, graph, or sharded graph " +
-        s"covers '$tablePath' — register the table (or every partition " +
-        "child) with AnnCatalog.register / registerGraph / " +
-        "registerShardedGraph first; unregistered corpora have the exact " +
-        "DSL (IvfIndex.rangeSearch*) instead of a silent full scan")
-    val maxQ = spark.conf.get("graft.ann.range.served.maxQueries", "4096").toInt
+    val tier = resolveServed(spark, tablePath, "servedRangeMany", Kind.vectors)
+    val c = AnnConf(spark)
     val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
         col(centerCol).cast("array<float>"), col(radiusCol).cast("double")),
-      maxQ, "servedRangeMany", "graft.ann.range.served.maxQueries")
+      c.rangeServedMaxQueries, "servedRangeMany",
+      AnnConf.RangeServedMaxQueries.name)
     val queries = rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
@@ -508,42 +502,21 @@ object AnnCatalog {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
     }
-    val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
-    val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-    esOpt match {
-      case Some(es) =>
-        val idxs = es.map(e => index(spark, e))
-        // codes-only children rerank from their registered source table —
-        // expressible only when every entry shares ONE table (the
-        // per-child entries of a partitioned corpus each point at their
-        // own child)
-        val rt =
-          if (idxs.forall(_.meta.cfg.storeVectors)) None
-          else es.map(_.tablePath).filter(_.nonEmpty).distinct match {
-            case Seq(tp) => Some((spark.read.parquet(tp), es.head.idCol, es.head.vecCol))
-            case _ => None // rangeSearchManyMulti refuses loudly below
-          }
-        IvfIndex.rangeSearchManyMulti(idxs, queries, eps, rt)
-      case None => gesOpt match {
-        case Some(ges) =>
-          val gs = ges.map(ge => graph(spark, ge))
-          val rt =
-            if (gs.exists(_.quantized))
-              Some((spark.read.parquet(tablePath),
-                ges.head.idCol, ges.head.vecCol))
-            else None
-          graft.index.VamanaGraph.rangeSearchManyMulti(spark, gs, queries,
-            ef = ef, epsilon = eps, rerankTable = rt)
-        case None =>
-          val se = seOpt.get
-          val h = shardedGraph(spark, se)
-          val rt =
-            if (h.cfg.bits > 0)
-              Some((spark.read.parquet(tablePath), se.idCol, se.vecCol))
-            else None
-          h.rangeSearch(spark, queries, ef = ef, epsilon = eps,
-            rerankTable = rt)
-      }
+    val es = tier.entries
+    tier.kind match {
+      case Kind.Ivf =>
+        val idxs = es.map(index(spark, _))
+        IvfIndex.rangeSearchManyMulti(idxs, queries, c.epsilon,
+          ivfRerank(spark, es, idxs))
+      case Kind.Graph =>
+        val gs = es.map(graph(spark, _))
+        graft.index.VamanaGraph.rangeSearchManyMulti(spark, gs, queries,
+          ef = c.efSearch, epsilon = c.epsilon, rerankTable =
+            quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
+      case _ =>
+        val h = shardedGraph(spark, es.head)
+        h.rangeSearch(spark, queries, ef = c.efSearch, epsilon = c.epsilon,
+          rerankTable = quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
     }
   }
 
@@ -568,30 +541,12 @@ object AnnCatalog {
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       centerCol: String, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val fsRel = resolveFs(spark, tablePath, "servedSearchMany")
-    val roots = fsRel.location.rootPaths.map(_.toString)
-    lazy val files = fsRel.location.inputFiles.toSeq
-    val esOpt = lookup(roots).map(Seq(_))
-      .orElse(lookupAll(roots))
-      .orElse(coverByFiles(roots, files))
-    val gesOpt =
-      if (esOpt.isDefined) None
-      else lookupGraph(roots).map(Seq(_))
-        .orElse(lookupAllGraphs(roots).filter(_.size > 1))
-        .orElse(coverGraphsByFiles(roots, files))
-    val seOpt =
-      if (esOpt.isDefined || gesOpt.isDefined) None
-      else lookupShardedGraph(roots)
-    if (esOpt.isEmpty && gesOpt.isEmpty && seOpt.isEmpty)
-      throw new IllegalArgumentException(
-        s"servedSearchMany: no registered index, graph, or sharded graph " +
-        s"covers '$tablePath' — register the table (or every partition " +
-        "child) with AnnCatalog.register / registerGraph / " +
-        "registerShardedGraph first")
-    val maxQ = spark.conf.get("graft.ann.knn.served.maxQueries", "4096").toInt
+    val tier = resolveServed(spark, tablePath, "servedSearchMany", Kind.vectors)
+    val c = AnnConf(spark)
     val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
         col(centerCol).cast("array<float>")),
-      maxQ, "servedSearchMany", "graft.ann.knn.served.maxQueries")
+      c.knnServedMaxQueries, "servedSearchMany",
+      AnnConf.KnnServedMaxQueries.name)
     val queries = rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -600,39 +555,22 @@ object AnnCatalog {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
     }
-    val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-    esOpt match {
-      case Some(es) =>
-        val idxs = es.map(e => index(spark, e))
-        val probes = idxs.map(ix => probesFor(spark, ix.meta.cfg.lists)).max
-        val refine = spark.conf.get("graft.ann.refine", "8").toInt
-        val rt =
-          if (idxs.forall(_.meta.cfg.storeVectors)) None
-          else es.map(_.tablePath).filter(_.nonEmpty).distinct match {
-            case Seq(tp) => Some((spark.read.parquet(tp), es.head.idCol, es.head.vecCol))
-            case _ => None // searchManyMulti refuses loudly below
-          }
-        IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
-          refine = refine, rerankTable = rt)
-      case None => gesOpt match {
-        case Some(ges) =>
-          val gs = ges.map(ge => graph(spark, ge))
-          val rt =
-            if (gs.exists(_.quantized))
-              Some((spark.read.parquet(tablePath),
-                ges.head.idCol, ges.head.vecCol))
-            else None
-          graft.index.VamanaGraph.searchManyMulti(spark, gs, queries, k,
-            ef = ef, rerankTable = rt)
-        case None =>
-          val se = seOpt.get
-          val h = shardedGraph(spark, se)
-          val rt =
-            if (h.cfg.bits > 0)
-              Some((spark.read.parquet(tablePath), se.idCol, se.vecCol))
-            else None
-          h.search(spark, queries, k, ef = ef, rerankTable = rt)
-      }
+    val es = tier.entries
+    tier.kind match {
+      case Kind.Ivf =>
+        val idxs = es.map(index(spark, _))
+        IvfIndex.searchManyMulti(idxs, queries, k,
+          probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)).max,
+          refine = c.refine, rerankTable = ivfRerank(spark, es, idxs))
+      case Kind.Graph =>
+        val gs = es.map(graph(spark, _))
+        graft.index.VamanaGraph.searchManyMulti(spark, gs, queries, k,
+          ef = c.efSearch, rerankTable =
+            quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
+      case _ =>
+        val h = shardedGraph(spark, es.head)
+        h.search(spark, queries, k, ef = c.efSearch, rerankTable =
+          quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
     }
   }
 
@@ -647,20 +585,14 @@ object AnnCatalog {
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       tokensCol: String, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, explode}
-    val fsRel = resolveFs(spark, tablePath, "servedMaxsimMany")
-    val roots = fsRel.location.rootPaths.map(_.toString)
-    val es = lookupMaxSim(roots).map(Seq(_))
-      .orElse(lookupAllMaxSim(roots))
-      .orElse(coverMaxSimByFiles(roots, fsRel.location.inputFiles.toSeq))
-      .getOrElse(throw new IllegalArgumentException(
-        s"servedMaxsimMany: no registered token index covers '$tablePath' " +
-        "— register the corpus (or every partition child) with " +
-        "AnnCatalog.registerMaxSim first"))
-    val idxs = es.map(e => maxSimIndex(spark, e))
-    val maxQ = spark.conf.get("graft.ann.maxsim.served.maxQueries", "1024").toInt
+    val es = resolveServed(spark, tablePath, "servedMaxsimMany",
+      Seq(Kind.Tokens)).entries
+    val idxs = es.map(index(spark, _))
+    val c = AnnConf(spark)
     val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
         col(tokensCol).cast("array<array<float>>")),
-      maxQ, "servedMaxsimMany", "graft.ann.maxsim.served.maxQueries")
+      c.maxsimServedMaxQueries, "servedMaxsimMany",
+      AnnConf.MaxsimServedMaxQueries.name)
     val queries: Array[(Long, Array[Array[Float]])] = rows.iterator
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.getLong(0),
@@ -671,9 +603,6 @@ object AnnCatalog {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("qid", "doc", "maxsim")
     }
-    val kPerToken = spark.conf.get("graft.ann.maxsim.kPerToken", "100").toInt
-    val refine = spark.conf.get("graft.ann.refine", "8").toInt
-    val probes = idxs.map(ix => probesFor(spark, ix.meta.cfg.lists))
     val h = idxs.head
     // codes-only / storage-mixed children: the rerank token table is the
     // registered corpus itself, exploded to one row per token
@@ -681,10 +610,11 @@ object AnnCatalog {
       if (idxs.forall(ix => ix.meta.cfg.storeVectors &&
           ix.meta.cfg.storage == h.meta.cfg.storage)) None
       else Some((spark.read.parquet(tablePath)
-        .select(col(es.head.docCol), explode(col(es.head.tokensCol)).as("__tok")),
-        es.head.docCol, "__tok"))
-    graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k, kPerToken = kPerToken,
-      probes = probes, refine = refine, rerankTable = rt)
+        .select(col(es.head.idCol), explode(col(es.head.vecCol)).as("__tok")),
+        es.head.idCol, "__tok"))
+    graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k, kPerToken = c.kPerToken,
+      probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)),
+      refine = c.refine, rerankTable = rt)
   }
 }
 
@@ -856,14 +786,61 @@ object AnnTopKRewrite {
       planStr.split(java.util.regex.Pattern.quote(n), -1).length - 1
     c(" IN ") + c(" INSET ")
   }
+
+  /** A matched `ORDER BY <dist> LIMIT k` shape: the original plan `gl`,
+    * its Sort over `child`, and the limit body's projection. */
+  private[plans] final case class TopK(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
+      projOpt: Option[Seq[NamedExpression]], k: Int)
+
+  /** The id column a serve restricts, with the literal builder matching
+    * its type (the plan is already analyzed — no implicit casts will be
+    * inserted). */
+  private[plans] final case class IdCol(attr: Attribute, lit: Long => Literal) {
+    def in(ids: Seq[Long]): Expression = idsInExpr(attr, ids, lit)
+  }
+
+  /** The scan under a serve: a file relation (bare, column-pruned or
+    * prefiltered, see the rule's `destructure`) and its prefilter. */
+  private[plans] final case class Scan(rel: LogicalRelation, fs: HadoopFsRelation,
+      pred: Option[Expression]) {
+    def roots: Seq[String] = fs.location.rootPaths.map(_.toString)
+  }
+
+  /** A matched KNN-join shape: the rank Filter over the Window over the
+    * (projected) join, the indexed side and the id/vec columns its
+    * candidate restriction uses. */
+  private[plans] final case class KnnJoin(f: Filter, w: Window, join: Join,
+      projOpt: Option[Seq[NamedExpression]], indexedSide: LogicalPlan,
+      indexedIsLeft: Boolean, id: IdCol, vecAttr: Attribute)
 }
 
 case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+  import AnnTopKRewrite.{IdCol, KnnJoin, Scan, TopK}
 
-  /** The served plans inject `id IN (candidates)` over the SOURCE table —
-    * the pushdown-threshold management (raise to the list size, clamp
-    * down past the or-chain-SOE cap) is [[IvfIndex.ensureInPushdown]],
-    * shared with the index's own candidate fetches. */
+  private def idCol(output: Seq[Attribute], name: String): Option[IdCol] =
+    output.find(_.name == name).flatMap(a => a.dataType match {
+      case org.apache.spark.sql.types.LongType    => Some(IdCol(a, (id: Long) => Literal(id)))
+      case org.apache.spark.sql.types.IntegerType => Some(IdCol(a, (id: Long) => Literal(id.toInt)))
+      case _ => None
+    })
+
+  /** The ONE IN-plan tail of every top-k serve: the original ordering
+    * over the `restricted` child, the limit body's projection, the limit.
+    * The plan's own exact Sort reranks whatever candidates the child
+    * admits. */
+  private def inPlan(t: TopK, restricted: LogicalPlan): LogicalPlan = {
+    val sorted = Sort(t.sort.order, global = true, restricted)
+    val body = t.projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
+    GlobalLimit(Literal(t.k), LocalLimit(Literal(t.k), body))
+  }
+
+  /** The served top-k over candidate `ids` (no candidates: the exact
+    * plan stays). */
+  private def served(c: AnnConf, t: TopK, id: IdCol, ids: Seq[Long],
+      complete: => Boolean): LogicalPlan =
+    if (ids.isEmpty) t.gl
+    else inPlan(t, topkFilter(c, t.sort, t.child, id, ids, complete))
+
   /** Stamped candidate Filter for the Sort-based TOP-K serves: the id
     * restriction plus the exact plan's null-ordering keep (see
     * [[AnnTopKRewrite.topkRestriction]]). The vec/tokens attribute is
@@ -876,19 +853,19 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * index (IvfIndex.sourceComplete folded over every resolved root)?
     * Under the default keepNulls=auto an attested-complete corpus keeps
     * the bare parquet-pushable IN — there is nothing to keep. */
-  private def topkFilter(sort: Sort, child: LogicalPlan, idAttr: Attribute,
-      ids: Seq[Long], idLit: Long => Literal,
-      complete: => Boolean = false): Filter = {
+  private def topkFilter(c: AnnConf, sort: Sort, child: LogicalPlan, id: IdCol,
+      ids: Seq[Long], complete: => Boolean): Filter = {
+    ensureInPushdown(ids.length)
     val vecOpt =
-      if (!keepNullsFor(complete)) None
+      if (!keepNullsFor(c, complete)) None
       else sort.order.headOption
         .flatMap(_.child.references.find(a => child.outputSet.contains(a)))
     val maxsim = sort.order.headOption
       .exists(_.child.exists(_.isInstanceOf[VecMaxSimExpr]))
     stamped(Filter(vecOpt.map(v =>
-        AnnTopKRewrite.topkRestriction(idAttr, ids, idLit, v,
+        AnnTopKRewrite.topkRestriction(id.attr, ids, id.lit, v,
           keepEmpty = maxsim))
-      .getOrElse(AnnTopKRewrite.idsInExpr(idAttr, ids, idLit)), child))
+      .getOrElse(id.in(ids)), child))
   }
 
   /** `graft.ann.topk.keepNulls` — does a served top-k restrict with the
@@ -912,13 +889,17 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     *     null-free regardless of what the index attests.
     * Range serves are unaffected in every mode (their retained sphere
     * predicate is null-killing). */
-  private def keepNullsFor(complete: => Boolean): Boolean =
-    spark.conf.get("graft.ann.topk.keepNulls", "auto") match {
+  private def keepNullsFor(c: AnnConf, complete: => Boolean): Boolean =
+    c.keepNulls match {
       case "false" => false
       case "true"  => true
       case _       => !complete
     }
 
+  /** The served plans inject `id IN (candidates)` over the SOURCE table —
+    * the pushdown-threshold management (raise to the list size, clamp
+    * down past the or-chain-SOE cap) is [[IvfIndex.ensureInPushdown]],
+    * shared with the index's own candidate fetches. */
   private def ensureInPushdown(n: Int): Unit =
     IvfIndex.ensureInPushdown(spark, n)
 
@@ -1043,178 +1024,50 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  private def scanOf(plan: LogicalPlan): Option[Scan] =
+    destructure(plan).flatMap { case (rel, pred) =>
+      rel.relation match {
+        case h: HadoopFsRelation => Some(Scan(rel, h, pred))
+        case _ => None
+      }
+    }
+
+  /** The one catalog resolve of a scan ([[AnnCatalog.resolve]]), plus
+    * the resolved tier's id column in `output`. The graph, sharded and
+    * token tiers have no prefilter machinery (like the reference's graph
+    * AM and its `@#` recall harness), so a prefiltered scan resolves its
+    * IVF tier only. */
+  private def resolveIn(s: Scan, output: Seq[Attribute], kinds: Seq[Kind],
+      col: String, metric: String): Option[(AnnCatalog.Tier, IdCol)] =
+    for {
+      tier <- AnnCatalog.resolve(spark, s.roots, s.fs.location.inputFiles.toSeq,
+        if (s.pred.isEmpty) kinds else kinds.filter(_ == Kind.Ivf),
+        Some(col), Some(metric))
+      id <- idCol(output, tier.entries.head.idCol)
+    } yield (tier, id)
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (AnnTopKRewrite.planningGuardActive) return plan
-    if (!spark.conf.get("graft.ann.enable", "true").toBoolean) return plan
+    val c = AnnConf(spark)
+    if (!c.enable) return plan
     plan.transformDown {
+      // IDEMPOTENCE: the user batch runs to fixpoint, so the rule sees its
+      // own output — every serve stamps its Filter with ServedFilterTag;
+      // re-serving would launch redundant planning jobs every iteration.
+      // A USER `id IN (...)` conjunct carries no tag and still serves.
       case gl @ GlobalLimit(IntegerLiteral(k),
           LocalLimit(_, LimitBody(projOpt, sort @ Sort(
             Seq(SortOrder(sortExpr, Ascending, _, _)),
-            true, child, _)))) if k > 0 =>
-        sortExpr match {
-          case DistOn(metric, attr, qv) =>
-            (for {
-              (rel, predOpt) <- destructure(child)
-              fsRel <- rel.relation match {
-                case h: HadoopFsRelation => Some(h)
-                case _ => None
-              }
-              roots = fsRel.location.rootPaths.map(_.toString)
-              served <- {
-                val viaIvf = for {
-                  entry <- AnnCatalog.lookup(roots)
-                  if attr.name == entry.vecCol
-                  idAttr <- child.output.find(_.name == entry.idCol)
-                  // IDEMPOTENCE: the user batch runs to fixpoint, so the
-                  // rule sees its own output — every serve stamps its
-                  // Filter with ServedFilterTag; re-serving would launch
-                  // redundant planning jobs every iteration. A USER
-                  // `id IN (...)` conjunct carries no tag and still serves.
-                  if !isServedPlan(child)
-                  // id literals must match the column's type (plan is
-                  // already analyzed — no implicit casts will be inserted)
-                  idLit <- litFor(idAttr)
-                  // an index serves only queries in its own metric
-                  if AnnCatalog.index(spark, entry).meta.cfg.metric == metric
-                  s <- serveMulti(gl, sort, child, projOpt, Seq(entry), idAttr,
-                    idLit, qv, k, predOpt)
-                } yield s
-                // PARTITIONED table (reference partition.slt): several
-                // parquet roots — or one discovered root whose child
-                // dirs — each carry their own index; candidates are the
-                // bounded UNION of per-root pools. Prefiltered shapes
-                // escalate the whole union (one job per round).
-                def viaMulti = for {
-                  es <- AnnCatalog.lookupAll(roots).filter(_.size > 1)
-                    .orElse(AnnCatalog.coverByFiles(roots,
-                      fsRel.location.inputFiles.toSeq))
-                  if es.forall(_.vecCol == attr.name)
-                  if es.map(_.idCol).distinct.size == 1
-                  if !isServedPlan(child)
-                  idAttr <- child.output.find(_.name == es.head.idCol)
-                  idLit <- litFor(idAttr)
-                  if es.forall(e =>
-                    AnnCatalog.index(spark, e).meta.cfg.metric == metric)
-                  s <- serveMulti(gl, sort, child, projOpt, es, idAttr, idLit,
-                    qv, k, predOpt)
-                } yield s
-                // PARTIAL index (reference partition.slt:40-48): served
-                // only when the query predicate IMPLIES the index
-                // predicate (index conjuncts ⊆ query conjuncts);
-                // leftover conjuncts run the prefilter escalation
-                // against the partial index's own row population.
-                def viaPartial = for {
-                  pred <- predOpt
-                  if !isServedPlan(child)
-                  (pe, remaining) <- AnnCatalog.lookupPartials(roots)
-                    .iterator.flatMap(pe =>
-                      partialMatch(pe.predicateSql, pred, rel.output)
-                        .map(pe -> _))
-                    .nextOption()
-                  if attr.name == pe.entry.vecCol
-                  idAttr <- child.output.find(_.name == pe.entry.idCol)
-                  idLit <- litFor(idAttr)
-                  if AnnCatalog.index(spark, pe.entry).meta.cfg.metric == metric
-                  s <- serveMulti(gl, sort, child, projOpt, Seq(pe.entry), idAttr,
-                    idLit, qv, k, remaining)
-                } yield s
-                // a vchordg-style graph index may serve the same shape when
-                // the IVF path cannot (no entry, wrong metric, cost-declined)
-                // — beam search; no prefilter machinery, like the
-                // reference's graph AM
-                def viaGraph = for {
-                  ge <- AnnCatalog.lookupGraph(roots)
-                  if attr.name == ge.vecCol && predOpt.isEmpty
-                  idAttr <- child.output.find(_.name == ge.idCol)
-                  idLit <- litFor(idAttr)
-                  if AnnCatalog.graph(spark, ge).cfg.metric == metric
-                  s <- serveGraph(gl, sort, child, projOpt, ge, idAttr, idLit, qv, k)
-                } yield s
-                // PARTITIONED table with one driver-tier graph per child:
-                // each root's broadcast-resident graph beams (driver-side,
-                // zero Spark jobs), candidates union, the plan's exact
-                // Sort+Limit reranks — the graph-tier serveMulti analogue
-                def viaGraphMulti = for {
-                  ges <- AnnCatalog.lookupAllGraphs(roots).filter(_.size > 1)
-                    .orElse(AnnCatalog.coverGraphsByFiles(roots,
-                      fsRel.location.inputFiles.toSeq))
-                  if ges.forall(_.vecCol == attr.name) && predOpt.isEmpty
-                  if ges.map(_.idCol).distinct.size == 1
-                  if !isServedPlan(child)
-                  idAttr <- child.output.find(_.name == ges.head.idCol)
-                  idLit <- litFor(idAttr)
-                  if ges.forall(ge => AnnCatalog.graph(spark, ge).cfg.metric == metric)
-                  s <- serveGraphMulti(gl, sort, child, projOpt, ges, idAttr,
-                    idLit, qv, k)
-                } yield s
-                // the DISTRIBUTED graph tier serves last — same shape,
-                // candidates come from the resident shard RDD (Spark jobs
-                // at planning time, like prefilter escalation)
-                def viaSharded = for {
-                  se <- AnnCatalog.lookupShardedGraph(roots)
-                  if attr.name == se.vecCol && predOpt.isEmpty
-                  idAttr <- child.output.find(_.name == se.idCol)
-                  idLit <- litFor(idAttr)
-                  if AnnCatalog.shardedGraph(spark, se).cfg.metric == metric
-                  s <- serveShardedGraph(gl, sort, child, projOpt, se, idAttr, idLit, qv, k)
-                } yield s
-                viaIvf.orElse(viaMulti).orElse(viaPartial)
-                  .orElse(viaGraph).orElse(viaGraphMulti).orElse(viaSharded)
-              }
-            } yield served).getOrElse(gl)
-          // multi-vector MaxSim (reference opclass strategy 3): no
-          // prefilter form — the reference's recall harness likewise
-          // rejects `@#` beyond the plain ordered scan
-          case VecMaxSimExpr(attr: AttributeReference, Literal(qv: ArrayData, _)) =>
-            (for {
-              (rel, predOpt) <- destructure(child)
-              if predOpt.isEmpty
-              fsRel <- rel.relation match {
-                case h: HadoopFsRelation => Some(h)
-                case _ => None
-              }
-              roots = fsRel.location.rootPaths.map(_.toString)
-              served <- {
-                val viaSingle = for {
-                  entry <- AnnCatalog.lookupMaxSim(roots)
-                  if attr.name == entry.tokensCol
-                  docAttr <- child.output.find(_.name == entry.docCol)
-                  idLit <- litFor(docAttr)
-                  if AnnCatalog.maxSimIndex(spark, entry).meta.cfg.metric == "negdot"
-                  s <- serveMaxSim(gl, sort, child, projOpt, entry, docAttr, idLit, qv, k)
-                } yield s
-                // PARTITIONED multivector corpus (per-child token
-                // indexes, the strategy-3 analogue of serveMulti):
-                // candidate docs from one flat retrieval job over every
-                // root's probed cells; the plan's own exact Sort+Limit
-                // reranks the pooled docs
-                def viaMulti = for {
-                  es <- AnnCatalog.lookupAllMaxSim(roots).filter(_.size > 1)
-                    .orElse(AnnCatalog.coverMaxSimByFiles(roots,
-                      fsRel.location.inputFiles.toSeq))
-                  if es.forall(_.tokensCol == attr.name)
-                  if es.map(_.docCol).distinct.size == 1
-                  if !isServedPlan(child)
-                  docAttr <- child.output.find(_.name == es.head.docCol)
-                  idLit <- litFor(docAttr)
-                  if es.forall(e =>
-                    AnnCatalog.maxSimIndex(spark, e).meta.cfg.metric == "negdot")
-                  s <- serveMaxSimMulti(gl, sort, child, projOpt, es, docAttr,
-                    idLit, qv, k)
-                } yield s
-                viaSingle.orElse(viaMulti)
-              }
-            } yield served).getOrElse(gl)
-          case _ => gl
-        }
+            true, child, _)))) if k > 0 && !isServedPlan(child) =>
+        serveTopK(c, TopK(gl, sort, child, projOpt, k), sortExpr).getOrElse(gl)
 
       // `WHERE vec <<metric>> sphere(c, r)` with NO accompanying order-by
       // (reference pushdown_range.slt): the sphere's center becomes the
       // scan vector and the radius a cutoff — candidates from the index's
       // range scan, the original predicate retained for exactness.
       case f @ Filter(SphereCond(metric, attr, cv, radius), rel: LogicalRelation)
-          if spark.conf.get("graft.ann.range.enable", "true").toBoolean =>
-        serveRange(f, metric, attr, cv, radius, rel).getOrElse(f)
+          if c.rangeEnable =>
+        serveRange(c, f, metric, attr, cv, radius, rel).getOrElse(f)
 
       // BATCH range as a JOIN (the SQL surface of rangeSearchManyMulti):
       //   SELECT ... FROM queries q JOIN docs d
@@ -1226,9 +1079,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // retained, so output is exact. Without the serve this shape plans
       // as a broadcast nested-loop join over the FULL table per query row.
       case j @ Join(_, _, org.apache.spark.sql.catalyst.plans.Inner, Some(_), _)
-          if spark.conf.get("graft.ann.range.join.enable", "true").toBoolean &&
-            !isServedPlan(j) =>
-        serveRangeJoin(j).getOrElse(j)
+          if c.rangeJoinEnable && !isServedPlan(j) =>
+        serveRangeJoin(c, j).getOrElse(j)
 
       // TOP-K KNN JOIN (the SQL surface of searchMany / searchManyMulti —
       // SURVEY §2.6's batch KNN-join; the reference drives one scan per
@@ -1247,11 +1099,54 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // broadcast nested-loop cross join over the full table per query
       // row.
       case f @ Filter(_, _: Window)
-          if spark.conf.get("graft.ann.knn.join.enable", "true").toBoolean &&
-            !isServedPlan(f) =>
-        serveKnnJoin(f).getOrElse(f)
+          if c.knnJoinEnable && !isServedPlan(f) =>
+        serveKnnJoin(c, f).getOrElse(f)
     }
   }
+
+  /** Every `ORDER BY <dist> LIMIT k` serve: one catalog resolve, then the
+    * one top-k serve of the resolved family, for one root or a
+    * partitioned table's many. A vector ordering resolves IVF first (the
+    * only family with prefilter escalation), then a vchordg-style graph,
+    * then the distributed graph tier, each serving only its own metric
+    * (one opclass per operator, like the reference); a MaxSim ordering
+    * (reference opclass strategy 3) resolves the token index. */
+  private def serveTopK(c: AnnConf, t: TopK, sortExpr: Expression): Option[LogicalPlan] = {
+    val (kinds, col, metric, qv) = sortExpr match {
+      case DistOn(m, a, v) => (Kind.vectors, a.name, m, v)
+      case VecMaxSimExpr(a: AttributeReference, Literal(v: ArrayData, _)) =>
+        (Seq(Kind.Tokens), a.name, "negdot", v)
+      case _ => return None
+    }
+    scanOf(t.child).flatMap { s =>
+      resolveIn(s, t.child.output, kinds, col, metric).flatMap {
+        case (tier, id) => tier.kind match {
+          case Kind.Ivf     => serveMulti(c, t, tier.entries, id, qv, s.pred)
+          case Kind.Graph   => serveGraphMulti(c, t, tier.entries, id, qv)
+          case Kind.Sharded => serveShardedGraph(c, t, tier.entries.head, id, qv)
+          case Kind.Tokens  => serveMaxSimMulti(c, t, tier.entries, id, qv)
+        }
+      }.orElse(if (kinds == Kind.vectors) servePartial(c, t, s, col, metric, qv) else None)
+    }
+  }
+
+  /** PARTIAL index (reference partition.slt:40-48): served only when the
+    * query predicate IMPLIES the index predicate (index conjuncts ⊆ query
+    * conjuncts); leftover conjuncts run the prefilter escalation against
+    * the partial index's own row population. */
+  private def servePartial(c: AnnConf, t: TopK, s: Scan, col: String,
+      metric: String, qv: ArrayData): Option[LogicalPlan] =
+    for {
+      pred <- s.pred
+      (pe, remaining) <- AnnCatalog.lookupPartials(s.roots)
+        .iterator.flatMap(pe =>
+          partialMatch(pe.predicateSql, pred, s.rel.output).map(pe -> _))
+        .nextOption()
+      if col == pe.entry.vecCol
+      id <- idCol(t.child.output, pe.entry.idCol)
+      if AnnCatalog.index(spark, pe.entry).meta.cfg.metric == metric
+      served <- serveMulti(c, t, Seq(pe.entry), id, qv, remaining)
+    } yield served
 
   /** Index-served top-k KNN join (see the match site). Declines — leaving
     * the original exact plan — when: the window is not a single
@@ -1279,7 +1174,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * pooled candidate job plus one bounded survivor fetch flooring EVERY
     * query's survivor count at once; probes/refine x4 until every query
     * holds k survivors or the pools provably cover the table. */
-  private def serveKnnJoin(f: Filter): Option[LogicalPlan] = {
+  private def serveKnnJoin(c: AnnConf, f: Filter): Option[LogicalPlan] = {
     val w = f.child.asInstanceOf[Window]
     // exactly one window expression: row_number() — rank() admits past-k
     // ties and dense_rank changes what the bound counts, so only
@@ -1345,8 +1240,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val headOrder = w.orderSpec.headOption.getOrElse(return None)
     if (headOrder.direction != Ascending) return None
-    val (metric, x, y) = resolveThroughProj(headOrder.child) match {
-      case DistCols(m, a, b) => (m, a, b)
+    val (kinds, metric, readings) = resolveThroughProj(headOrder.child) match {
+      // side assignment as in the range join: the metrics are operand-
+      // symmetric, so try both (vec, center) readings on both join sides
+      case DistCols(m, a, b) => (Kind.vectors, m, Seq((a, b), (b, a)))
       // the MULTIVECTOR ordering (strategy 3, reference
       // src/index/vchordrq/scanners/maxsim.rs:14-796): `row_number()
       // OVER (PARTITION BY q.<key> ORDER BY vec_maxsim(e.tokens,
@@ -1355,45 +1252,59 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // maxsim cross join. vec_maxsim is ASYMMETRIC (doc tokens left,
       // query tokens right), so side assignment is fixed by argument
       // position — no both-ways reading
-      case graft.functions.VecMaxSimExpr(d: AttributeReference,
-          q: AttributeReference) =>
-        return serveMaxsimJoin(f, w, join, projOpt, resolveThroughProj,
-          k, d, q)
+      case VecMaxSimExpr(d: AttributeReference, q: AttributeReference) =>
+        (Seq(Kind.Tokens), "negdot", Seq((d, q)))
       case _ => return None
     }
-    // side assignment as in the range join: the metrics are operand-
-    // symmetric, so try both (vec, center) readings on both join sides
-    val sides = Seq((x, y), (y, x)).flatMap { case (v, c) =>
-      if (join.left.outputSet.contains(v) && join.right.outputSet.contains(c))
-        Seq((join.left, join.right, v, c, true))
-      else if (join.right.outputSet.contains(v) && join.left.outputSet.contains(c))
-        Seq((join.right, join.left, v, c, false))
+    val sides = readings.flatMap { case (v, q) =>
+      if (join.left.outputSet.contains(v) && join.right.outputSet.contains(q))
+        Seq((join.left, join.right, v, q, true))
+      else if (join.right.outputSet.contains(v) && join.left.outputSet.contains(q))
+        Seq((join.right, join.left, v, q, false))
       else Nil
     }
-    sides.view.flatMap { case (indexedSide, queriesSide, vecAttr, centerAttr, indexedIsLeft) =>
-      val condQueriesOnly = join.condition.forall(c =>
-        c.deterministic && c.references.subsetOf(queriesSide.outputSet))
+    sides.view.flatMap { case (indexedSide, queriesSide, vecAttr, qAttr, indexedIsLeft) =>
+      val condQueriesOnly = join.condition.forall(cond =>
+        cond.deterministic && cond.references.subsetOf(queriesSide.outputSet))
       if (!condQueriesOnly) None
       else {
         val effQueries = join.condition
-          .map(c => Filter(c, queriesSide): LogicalPlan).getOrElse(queriesSide)
-        // ONE bounded queries-side collect per side assignment, MEMOIZED
-        // across the three tier routes: a route that declines AFTER the
-        // collect (pool or IN budget) must not make the next route
-        // re-run the planning job
-        lazy val centersOnce = collectCenters(effQueries, centerAttr)
-        val centersOf = () => centersOnce
-        tryServeKnnJoin(f, w, join, projOpt, resolveThroughProj, k, metric,
-          vecAttr, centerAttr, indexedSide, effQueries, indexedIsLeft, centersOf)
-          .orElse(tryServeKnnJoinGraph(f, w, join, projOpt, resolveThroughProj,
-            k, metric, vecAttr, centerAttr, indexedSide, effQueries,
-            indexedIsLeft, centersOf))
-          .orElse(tryServeKnnJoinSharded(f, w, join, projOpt, resolveThroughProj,
-            k, metric, vecAttr, centerAttr, indexedSide, effQueries,
-            indexedIsLeft, centersOf))
+          .map(cond => Filter(cond, queriesSide): LogicalPlan).getOrElse(queriesSide)
+        // ONE bounded queries-side collect per side assignment, memoized:
+        // a route reads it for its cost gate and again for its slices
+        lazy val centers = collectCenters(c, effQueries, qAttr)
+        lazy val tokenSets = collectTokenQueries(c, effQueries, qAttr)
+        joinTier(w, resolveThroughProj, indexedSide, effQueries, kinds,
+            vecAttr.name, metric).flatMap { case (s, tier, id) =>
+          val j = KnnJoin(f, w, join, projOpt, indexedSide, indexedIsLeft, id, vecAttr)
+          tier.kind match {
+            case Kind.Ivf     => knnJoinIvf(c, j, k, tier.entries, s.pred, () => centers)
+            case Kind.Graph   => knnJoinGraph(c, j, k, tier.entries, () => centers)
+            case Kind.Sharded => knnJoinSharded(c, j, k, tier.entries.head, () => centers)
+            case Kind.Tokens  => knnJoinMaxSim(c, j, k, tier.entries, s.roots, () => tokenSets)
+          }
+        }
       }
     }.headOption
   }
+
+  /** The guard every KNN-join route shares, then the one catalog resolve
+    * of its indexed side. "k per QUERY row": the window partition must
+    * key off the queries side — partitioning by anything on the indexed
+    * side is a different operator (k query rows per doc) the candidate
+    * restriction breaks — and queries-side rows must reproduce
+    * identically at execution time. */
+  private def joinTier(w: Window, resolveThroughProj: Expression => Expression,
+      indexedSide: LogicalPlan, queriesSide: LogicalPlan, kinds: Seq[Kind],
+      col: String, metric: String): Option[(Scan, AnnCatalog.Tier, IdCol)] =
+    if (w.partitionSpec.isEmpty ||
+        !w.partitionSpec.forall(pe =>
+          resolveThroughProj(pe).references.subsetOf(queriesSide.outputSet)) ||
+        queriesSide.exists(p => !p.expressions.forall(_.deterministic))) None
+    else for {
+      s <- scanOf(indexedSide)
+      (tier, id) <- resolveIn(s, indexedSide.output, kinds, col, metric)
+    } yield (s, tier, id)
 
   /** The one bounded queries-side collect every KNN-join route shares.
     * NULL centers decline (their pairs rank by null dist NULLS FIRST —
@@ -1404,15 +1315,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * cross join that then runs is O(Q x N) — at that Q the user should
     * reach for `searchMany`/`searchManyMulti` or register the table for
     * the served batch routes). An empty array means an empty queries
-    * side — the caller short-circuits to an empty relation. */
-  private def collectCenters(queriesSide: LogicalPlan,
+    * side — the caller short-circuits to an empty relation. The hard cap
+    * never undercuts a user-RAISED per-slice cap (see
+    * [[AnnConf.knnJoinMaxQueriesTotal]]). */
+  private def collectCenters(c: AnnConf, queriesSide: LogicalPlan,
       centerAttr: AttributeReference): Option[Array[Array[Float]]] = {
-    // the hard cap never undercuts a user-RAISED per-slice cap: someone
-    // who set maxQueries=10000 before slicing existed must not silently
-    // regress to the cross join because a newer conf defaults lower
-    val maxQTotal = math.max(1, math.max(
-      spark.conf.get("graft.ann.knn.join.maxQueriesTotal", "4096").toInt,
-      spark.conf.get("graft.ann.knn.join.maxQueries", "256").toInt))
+    val maxQTotal = c.knnJoinMaxQueriesTotal
     AnnTopKRewrite.planningJobs.incrementAndGet()
     val qRows = ColumnBridge.ofRows(spark,
         Project(Seq(Alias(centerAttr, "c")()), queriesSide))
@@ -1436,11 +1344,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * tie a candidate restriction cannot reproduce. Shares the KNN-join
     * caps (`graft.ann.knn.join.maxQueries[Total]`) and their one-way
     * interaction contract. */
-  private def collectTokenQueries(queriesSide: LogicalPlan,
+  private def collectTokenQueries(c: AnnConf, queriesSide: LogicalPlan,
       qAttr: AttributeReference): Option[Array[Array[Array[Float]]]] = {
-    val maxQTotal = math.max(1, math.max(
-      spark.conf.get("graft.ann.knn.join.maxQueriesTotal", "4096").toInt,
-      spark.conf.get("graft.ann.knn.join.maxQueries", "256").toInt))
+    val maxQTotal = c.knnJoinMaxQueriesTotal
     AnnTopKRewrite.planningJobs.incrementAndGet()
     val qRows = ColumnBridge.ofRows(spark,
         Project(Seq(Alias(qAttr, "q")()), queriesSide))
@@ -1475,123 +1381,49 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * rerank. Declines mirror the scalar matcher (residual indexed-side
     * conditions, indexed-side partition keys, non-deterministic or
     * oversized queries sides, NULL/empty token sets, pool/IN budgets,
-    * cost gate). */
-  private def serveMaxsimJoin(f: Filter, w: Window, join: Join,
-      projOpt: Option[Seq[NamedExpression]],
-      resolveThroughProj: Expression => Expression, k: Int,
-      docTokensAttr: AttributeReference,
-      qTokensAttr: AttributeReference): Option[LogicalPlan] = {
+    * cost gate). A prefilter would need a maxsim survivor-escalation
+    * loop the maxsim face does not have, so prefiltered indexed sides
+    * decline (the resolve admits no token tier for them). */
+  private def knnJoinMaxSim(c: AnnConf, j: KnnJoin, k: Int,
+      es: Seq[AnnCatalog.Entry], roots: Seq[String],
+      tokenSets: () => Option[Array[Array[Array[Float]]]]): Option[LogicalPlan] = {
     import org.apache.spark.sql.functions.{col => fcol, explode}
-    // fixed side assignment (vec_maxsim(doc, query) — asymmetric)
-    val sideOpt =
-      if (join.left.outputSet.contains(docTokensAttr) &&
-          join.right.outputSet.contains(qTokensAttr))
-        Some((join.left, join.right, true))
-      else if (join.right.outputSet.contains(docTokensAttr) &&
-          join.left.outputSet.contains(qTokensAttr))
-        Some((join.right, join.left, false))
-      else None
-    sideOpt.flatMap { case (indexedSide, queriesSide0, indexedIsLeft) =>
-      val condQueriesOnly = join.condition.forall(c =>
-        c.deterministic && c.references.subsetOf(queriesSide0.outputSet))
-      if (!condQueriesOnly) None
+    val idxs = es.map(AnnCatalog.index(spark, _))
+    val probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists))
+    // k-floor + cost gate (serveMaxSimMulti's formulas; the query-row
+    // count multiplies both sides of the cost comparison, so a
+    // representative single-query figure decides — token counts enter
+    // via the collected queries, checked per slice below)
+    if (idxs.length.toLong * k > c.maxInList) return None
+    val costOk = !c.costEnable || tokenSets().exists { qs =>
+      val qn = if (qs.isEmpty) 0.0 else qs.map(_.length).sum.toDouble / qs.length
+      CostGates.maxsim(idxs.zip(probes).map { case (ix, p) =>
+        (ix.rowCount, ix.meta.cfg.lists, p) }, qn, c.kPerToken, k, c.refine)
+    }
+    if (!costOk) return None
+    val h = idxs.head
+    // codes-only / storage-mixed children rescore from the corpus itself
+    // (the indexed side's own files), exploded to one row per token — the
+    // servedMaxsimMany rule
+    def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] =
+      if (idxs.forall(ix => ix.meta.cfg.storeVectors &&
+          ix.meta.cfg.storage == h.meta.cfg.storage)) None
+      else Some((spark.read.parquet(roots: _*)
+        .select(fcol(es.head.idCol), explode(fcol(es.head.vecCol)).as("__tok")),
+        es.head.idCol, "__tok"))
+    serveKnnJoinRestrict(c, j, tokenSets, keepEmpty = true) { slice =>
+      // the batched face's own pool budget, checked here so the planner
+      // DECLINES instead of throwing mid-rule
+      if (idxs.length.toLong * slice.map(_.length.toLong).sum * c.kPerToken >
+          c.maxsimMaxPoolTuples) None
       else {
-        val queriesSide = join.condition
-          .map(c => Filter(c, queriesSide0): LogicalPlan)
-          .getOrElse(queriesSide0)
-        for {
-          _ <- Some(())
-          if w.partitionSpec.nonEmpty
-          if w.partitionSpec.forall(pe =>
-            resolveThroughProj(pe).references.subsetOf(queriesSide0.outputSet))
-          if !queriesSide.exists(p => !p.expressions.forall(_.deterministic))
-          (rel, predOpt) <- destructure(indexedSide)
-          // a prefilter would need a maxsim survivor-escalation loop; the
-          // scalar routes have one, the maxsim face does not (yet) —
-          // conservative decline keeps the per-query k-floor honest
-          if predOpt.isEmpty
-          fsRel <- rel.relation match {
-            case h: HadoopFsRelation => Some(h)
-            case _ => None
-          }
-          roots = fsRel.location.rootPaths.map(_.toString)
-          es <- AnnCatalog.lookupMaxSim(roots).map(Seq(_))
-            .orElse(AnnCatalog.lookupAllMaxSim(roots).filter(_.size > 1))
-            .orElse(AnnCatalog.coverMaxSimByFiles(roots,
-              fsRel.location.inputFiles.toSeq))
-          if es.forall(_.tokensCol == docTokensAttr.name)
-          if es.map(_.docCol).distinct.size == 1
-          idAttr <- indexedSide.output.find(_.name == es.head.docCol)
-          idLit <- litFor(idAttr)
-          served <- {
-            val idxs = es.map(e => AnnCatalog.maxSimIndex(spark, e))
-            val probesConf = spark.conf.get("graft.ann.probes", "auto")
-            def probesFor(lists: Int): Int =
-              if (probesConf == "auto")
-                math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-              else probesConf.toInt
-            val refine = spark.conf.get("graft.ann.refine", "8").toInt
-            val kPerToken =
-              spark.conf.get("graft.ann.maxsim.kPerToken", "100").toInt
-            val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-            // k-floor + cost gate (serveMaxSimMulti's formulas; the
-            // query-row count multiplies both sides of the cost
-            // comparison, so a representative single-query figure
-            // decides — token counts enter via the collected queries,
-            // checked per slice below)
-            if (idxs.length.toLong * k > maxInList) None
-            else {
-              lazy val tokenQueriesOnce =
-                collectTokenQueries(queriesSide, qTokensAttr)
-              val costOk =
-                !spark.conf.get("graft.ann.cost.enable", "true").toBoolean ||
-                tokenQueriesOnce.exists { qs =>
-                  val qn =
-                    if (qs.isEmpty) 0.0
-                    else qs.map(_.length).sum.toDouble / qs.length
-                  CostGates.maxsim(idxs.map(ix => (ix.rowCount,
-                      ix.meta.cfg.lists, probesFor(ix.meta.cfg.lists))),
-                    qn, kPerToken, k, refine)
-                }
-              if (!costOk) None
-              else {
-                val h = idxs.head
-                // codes-only / storage-mixed children rescore from the
-                // corpus itself (the indexed side's own files), exploded
-                // to one row per token — the servedMaxsimMany rule
-                def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] =
-                  if (idxs.forall(ix => ix.meta.cfg.storeVectors &&
-                      ix.meta.cfg.storage == h.meta.cfg.storage)) None
-                  else Some((spark.read.parquet(roots: _*)
-                    .select(fcol(es.head.docCol),
-                      explode(fcol(es.head.tokensCol)).as("__tok")),
-                    es.head.docCol, "__tok"))
-                val maxPoolTuples = spark.conf
-                  .get("graft.ann.maxsim.maxPoolTuples", "4000000").toLong
-                serveKnnJoinRestrict(f, w, join, projOpt, indexedSide,
-                    indexedIsLeft, idAttr, idLit, docTokensAttr,
-                    () => tokenQueriesOnce, keepEmpty = true) { slice =>
-                  val sliceTokens = slice.map(_.length.toLong).sum
-                  // the batched face's own pool budget, checked here so
-                  // the planner DECLINES instead of throwing mid-rule
-                  if (idxs.length.toLong * sliceTokens * kPerToken >
-                      maxPoolTuples) None
-                  else {
-                    AnnTopKRewrite.planningJobs.incrementAndGet()
-                    val queries = slice.zipWithIndex
-                      .map { case (ts, i) => (i.toLong, ts) }
-                    val probes = idxs.map(ix => probesFor(ix.meta.cfg.lists))
-                    Some(graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k,
-                        kPerToken = kPerToken, probes = probes,
-                        refine = refine, rerankTable = rtOf)
-                      .select("doc").distinct()
-                      .collect().map(_.getLong(0)))
-                  }
-                }
-              }
-            }
-          }
-        } yield served
+        AnnTopKRewrite.planningJobs.incrementAndGet()
+        val queries = slice.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
+        Some(graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k,
+            kPerToken = c.kPerToken, probes = probes, refine = c.refine,
+            rerankTable = rtOf)
+          .select("doc").distinct()
+          .collect().map(_.getLong(0)))
       }
     }
   }
@@ -1607,20 +1439,15 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * the IN-restriction of the candidate UNION over the indexed side,
     * and the plan rebuild with the original window kept for exact
     * rerank. */
-  private def serveKnnJoinRestrict[C: scala.reflect.ClassTag](
-      f: Filter, w: Window, join: Join,
-      projOpt: Option[Seq[NamedExpression]], indexedSide: LogicalPlan,
-      indexedIsLeft: Boolean, idAttr: Attribute, idLit: Long => Literal,
-      vecAttr: Attribute,
-      centersOf: () => Option[Array[C]],
+  private def serveKnnJoinRestrict[C: scala.reflect.ClassTag](c: AnnConf,
+      j: KnnJoin, centersOf: () => Option[Array[C]],
       keepEmpty: Boolean = false,
       complete: => Boolean = false)(
       cands: Array[C] => Option[Array[Long]]): Option[LogicalPlan] = {
-    val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-    val sliceSize = math.max(1,
-      spark.conf.get("graft.ann.knn.join.maxQueries", "256").toInt)
+    val maxInList = c.maxInList
+    val sliceSize = math.max(1, c.knnJoinMaxQueries)
     centersOf().flatMap { centers =>
-      if (centers.isEmpty) Some(LocalRelation(f.output))
+      if (centers.isEmpty) Some(LocalRelation(j.f.output))
       else {
         // per-slice fold with an EARLY EXIT on the running distinct-id
         // count: once the ids already exceed maxInList no remaining slice
@@ -1664,20 +1491,20 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           else {
             ensureInPushdown(ids.length)
             val restricted = stamped(Filter(
-              if (keepNullsFor(complete))
-                AnnTopKRewrite.topkRestriction(idAttr, ids, idLit, vecAttr,
-                  keepEmpty = keepEmpty)
-              else AnnTopKRewrite.idsInExpr(idAttr, ids, idLit),
-              indexedSide))
-            val newJoin = if (indexedIsLeft) join.copy(left = restricted)
-                          else join.copy(right = restricted)
-            val newBody: LogicalPlan = projOpt
+              if (keepNullsFor(c, complete))
+                AnnTopKRewrite.topkRestriction(j.id.attr, ids, j.id.lit,
+                  j.vecAttr, keepEmpty = keepEmpty)
+              else j.id.in(ids),
+              j.indexedSide))
+            val newJoin = if (j.indexedIsLeft) j.join.copy(left = restricted)
+                          else j.join.copy(right = restricted)
+            val newBody: LogicalPlan = j.projOpt
               .map(pl => Project(pl, newJoin): LogicalPlan).getOrElse(newJoin)
-            val newWchild = w.child match {
+            val newWchild = j.w.child match {
               case wgl: WindowGroupLimit => wgl.withNewChildren(Seq(newBody))
               case _ => newBody
             }
-            Some(f.withNewChildren(Seq(w.withNewChildren(Seq(newWchild)))))
+            Some(j.f.withNewChildren(Seq(j.w.withNewChildren(Seq(newWchild)))))
           }
         }
       }
@@ -1692,58 +1519,25 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * Per-(query, graph) candidate budgets match the planner's graph
     * serve: k on exact graphs, the full ef pool on quantized ones (the
     * window's exact rerank corrects estimate ordering). Declines mirror
-    * [[tryServeKnnJoin]] plus the graph cost gate. */
-  private def tryServeKnnJoinGraph(f: Filter, w: Window, join: Join,
-      projOpt: Option[Seq[NamedExpression]],
-      resolveThroughProj: Expression => Expression,
-      k: Int, metric: String,
-      vecAttr: AttributeReference, centerAttr: AttributeReference,
-      indexedSide: LogicalPlan, queriesSide: LogicalPlan,
-      indexedIsLeft: Boolean,
+    * [[knnJoinIvf]] plus the graph cost gate. */
+  private def knnJoinGraph(c: AnnConf, j: KnnJoin, k: Int,
+      ges: Seq[AnnCatalog.Entry],
       centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
-    for {
-      _ <- Some(())
-      if w.partitionSpec.nonEmpty
-      if w.partitionSpec.forall(pe =>
-        resolveThroughProj(pe).references.subsetOf(queriesSide.outputSet))
-      if !queriesSide.exists(p => !p.expressions.forall(_.deterministic))
-      (rel, predOpt) <- destructure(indexedSide)
-      if predOpt.isEmpty
-      fsRel <- rel.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
-      }
-      roots = fsRel.location.rootPaths.map(_.toString)
-      ges <- AnnCatalog.lookupGraph(roots).map(Seq(_))
-        .orElse(AnnCatalog.lookupAllGraphs(roots).filter(_.size > 1))
-        .orElse(AnnCatalog.coverGraphsByFiles(roots,
-          fsRel.location.inputFiles.toSeq))
-      if ges.forall(_.vecCol == vecAttr.name)
-      if ges.map(_.idCol).distinct.size == 1
-      idAttr <- indexedSide.output.find(_.name == ges.head.idCol)
-      idLit <- litFor(idAttr)
-      if ges.forall(ge => AnnCatalog.graph(spark, ge).cfg.metric == metric)
-      served <- {
-        val gs = ges.map(ge => AnnCatalog.graph(spark, ge))
-        val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-        // per query row: summed beam work vs the exact cross join's
-        // per-query row scan (serveGraphMulti's gate — M cancels)
-        val costOk = !spark.conf.get("graft.ann.cost.enable", "true").toBoolean ||
-          CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, k)
-        if (!costOk) None
-        else serveKnnJoinRestrict(f, w, join, projOpt,
-            indexedSide, indexedIsLeft, idAttr, idLit, vecAttr,
-            centersOf,
-            complete = gs.forall(_.sourceComplete)) { centers =>
-          Some(centers.flatMap { c =>
-            gs.flatMap { g =>
-              val kCand = if (g.quantized) math.max(ef, k) else k
-              g.search(c, kCand, ef).map(_._1)
-            }
-          })
+    val gs = ges.map(AnnCatalog.graph(spark, _))
+    val ef = c.efSearch
+    // per query row: summed beam work vs the exact cross join's per-query
+    // row scan (serveGraphMulti's gate — M cancels)
+    if (c.costEnable &&
+        !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, k)) None
+    else serveKnnJoinRestrict(c, j, centersOf,
+        complete = gs.forall(_.sourceComplete)) { centers =>
+      Some(centers.flatMap { q =>
+        gs.flatMap { g =>
+          val kCand = if (g.quantized) math.max(ef, k) else k
+          g.search(q, kCand, ef).map(_._1)
         }
-      }
-    } yield served
+      })
+    }
   }
 
   /** Sharded-graph KNN join: the same windowed rank shape served from
@@ -1752,246 +1546,173 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * shard RDD (Spark jobs at planning time, like the single-query
     * sharded serve); quantized shards keep the ef pool as candidates
     * and the window's exact rerank restores ordering. */
-  private def tryServeKnnJoinSharded(f: Filter, w: Window, join: Join,
-      projOpt: Option[Seq[NamedExpression]],
-      resolveThroughProj: Expression => Expression,
-      k: Int, metric: String,
-      vecAttr: AttributeReference, centerAttr: AttributeReference,
-      indexedSide: LogicalPlan, queriesSide: LogicalPlan,
-      indexedIsLeft: Boolean,
+  private def knnJoinSharded(c: AnnConf, j: KnnJoin, k: Int,
+      se: AnnCatalog.Entry,
       centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
-    for {
-      _ <- Some(())
-      if w.partitionSpec.nonEmpty
-      if w.partitionSpec.forall(pe =>
-        resolveThroughProj(pe).references.subsetOf(queriesSide.outputSet))
-      if !queriesSide.exists(p => !p.expressions.forall(_.deterministic))
-      (rel, predOpt) <- destructure(indexedSide)
-      if predOpt.isEmpty
-      fsRel <- rel.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
-      }
-      roots = fsRel.location.rootPaths.map(_.toString)
-      se <- AnnCatalog.lookupShardedGraph(roots)
-      if se.vecCol == vecAttr.name
-      idAttr <- indexedSide.output.find(_.name == se.idCol)
-      idLit <- litFor(idAttr)
-      if AnnCatalog.shardedGraph(spark, se).cfg.metric == metric
-      served <- {
-        val h = AnnCatalog.shardedGraph(spark, se)
-        val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-        val costOk = !spark.conf.get("graft.ann.cost.enable", "true").toBoolean ||
-          CostGates.sharded(h.shards, h.totalVertices, ef, k)
-        if (!costOk) None
-        else serveKnnJoinRestrict(f, w, join, projOpt,
-            indexedSide, indexedIsLeft, idAttr, idLit, vecAttr,
-            centersOf,
-            complete = h.sourceComplete) { centers =>
-          AnnTopKRewrite.planningJobs.incrementAndGet()
-          val queries = centers.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-          val kCand = if (h.cfg.bits > 0) math.max(ef, k) else k
-          Some(h.search(spark, queries, kCand, ef, allowEstimates = true)
-            .select("id").distinct()
-            .collect().map(_.getLong(0)))
-        }
-      }
-    } yield served
+    val h = AnnCatalog.shardedGraph(spark, se)
+    val ef = c.efSearch
+    if (c.costEnable && !CostGates.sharded(h.shards, h.totalVertices, ef, k)) None
+    else serveKnnJoinRestrict(c, j, centersOf,
+        complete = h.sourceComplete) { centers =>
+      AnnTopKRewrite.planningJobs.incrementAndGet()
+      val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+      val kCand = if (h.cfg.bits > 0) math.max(ef, k) else k
+      Some(h.search(spark, queries, kCand, ef, allowEstimates = true)
+        .select("id").distinct()
+        .collect().map(_.getLong(0)))
+    }
   }
 
-  private def tryServeKnnJoin(f: Filter, w: Window, join: Join,
-      projOpt: Option[Seq[NamedExpression]],
-      resolveThroughProj: Expression => Expression,
-      k: Int, metric: String,
-      vecAttr: AttributeReference, centerAttr: AttributeReference,
-      indexedSide: LogicalPlan, queriesSide: LogicalPlan,
-      indexedIsLeft: Boolean,
+  private def knnJoinIvf(c: AnnConf, j: KnnJoin, k: Int,
+      es: Seq[AnnCatalog.Entry], predOpt: Option[Expression],
       centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
-    for {
-      _ <- Some(())
-      // "k per QUERY row": the partition must key off the queries side —
-      // partitioning by anything on the indexed side is a different
-      // operator (k query rows per doc) the candidate restriction breaks
-      if w.partitionSpec.nonEmpty
-      if w.partitionSpec.forall(pe =>
-        resolveThroughProj(pe).references.subsetOf(queriesSide.outputSet))
-      // queries-side rows must reproduce identically at execution time
-      if !queriesSide.exists(p => !p.expressions.forall(_.deterministic))
-      (rel, predOpt) <- destructure(indexedSide)
-      fsRel <- rel.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
+    val idxs = es.map(AnnCatalog.index(spark, _))
+    val maxInList = c.maxInList
+    val refine = c.refine
+    // cost gate: per query row, summed per-root index work vs the exact
+    // cross join touching every indexed row — the query-row count
+    // multiplies both sides, so it cancels (serveMulti's formula)
+    val costOk = !c.costEnable ||
+      CostGates.ivf(idxs.map(ix => (ix.rowCount, ix.meta.cfg.lists,
+        c.probesFor(ix.meta.cfg.lists))), k, refine)
+    // recall hint (not a gate): at production cluster occupancy the
+    // rerank pool is the recall limiter — say so at planning time so
+    // the operator finds the knob before the recall report does
+    idxs.find(ix => CostGates.refineLimited(ix.rowCount,
+        ix.meta.cfg.lists, k, refine)).foreach { ix =>
+      logWarning(s"KNN-join serve: k*refine = ${k * refine} is far " +
+        s"below the mean cluster occupancy " +
+        s"(~${ix.rowCount / math.max(1, ix.meta.cfg.lists)} rows/list " +
+        s"on ${ix.dir}) — recall may be refine-limited; raise " +
+        "graft.ann.refine (the 1M-row anchor measured recall " +
+        "0.93 -> 0.98 going refine 16 -> 64)")
+    }
+    // searchManyMulti reranks from the roots' own stored vectors or
+    // from one rerank table: codes-only children would need a union
+    // table the per-child entries cannot supply, so codes-only serves
+    // only on one root with a tablePath (rtOf below)
+    val multiOk = idxs.forall(_.meta.cfg.storeVectors) ||
+      (idxs.length == 1 && es.head.tablePath.nonEmpty)
+    // batched-face driver-pool budget (the face itself refuses
+    // loudly past it; the planner declines instead of throwing)
+    val maxPool = c.batchMaxPoolTuples
+    if (!costOk || !multiOk) None
+    else serveKnnJoinRestrict(c, j, centersOf,
+        complete = idxs.forall(_.sourceComplete)) { centers =>
+      import spark.implicits._
+      val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+      def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] = {
+        val e0 = es.head
+        if (idxs.head.meta.cfg.storeVectors || e0.tablePath.isEmpty) None
+        else Some((spark.read.parquet(e0.tablePath), e0.idCol, e0.vecCol))
       }
-      roots = fsRel.location.rootPaths.map(_.toString)
-      es <- AnnCatalog.lookup(roots).map(Seq(_))
-        .orElse(AnnCatalog.lookupAll(roots).filter(_.size > 1))
-        .orElse(AnnCatalog.coverByFiles(roots,
-          fsRel.location.inputFiles.toSeq))
-      if es.forall(_.vecCol == vecAttr.name)
-      if es.map(_.idCol).distinct.size == 1
-      idAttr <- indexedSide.output.find(_.name == es.head.idCol)
-      idLit <- litFor(idAttr)
-      if es.forall(e => AnnCatalog.index(spark, e).meta.cfg.metric == metric)
-      served <- {
-        val idxs = es.map(e => AnnCatalog.index(spark, e))
-        val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-        val probesConf = spark.conf.get("graft.ann.probes", "auto")
-        def probesFor(lists: Int): Int =
-          if (probesConf == "auto")
-            math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-          else probesConf.toInt
-        val refine = spark.conf.get("graft.ann.refine", "8").toInt
-        // cost gate: per query row, summed per-root index work vs the
-        // exact cross join touching every indexed row — the query-row
-        // count multiplies both sides, so it cancels (serveMulti's formula)
-        val costOk = !spark.conf.get("graft.ann.cost.enable", "true").toBoolean ||
-          CostGates.ivf(idxs.map(ix => (ix.rowCount, ix.meta.cfg.lists,
-            probesFor(ix.meta.cfg.lists))), k, refine)
-        // recall hint (not a gate): at production cluster occupancy the
-        // rerank pool is the recall limiter — say so at planning time so
-        // the operator finds the knob before the recall report does
-        idxs.find(ix => CostGates.refineLimited(ix.rowCount,
-            ix.meta.cfg.lists, k, refine)).foreach { ix =>
-          logWarning(s"KNN-join serve: k*refine = ${k * refine} is far " +
-            s"below the mean cluster occupancy " +
-            s"(~${ix.rowCount / math.max(1, ix.meta.cfg.lists)} rows/list " +
-            s"on ${ix.dir}) — recall may be refine-limited; raise " +
-            "graft.ann.refine (the 1M-row anchor measured recall " +
-            "0.93 -> 0.98 going refine 16 -> 64)")
+      // per-query candidate POOLS of k*r ids by estimate order (the
+      // escalateMulti() pool semantics — refine=1, the survivor floor needs
+      // the whole pool, not its reranked top-k) at the given probe
+      // scale — ONE batched job however many queries and roots
+      def pools(probeScale: Int, r: Int): Option[Map[Long, Array[Long]]] = {
+        val nCand = math.max(k * r, k)
+        if (idxs.length.toLong * queries.length * nCand > maxPool) None
+        else {
+          AnnTopKRewrite.planningJobs.incrementAndGet()
+          val probes = idxs.map(ix =>
+            math.min(ix.meta.cfg.lists,
+              c.probesFor(ix.meta.cfg.lists) * probeScale)).max
+          Some(IvfIndex.searchManyMulti(idxs, queries, nCand,
+              probes = probes, refine = 1, rerankTable = rtOf)
+            .select("qid", "id").as[(Long, Long)].collect()
+            .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
         }
-        // searchManyMulti reranks from the roots' own stored vectors or
-        // from one rerank table: codes-only children would need a union
-        // table the per-child entries cannot supply, so codes-only serves
-        // only on one root with a tablePath (rtOf below)
-        val multiOk = idxs.forall(_.meta.cfg.storeVectors) ||
-          (idxs.length == 1 && es.head.tablePath.nonEmpty)
-        // batched-face driver-pool budget (the face itself refuses
-        // loudly past it; the planner declines instead of throwing)
-        val maxPool = scala.util.Try(
-            spark.conf.get("graft.ann.batch.maxPoolTuples").toLong)
-          .getOrElse(4000000L)
-        if (!costOk || !multiOk) None
-        else serveKnnJoinRestrict(f, w, join, projOpt,
-            indexedSide, indexedIsLeft, idAttr, idLit, vecAttr,
-            centersOf,
-            complete = idxs.forall(_.sourceComplete)) { centers =>
-          import spark.implicits._
-          val queries = centers.zipWithIndex.map { case (c, i) => (i.toLong, c) }
-          def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] = {
-            val e0 = es.head
-            if (idxs.head.meta.cfg.storeVectors || e0.tablePath.isEmpty) None
-            else Some((spark.read.parquet(e0.tablePath), e0.idCol, e0.vecCol))
+      }
+      predOpt match {
+        case None =>
+          // no prefilter: per-query exact-reranked top-k candidates in
+          // one batched job (the window reranks the union again)
+          val nCand = math.max(k * refine, k)
+          if (idxs.length.toLong * queries.length * nCand > maxPool) None
+          else {
+            AnnTopKRewrite.planningJobs.incrementAndGet()
+            val probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)).max
+            Some(IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
+                refine = refine, rerankTable = rtOf)
+              .select("id").as[Long].collect())
           }
-          // per-query candidate POOLS of k*r ids by estimate order (the
-          // escalateMulti() pool semantics — refine=1, the survivor floor needs
-          // the whole pool, not its reranked top-k) at the given probe
-          // scale — ONE batched job however many queries and roots
-          def pools(probeScale: Int, r: Int): Option[Map[Long, Array[Long]]] = {
-            val nCand = math.max(k * r, k)
-            if (idxs.length.toLong * queries.length * nCand > maxPool) None
+        case Some(_) =>
+          // PREFILTER on the indexed side — the escalation contract of
+          // the single-query serve, per query: the predicate is
+          // query-INDEPENDENT, so one bounded survivor fetch per round
+          // (ids of `indexedSide` rows — the user Filter is inside it —
+          // within the pooled candidates) floors every query's
+          // survivor count at once; probes/refine escalate x4 until
+          // every query holds k survivors or the pools provably cover
+          // the table. Overflowing maxInList declines to the exact
+          // plan (a giant IN loses to the cross join).
+          def survivorSet(allIds: Array[Long]): Option[Set[Long]] =
+            if (allIds.isEmpty) Some(Set.empty)
+            else if (allIds.length > maxInList) None
             else {
               AnnTopKRewrite.planningJobs.incrementAndGet()
-              val probes = idxs.map(ix =>
-                math.min(ix.meta.cfg.lists,
-                  probesFor(ix.meta.cfg.lists) * probeScale)).max
-              Some(IvfIndex.searchManyMulti(idxs, queries, nCand,
-                  probes = probes, refine = 1, rerankTable = rtOf)
-                .select("qid", "id").as[(Long, Long)].collect()
-                .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
+              ensureInPushdown(allIds.length)
+              AnnTopKRewrite.withPlanningGuard {
+                Some(ColumnBridge.ofRows(spark,
+                    Filter(j.id.in(allIds), j.indexedSide))
+                  .select(j.id.attr.name).as[Long].collect().toSet)
+              }
+            }
+          var scale = 1
+          var r = refine
+          // coverage = "the pool provably holds EVERY row": full
+          // probes per root AND k*r at least the SUMMED corpus row
+          // count — pools() truncates to k*r candidates per query
+          // GLOBALLY across roots (searchManyMulti's final
+          // fold), so a per-root rowCount comparison would declare
+          // coverage with rows of the larger corpus missing and skip
+          // the survivor floor
+          def covered: Boolean =
+            idxs.forall(ix =>
+              c.probesFor(ix.meta.cfg.lists) * scale >= ix.meta.cfg.lists) &&
+              k.toLong * r >= idxs.map(_.rowCount).sum
+          var out: Option[Array[Long]] = None
+          var done = false
+          while (!done) {
+            pools(scale, r) match {
+              case None => done = true // pool budget: decline
+              case Some(byQ) =>
+                val allIds = byQ.valuesIterator.flatten.toArray.distinct
+                if (allIds.length > maxInList) done = true // decline
+                else if (covered) { out = Some(allIds); done = true }
+                else survivorSet(allIds) match {
+                  case None => done = true // IN budget: decline
+                  case Some(surv) =>
+                    // a query absent from the pool map retrieved
+                    // nothing — zero survivors, keep escalating
+                    val minSurv =
+                      if (byQ.size < queries.length) 0L
+                      else byQ.valuesIterator
+                        .map(_.count(surv.contains).toLong).min
+                    if (minSurv >= k) { out = Some(allIds); done = true }
+                    else { scale *= 4; r *= 4 }
+                }
             }
           }
-          predOpt match {
-            case None =>
-              // no prefilter: per-query exact-reranked top-k candidates in
-              // one batched job (the window reranks the union again)
-              val nCand = math.max(k * refine, k)
-              if (idxs.length.toLong * queries.length * nCand > maxPool) None
-              else {
-                AnnTopKRewrite.planningJobs.incrementAndGet()
-                val probes = idxs.map(ix => probesFor(ix.meta.cfg.lists)).max
-                Some(IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
-                    refine = refine, rerankTable = rtOf)
-                  .select("id").as[Long].collect())
-              }
-            case Some(_) =>
-              // PREFILTER on the indexed side — the escalation contract of
-              // the single-query serve, per query: the predicate is
-              // query-INDEPENDENT, so one bounded survivor fetch per round
-              // (ids of `indexedSide` rows — the user Filter is inside it —
-              // within the pooled candidates) floors every query's
-              // survivor count at once; probes/refine escalate x4 until
-              // every query holds k survivors or the pools provably cover
-              // the table. Overflowing maxInList declines to the exact
-              // plan (a giant IN loses to the cross join).
-              def survivorSet(allIds: Array[Long]): Option[Set[Long]] =
-                if (allIds.isEmpty) Some(Set.empty)
-                else if (allIds.length > maxInList) None
-                else {
-                  AnnTopKRewrite.planningJobs.incrementAndGet()
-                  ensureInPushdown(allIds.length)
-                  AnnTopKRewrite.withPlanningGuard {
-                    Some(ColumnBridge.ofRows(spark,
-                        Filter(AnnTopKRewrite.idsInExpr(idAttr, allIds, idLit),
-                          indexedSide))
-                      .select(idAttr.name).as[Long].collect().toSet)
-                  }
-                }
-              var scale = 1
-              var r = refine
-              // coverage = "the pool provably holds EVERY row": full
-              // probes per root AND k*r at least the SUMMED corpus row
-              // count — pools() truncates to k*r candidates per query
-              // GLOBALLY across roots (searchManyMulti's final
-              // fold), so a per-root rowCount comparison would declare
-              // coverage with rows of the larger corpus missing and skip
-              // the survivor floor
-              def covered: Boolean =
-                idxs.forall(ix =>
-                  probesFor(ix.meta.cfg.lists) * scale >= ix.meta.cfg.lists) &&
-                  k.toLong * r >= idxs.map(_.rowCount).sum
-              var out: Option[Array[Long]] = None
-              var done = false
-              while (!done) {
-                pools(scale, r) match {
-                  case None => done = true // pool budget: decline
-                  case Some(byQ) =>
-                    val allIds = byQ.valuesIterator.flatten.toArray.distinct
-                    if (allIds.length > maxInList) done = true // decline
-                    else if (covered) { out = Some(allIds); done = true }
-                    else survivorSet(allIds) match {
-                      case None => done = true // IN budget: decline
-                      case Some(surv) =>
-                        // a query absent from the pool map retrieved
-                        // nothing — zero survivors, keep escalating
-                        val minSurv =
-                          if (byQ.size < queries.length) 0L
-                          else byQ.valuesIterator
-                            .map(_.count(surv.contains).toLong).min
-                        if (minSurv >= k) { out = Some(allIds); done = true }
-                        else { scale *= 4; r *= 4 }
-                    }
-                }
-              }
-              // loud: a budget decline here lands AFTER one or more
-              // escalation rounds already ran planning jobs, and the
-              // prefiltered exact cross join that follows is the
-              // expensive path
-              if (out.isEmpty)
-                logWarning("KNN-join prefilter escalation declined after " +
-                  s"running its planning rounds (pool budget $maxPool, IN " +
-                  s"budget $maxInList) — the exact windowed cross join " +
-                  "will run. Raise the budgets or pre-filter the table " +
-                  "into a registered corpus.")
-              out
-          }
-        }
+          // loud: a budget decline here lands AFTER one or more
+          // escalation rounds already ran planning jobs, and the
+          // prefiltered exact cross join that follows is the
+          // expensive path
+          if (out.isEmpty)
+            logWarning("KNN-join prefilter escalation declined after " +
+              s"running its planning rounds (pool budget $maxPool, IN " +
+              s"budget $maxInList) — the exact windowed cross join " +
+              "will run. Raise the budgets or pre-filter the table " +
+              "into a registered corpus.")
+          out
       }
-    } yield served
+    }
   }
 
   /** Index-served range join (see the match site). The indexed side may
     * be a single registered table OR a PARTITIONED one whose children
-    * each carry their own index (the serveMulti lookup chain — every
+    * each carry their own index (the one `AnnCatalog.resolve` cover — every
     * scanned child must be covered or the serve declines). Declines —
     * leaving the original exact plan — when: no sphere conjunct over a
     * registered indexed relation, the queries side exceeds
@@ -2009,7 +1730,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * many). The old shape serialized one probe job per query row (up to
     * maxQueries=256 planner-stalling jobs per range-join plan). For bulk
     * M past the cap use [[IvfIndex.rangeSearchManyMulti]]. */
-  private def serveRangeJoin(j: Join): Option[LogicalPlan] = {
+  private def serveRangeJoin(c: AnnConf, j: Join): Option[LogicalPlan] = {
     val cond = j.condition.get
     val sphere = conjuncts(cond).collectFirst(Function.unlift[Expression,
         (String, AttributeReference, AttributeReference, Either[AttributeReference, Double])] {
@@ -2023,20 +1744,20 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // the first whose vec attr resolves against a registered index —
       // `vec_l2(q.center, e.vec)` must serve the same as
       // `vec_l2(e.vec, q.center)`
-      val assignments = Seq((x, y), (y, x)).flatMap { case (v, c) =>
-        if (j.left.outputSet.contains(v) && j.right.outputSet.contains(c))
-          Seq((j.left, j.right, v, c))
-        else if (j.right.outputSet.contains(v) && j.left.outputSet.contains(c))
-          Seq((j.right, j.left, v, c))
+      val assignments = Seq((x, y), (y, x)).flatMap { case (v, q) =>
+        if (j.left.outputSet.contains(v) && j.right.outputSet.contains(q))
+          Seq((j.left, j.right, v, q))
+        else if (j.right.outputSet.contains(v) && j.left.outputSet.contains(q))
+          Seq((j.right, j.left, v, q))
         else Nil
       }
       assignments.view.flatMap { case (indexedSide, queriesSide, vecAttr, centerAttr) =>
-        tryServeRangeJoin(j, metric, rad, indexedSide, queriesSide, vecAttr, centerAttr)
+        tryServeRangeJoin(c, j, metric, rad, indexedSide, queriesSide, vecAttr, centerAttr)
       }.headOption
     }
   }
 
-  private def tryServeRangeJoin(j: Join, metric: String,
+  private def tryServeRangeJoin(c: AnnConf, j: Join, metric: String,
       rad: Either[AttributeReference, Double],
       indexedSide: LogicalPlan, queriesSide: LogicalPlan,
       vecAttr: AttributeReference, centerAttr: AttributeReference): Option[LogicalPlan] = {
@@ -2049,36 +1770,22 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       if radOk
       // queries-side rows must reproduce identically at execution time
       if !queriesSide.exists(p => !p.expressions.forall(_.deterministic))
-      (rel, _) <- destructure(indexedSide)
-      fsRel <- rel.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
-      }
-      roots = fsRel.location.rootPaths.map(_.toString)
       // single covering entry, or a PARTITIONED indexed side: per-child
-      // indexes jointly covering the scan (the serveMulti lookup chain)
-      es <- AnnCatalog.lookup(roots).map(Seq(_))
-        .orElse(AnnCatalog.lookupAll(roots).filter(_.size > 1))
-        .orElse(AnnCatalog.coverByFiles(roots,
-          fsRel.location.inputFiles.toSeq))
-      if es.forall(_.vecCol == vecAttr.name)
-      if es.map(_.idCol).distinct.size == 1
-      idAttr <- indexedSide.output.find(_.name == es.head.idCol)
-      idLit <- litFor(idAttr)
-      if es.forall(e => AnnCatalog.index(spark, e).meta.cfg.metric == metric)
+      // indexes jointly covering the scan
+      s <- scanOf(indexedSide)
+      (tier, id) <- resolveIn(s, indexedSide.output, Seq(Kind.Ivf),
+        vecAttr.name, metric)
       served <- {
-        val idxs = es.map(e => AnnCatalog.index(spark, e))
+        val idxs = tier.entries.map(AnnCatalog.index(spark, _))
         // the pooled candidate job below is ONE codes pass at ANY sphere
         // count, so unlike the KNN join there is nothing to slice — the
         // cap only bounds the queries-side collect. Round 16: the
         // effective cap is max(maxQueries, maxQueriesTotal=4096), the
         // KNN-join hard-cap contract (a raised legacy conf still wins),
         // and overflow declines LOUDLY naming the DSL faces.
-        val maxQ = math.max(1, math.max(
-          spark.conf.get("graft.ann.range.join.maxQueries", "256").toInt,
-          spark.conf.get("graft.ann.range.join.maxQueriesTotal", "4096").toInt))
-        val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-        val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
+        val maxQ = c.rangeJoinMaxQueriesTotal
+        val maxInList = c.maxInList
+        val eps = c.epsilon
         AnnTopKRewrite.planningJobs.incrementAndGet()
         val projOut = Seq(
           Alias(centerAttr, "c")(),
@@ -2119,8 +1826,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             else {
               val dids = ids.distinct.sorted
               ensureInPushdown(dids.length)
-              val restricted = stamped(Filter(
-                AnnTopKRewrite.idsInExpr(idAttr, dids, idLit), indexedSide))
+              val restricted = stamped(Filter(id.in(dids), indexedSide))
               Some(if (indexedSide eq j.left) j.copy(left = restricted)
                    else j.copy(right = restricted))
             }
@@ -2141,29 +1847,18 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * child dir, like the top-k union path): each root's index answers
     * the sphere over its own rows, the candidate union is exact-superset
     * for the whole scan. */
-  private def serveRange(f: Filter, metric: String, attr: AttributeReference,
-                         cv: ArrayData, radius: Double,
+  private def serveRange(c: AnnConf, f: Filter, metric: String,
+                         attr: AttributeReference, cv: ArrayData, radius: Double,
                          rel: LogicalRelation): Option[LogicalPlan] =
     for {
-      fsRel <- rel.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
-      }
-      roots = fsRel.location.rootPaths.map(_.toString)
-      es <- AnnCatalog.lookupAll(roots)
-        .orElse(AnnCatalog.coverByFiles(roots, fsRel.location.inputFiles.toSeq))
-      if es.forall(_.vecCol == attr.name)
-      if es.map(_.idCol).distinct.size == 1
       // IDEMPOTENCE: this rule's own output carries ServedFilterTag;
       // user In conjuncts (`id IN (...)`, `category IN (...)`) do NOT
       // block the serve
-      if !isServedPlan(f)
-      idAttr <- f.child.output.find(_.name == es.head.idCol)
-      idLit <- litFor(idAttr)
-      if es.forall(e => AnnCatalog.index(spark, e).meta.cfg.metric == metric)
+      _ <- Some(()) if !isServedPlan(f)
+      s <- scanOf(rel)
+      (tier, id) <- resolveIn(s, rel.output, Seq(Kind.Ivf), attr.name, metric)
       served <- {
-        val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-        val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
+        val maxInList = c.maxInList
         // ONE planning job AND one analyzed relation however many roots
         // (same flat shape as serveMulti): all roots' sphere-intersecting
         // cluster dirs read as a single scan, the union-level limit makes
@@ -2172,8 +1867,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // materializing every root's pool
         AnnTopKRewrite.planningJobs.incrementAndGet()
         val raw = IvfIndex.multiRangeCandidateIds(
-          es.map(AnnCatalog.index(spark, _)),
-          Array((cv.toFloatArray(), radius)), eps, maxInList)
+          tier.entries.map(AnnCatalog.index(spark, _)),
+          Array((cv.toFloatArray(), radius)), c.epsilon, maxInList)
         // overflow check BEFORE dedup: a truncated-then-deduped list could
         // sneak under the cap while silently missing candidates past the
         // limit — serving it would drop qualifying rows.
@@ -2191,85 +1886,66 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         else {
           val all = raw.distinct
           ensureInPushdown(all.length)
-          Some(stamped(Filter(And(f.condition,
-            AnnTopKRewrite.idsInExpr(idAttr, all, idLit)),
-            f.child)))
+          Some(stamped(Filter(And(f.condition, id.in(all)), f.child)))
         }
       }
     } yield served
 
-  private def serveMaxSim(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                          projOpt: Option[Seq[NamedExpression]],
-                          entry: AnnCatalog.MaxSimEntry, docAttr: Attribute,
-                          idLit: Long => Literal, qv: ArrayData, k: Int): Option[LogicalPlan] = {
-    val idx = AnnCatalog.maxSimIndex(spark, entry)
-    val query: Array[Array[Float]] =
-      Array.tabulate(qv.numElements())(i => qv.getArray(i).toFloatArray())
-    if (query.isEmpty) return Some(gl)
-    val probes = spark.conf.get("graft.ann.probes", "auto") match {
-      case "auto" => math.max(1, math.ceil(math.sqrt(idx.meta.cfg.lists.toDouble)).toInt)
-      case s      => s.toInt
-    }
-    val refine = spark.conf.get("graft.ann.refine", "8").toInt
-    val kPerToken = spark.conf.get("graft.ann.maxsim.kPerToken", "100").toInt
-    // cost gate (same shape as the single-vector serve): per query token,
-    // a code-only scan of the probed fraction + its candidate fetch,
-    // versus the exact scan touching every token row per query token
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.maxsim(Seq((idx.rowCount, idx.meta.cfg.lists, probes)),
-          query.length.toDouble, kPerToken, k, refine))
-      return None
-    import spark.implicits._
-    // refineDocs = k*refine exact rescues (the reference's maxsim_refine)
-    val ids = graft.ops.MaxSim.approxTopK(idx, query, k,
-        kPerToken = kPerToken, probes = probes, refine = refine,
-        refineDocs = k * refine)
-      .select("doc").as[Long].collect()
-    if (ids.isEmpty) Some(gl)
+  /** Candidate ids within the IN budget, from a `pool` of (id, estimate,
+    * root) with unique ids: the whole pool when it fits; past
+    * `maxInList`, every root's estimated top-k (no root loses
+    * representation — its local winners must reach the exact rerank),
+    * then the rest of the budget globally by estimate. This is the
+    * single-index cell-pool policy applied across roots, instead of
+    * blind per-root truncation.
+    * ANN CONTRACT NOTE: the per-root floor ranks by estimate, not exact
+    * distance — a root's true top-k member whose estimate ranks past k
+    * AND past the global fill can be dropped. This is the same
+    * estimate-order candidate admission every IVF pool uses (cells admit
+    * by code bound before any exact rerank); the epsilon-scaled lb makes
+    * it rare, and it only arises at all when the pool exceeds maxInList
+    * (where the old per-root exact shape paid one serialized Spark job
+    * per root to avoid it — the wrong trade at hundreds of roots). */
+  private def withinInBudget(pool: Array[(Long, Double, Int)], k: Int,
+      maxInList: Int): Array[Long] =
+    if (pool.length <= maxInList) pool.map(_._1)
     else {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, docAttr, ids, idLit)
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      Some(GlobalLimit(Literal(k), LocalLimit(Literal(k), body)))
+      val floor = pool.groupBy(_._3).valuesIterator
+        .flatMap(_.sortBy(t => (t._2, t._1)).take(k)).toArray
+      val floorIds = floor.map(_._1).toSet
+      val rest = pool.filter(t => !floorIds.contains(t._1))
+        .sortBy(t => (t._2, t._1))
+      floor.map(_._1) ++ rest.take(maxInList - floorIds.size).map(_._1)
     }
-  }
 
-  /** Partitioned MaxSim serve (strategy 3 over per-child indexes —
-    * reference scanners/maxsim.rs semantics across partition.slt-style
-    * children): ONE flat retrieval job pools every (root, token)'s
-    * estimate candidates, docs score per root on the driver with per-root
-    * miss stand-ins (MaxSim.multiRootCandidateDocs), and the rewritten
-    * plan's own exact Sort+Limit over the IN-restricted scan restores
-    * exact ordering. Candidate budget: k*refine docs per root, floored
-    * at each root's top-k then filled globally by estimate when over
-    * `graft.ann.maxInList` (the serveMulti policy — same ANN-contract
-    * note as there). Cost gate: summed per-root token-index work vs the
-    * total exact scan of every root's token rows. */
-  private def serveMaxSimMulti(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                               projOpt: Option[Seq[NamedExpression]],
-                               es: Seq[AnnCatalog.MaxSimEntry], docAttr: Attribute,
-                               idLit: Long => Literal, qv: ArrayData,
-                               k: Int): Option[LogicalPlan] = {
-    val idxs = es.map(e => AnnCatalog.maxSimIndex(spark, e))
+  /** The MaxSim top-k serve (strategy 3, reference scanners/maxsim.rs),
+    * for one token index or a partitioned corpus's per-child ones: ONE
+    * flat retrieval job pools every (root, token)'s estimate candidates,
+    * docs score per root on the driver with per-root miss stand-ins
+    * (MaxSim.multiRootCandidateDocs), and the rewritten plan's own exact
+    * Sort+Limit over the IN-restricted scan restores exact ordering.
+    * Candidate budget: k*refine docs per root by estimate, floored at
+    * each root's top-k then filled globally when over
+    * `graft.ann.maxInList` ([[withinInBudget]]). Cost gate: summed
+    * per-root token-index work vs the total exact scan of every root's
+    * token rows. */
+  private def serveMaxSimMulti(c: AnnConf, t: TopK, es: Seq[AnnCatalog.Entry],
+                               id: IdCol, qv: ArrayData): Option[LogicalPlan] = {
+    val idxs = es.map(AnnCatalog.index(spark, _))
+    val k = t.k
     val query: Array[Array[Float]] =
       Array.tabulate(qv.numElements())(i => qv.getArray(i).toFloatArray())
-    if (query.isEmpty) return Some(gl)
-    val probesConf = spark.conf.get("graft.ann.probes", "auto")
-    def probesFor(lists: Int): Int =
-      if (probesConf == "auto") math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-      else probesConf.toInt
-    val refine = spark.conf.get("graft.ann.refine", "8").toInt
-    val kPerToken = spark.conf.get("graft.ann.maxsim.kPerToken", "100").toInt
-    val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.maxsim(idxs.map(ix => (ix.rowCount, ix.meta.cfg.lists,
-            probesFor(ix.meta.cfg.lists))),
-          query.length.toDouble, kPerToken, k, refine))
+    if (query.isEmpty) return Some(t.gl)
+    val probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists))
+    val kPerToken = c.kPerToken
+    if (c.costEnable &&
+        !CostGates.maxsim(idxs.zip(probes).map { case (ix, p) =>
+            (ix.rowCount, ix.meta.cfg.lists, p) },
+          query.length.toDouble, kPerToken, k, c.refine))
       return None
     // the k-floor is the serve/decline line (as serveMulti): if even k
     // docs per root overflow the IN budget, the exact plan wins
-    if (idxs.length.toLong * k > maxInList) return Some(gl)
+    if (idxs.length.toLong * k > c.maxInList) return Some(t.gl)
     // DRIVER-POOL budget: the pooled retrieval collects up to
     // roots x tokens x kPerToken (root, token, id, lb) tuples to the
     // driver for scoring. The flat read caps the collect at
@@ -2282,104 +1958,43 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // (~0.5 GB boxed). Past the cap the serve DECLINES LOUDLY to the
     // exact scan instead of silently truncating pools (the no-silent-
     // caps rule); lower kPerToken or raise the conf to serve wider.
-    val maxPoolTuples =
-      spark.conf.get("graft.ann.maxsim.maxPoolTuples", "4000000").toLong
-    if (idxs.length.toLong * query.length * kPerToken > maxPoolTuples)
-      return Some(gl)
+    if (idxs.length.toLong * query.length * kPerToken > c.maxsimMaxPoolTuples)
+      return Some(t.gl)
     AnnTopKRewrite.planningJobs.incrementAndGet()
-    val probes = idxs.map(ix => probesFor(ix.meta.cfg.lists))
     val perRoot = graft.ops.MaxSim.multiRootCandidateDocs(idxs, query,
-      docsPerRoot = k * math.max(refine, 1), kPerToken = kPerToken,
+      docsPerRoot = k * math.max(c.refine, 1), kPerToken = kPerToken,
       probes = probes)
-    if (perRoot.isEmpty) return Some(gl)
-    val ids: Array[Long] =
-      if (perRoot.length <= maxInList) perRoot.map(_._2).distinct
-      else {
-        val floor = perRoot.groupBy(_._1).valuesIterator
-          .flatMap(_.sortBy(t => (t._3, t._2)).take(k)).toArray
-        val floorIds = floor.map(_._2).toSet
-        val rest = perRoot.filter(t => !floorIds.contains(t._2))
-          .sortBy(t => (t._3, t._2))
-        (floor.map(_._2) ++
-          rest.take(maxInList - floorIds.size).map(_._2)).distinct
-      }
-    ensureInPushdown(ids.length)
-    val filter = topkFilter(sort, child, docAttr, ids, idLit)
-    val sorted = Sort(sort.order, global = true, filter)
-    val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-    Some(GlobalLimit(Literal(k), LocalLimit(Literal(k), body)))
+    // docs are unique across roots (each doc's tokens live in one child)
+    val ids = withinInBudget(perRoot.map { case (root, doc, s) => (doc, s, root) },
+      k, c.maxInList)
+    Some(served(c, t, id, ids, complete = false))
   }
 
-  private def litFor(idAttr: Attribute): Option[Long => Literal] =
-    idAttr.dataType match {
-      case org.apache.spark.sql.types.LongType    => Some((id: Long) => Literal(id))
-      case org.apache.spark.sql.types.IntegerType => Some((id: Long) => Literal(id.toInt))
-      case _ => None
-    }
-
-  /** Graph (vchordg) serve: ef-bounded beam search supplies the candidate
-    * ids; `graft.ann.efSearch` mirrors the ef_search GUC (default 64,
-    * reference src/index/gucs.rs:38-44). Cost gate: the beam visits ~ef
-    * vertices plus a k-row fetch — decline when the exact scan of n rows
-    * is no more work (tiny tables). */
-  private def serveGraph(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                         projOpt: Option[Seq[NamedExpression]],
-                         entry: AnnCatalog.GraphEntry, idAttr: Attribute,
-                         idLit: Long => Literal, qv: ArrayData, k: Int): Option[LogicalPlan] = {
-    val g = AnnCatalog.graph(spark, entry)
-    val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.graph(1, g.ids.length.toLong, ef, k))
+  /** The graph (vchordg) top-k serve, for one driver-tier Vamana graph or
+    * a partitioned table's one per child: every graph beams
+    * (ef-bounded; `graft.ann.efSearch` mirrors the ef_search GUC,
+    * default 64, reference src/index/gucs.rs:38-44) for k candidates, or
+    * for its whole ef pool when quantized (code estimates, which the
+    * plan's exact Sort corrects); the ids union (docs are unique across
+    * roots), and the standard exact Sort+Limit runs over the
+    * IN-restricted scan. Driver-side only — zero Spark jobs at planning.
+    * Cost gate: summed beam work (~roots*ef + k) vs the total exact scan
+    * — declines on tiny tables. The IN budget declines past
+    * `graft.ann.maxInList`. */
+  private def serveGraphMulti(c: AnnConf, t: TopK, ges: Seq[AnnCatalog.Entry],
+                              id: IdCol, qv: ArrayData): Option[LogicalPlan] = {
+    val gs = ges.map(AnnCatalog.graph(spark, _))
+    val ef = c.efSearch
+    if (c.costEnable &&
+        !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, t.k))
       return None
-    // quantized graphs rank by code estimates: keep the ef pool as
-    // candidates and let the rewritten plan's exact Sort+Limit pick top-k
-    val kCand = if (g.quantized) math.max(ef, k) else k
-    val ids = g.search(qv.toFloatArray(), kCand, ef).map(_._1)
-    if (ids.isEmpty) Some(gl)
-    else Some {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, idAttr, ids, idLit,
-        complete = g.sourceComplete)
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
-  }
-
-  /** Partitioned-graph serve (one driver-tier Vamana graph per child):
-    * every root's graph beams with the per-root candidate budget
-    * serveGraph uses (k, or the ef pool on quantized graphs, whose code
-    * estimates the plan's exact Sort corrects), the ids union (docs are
-    * unique across roots), and the standard exact Sort+Limit runs over
-    * the IN-restricted scan. Driver-side only — zero Spark jobs at
-    * planning. Cost gate: summed beam work (~roots*ef + k) vs the total
-    * exact scan. The IN budget declines past `graft.ann.maxInList`. */
-  private def serveGraphMulti(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                              projOpt: Option[Seq[NamedExpression]],
-                              ges: Seq[AnnCatalog.GraphEntry], idAttr: Attribute,
-                              idLit: Long => Literal, qv: ArrayData,
-                              k: Int): Option[LogicalPlan] = {
-    val gs = ges.map(ge => AnnCatalog.graph(spark, ge))
-    val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, k))
-      return None
-    val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
     val q = qv.toFloatArray()
     val ids = gs.flatMap { g =>
-      val kCand = if (g.quantized) math.max(ef, k) else k
+      val kCand = if (g.quantized) math.max(ef, t.k) else t.k
       g.search(q, kCand, ef).map(_._1)
     }.distinct
-    if (ids.length > maxInList) return Some(gl)
-    if (ids.isEmpty) Some(gl)
-    else Some {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, idAttr, ids, idLit,
-        complete = gs.forall(_.sourceComplete))
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
+    if (ids.length > c.maxInList) Some(t.gl)
+    else Some(served(c, t, id, ids, gs.forall(_.sourceComplete)))
   }
 
   /** Sharded-graph serve: every shard beams, the bounded merge supplies
@@ -2387,32 +2002,21 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * shard RDD (counted in [[AnnTopKRewrite.planningJobs]], like
     * prefilter escalation). Cost gate: total beam work is ~shards*ef —
     * decline when the exact scan is no more work. */
-  private def serveShardedGraph(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                                projOpt: Option[Seq[NamedExpression]],
-                                entry: AnnCatalog.ShardedGraphEntry, idAttr: Attribute,
-                                idLit: Long => Literal, qv: ArrayData, k: Int): Option[LogicalPlan] = {
+  private def serveShardedGraph(c: AnnConf, t: TopK, entry: AnnCatalog.Entry,
+                                id: IdCol, qv: ArrayData): Option[LogicalPlan] = {
     val h = AnnCatalog.shardedGraph(spark, entry)
-    val ef = spark.conf.get("graft.ann.efSearch", "64").toInt
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.sharded(h.shards, h.totalVertices, ef, k))
+    val ef = c.efSearch
+    if (c.costEnable && !CostGates.sharded(h.shards, h.totalVertices, ef, t.k))
       return None
     AnnTopKRewrite.planningJobs.incrementAndGet()
     // on QUANTIZED shards the merge ranks by code estimates — keep the
     // whole ef pool as candidates (the rewritten plan's exact Sort+Limit
     // over the source table restores exactness, rerank-in-table style)
-    val kCand = if (h.cfg.bits > 0) math.max(ef, k) else k
+    val kCand = if (h.cfg.bits > 0) math.max(ef, t.k) else t.k
     val ids = h.search(spark, Array(0L -> qv.toFloatArray()), kCand, ef,
         allowEstimates = true)
       .select("id").collect().map(_.getLong(0))
-    if (ids.isEmpty) Some(gl)
-    else Some {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, idAttr, ids, idLit,
-        complete = h.sourceComplete)
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
+    Some(served(c, t, id, ids, h.sourceComplete))
   }
 
   /** Partial-index predicate implication, the restricted form Postgres
@@ -2545,25 +2149,20 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * bounds, no in-index rerank), unioned, then the standard exact
     * Sort+Limit over the IN-restricted scan reranks the pool — the
     * reference's probe, estimate, rerank pass with the rerank in the
-    * plan. Cost model sums the per-root index costs against the total
-    * exact scan. Declines when even k ids per root exceed
+    * plan. `probes = auto` sizes each root's probe budget as
+    * ceil(sqrt(lists)). Cost model sums the per-root index costs against
+    * the total exact scan. Declines when even k ids per root exceed
     * `graft.ann.maxInList`. */
-  private def serveMulti(gl: LogicalPlan, sort: Sort, child: LogicalPlan,
-                         projOpt: Option[Seq[NamedExpression]],
-                         es: Seq[AnnCatalog.Entry], idAttr: Attribute,
-                         idLit: Long => Literal, qv: ArrayData,
-                         k: Int,
-                         predOpt: Option[Expression] = None): Option[LogicalPlan] = {
-    val idxs = es.map(e => (e, AnnCatalog.index(spark, e)))
-    val probesConf = spark.conf.get("graft.ann.probes", "auto")
-    def probesFor(lists: Int): Int =
-      if (probesConf == "auto") math.max(1, math.ceil(math.sqrt(lists.toDouble)).toInt)
-      else probesConf.toInt
-    val refine0 = spark.conf.get("graft.ann.refine", "8").toInt
-    val maxInList = spark.conf.get("graft.ann.maxInList", "8192").toInt
-    if (spark.conf.get("graft.ann.cost.enable", "true").toBoolean &&
-        !CostGates.ivf(idxs.map { case (_, ix) => (ix.rowCount,
-          ix.meta.cfg.lists, probesFor(ix.meta.cfg.lists)) }, k, refine0))
+  private def serveMulti(c: AnnConf, t: TopK, es: Seq[AnnCatalog.Entry],
+                         id: IdCol, qv: ArrayData,
+                         predOpt: Option[Expression]): Option[LogicalPlan] = {
+    val idxs = es.map(AnnCatalog.index(spark, _))
+    val k = t.k
+    val refine0 = c.refine
+    val maxInList = c.maxInList
+    if (c.costEnable &&
+        !CostGates.ivf(idxs.map(ix => (ix.rowCount,
+          ix.meta.cfg.lists, c.probesFor(ix.meta.cfg.lists))), k, refine0))
       return None
     val qArr = qv.toFloatArray()
     // ONE planning job AND one analyzed relation however many roots: all
@@ -2583,59 +2182,27 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // the flat files (the pool picks its row source by root count).
     // the k-floor is the serve/decline line, as in the old per-root
     // shape: if even k ids per root overflow maxInList, decline to exact
-    if (idxs.length.toLong * k > maxInList) return Some(gl)
+    if (idxs.length.toLong * k > maxInList) return Some(t.gl)
     // one unioned collect per call: (id, lb, root) for the per-root top
     // k*refineScale estimate candidates at the given probe scale
     def unionPool(probeScale: Int, refineScale: Int): Array[(Long, Double, Int)] = {
       AnnTopKRewrite.planningJobs.incrementAndGet()
       val nCand = math.max(k * refineScale, k)
-      val prs = idxs.map { case (_, ix) =>
-        math.min(ix.meta.cfg.lists, probesFor(ix.meta.cfg.lists) * probeScale) }
-      IvfIndex.multiEstimateCandidates(idxs.map(_._2), qArr, nCand, prs)
+      val prs = idxs.map(ix =>
+        math.min(ix.meta.cfg.lists, c.probesFor(ix.meta.cfg.lists) * probeScale))
+      IvfIndex.multiEstimateCandidates(idxs, qArr, nCand, prs)
     }
     // dedup ids across roots, and within a root across generation and
     // delta (keep the best lb for budgeting): one id must not take two of
     // the k*refine slots
     def dedup(pool: Array[(Long, Double, Int)]): Array[(Long, Double, Int)] =
       pool.groupBy(_._1).valuesIterator.map(_.minBy(t => (t._2, t._3))).toArray
-    def planWith(ids: Array[Long]): LogicalPlan = {
-      ensureInPushdown(ids.length)
-      val filter = topkFilter(sort, child, idAttr, ids, idLit,
-        complete = idxs.forall(_._2.sourceComplete))
-      val sorted = Sort(sort.order, global = true, filter)
-      val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-      GlobalLimit(Literal(k), LocalLimit(Literal(k), body))
-    }
+    def planWith(ids: Array[Long]): LogicalPlan =
+      served(c, t, id, ids, idxs.forall(_.sourceComplete))
 
     predOpt match {
       case None =>
-        val distinctPool = dedup(unionPool(1, refine0))
-        // over the IN budget: keep every root's estimated top-k (no root
-        // loses representation — its local winners must reach the exact
-        // rerank), then spend the rest of the budget globally by lb. This
-        // is the single-index cell-pool policy applied across roots,
-        // instead of blind per-root truncation.
-        // ANN CONTRACT NOTE: the per-root floor ranks by estimate lower
-        // bound (lb), not exact distance — a root's true top-k member
-        // whose lb ranks past k AND past the global fill can be dropped.
-        // This is the same estimate-order candidate admission every IVF
-        // pool uses (cells admit by code bound before any exact rerank);
-        // the epsilon-scaled lb makes it rare, and it only arises at all
-        // when the pool exceeds maxInList (where the old per-root exact
-        // shape paid one serialized Spark job per root to avoid it —
-        // the wrong trade at hundreds of roots).
-        val ids: Array[Long] =
-          if (distinctPool.length <= maxInList) distinctPool.map(_._1)
-          else {
-            val floor = distinctPool.groupBy(_._3).valuesIterator
-              .flatMap(_.sortBy(t => (t._2, t._1)).take(k)).toArray
-            val floorIds = floor.map(_._1).toSet
-            val rest = distinctPool.filter(t => !floorIds.contains(t._1))
-              .sortBy(t => (t._2, t._1))
-            floor.map(_._1) ++
-              rest.take(maxInList - floorIds.size).map(_._1)
-          }
-        if (ids.isEmpty) Some(gl) else Some(planWith(ids))
+        Some(planWith(withinInBudget(dedup(unionPool(1, refine0)), k, maxInList)))
       case Some(pred) =>
         // PREFILTER: pool candidates, count the predicate's survivors
         // among them (child already contains the user Filter), escalate
@@ -2652,10 +2219,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // tight at full probes, conservative below — per root
           // min(k*r, rows), summed
           def poolBound: Long =
-            idxs.map { case (_, ix) => math.min(k.toLong * r, ix.rowCount) }.sum
-          def covered: Boolean = idxs.forall { case (_, ix) =>
+            idxs.map(ix => math.min(k.toLong * r, ix.rowCount)).sum
+          def covered: Boolean = idxs.forall { ix =>
             math.min(ix.meta.cfg.lists,
-              probesFor(ix.meta.cfg.lists) * scale) >= ix.meta.cfg.lists &&
+              c.probesFor(ix.meta.cfg.lists) * scale) >= ix.meta.cfg.lists &&
               k.toLong * r >= ix.rowCount
           }
           def survivors(ids: Array[Long]): Long =
@@ -2669,25 +2236,24 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               // aggregate — two jobs and an exchange under AQE)
               AnnTopKRewrite.withPlanningGuard {
                 ColumnBridge.toInternalRdd(ColumnBridge.ofRows(spark,
-                  Filter(AnnTopKRewrite.idsInExpr(idAttr, ids, idLit),
-                    child))).count()
+                  Filter(id.in(ids), t.child))).count()
               }
             }
-          if (poolBound > maxInList) return Some(gl)
+          if (poolBound > maxInList) return Some(t.gl)
           var ids = dedup(unionPool(scale, r)).map(_._1)
-          if (ids.length > maxInList) return Some(gl)
+          if (ids.length > maxInList) return Some(t.gl)
           // check coverage FIRST: a covered pool serves regardless of the
           // survivor count, so the count job is pure waste there
           var cov = covered
           while (!cov && survivors(ids) < k) {
             scale *= 4
             r *= 4
-            if (poolBound > maxInList) return Some(gl)
+            if (poolBound > maxInList) return Some(t.gl)
             ids = dedup(unionPool(scale, r)).map(_._1)
-            if (ids.length > maxInList) return Some(gl)
+            if (ids.length > maxInList) return Some(t.gl)
             cov = covered
           }
-          if (ids.isEmpty) Some(gl) else Some(planWith(ids))
+          Some(planWith(ids))
         }
         pred match {
           // sphere prefilter in the shared index metric (reference
@@ -2700,18 +2266,17 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // would stop at k pool-order survivors — approximate where
           // this branch is exact.
           case SphereCond(sphMetric, sphAttr, sphCv, sphRadius)
-              if idxs.forall(_._2.meta.cfg.metric == sphMetric) &&
+              if idxs.forall(_.meta.cfg.metric == sphMetric) &&
                  sphAttr.name == es.head.vecCol =>
-            val eps = spark.conf.get("graft.ann.epsilon", "1.9").toDouble
             AnnTopKRewrite.planningJobs.incrementAndGet()
             // one flat read over every root's sphere-intersecting cluster
             // dirs (no per-root union branches — see unionPool)
-            val raw = IvfIndex.multiRangeCandidateIds(idxs.map(_._2),
-              Array((sphCv.toFloatArray(), sphRadius)), eps, maxInList)
+            val raw = IvfIndex.multiRangeCandidateIds(idxs,
+              Array((sphCv.toFloatArray(), sphRadius)), c.epsilon, maxInList)
             // overflow BEFORE dedup: a truncated-then-deduped list could
             // silently miss qualifying candidates past the limit
             if (raw.length > maxInList) escalateMulti()
-            else if (raw.isEmpty) Some(LocalRelation(gl.output))
+            else if (raw.isEmpty) Some(LocalRelation(t.gl.output))
             else {
               // merge the IN into the EXISTING Filter and stamp it: a
               // fresh In-Filter
@@ -2720,17 +2285,13 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               // a second planning job re-serving this rule's own output
               val ids = raw.distinct
               ensureInPushdown(ids.length)
-              val inExpr = AnnTopKRewrite.idsInExpr(idAttr, ids, idLit)
-              val newChild = child match {
+              val inExpr = id.in(ids)
+              Some(inPlan(t, t.child match {
                 case Filter(p, rel0)              => stamped(Filter(And(p, inExpr), rel0))
                 case Project(pl, Filter(p, rel0)) =>
                   Project(pl, stamped(Filter(And(p, inExpr), rel0)))
                 case other                        => stamped(Filter(inExpr, other))
-              }
-              val sorted = Sort(sort.order, global = true, newChild)
-              val body = projOpt.map(pl => Project(pl, sorted): LogicalPlan)
-                .getOrElse(sorted)
-              Some(GlobalLimit(Literal(k), LocalLimit(Literal(k), body)))
+              }))
             }
           case _ => escalateMulti()
         }

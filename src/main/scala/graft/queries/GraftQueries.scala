@@ -2660,8 +2660,9 @@ object GraftQueries {
     "range_batch_served" -> Q(
       (s, d) => {
         val path = partitionedEmbTable(s, d)
-        require(graft.plans.AnnCatalog.coverByFiles(Seq(path),
-            s.read.parquet(path).inputFiles.toSeq).exists(_.size == 2),
+        require(graft.plans.AnnCatalog.resolve(s, Seq(path),
+            s.read.parquet(path).inputFiles.toSeq,
+            Seq(graft.plans.AnnCatalog.Kind.Ivf)).exists(_.entries.size == 2),
           "range_batch_served: the partitioned corpus is not covered by " +
           "its per-child registrations — the served route would refuse")
         val qdf = s.read.parquet(path)
@@ -2754,8 +2755,9 @@ object GraftQueries {
     "knn_batch_served" -> Q(
       (s, d) => {
         val path = partitionedEmbTable(s, d)
-        require(graft.plans.AnnCatalog.coverByFiles(Seq(path),
-            s.read.parquet(path).inputFiles.toSeq).exists(_.size == 2),
+        require(graft.plans.AnnCatalog.resolve(s, Seq(path),
+            s.read.parquet(path).inputFiles.toSeq,
+            Seq(graft.plans.AnnCatalog.Kind.Ivf)).exists(_.entries.size == 2),
           "knn_batch_served: the partitioned corpus is not covered by " +
           "its per-child registrations — the served route would refuse")
         val qdf = s.read.parquet(path)
@@ -2788,8 +2790,9 @@ object GraftQueries {
       (s, d) => {
         import s.implicits._
         val path = partitionedMaxSimTable(s, d)
-        require(graft.plans.AnnCatalog.coverMaxSimByFiles(Seq(path),
-            s.read.parquet(path).inputFiles.toSeq).exists(_.size == 2),
+        require(graft.plans.AnnCatalog.resolve(s, Seq(path),
+            s.read.parquet(path).inputFiles.toSeq,
+            Seq(graft.plans.AnnCatalog.Kind.Tokens)).exists(_.entries.size == 2),
           "maxsim_batch_served: the partitioned multivector corpus is " +
           "not covered by its per-child registrations")
         val qv6 = qvecs(s, d, 1L to 6L)
@@ -3462,7 +3465,7 @@ object GraftQueries {
         // fixture registers this same dir, and two independent loads
         // would hold the shard RDD resident twice
         val h = graft.plans.AnnCatalog.shardedGraph(spark,
-          graft.plans.AnnCatalog.ShardedGraphEntry(dir, "vec_id", "embedding"))
+          graft.plans.AnnCatalog.Entry(dir, "vec_id", "embedding"))
         cache.put(key, h)
         h
       }

@@ -168,7 +168,7 @@ object PartitionedServeProbe {
         graft.index.IvfIndex.load(spark, s"$base-idx$p"))
       def runBatch(): org.apache.spark.sql.DataFrame =
         graft.index.IvfIndex.searchManyMulti(idxs, batch, k = 10,
-          probes = math.max(1, math.ceil(math.sqrt(lists)).toInt), refine = 8)
+          probes = graft.core.AnnConf.autoProbes(lists), refine = 8)
       val b0 = runBatch().collect()
       // q0 IS the ladder probe: its batch answer must hit the exact
       // top-10 at the same recall floor the per-query serve is held to
@@ -238,7 +238,7 @@ object PartitionedServeProbe {
       def runMs(): org.apache.spark.sql.DataFrame =
         graft.ops.MaxSim.maxsimManyMulti(msIdxs, msBatch, k = 10,
           kPerToken = 200,
-          probes = Seq.fill(roots)(math.max(1, math.ceil(math.sqrt(lists)).toInt)),
+          probes = Seq.fill(roots)(graft.core.AnnConf.autoProbes(lists)),
           refine = 8)
       val ms0 = runMs().collect().filter(_.getLong(0) == 0L)
         .map(_.getLong(1)).toSet
@@ -249,7 +249,7 @@ object PartitionedServeProbe {
       val msSec = best(() => { runMs().collect(); () })
       say(f"batched maxsim x4 (maxsimManyMulti, 2 passes): $msSec%.3f s " +
         f"total = ${msSec / 4}%.3f s/query, q0 recall@10 $msRecall%.1f " +
-        f"(probes ${math.ceil(math.sqrt(lists)).toInt}/$lists)")
+        f"(probes ${graft.core.AnnConf.autoProbes(lists)}/$lists)")
       println(f"""{"partserve_roots":$roots,"rows_per_root":$rowsPerRoot,"lists":$lists,"exact_sec":$exactSec%.3f,"served_sec":$servedSec%.3f,"served_recall":$recall%.2f,"served_full_sec":$fullSec%.3f,"speedup_default":${exactSec / servedSec}%.2f,"speedup_full":${exactSec / fullSec}%.2f,"batch16_sec":$batchSec%.3f,"range8_sec":$rangeSec%.3f,"maxsim4_sec":$msSec%.3f,"maxsim_recall":$msRecall%.2f}""")
     } finally
       (0 until roots).foreach(p => graft.plans.AnnCatalog.unregister(s"$tableDir/part=$p"))

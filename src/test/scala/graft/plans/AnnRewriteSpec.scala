@@ -1560,10 +1560,10 @@ class AnnRewriteSpec extends SparkSpec {
   test("coverByFiles gate: an unregistered root never materializes the " +
        "scan's file list (by-name files stays unforced)") {
     var forced = false
-    val got = AnnCatalog.coverByFiles(Seq("/graft-no-such-root"), {
+    val got = AnnCatalog.resolve(spark, Seq("/graft-no-such-root"), {
       forced = true
       Seq("/graft-no-such-root/part=0/f.parquet")
-    })
+    }, AnnCatalog.Kind.vectors :+ AnnCatalog.Kind.Tokens)
     assert(got.isEmpty)
     assert(!forced,
       "inputFiles must not be materialized when no entry sits under the " +
@@ -1580,17 +1580,18 @@ class AnnRewriteSpec extends SparkSpec {
       // filesystem involved: the walk's cost is string work + memo hits)
       val files = (0 until 50000).map(i =>
         s"$root/part=${i % 64}/part-${i / 64}-x.snappy.parquet")
-      val cover = AnnCatalog.coverByFiles(Seq(root), files)
+      def cover = AnnCatalog.resolve(spark, Seq(root), files,
+        Seq(AnnCatalog.Kind.Ivf)).map(_.entries)
       assert(cover.isDefined && cover.get.size == 64, s"cover: $cover")
       // warm (memoized dirs), then time — generous bound: catches an
       // O(files x entries) or memo-loss regression, not box noise
       val t0 = System.nanoTime()
       val runs = 5
       (1 to runs).foreach { _ =>
-        assert(AnnCatalog.coverByFiles(Seq(root), files).isDefined)
+        assert(cover.isDefined)
       }
       val perPlanMs = (System.nanoTime() - t0) / 1e6 / runs
-      info(f"coverByFiles over 50k files, 64 children: $perPlanMs%.2f ms/plan")
+      info(f"resolve over 50k files, 64 children: $perPlanMs%.2f ms/plan")
       assert(perPlanMs < 100.0,
         f"cover walk took $perPlanMs%.1f ms per plan at 50k files")
     } finally children.foreach(AnnCatalog.unregister)
@@ -1746,7 +1747,8 @@ class AnnRewriteSpec extends SparkSpec {
           "must invalidate the cached flat-read listings")
         // SECOND append through the CATALOG's own instance: the delta
         // dir already exists, so only the mutations bump invalidates
-        val entry = AnnCatalog.lookupAll(Seq(s"$tableDir/part=1")).get.head
+        val entry = AnnCatalog.resolve(spark, Seq(s"$tableDir/part=1"), Nil,
+          Seq(AnnCatalog.Kind.Ivf)).get.entries.head
         appendRows(AnnCatalog.index(spark, entry), Seq(9001L), 1)
         val got = topIds()
         assert(got.contains(9001L) && got.contains(9000L),
@@ -1778,7 +1780,8 @@ class AnnRewriteSpec extends SparkSpec {
     AnnCatalog.register(tableDir, idxDir, "id", "vec")
     val persisted0 = spark.sparkContext.getPersistentRDDs.size
     // load the catalog's instance and pin its plan in executor memory
-    val entry = AnnCatalog.lookupAll(Seq(tableDir)).get.head
+    val entry = AnnCatalog.resolve(spark, Seq(tableDir), Nil,
+      Seq(AnnCatalog.Kind.Ivf)).get.entries.head
     AnnCatalog.index(spark, entry).prewarm()
     assert(spark.sparkContext.getPersistentRDDs.size > persisted0,
       "prewarm must persist the cached plan")
@@ -2015,5 +2018,153 @@ class AnnRewriteSpec extends SparkSpec {
         assert(!got.exists(_ >= 300L), s"keepNulls=false serves no null rows: $got")
       }
     } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("single-root maxsim serve counts its ONE planning job (the 2-root " +
+       "serve's count)") {
+    import spark.implicits._
+    val rng = new scala.util.Random(57)
+    def tok(): Seq[Float] = Seq.fill(8)(rng.nextFloat() * 2 - 1)
+    val docs = (0L until 200L).map(i => i -> Seq(tok(), tok(), tok()))
+    val tableDir = Files.createTempDirectory("graft-ms1-table").toString
+    docs.toDF("doc", "tokens").write.mode("overwrite").parquet(tableDir)
+    val tokens = docs.flatMap { case (id, ts) =>
+      ts.zipWithIndex.map { case (t, p) => (id, p, t) }
+    }.toDF("doc", "pos", "v")
+    val indexDir = Files.createTempDirectory("graft-ms1-index").toString
+    graft.ops.MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", indexDir,
+      graft.index.IvfConfig(metric = "negdot", lists = 8, residual = false))
+    AnnCatalog.registerMaxSim(tableDir, indexDir, "doc", "tokens")
+    try withRule {
+      val query = Seq(docs(41)._2(0), docs(41)._2(2))
+      withConfs("graft.ann.probes" -> "8", "graft.ann.refine" -> "8",
+          "graft.ann.maxsim.kPerToken" -> "600",
+          "graft.ann.cost.enable" -> "false") {
+        val jobs0 = AnnTopKRewrite.planningJobs.get()
+        val df = spark.read.parquet(tableDir)
+          .orderBy(GraftFunctions.vecMaxsim(col("tokens"), typedlit(query)))
+          .limit(5)
+        assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
+          "single-root maxsim read not served")
+        assert(AnnTopKRewrite.planningJobs.get() == jobs0 + 1,
+          s"expected ONE planning job for the single-root maxsim serve, got " +
+            s"${AnnTopKRewrite.planningJobs.get() - jobs0}")
+        val qArr = query.map(_.toArray).toArray
+        val want = docs.map { case (id, ts) =>
+            (K.maxsim(ts.map(_.toArray).toArray, qArr), id)
+          }.sorted.take(5).map(_._2)
+        assert(df.collect().map(_.getLong(0)).toSeq == want)
+      }
+    } finally AnnCatalog.unregisterMaxSim(tableDir)
+  }
+
+  test("single-root QUANTIZED graph: an ef pool past maxInList declines " +
+       "to the exact plan") {
+    import spark.implicits._
+    val rng = new scala.util.Random(61)
+    val rows = (0L until 500L).map(i => i -> Seq.fill(8)(rng.nextFloat() * 2 - 1))
+    val tableDir = Files.createTempDirectory("graft-ann-qgraph").toString
+    rows.toDF("id", "vec").write.mode("overwrite").parquet(tableDir)
+    val graphDir = Files.createTempDirectory("graft-ann-qgraph-g").toString
+    graft.index.VamanaGraph
+      .build(spark.read.parquet(tableDir), "id", "vec",
+        graft.index.VamanaConfig(bits = 8))
+      .save(spark, graphDir)
+    AnnCatalog.registerGraph(tableDir, graphDir, "id", "vec")
+    try withRule {
+      val q = Array.fill(8)(0.1f)
+      def query() = spark.read.parquet(tableDir)
+        .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
+        .limit(10)
+      // the default budget serves: the quantized beam keeps its whole
+      // ef pool (64 ids) as candidates
+      assert(AnnTopKRewrite.inServed(query().queryExecution.optimizedPlan.toString),
+        "the quantized graph must serve under the default maxInList")
+      withConfs("graft.ann.maxInList" -> "32") {
+        val df = query()
+        val optimized = df.queryExecution.optimizedPlan.toString
+        assert(!AnnTopKRewrite.inServed(optimized),
+          s"a 64-id ef pool over maxInList=32 must decline:\n$optimized")
+        val exact = withConfs("graft.ann.enable" -> "false")(
+          query().as[(Long, Seq[Float])].collect().toSeq)
+        assert(df.as[(Long, Seq[Float])].collect().toSeq == exact)
+      }
+    } finally AnnCatalog.unregisterGraph(tableDir)
+  }
+
+  test("tier order: one table with an l2 IVF index and a cosine graph — " +
+       "l2 serves through IVF, cosine falls through to the graph; the " +
+       "served batch faces resolve IVF first") {
+    import spark.implicits._
+    val rng = new scala.util.Random(67)
+    val rows = (0L until 400L).map(i => i -> Seq.fill(8)(rng.nextFloat() * 2 - 1))
+    val data = rows.map { case (i, v) => (i, v.toArray) }
+    val tableDir = Files.createTempDirectory("graft-ann-tiers").toString
+    rows.toDF("id", "vec").write.mode("overwrite").parquet(tableDir)
+    val ivfDir = Files.createTempDirectory("graft-ann-tiers-ivf").toString
+    IvfIndex.build(spark.read.parquet(tableDir), "id", "vec", ivfDir,
+      IvfConfig(lists = 4))
+    val graphDir = Files.createTempDirectory("graft-ann-tiers-g").toString
+    graft.index.VamanaGraph
+      .build(spark.read.parquet(tableDir), "id", "vec",
+        graft.index.VamanaConfig(metric = "cosdist"))
+      .save(spark, graphDir)
+    AnnCatalog.register(tableDir, ivfDir, "id", "vec")
+    AnnCatalog.registerGraph(tableDir, graphDir, "id", "vec")
+    val q = data(17)._2
+    def brute(d: (Array[Float], Array[Float]) => Double, k: Int) =
+      data.map { case (id, v) => (d(v, q), id) }.sorted.take(k).map(_._2).toSeq
+    try withConfs("graft.ann.probes" -> "4", "graft.ann.refine" -> "40",
+        "graft.ann.efSearch" -> "256", "graft.ann.cost.enable" -> "false") {
+      assert(brute(K.l2, 10) != brute(K.cosdist, 10),
+        "fixture must tell the two metrics apart")
+      withRule {
+        // the IVF serve runs its one pool job at planning; the graph
+        // beams on the driver and runs none
+        def served(dist: org.apache.spark.sql.Column): (Seq[Long], Long) = {
+          val jobs0 = AnnTopKRewrite.planningJobs.get()
+          val df = spark.read.parquet(tableDir).orderBy(dist).limit(10)
+          assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString))
+          (df.collect().map(_.getLong(0)).toSeq,
+            AnnTopKRewrite.planningJobs.get() - jobs0)
+        }
+        val (l2Got, l2Jobs) =
+          served(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
+        assert(l2Jobs == 1, s"l2 must serve through IVF: $l2Jobs jobs")
+        assert(l2Got == brute(K.l2, 10))
+        val (cosGot, cosJobs) =
+          served(GraftFunctions.vecCosdist(col("vec"), typedlit(q.toSeq)))
+        assert(cosJobs == 0, s"cosine must serve through the graph: $cosJobs jobs")
+        assert(cosGot == brute(K.cosdist, 10))
+      }
+      // the batch faces carry no metric: the first covering tier (IVF)
+      // answers, in its own l2 metric
+      val qdf = Seq((0L, q.toSeq)).toDF("qid", "center")
+      val knn = AnnCatalog.servedSearchMany(spark, tableDir, qdf, "qid", "center", 5)
+        .select(col("id"), col("rn").cast("long")).as[(Long, Long)].collect()
+        .sortBy(_._2).map(_._1).toSeq
+      assert(knn == brute(K.l2, 5), s"servedSearchMany must resolve IVF: $knn")
+      val rdf = Seq((0L, q.toSeq, 1.2)).toDF("qid", "center", "radius")
+      val inL2 = data.filter(r => K.l2(r._2, q) < 1.2).map(_._1).toSet
+      assert(inL2 != data.filter(r => K.cosdist(r._2, q) < 1.2).map(_._1).toSet)
+      val range = AnnCatalog.servedRangeMany(spark, tableDir, rdf, "qid",
+          "center", "radius").as[(Long, Long, Double)].collect()
+      assert(range.map(_._2).toSet == inL2, "servedRangeMany must resolve IVF")
+      // with the IVF tier gone, both faces fall through to the graph
+      AnnCatalog.unregister(tableDir)
+      val knnG = AnnCatalog.servedSearchMany(spark, tableDir, qdf, "qid", "center", 5)
+        .select(col("id"), col("rn").cast("long")).as[(Long, Long)].collect()
+        .sortBy(_._2).map(_._1).toSeq
+      assert(knnG == brute(K.cosdist, 5), s"servedSearchMany via graph: $knnG")
+      val vecs = data.toMap
+      val rangeG = AnnCatalog.servedRangeMany(spark, tableDir, rdf, "qid",
+          "center", "radius").as[(Long, Long, Double)].collect()
+      assert(rangeG.nonEmpty && rangeG.forall { case (_, id, d) =>
+        math.abs(d - K.cosdist(vecs(id), q)) < 1e-6 && d < 1.2 },
+        "servedRangeMany via graph must cut at cosine distances")
+    } finally {
+      AnnCatalog.unregister(tableDir)
+      AnnCatalog.unregisterGraph(tableDir)
+    }
   }
 }

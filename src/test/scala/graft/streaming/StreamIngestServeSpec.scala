@@ -45,7 +45,8 @@ class StreamIngestServeSpec extends SparkSpec {
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ rule
     // ingest through the CATALOG's instance — the one the serves use
-    val entry = AnnCatalog.lookupAll(Seq(s"$tableDir/part=0")).get.head
+    val entry = AnnCatalog.resolve(spark, Seq(s"$tableDir/part=0"), Nil,
+      Seq(AnnCatalog.Kind.Ivf)).get.entries.head
     val liveIdx = AnnCatalog.index(spark, entry)
     val input = MemoryStream[(Long, Seq[Float])]
     val query = StreamOps.indexIngest(input.toDF().toDF("id", "vec"),
