@@ -1,0 +1,40 @@
+package graft.core
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+
+/**
+ * One Spark job over every partition of an RDD, running a NAMED task
+ * class (`final class X extends ((TaskContext, Iterator[T]) => U) with
+ * Serializable`) through the 3-argument `SparkContext.runJob`.
+ *
+ * Why named: Spark's closure cleaner returns at once for a function whose
+ * class is not a lambda, so a job started here reads and parses no class
+ * file on the driver. A lambda task (`rdd.mapPartitions(...).collect()`,
+ * `rdd.count()`) makes the cleaner ASM-parse the lambda's enclosing class,
+ * then `RDD` and `SparkContext` for their own wrapper lambdas, on every
+ * job. The task's fields travel in the stage's task binary, which the
+ * scheduler broadcasts once per stage, so a task needs no broadcast of
+ * its own.
+ */
+object BareJob {
+  /** Run `task` once per partition of `rdd`, as one job; one result per
+    * partition, in partition order. */
+  def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U): Array[U] =
+    rdd.sparkContext.runJob(rdd, task, 0 until rdd.getNumPartitions)
+
+  /** Rows in `rdd`, as one job without a shuffle (`Dataset.count` is an
+    * aggregate: two jobs and an exchange under AQE). */
+  def count(rdd: RDD[_]): Long = run(rdd, CountRows).sum
+
+  /** The task of [[count]]: the partition's row count. */
+  object CountRows extends ((TaskContext, Iterator[Any]) => Long) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[Any]): Long = {
+      var n = 0L
+      while (it.hasNext) { it.next(); n += 1 }
+      n
+    }
+  }
+}

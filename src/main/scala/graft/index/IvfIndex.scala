@@ -1,6 +1,9 @@
 package graft.index
 
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
@@ -761,14 +764,15 @@ object IvfIndex {
   // Trade, documented: the direct file read bypasses a prewarm() /
   // prewarmCodes() cache on the indexes it reads (probed cells come
   // from the OS page cache instead). Every IVF range path — single-root
-  // included — reads flat, so range never uses those caches. Top-k picks
-  // its row source by root count (PoolPlan): one root reads its own
-  // cache-aware relations, more roots read flat.
+  // included — reads flat, so range never uses those caches. The top-k
+  // pool has three row sources (PoolPlan.poolRows): a warm single root
+  // runs over its resident source, planned once per persisted cache; a
+  // cold single root plans a partition-pruned scan per pool; more roots
+  // plan the flat read per pool.
   // ------------------------------------------------------------------
 
   /** Per-dir structural info for the flat read: (root, clusterId, bits,
-    * dim, isL2, isCos). Query preps ride a separate broadcast keyed
-    * (root, cid, query). */
+    * dim, isL2, isCos). Query preps travel separately, per (root, cell). */
   private type DirInfo = (Int, Int, Int, Int, Boolean, Boolean)
 
   /** Register the probed-cluster leaf dirs of `ix` (current generation +
@@ -865,21 +869,38 @@ object IvfIndex {
       val qq: Array[Array[Array[Float]]], val probed: Array[Array[Int]],
       val info: Map[String, DirInfo],
       val files: Array[org.apache.hadoop.fs.FileStatus]) {
-    /** Row source, chosen by root count. One root reads its own
-      * cache-aware relations (a prewarm() / prewarmCodes() cache when
-      * valid; `cluster_id` is a column); more roots read ONE flat parquet
-      * relation over every root's probed cell dirs, resolving
-      * (root, cell) from each row's file path. */
+    /** Past one root, both phases read ONE flat parquet relation over
+      * every root's probed cell dirs, resolving (root, cell) from each
+      * row's file path; one root reads its own relations (`cluster_id`
+      * is a column). */
     def flat: Boolean = idxs.length > 1
     def empty: Boolean = if (flat) files.isEmpty else probed(0).isEmpty
-    /** Pool rows: (id, cmeta, codes, cluster_id | file path). */
-    def codes: DataFrame =
-      if (flat) flatCodesFor(idxs.head.spark, files).toDF()
-      else idxs.head.poolScan(probed(0))
+    /** Pool rows (id, cmeta, codes, cluster_id | file path), from one of
+      * three sources:
+      *  - warm resident: one root whose prewarm() / prewarmCodes() cache
+      *    is valid reuses the RDD planned once over that cache
+      *    ([[IvfIndex.residentPool]]), every cell, no plan per query;
+      *  - cold pruned: one root otherwise plans a partition-pruned scan
+      *    of the probed cells ([[IvfIndex.poolScan]]);
+      *  - flat: more roots plan the flat read of the probed cells' files. */
+    def poolRows: RDD[InternalRow] =
+      if (flat) planPoolSource(flatCodesFor(idxs.head.spark, files).toDF())
+      else idxs.head.residentPool.map(_._2)
+        .getOrElse(planPoolSource(idxs.head.poolScan(probed(0))))
     /** Rerank rows: (id, vec[, file path]). */
     def vecs: DataFrame =
       if (flat) flatVecsDf(idxs.head.spark, files, idxs.head.meta.cfg.storage == "f16")
       else idxs.head.rerankScan(probed(0))
+  }
+
+  /** Pool row sources planned (Catalyst analysis through physical plan)
+    * so far: one per cold or flat pool, one per persisted relation for a
+    * warm root. */
+  private[index] val poolSourcePlans = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private[index] def planPoolSource(df: DataFrame): RDD[InternalRow] = {
+    poolSourcePlans.incrementAndGet()
+    ColumnBridge.toInternalRdd(df)
   }
 
   /** The ONE IVF top-k estimate pool (reference crates/vchordrq/src/
@@ -934,16 +955,28 @@ object IvfIndex {
     }
     val plan = new PoolPlan(idxs, qq, probed, info.toMap, files.toArray)
     if (plan.empty) return (plan, Array.empty)
-    val flat = plan.flat
-    val bits = idxs.map(_.meta.cfg.bits).toArray
-    val dims = idxs.map(_.meta.dim).toArray
-    val isL2 = idxs.map(_.meta.cfg.metric == "l2").toArray
-    val eps = epsilon
-    val bState = spark.sparkContext.broadcast((preps, plan.info))
-    val partials = ColumnBridge.toInternalRdd(plan.codes).mapPartitions { it =>
-      val (preps, info) = bState.value
+    val task = new PoolTask(preps, plan.info, plan.flat, nQ, nCand,
+      idxs.map(_.meta.cfg.bits).toArray, idxs.map(_.meta.dim).toArray,
+      idxs.map(_.meta.cfg.metric == "l2").toArray, epsilon)
+    (plan, collectPools(spark, plan.poolRows, task, nRoots * nQ, nCand)
+      .map { case (slot, id, lb) => (slot / nQ, slot % nQ, id, lb) })
+  }
+
+  /** The pool's per-partition kernel, a named task ([[graft.core.BareJob]]:
+    * no closure cleaning, and the preps ride in the stage's task binary).
+    * Per (root, query) slot `root * nQ + qi`, the partition's exact top
+    * `nCand` (slot, id, lb) by (lb, id). A row resolves (root, cell) from
+    * its file path when `flat`, else reads `cluster_id`; a cell no query
+    * probes (`preps(root)(cid) == null`) is skipped, so a source that
+    * holds every cell pools exactly what a pruned one does. */
+  private final class PoolTask(preps: Array[Array[CellPreps]],
+      info: Map[String, DirInfo], flat: Boolean, nQ: Int, nCand: Int,
+      bits: Array[Int], dims: Array[Int], isL2: Array[Boolean], eps: Double)
+      extends ((TaskContext, Iterator[InternalRow]) => Array[(Int, Long, Double)])
+      with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): Array[(Int, Long, Double)] = {
       val dirCache = new java.util.HashMap[String, DirInfo]()
-      val heaps = new Array[graft.core.BoundedTopK](nRoots * nQ)
+      val heaps = new Array[graft.core.BoundedTopK](preps.length * nQ)
       val scratch = new Array[Float](dims.max)
       val bias = bits.map(RaBitQ.biasOf)
       val sqrtDim = dims.map(d => math.sqrt(d.toDouble))
@@ -991,10 +1024,8 @@ object IvfIndex {
         if (h != null) h.foreachPair((lb, id) => out += ((s, id, lb)))
         s += 1
       }
-      out.iterator
+      out.toArray
     }
-    (plan, collectPools(spark, partials, nRoots * nQ, nCand)
-      .map { case (slot, id, lb) => (slot / nQ, slot % nQ, id, lb) })
   }
 
   /** The pool's driver collect, exact top `nCand` per slot sorted by
@@ -1007,19 +1038,18 @@ object IvfIndex {
     * EXECUTORS first, making the collect exactly ≤ slots x nCand at one
     * extra (tiny) shuffle stage. Both are exact and identically
     * tie-ordered: the heap's (lb, id) order is total. */
-  private def collectPools(spark: SparkSession,
-      partials: org.apache.spark.rdd.RDD[(Int, Long, Double)], nSlots: Int,
-      nCand: Int): Array[(Int, Long, Double)] = {
+  private def collectPools(spark: SparkSession, rows: RDD[InternalRow],
+      task: PoolTask, nSlots: Int, nCand: Int): Array[(Int, Long, Double)] = {
     val directMax = graft.core.AnnConf(spark).flatDirectCollectMax
-    if (partials.getNumPartitions.toLong * nSlots * nCand <= directMax)
-      partials.collect().groupBy(_._1).valuesIterator
+    if (rows.getNumPartitions.toLong * nSlots * nCand <= directMax)
+      graft.core.BareJob.run(rows, task).flatten.groupBy(_._1).valuesIterator
         .flatMap(_.sortBy(t => (t._3, t._2)).take(nCand)).toArray
     else {
       // reducer count sized to the SLOT count, not inherited from the
       // wide scan (one reduce task per scan partition for ≤ slots keys)
       val reducers = math.max(1, math.min(nSlots,
         spark.sparkContext.defaultParallelism))
-      partials
+      rows.mapPartitions(it => task(TaskContext.get(), it).iterator)
         .map { case (slot, id, lb) => (slot, (lb, id)) }
         .aggregateByKey(new graft.core.BoundedTopK(nCand), reducers)(
           (h, t) => { h.offer(t._1, t._2); h },
@@ -1987,6 +2017,8 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     if (d != null) { d._4.unpersist(false); cachedData = null }
     val c = cachedCodes
     if (c != null) { c._4.unpersist(false); cachedCodes = null }
+    warm = null
+    resident = null
     cachedListing = null
   }
 
@@ -2135,13 +2167,16 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     * The cached layout is hash-partitioned on cluster_id at the session's
     * shuffle parallelism: the on-disk layout packs many small per-cluster
     * files into few scan splits (fine for I/O, terrible for a cached scan's
-    * parallelism), while the re-layout gives every core work and keeps each
-    * cluster contiguous so in-memory batch stats still skip unprobed
-    * clusters. Subsequent `dataDf` plans reuse this cached relation. */
+    * parallelism), while the re-layout gives every core work. A cached
+    * scan reads every batch: the layout is not sorted within partitions,
+    * and the cell predicate ([[CellIn]]) is no in-memory batch-stats
+    * filter. Subsequent `dataDf` plans reuse this cached relation, and the
+    * one-root top-k pool runs over its resident source ([[residentPool]]). */
   def prewarm(): Long = {
     val prev = cachedData
     val df = dataDf.repartition(col("cluster_id")).cache()
     cachedData = (currentGen, deltaSig, mutations.get(), df)
+    warmWith(cachedData)
     if (prev != null && (prev._4 ne df)) prev._4.unpersist(false)
     df.count()
   }
@@ -2161,9 +2196,50 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     val df = dataDf.select(dataCols.filter(_ != "vec").map(col): _*)
       .repartition(col("cluster_id")).cache()
     cachedCodes = (currentGen, deltaSig, mutations.get(), df)
+    warmWith(cachedCodes)
     if (prev != null && (prev._4 ne df)) prev._4.unpersist(false)
     df.count()
   }
+
+  // The warm one-root pool's row source. prewarm() and prewarmCodes()
+  // record the relation they persisted (`warm`, the latest wins); the
+  // next pool plans it ONCE into an RDD over the pool columns
+  // (`resident`), and every later pool runs its job straight over that
+  // RDD. Its scan reads every cached batch, as a CellIn-filtered scan of
+  // the cache already did (CellIn is no in-memory batch-stats filter, and
+  // the cache is hash-partitioned, not sorted); the pool kernel skips
+  // unprobed cells. `warm` carries dataDf's invalidation key: an append,
+  // delete or compact (here or through another writer) sends pools back
+  // to the cold pruned scan until the next prewarm, and release() drops
+  // both. `resident` names the relation it was planned from, so a
+  // re-prewarm never serves the superseded cache's plan.
+  @volatile private var warm: (String, Long, Long, DataFrame) = null
+  @volatile private var resident: (DataFrame, DataFrame, RDD[InternalRow]) = null
+
+  private def warmWith(persisted: (String, Long, Long, DataFrame)): Unit = {
+    warm = persisted
+    resident = null
+  }
+
+  /** The resident pool source (its planned scan and rows) while the
+    * recorded prewarm cache is valid, planned on first use. */
+  private[index] def residentPool: Option[(DataFrame, RDD[InternalRow])] = {
+    val w = warm
+    if (w == null || w._1 != currentGen || w._2 != deltaSig || w._3 != mutations.get()) None
+    else {
+      val r = resident
+      if (r != null && (r._1 eq w._4)) Some((r._2, r._3))
+      else {
+        val scan = w._4.select("id", "cmeta", "codes", "cluster_id")
+        val rows = IvfIndex.planPoolSource(scan)
+        resident = (w._4, scan, rows)
+        Some((scan, rows))
+      }
+    }
+  }
+
+  /** Whether a resident pool source is held (planned and not dropped). */
+  private[index] def holdsResident: Boolean = resident != null
 
   /** Estimate-phase projection: the codes cache when warm, else a pruned
     * scan of the current data (same columns, vec never read). */

@@ -2232,11 +2232,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               ensureInPushdown(ids.length)
               // guard: the count plan contains the user's own Filter —
               // optimizing it must not re-fire this rule's Filter cases.
-              // An RDD count: one job, no shuffle (Dataset.count is an
-              // aggregate — two jobs and an exchange under AQE)
+              // A bare count: one job, no shuffle, no closure cleaning
               AnnTopKRewrite.withPlanningGuard {
-                ColumnBridge.toInternalRdd(ColumnBridge.ofRows(spark,
-                  Filter(id.in(ids), t.child))).count()
+                graft.core.BareJob.count(ColumnBridge.toInternalRdd(
+                  ColumnBridge.ofRows(spark, Filter(id.in(ids), t.child))))
               }
             }
           if (poolBound > maxInList) return Some(t.gl)

@@ -498,9 +498,12 @@ class IvfIndexSpec extends SparkSpec {
     val cells = full.probe(q, 3)
     assert(scans(full.poolScan(cells)) == (0, 1), "cold pool reads the files")
     full.prewarm()
+    // a warm pool runs over the resident source planned over the cache
+    def resident(ix: IvfIndex) = ix.residentPool.getOrElse(
+      fail("a valid prewarm cache must give a resident pool source"))._1
     try {
-      assert(scans(full.poolScan(cells)) == (1, 0),
-        s"prewarm(): pool must read the cache:\n${full.poolScan(cells).queryExecution.executedPlan}")
+      assert(scans(resident(full)) == (1, 0),
+        s"prewarm(): pool must read the cache:\n${resident(full).queryExecution.executedPlan}")
       assert(scans(full.rerankScan(cells)) == (1, 0),
         s"prewarm(): rerank must read the cache:\n${full.rerankScan(cells).queryExecution.executedPlan}")
       served(full)
@@ -509,10 +512,50 @@ class IvfIndexSpec extends SparkSpec {
     val codes = IvfIndex.load(spark, dir)
     codes.prewarmCodes()
     try {
-      assert(scans(codes.poolScan(cells)) == (1, 0),
-        s"prewarmCodes(): pool must read the cache:\n${codes.poolScan(cells).queryExecution.executedPlan}")
+      assert(scans(resident(codes)) == (1, 0),
+        s"prewarmCodes(): pool must read the cache:\n${resident(codes).queryExecution.executedPlan}")
       served(codes)
     } finally codes.release()
+  }
+
+  test("pools and searchMany are bit-identical cold, after prewarm() and " +
+       "after prewarmCodes(), and equal the replay") {
+    import spark.implicits._
+    val rng = new scala.util.Random(67)
+    // 200 queries: the preps ride in the pool's task binary, no broadcast
+    val batch = Array.tabulate(200)(i => i.toLong -> Array.fill(12)(rng.nextFloat() * 2 - 1))
+    Seq(IvfConfig(lists = 8), IvfConfig(lists = 8, metric = "cosdist"),
+        IvfConfig(lists = 8, metric = "negdot"), IvfConfig(lists = 8, storage = "f16"))
+      .foreach { cfg =>
+        val dir = freshDir()
+        IvfIndex.build(rows.toDF("id", "vec"), "id", "vec", dir, cfg)
+        val clue = s"${cfg.metric}/${cfg.storage}"
+        // (id, lb bits, root) per query, and the batch's answers
+        def state(ix: IvfIndex) = (
+          batch.take(6).map { case (_, q) =>
+            IvfIndex.multiEstimateCandidates(Seq(ix), q, 40, Seq(3)).toSeq
+              .map(t => (t._1, java.lang.Double.doubleToRawLongBits(t._2), t._3))
+          }.toSeq,
+          TopKReplay.byQid(ix.searchMany(batch, 5, probes = 3, refine = 8)))
+        val cold = IvfIndex.load(spark, dir)
+        val want = state(cold)
+        assert(!cold.holdsResident)
+        val replay = TopKReplay.topK(cold, batch.toSeq, 5, 3, 8)
+        batch.foreach { case (qid, _) =>
+          TopKReplay.check(want._2(qid), replay(qid), s"$clue cold query $qid")
+        }
+        Seq[(String, IvfIndex => Long)]("prewarm()" -> (_.prewarm()),
+            "prewarmCodes()" -> (_.prewarmCodes())).foreach { case (how, warmUp) =>
+          val ix = IvfIndex.load(spark, dir)
+          warmUp(ix)
+          try {
+            val got = state(ix)
+            assert(ix.holdsResident, s"$clue $how: the pool did not run resident")
+            assert(got._1 == want._1, s"$clue $how: pools differ from the cold pools")
+            assert(got._2 == want._2, s"$clue $how: searchMany differs from cold")
+          } finally ix.release()
+        }
+      }
   }
 
   test("search with a new query vector compiles no new code on a warm session") {

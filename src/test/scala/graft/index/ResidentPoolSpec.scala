@@ -1,0 +1,200 @@
+package graft.index
+
+import graft.SparkSpec
+import graft.core.{VectorKernels => K}
+import graft.functions.GraftFunctions
+import graft.plans.{AnnCatalog, AnnTopKRewrite}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import java.nio.file.Files
+
+/**
+ * The warm single-root pool's resident row source: planned once per
+ * prewarm-persisted relation, never read past an index mutation, dropped
+ * on release — and every served pool and prefilter survivor count runs
+ * exactly one Spark job.
+ */
+class ResidentPoolSpec extends SparkSpec {
+
+  private val dim = 8
+
+  /** A registered table and its index (2000 rows, 16 lists). */
+  private def fixture(): (String, String, Seq[(Long, Array[Float])]) = {
+    import spark.implicits._
+    val rng = new scala.util.Random(17)
+    val rows = (0L until 2000L).map(i => i -> Array.fill(dim)(rng.nextFloat() * 2 - 1))
+    val tableDir = Files.createTempDirectory("graft-resident-table").toString
+    rows.map { case (i, v) => (i, v.toSeq) }.toDF("id", "vec")
+      .write.mode("overwrite").parquet(tableDir)
+    val indexDir = Files.createTempDirectory("graft-resident-index").toString
+    IvfIndex.build(spark.read.parquet(tableDir), "id", "vec", indexDir,
+      IvfConfig(lists = 16))
+    (tableDir, indexDir, rows)
+  }
+
+  private def withRule[T](f: => T): T = {
+    val rule = AnnTopKRewrite(spark)
+    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    try f
+    finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == rule)
+  }
+
+  private def topK(tableDir: String, q: Array[Float], filter: Option[Int] = None,
+      k: Int = 10): DataFrame = {
+    val t = spark.read.parquet(tableDir)
+    filter.fold(t)(r => t.filter(col("id") % 10 === r))
+      .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq))).limit(k)
+  }
+
+  /** Optimize a served top-k (its planning-time jobs run here), then
+    * collect its ids. */
+  private def served(df: DataFrame): Seq[Long] = {
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(AnnTopKRewrite.inServed(plan), s"expected an index-served plan:\n$plan")
+    df.collect().map(_.getLong(0)).toSeq
+  }
+
+  /** The Spark jobs `f` runs, counted by a listener. The bus is FIFO, so
+    * once a marker job's start arrives every earlier job is counted. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = "resident-pool job-count marker"
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        descs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        val r = f
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setJobDescription(null)
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!descs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+        assert(descs.contains(marker), "listener bus did not drain")
+        r
+      } finally sc.removeSparkListener(listener)
+    (out, descs.size - 1)
+  }
+
+  private def query(seed: Int): Array[Float] = {
+    val rng = new scala.util.Random(1000 + seed)
+    Array.fill(dim)(rng.nextFloat() * 2 - 1)
+  }
+
+  private def pool(ix: IvfIndex, q: Array[Float]): Set[Long] =
+    IvfIndex.multiEstimateCandidates(Seq(ix), q, 80, Seq(ix.meta.cfg.lists))
+      .map(_._1).toSet
+
+  test("a prewarmed index plans its pool source once; each pool and each " +
+       "survivor round runs one job") {
+    val (tableDir, indexDir, _) = fixture()
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      val ix = AnnCatalog.index(spark, AnnCatalog.lookup(Seq(tableDir)).get)
+      // a cold serve first fills the row-count and cost caches, which
+      // outlive a prewarm (same generation)
+      served(topK(tableDir, query(99)))
+      ix.prewarm()
+      val plans0 = IvfIndex.poolSourcePlans.get()
+      val pj0 = AnnTopKRewrite.planningJobs.get()
+      (0 until 10).foreach { i =>
+        val df = topK(tableDir, query(i))
+        val pj = AnnTopKRewrite.planningJobs.get()
+        val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
+        assert(AnnTopKRewrite.planningJobs.get() - pj == 1,
+          s"query $i: a plain serve counts one planning job")
+        assert(jobs == 1, s"query $i: the pool ran $jobs Spark jobs")
+        assert(served(df).length == 10)
+      }
+      assert(AnnTopKRewrite.planningJobs.get() - pj0 == 10)
+      assert(IvfIndex.poolSourcePlans.get() - plans0 <= 1,
+        s"10 warm pools planned ${IvfIndex.poolSourcePlans.get() - plans0} sources")
+      assert(ix.holdsResident)
+      // prefilter: a pool job plus a survivor count per escalation round
+      (0 until 4).foreach { i =>
+        val df = topK(tableDir, query(20 + i), filter = Some(i))
+        val pj = AnnTopKRewrite.planningJobs.get()
+        val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
+        val counted = AnnTopKRewrite.planningJobs.get() - pj
+        assert(counted >= 2, s"filtered query $i: $counted planning jobs")
+        assert(jobs == counted,
+          s"filtered query $i: $jobs Spark jobs for $counted pools and survivor rounds")
+        assert(served(df).length == 10)
+      }
+      assert(IvfIndex.poolSourcePlans.get() - plans0 <= 1)
+      // one pool, one job, straight through the index face
+      val (_, poolJobs) = jobsOf(pool(ix, query(40)))
+      assert(poolJobs == 1, s"multiEstimateCandidates ran $poolJobs jobs")
+    } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("a cold index plans its pool source once per query") {
+    val (tableDir, indexDir, _) = fixture()
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      val ix = AnnCatalog.index(spark, AnnCatalog.lookup(Seq(tableDir)).get)
+      served(topK(tableDir, query(0)))
+      val plans0 = IvfIndex.poolSourcePlans.get()
+      (1 to 3).foreach { i =>
+        // built outside the count: reading the table infers its schema in a job
+        val df = topK(tableDir, query(i))
+        val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
+        assert(jobs == 1, s"cold query $i: the pool ran $jobs Spark jobs")
+      }
+      assert(IvfIndex.poolSourcePlans.get() - plans0 == 3)
+      assert(!ix.holdsResident)
+    } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("appendDelta, delete and compact on a prewarmed index are read by the " +
+       "next pool and served query; re-prewarm plans once; release drops it") {
+    import spark.implicits._
+    val (tableDir, indexDir, rows) = fixture()
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    // full probes: the served answer is the exact top-k of the indexed rows
+    try withRule { graft.core.Confs.withConfs(spark, "graft.ann.probes" -> "16") {
+      val ix = AnnCatalog.index(spark, AnnCatalog.lookup(Seq(tableDir)).get)
+      ix.prewarm()
+      val q = query(7)
+      val exact0 = rows.sortBy { case (id, v) => (K.l2(v, q), id) }.take(10).map(_._1)
+      assert(served(topK(tableDir, q)) == exact0)
+      assert(ix.holdsResident)
+      // append an exact copy of the query, to the table and the index
+      val fresh = 5000L
+      Seq((fresh, q.toSeq)).toDF("id", "vec").write.mode("append").parquet(tableDir)
+      ix.appendDelta(Seq((fresh, q.toSeq)).toDF("id", "vec"), "id", "vec")
+      assert(pool(ix, q).contains(fresh), "the pool missed an appended row")
+      assert(served(topK(tableDir, q)).head == fresh,
+        "the served query missed an appended row")
+      // delete it from the index only: the table keeps the nearest row, so
+      // only a pool read from the superseded generation could return it
+      ix.delete(Seq(fresh))
+      assert(!pool(ix, q).contains(fresh), "the pool returned a deleted row")
+      assert(!served(topK(tableDir, q)).contains(fresh),
+        "the served query returned a deleted row")
+      ix.compact()
+      assert(!pool(ix, q).contains(fresh))
+      assert(served(topK(tableDir, q)) == exact0)
+      // a second prewarm plans the resident source again, once
+      ix.prewarm()
+      val plans0 = IvfIndex.poolSourcePlans.get()
+      (0 until 3).foreach(i => served(topK(tableDir, query(50 + i))))
+      assert(IvfIndex.poolSourcePlans.get() - plans0 == 1)
+      assert(ix.holdsResident)
+      ix.release()
+      assert(!ix.holdsResident, "release() kept the resident source")
+      ix.prewarm()
+      served(topK(tableDir, q))
+      assert(ix.holdsResident)
+      AnnCatalog.unregister(tableDir)
+      assert(!ix.holdsResident, "unregister kept the resident source")
+    } } finally AnnCatalog.unregister(tableDir)
+  }
+}
