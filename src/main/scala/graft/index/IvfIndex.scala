@@ -913,12 +913,15 @@ object IvfIndex {
     * heaps bound each partition's output, and [[collectPools]] bounds the
     * driver collect. Queries are prepped PER ROOT (roots may differ in
     * bits, storage and rotation). `lb` carries no cosdist output shift
-    * (ordering only). Returns the plan for the rerank plus
+    * (ordering only). `keep` ([[KeyFilter]]) admits a row to the pools
+    * before its codes unpack, so the pools are the top `nCand` of the
+    * rows it passes. Returns the plan for the rerank plus
     * (root, queryIdx, id, lb) rows, sorted by (lb, id) within each
     * (root, query). */
   private def pools(idxs: Seq[IvfIndex], queries: Array[Array[Float]],
       nCand: Int, probes: Seq[Int], epsilon: Double,
-      probes1: Int = -1): (PoolPlan, Array[(Int, Int, Long, Double)]) = {
+      probes1: Int = -1, keep: Option[KeyFilter] = None)
+      : (PoolPlan, Array[(Int, Int, Long, Double)]) = {
     require(idxs.nonEmpty && probes.length == idxs.length,
       "one probe budget per root index")
     require(queries.nonEmpty, "empty query batch")
@@ -957,10 +960,18 @@ object IvfIndex {
     if (plan.empty) return (plan, Array.empty)
     val task = new PoolTask(preps, plan.info, plan.flat, nQ, nCand,
       idxs.map(_.meta.cfg.bits).toArray, idxs.map(_.meta.dim).toArray,
-      idxs.map(_.meta.cfg.metric == "l2").toArray, epsilon)
+      idxs.map(_.meta.cfg.metric == "l2").toArray, epsilon, keep.orNull)
     (plan, collectPools(spark, plan.poolRows, task, nRoots * nQ, nCand)
       .map { case (slot, id, lb) => (slot / nQ, slot % nQ, id, lb) })
   }
+
+  /** A key-only prefilter for [[pools]]: `pred`, bound to the one-column
+    * row (id: long) every pool row source leads with, and the pool job's
+    * counts of the probed rows it was asked about and of those it passed.
+    * It runs interpreted, so a query with new literals compiles no class. */
+  private final class KeyFilter(val pred: Expression,
+      val asked: org.apache.spark.util.LongAccumulator,
+      val passed: org.apache.spark.util.LongAccumulator) extends Serializable
 
   /** The pool's per-partition kernel, a named task ([[graft.core.BareJob]]:
     * no closure cleaning, and the preps ride in the stage's task binary).
@@ -968,13 +979,24 @@ object IvfIndex {
     * `nCand` (slot, id, lb) by (lb, id). A row resolves (root, cell) from
     * its file path when `flat`, else reads `cluster_id`; a cell no query
     * probes (`preps(root)(cid) == null`) is skipped, so a source that
-    * holds every cell pools exactly what a pruned one does. */
+    * holds every cell pools exactly what a pruned one does. A probed row
+    * `keep` (null = every row) rejects is skipped too. */
   private final class PoolTask(preps: Array[Array[CellPreps]],
       info: Map[String, DirInfo], flat: Boolean, nQ: Int, nCand: Int,
-      bits: Array[Int], dims: Array[Int], isL2: Array[Boolean], eps: Double)
+      bits: Array[Int], dims: Array[Int], isL2: Array[Boolean], eps: Double,
+      keep: KeyFilter)
       extends ((TaskContext, Iterator[InternalRow]) => Array[(Int, Long, Double)])
       with Serializable {
     def apply(ctx: TaskContext, it: Iterator[InternalRow]): Array[(Int, Long, Double)] = {
+      val admit =
+        if (keep == null) null
+        else {
+          val p = Predicate.createInterpreted(keep.pred)
+          p.initialize(ctx.partitionId())
+          p
+        }
+      var asked = 0L
+      var passed = 0L
       val dirCache = new java.util.HashMap[String, DirInfo]()
       val heaps = new Array[graft.core.BoundedTopK](preps.length * nQ)
       val scratch = new Array[Float](dims.max)
@@ -989,7 +1011,13 @@ object IvfIndex {
         } else cid = row.getInt(3)
         val rp = preps(root)
         val cp = if (cid >= 0 && cid < rp.length) rp(cid) else null
-        if (cp != null) {
+        var in = cp != null
+        if (in && admit != null) {
+          asked += 1
+          in = admit.eval(row)
+          if (in) passed += 1
+        }
+        if (in) {
           val id = row.getLong(0)
           val cm = row.getArray(1)
           val disU2 = cm.getFloat(0)
@@ -1017,6 +1045,7 @@ object IvfIndex {
           }
         }
       }
+      if (keep != null) { keep.asked.add(asked); keep.passed.add(passed) }
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double)]
       var s = 0
       while (s < heaps.length) {
@@ -1068,12 +1097,19 @@ object IvfIndex {
     pools(idxs, queries, nCand, probes, epsilon)._2
 
   /** The planner's top-k candidate pool (one query): per root the exact
-    * top `nCand` (id, lb, root) in (lb, id) order. */
+    * top `nCand` (id, lb, root) in (lb, id) order among the rows `keep` —
+    * a key-only prefilter bound as in [[KeyFilter]] — passes, plus how
+    * many probed rows `keep` was asked about and passed (0 and 0
+    * without it). */
   private[graft] def multiEstimateCandidates(idxs: Seq[IvfIndex], q: Array[Float],
-      nCand: Int, probes: Seq[Int],
-      epsilon: Double = 1.9): Array[(Long, Double, Int)] =
-    pools(idxs, Array(q), nCand, probes, epsilon)._2
+      nCand: Int, probes: Seq[Int], epsilon: Double = 1.9,
+      keep: Option[Expression] = None): (Array[(Long, Double, Int)], Long, Long) = {
+    val sc = idxs.head.spark.sparkContext
+    val kf = keep.map(new KeyFilter(_, sc.longAccumulator, sc.longAccumulator))
+    val cands = pools(idxs, Array(q), nCand, probes, epsilon, keep = kf)._2
       .map { case (r, _, id, lb) => (id, lb, r) }
+    (cands, kf.fold(0L)(_.asked.value), kf.fold(0L)(_.passed.value))
+  }
 
   /** Driver-side range prep of every root plus the code-estimate
     * survivor kernel — the ONE range estimate kernel, shared by the

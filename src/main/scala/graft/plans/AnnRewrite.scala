@@ -44,12 +44,18 @@ import graft.plans.AnnCatalog.Kind
  *
  *  - PREFILTER (reference `vchordrq.prefilter`, scanners/default.rs:
  *    178-224): a deterministic Filter between the Sort and the relation no
- *    longer disables the rewrite — candidates are fetched, the filter's
- *    survivor count is checked, and the probe/refine budget escalates
- *    (x4 per round, like re-scanning with a larger budget) until k
- *    survivors exist or the candidate set provably covers the table —
- *    at which point the plan is exact. Non-deterministic predicates
- *    conservatively keep the original plan.
+ *    longer disables the rewrite. Its KEY-ONLY conjuncts (the id column
+ *    alone, no subquery) run inside the pool task before the codes
+ *    unpack, so rows they drop spend none of the k*refine budget; any
+ *    other conjunct is checked by a survivor count over the pool's ids.
+ *    The probe/refine budget escalates (x4 per round, like re-scanning
+ *    with a larger budget) until k survivors exist or the candidate set
+ *    provably covers the table — at which point the plan is exact. A
+ *    round also widens while the pass rates it saw put fewer than k
+ *    survivors in an unfiltered k*refine pool, so a selective filter
+ *    reaches the probe budget the unfiltered count escalated to. A
+ *    key-only prefilter plans one pool job per round and no count.
+ *    Non-deterministic predicates conservatively keep the original plan.
  *
  *  - KILL SWITCH `graft.ann.enable=false` = `vchordrq.enable_scan`
  *    (reference: src/index/gucs.rs:60).
@@ -799,6 +805,40 @@ object AnnTopKRewrite {
     def in(ids: Seq[Long]): Expression = idsInExpr(attr, ids, lit)
   }
 
+  private[plans] def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+
+  /** A top-k prefilter split for the IVF pool (reference
+    * `vchordrq.prefilter`, scanners/default.rs:178-224: the filter runs
+    * before rerank, so rows it drops spend none of the rerank budget).
+    * KEY-ONLY conjuncts are deterministic, reference the id column and
+    * nothing else, and hold no subquery or Unevaluable node (the id
+    * attribute itself aside: it is what gets bound); they come
+    * back ANDed and bound to the one-column row (id: long) every pool row
+    * source leads with — an IntegerType id reads back through a cast,
+    * lossless because the index widened it. The rest come back ANDed as
+    * the residual the survivor count still checks. `isnotnull(id)`, which
+    * the optimizer infers from any null-intolerant id conjunct, is
+    * neither: no indexed row has a null id. */
+  private[plans] def splitKeyOnly(pred: Expression, id: IdCol)
+      : (Option[Expression], Option[Expression]) = {
+    val (key, residual) = conjuncts(pred).filterNot {
+      case IsNotNull(a: Attribute) => a.semanticEquals(id.attr) // every indexed row has an id
+      case _ => false
+    }.partition(e =>
+      e.deterministic && e.references.nonEmpty &&
+        e.references.forall(_.semanticEquals(id.attr)) &&
+        !SubqueryExpression.hasSubquery(e) &&
+        !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[Attribute]))
+    val slot = BoundReference(0, org.apache.spark.sql.types.LongType, nullable = false)
+    val idRead = if (id.attr.dataType == slot.dataType) slot else Cast(slot, id.attr.dataType)
+    (key.reduceOption(And).map(_.transform {
+      case a: Attribute if a.semanticEquals(id.attr) => idRead
+    }), residual.reduceOption(And))
+  }
+
   /** The scan under a serve: a file relation (bare, column-pruned or
     * prefiltered, see the rule's `destructure`) and its prefilter. */
   private[plans] final case class Scan(rel: LogicalRelation, fs: HadoopFsRelation,
@@ -815,7 +855,7 @@ object AnnTopKRewrite {
 }
 
 case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
-  import AnnTopKRewrite.{IdCol, KnnJoin, Scan, TopK}
+  import AnnTopKRewrite.{IdCol, KnnJoin, Scan, TopK, conjuncts}
 
   private def idCol(output: Seq[Attribute], name: String): Option[IdCol] =
     output.find(_.name == name).flatMap(a => a.dataType match {
@@ -912,11 +952,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case VecNegDotExpr(a: AttributeReference, Literal(v: ArrayData, _))  => Some(("negdot", a, v))
       case _ => None
     }
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other     => Seq(other)
   }
 
   private def numLit(v: Any): Option[Double] = v match {
@@ -1646,7 +1681,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           // survivor count at once; probes/refine escalate x4 until
           // every query holds k survivors or the pools provably cover
           // the table. Overflowing maxInList declines to the exact
-          // plan (a giant IN loses to the cross join).
+          // plan (a giant IN loses to the cross join). Unlike the
+          // single-query serve it does not split off key-only conjuncts
+          // (AnnTopKRewrite.splitKeyOnly) into the pools yet, so every
+          // round fetches survivors.
           def survivorSet(allIds: Array[Long]): Option[Set[Long]] =
             if (allIds.isEmpty) Some(Set.empty)
             else if (allIds.length > maxInList) None
@@ -2030,7 +2068,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * population IS the qualifying set; Some(expr) = extra-or-stronger
     * conjuncts, caller escalates like any prefilter; an implied-but-not-
     * equal conjunct MUST stay residual — the index population is wider
-    * than the query's set). Parse or resolution failure, or an unprovable
+    * than the query's set). An `isnotnull(x)` the optimizer inferred
+    * from an index conjunct (`x = 1`) is dropped from the remainder too:
+    * every indexed row passes it, so it must not leave a residual for
+    * the survivor count. Parse or resolution failure, or an unprovable
     * conjunct, declines (None result) — a partial index must never serve
     * a query it doesn't cover. */
   private def partialMatch(predicateSql: String, queryPred: Expression,
@@ -2049,8 +2090,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val qConj = conjuncts(queryPred)
     if (!idxConj.forall(ic =>
         qConj.exists(qc => qc.semanticEquals(ic) || impliesPred(qc, ic)))) None
-    else Some(qConj.filterNot(qc => idxConj.exists(_.semanticEquals(qc)))
-      .reduceOption(And))
+    else {
+      val implied = new ConstraintHelper {}
+        .constructIsNotNullConstraints(ExpressionSet(idxConj), output)
+      Some(qConj.filterNot(qc => (idxConj ++ implied).exists(_.semanticEquals(qc)))
+        .reduceOption(And))
+    }
   }
 
   /** Predicate implication with DISJUNCTIONS, the subset of Postgres
@@ -2152,7 +2197,14 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * plan. `probes = auto` sizes each root's probe budget as
     * ceil(sqrt(lists)). Cost model sums the per-root index costs against
     * the total exact scan. Declines when even k ids per root exceed
-    * `graft.ann.maxInList`. */
+    * `graft.ann.maxInList`. A prefilter splits ([[AnnTopKRewrite.splitKeyOnly]]):
+    * its key-only conjuncts filter the pool rows inside the pool task, so
+    * the pool is the top k·refine of the rows they pass and its size is
+    * the survivor count; a residual conjunct adds one survivor count per
+    * escalation round, over the id column and the residual's own
+    * columns. A round widens x4 while fewer than k survive, or while the
+    * pass rates seen (key-only over the probed rows, residual over the
+    * pool) put fewer than k survivors in an unfiltered k·refine pool. */
   private def serveMulti(c: AnnConf, t: TopK, es: Seq[AnnCatalog.Entry],
                          id: IdCol, qv: ArrayData,
                          predOpt: Option[Expression]): Option[LogicalPlan] = {
@@ -2184,13 +2236,16 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // shape: if even k ids per root overflow maxInList, decline to exact
     if (idxs.length.toLong * k > maxInList) return Some(t.gl)
     // one unioned collect per call: (id, lb, root) for the per-root top
-    // k*refineScale estimate candidates at the given probe scale
-    def unionPool(probeScale: Int, refineScale: Int): Array[(Long, Double, Int)] = {
+    // k*refineScale estimate candidates at the given probe scale, among
+    // the rows `keep` (a bound key-only prefilter) passes, and the probed
+    // rows `keep` was asked about and passed
+    def unionPool(probeScale: Int, refineScale: Int, keep: Option[Expression] = None)
+        : (Array[(Long, Double, Int)], Long, Long) = {
       AnnTopKRewrite.planningJobs.incrementAndGet()
       val nCand = math.max(k * refineScale, k)
       val prs = idxs.map(ix =>
         math.min(ix.meta.cfg.lists, c.probesFor(ix.meta.cfg.lists) * probeScale))
-      IvfIndex.multiEstimateCandidates(idxs, qArr, nCand, prs)
+      IvfIndex.multiEstimateCandidates(idxs, qArr, nCand, prs, keep = keep)
     }
     // dedup ids across roots, and within a root across generation and
     // delta (keep the best lb for budgeting): one id must not take two of
@@ -2202,57 +2257,92 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
     predOpt match {
       case None =>
-        Some(planWith(withinInBudget(dedup(unionPool(1, refine0)), k, maxInList)))
+        Some(planWith(withinInBudget(dedup(unionPool(1, refine0)._1), k, maxInList)))
       case Some(pred) =>
-        // PREFILTER: pool candidates, count the predicate's survivors
-        // among them (child already contains the user Filter), escalate
-        // probes/refine x4 until k survivors exist or every root is
+        // PREFILTER: key-only conjuncts run inside the pool task, so the
+        // pool is the top k*refine of the rows they pass; a residual
+        // (anything reading another column) is counted over the pool's
+        // ids. Probes/refine escalate x4 until k survivors exist at the
+        // pass rate an unfiltered pool would need, or every root is
         // provably covered. The IN list must be the POOL, not a top-k —
-        // a top-k list holds k survivors only if the predicate passes all
-        // of them. Each round is ONE unioned pool job + ONE survivor
-        // count, regardless of root count. A pool past maxInList means
-        // the exact plan is equivalent-or-cheaper than a giant IN —
-        // declined BEFORE the pool job runs.
+        // a top-k list holds k survivors only if the residual passes all
+        // of them. Each round is ONE unioned pool job, plus ONE survivor
+        // count when a residual is left, regardless of root count. A pool
+        // past maxInList means the exact plan is equivalent-or-cheaper
+        // than a giant IN — declined BEFORE the pool job runs.
         def escalateMulti(): Option[LogicalPlan] = {
+          val (keep, residual) = AnnTopKRewrite.splitKeyOnly(pred, id)
           var scale = 1
           var r = refine0
           // tight at full probes, conservative below — per root
           // min(k*r, rows), summed
           def poolBound: Long =
             idxs.map(ix => math.min(k.toLong * r, ix.rowCount)).sum
-          def covered: Boolean = idxs.forall { ix =>
+          // one round's pool: the deduped ids, the rows each root pooled,
+          // and the probed rows the key-only conjuncts were asked about
+          // and passed
+          final case class Round(ids: Array[Long], pooled: Array[Int],
+              asked: Long, passed: Long)
+          def pool(): Round = {
+            val (cands, asked, passed) = unionPool(scale, r, keep)
+            val perRoot = new Array[Int](idxs.length)
+            cands.foreach(t => perRoot(t._3) += 1)
+            Round(dedup(cands).map(_._1), perRoot, asked, passed)
+          }
+          // a root is covered once every cell is probed and its pool holds
+          // every row it could: k*r reaches its row count, or the pool
+          // came up short of k*r (it holds every row the key-only
+          // conjuncts pass)
+          def covered(rd: Round): Boolean = idxs.zipWithIndex.forall { case (ix, ri) =>
             math.min(ix.meta.cfg.lists,
               c.probesFor(ix.meta.cfg.lists) * scale) >= ix.meta.cfg.lists &&
-              k.toLong * r >= ix.rowCount
+              (k.toLong * r >= ix.rowCount || rd.pooled(ri) < k.toLong * r)
           }
+          // every pooled id passes the key-only conjuncts: with no
+          // residual the pool size IS the survivor count, and no plan runs
           def survivors(ids: Array[Long]): Long =
-            if (ids.isEmpty) 0L
+            if (ids.isEmpty || residual.isEmpty) ids.length.toLong
             else {
               AnnTopKRewrite.planningJobs.incrementAndGet()
               ensureInPushdown(ids.length)
               // guard: the count plan contains the user's own Filter —
               // optimizing it must not re-fire this rule's Filter cases.
-              // A bare count: one job, no shuffle, no closure cleaning
+              // A bare count over the id column alone (the scan reads id
+              // and the filter's columns, never an unread vector): one
+              // job, no shuffle, no closure cleaning
               AnnTopKRewrite.withPlanningGuard {
                 graft.core.BareJob.count(ColumnBridge.toInternalRdd(
-                  ColumnBridge.ofRows(spark, Filter(id.in(ids), t.child))))
+                  ColumnBridge.ofRows(spark,
+                    Project(Seq(id.attr), Filter(id.in(ids), t.child)))))
               }
             }
+          // a round widens while its pool holds fewer than k survivors, or
+          // while fewer than k would be expected to pass in an UNFILTERED
+          // pool of k*r ids (the survivor count's pool before key-only
+          // conjuncts moved into the task, whose escalation this keeps):
+          // the key-only pass rate the pool task saw over the probed rows
+          // times the residual's over the pool, times r, under 1. Without
+          // it a selective filter would stop at the first probe budget,
+          // short of where the unfiltered count widened, and lose recall;
+          // a filter passing at least 1/r of the rows serves in one round
+          def short(rd: Round): Boolean = {
+            val surv = survivors(rd.ids)
+            surv < k || keep.isDefined &&
+              rd.passed.toDouble * surv * r < rd.asked.toDouble * rd.ids.length
+          }
           if (poolBound > maxInList) return Some(t.gl)
-          var ids = dedup(unionPool(scale, r)).map(_._1)
-          if (ids.length > maxInList) return Some(t.gl)
+          var rd = pool()
+          if (rd.ids.length > maxInList) return Some(t.gl)
           // check coverage FIRST: a covered pool serves regardless of the
           // survivor count, so the count job is pure waste there
-          var cov = covered
-          while (!cov && survivors(ids) < k) {
+          while (!covered(rd) && short(rd)) {
             scale *= 4
             r *= 4
             if (poolBound > maxInList) return Some(t.gl)
-            ids = dedup(unionPool(scale, r)).map(_._1)
-            if (ids.length > maxInList) return Some(t.gl)
-            cov = covered
+            rd = pool()
+            if (rd.ids.length > maxInList) return Some(t.gl)
           }
-          Some(planWith(ids))
+          Some(planWith(rd.ids))
         }
         pred match {
           // sphere prefilter in the shared index metric (reference

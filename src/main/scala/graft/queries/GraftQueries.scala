@@ -2935,7 +2935,8 @@ object GraftQueries {
 
     // planner-served prefilter (Q7, reference vchordrq.prefilter): a
     // Filter under ORDER BY metric LIMIT k escalates the candidate pool
-    // until k predicate survivors; served through AnnTopKRewrite against a
+    // until k predicate survivors (`vec_id % 2 = 0` is key-only: it runs
+    // inside the pool task); served through AnnTopKRewrite against a
     // registered PRIVATE copy of the table (registering the original path
     // would reroute every embeddings scan in the suite).
     "ivf_knn_prefilter" -> Q(

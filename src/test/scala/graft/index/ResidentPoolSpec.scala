@@ -4,15 +4,19 @@ import graft.SparkSpec
 import graft.core.{VectorKernels => K}
 import graft.functions.GraftFunctions
 import graft.plans.{AnnCatalog, AnnTopKRewrite}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /**
  * The warm single-root pool's resident row source: planned once per
  * prewarm-persisted relation, never read past an index mutation, dropped
  * on release — and every served pool and prefilter survivor count runs
- * exactly one Spark job.
+ * exactly one Spark job. A key-only prefilter runs inside the pool, so
+ * its query plans one job per pool round and no survivor count; a
+ * residual one adds a survivor count that reads only the id and the
+ * residual's columns.
  */
 class ResidentPoolSpec extends SparkSpec {
 
@@ -40,10 +44,10 @@ class ResidentPoolSpec extends SparkSpec {
       spark.experimental.extraOptimizations.filterNot(_ == rule)
   }
 
-  private def topK(tableDir: String, q: Array[Float], filter: Option[Int] = None,
+  private def topK(tableDir: String, q: Array[Float], filter: Option[Column] = None,
       k: Int = 10): DataFrame = {
     val t = spark.read.parquet(tableDir)
-    filter.fold(t)(r => t.filter(col("id") % 10 === r))
+    filter.fold(t)(t.filter)
       .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq))).limit(k)
   }
 
@@ -83,13 +87,45 @@ class ResidentPoolSpec extends SparkSpec {
     (out, descs.size - 1)
   }
 
+  /** The columns of each file scan over `tableDir` planned while `f`
+    * runs (its ReadSchema), recorded by a strategy that plans nothing. */
+  private def scansOf[T](tableDir: String)(f: => T): (T, Seq[Set[String]]) = {
+    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val root = new org.apache.hadoop.fs.Path(tableDir).toUri.getPath
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
+    val spy = new SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        plan match {
+          case PhysicalOperation(projects, filters, l: LogicalRelation) =>
+            l.relation match {
+              case fs: HadoopFsRelation
+                  if fs.location.rootPaths.exists(_.toUri.getPath == root) =>
+                scans.add((projects ++ filters).flatMap(_.references).map(_.name).toSet)
+              case _ =>
+            }
+          case _ =>
+        }
+        Nil
+      }
+    }
+    spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ spy
+    val out =
+      try f
+      finally spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies.filterNot(_ eq spy)
+    (out, scans.asScala.toSeq)
+  }
+
   private def query(seed: Int): Array[Float] = {
     val rng = new scala.util.Random(1000 + seed)
     Array.fill(dim)(rng.nextFloat() * 2 - 1)
   }
 
   private def pool(ix: IvfIndex, q: Array[Float]): Set[Long] =
-    IvfIndex.multiEstimateCandidates(Seq(ix), q, 80, Seq(ix.meta.cfg.lists))
+    IvfIndex.multiEstimateCandidates(Seq(ix), q, 80, Seq(ix.meta.cfg.lists))._1
       .map(_._1).toSet
 
   test("a prewarmed index plans its pool source once; each pool and each " +
@@ -117,21 +153,71 @@ class ResidentPoolSpec extends SparkSpec {
       assert(IvfIndex.poolSourcePlans.get() - plans0 <= 1,
         s"10 warm pools planned ${IvfIndex.poolSourcePlans.get() - plans0} sources")
       assert(ix.holdsResident)
-      // prefilter: a pool job plus a survivor count per escalation round
+      // a key-only prefilter runs inside the pool, so no survivor count
+      // runs: passing half the rows (over 1/refine), the first pool
+      // serves — one job
       (0 until 4).foreach { i =>
-        val df = topK(tableDir, query(20 + i), filter = Some(i))
+        val df = topK(tableDir, query(50 + i), filter = Some(col("id") % 2 === i % 2))
         val pj = AnnTopKRewrite.planningJobs.get()
         val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
         val counted = AnnTopKRewrite.planningJobs.get() - pj
-        assert(counted >= 2, s"filtered query $i: $counted planning jobs")
+        assert(counted == 1, s"filtered query $i: $counted planning jobs")
+        assert(jobs == 1, s"filtered query $i: $jobs Spark jobs for one pool")
+        assert(served(df).length == 10)
+      }
+      // passing a tenth (under 1/refine = 1/8), the first pool (4 of 16
+      // cells) widens once to every cell — two pool jobs, still no count
+      (0 until 4).foreach { i =>
+        val df = topK(tableDir, query(20 + i), filter = Some(col("id") % 10 === i))
+        val pj = AnnTopKRewrite.planningJobs.get()
+        val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
+        val counted = AnnTopKRewrite.planningJobs.get() - pj
+        assert(counted == 2, s"selective query $i: $counted planning jobs")
+        assert(jobs == 2, s"selective query $i: $jobs Spark jobs for two pools")
+        assert(served(df).length == 10)
+      }
+      // a residual prefilter (it reads vec): a pool job plus a survivor
+      // count per escalation round
+      (0 until 4).foreach { i =>
+        val df = topK(tableDir, query(30 + i),
+          filter = Some(element_at(col("vec"), 1 + i) > 0.5f))
+        val pj = AnnTopKRewrite.planningJobs.get()
+        val (_, jobs) = jobsOf(df.queryExecution.optimizedPlan)
+        val counted = AnnTopKRewrite.planningJobs.get() - pj
+        assert(counted >= 2, s"residual query $i: $counted planning jobs")
         assert(jobs == counted,
-          s"filtered query $i: $jobs Spark jobs for $counted pools and survivor rounds")
+          s"residual query $i: $jobs Spark jobs for $counted pools and survivor rounds")
         assert(served(df).length == 10)
       }
       assert(IvfIndex.poolSourcePlans.get() - plans0 <= 1)
       // one pool, one job, straight through the index face
       val (_, poolJobs) = jobsOf(pool(ix, query(40)))
       assert(poolJobs == 1, s"multiEstimateCandidates ran $poolJobs jobs")
+    } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("a residual survivor count reads the id and the residual's columns, " +
+       "not the vector") {
+    import spark.implicits._
+    val rng = new scala.util.Random(23)
+    val tableDir = Files.createTempDirectory("graft-resident-tag").toString
+    (0L until 2000L).map(i => (i, (i % 10).toInt, Seq.fill(dim)(rng.nextFloat() * 2 - 1)))
+      .toDF("id", "tag", "vec").write.mode("overwrite").parquet(tableDir)
+    val indexDir = Files.createTempDirectory("graft-resident-tagidx").toString
+    IvfIndex.build(spark.read.parquet(tableDir), "id", "vec", indexDir,
+      IvfConfig(lists = 16))
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      val df = topK(tableDir, query(60), filter = Some(col("tag") === 3))
+      val pj = AnnTopKRewrite.planningJobs.get()
+      // planning the served query runs the pools and the survivor counts;
+      // a survivor count is the only scan of the table it plans
+      val (_, scans) = scansOf(tableDir)(df.queryExecution.optimizedPlan)
+      assert(AnnTopKRewrite.planningJobs.get() - pj >= 2, "no survivor count ran")
+      assert(scans.nonEmpty, "no survivor count scan was planned")
+      scans.foreach(cols => assert(cols == Set("id", "tag"),
+        s"a survivor count read $cols; scans $scans"))
+      assert(served(df).length == 10)
     } finally AnnCatalog.unregister(tableDir)
   }
 

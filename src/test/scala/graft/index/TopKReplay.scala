@@ -13,11 +13,13 @@ import org.apache.spark.sql.DataFrame
   * query from the stored vector, or against the raw query from the
   * rerank table — and the best row per id ranks by (dist, id). The
   * rerank scans the union of the batch's probed cells, as the batched
-  * serve does. Unrotated indexes only. */
+  * serve does. `idPred` replays a key-only prefilter: only rows whose id
+  * it passes enter the pool. Unrotated indexes only. */
 object TopKReplay {
   def topK(idx: IvfIndex, queries: Seq[(Long, Array[Float])], k: Int,
            probes: Int, refine: Int, epsilon: Double = 1.9,
-           table: Option[Seq[(Long, Array[Float])]] = None)
+           table: Option[Seq[(Long, Array[Float])]] = None,
+           idPred: Long => Boolean = _ => true)
       : Map[Long, Seq[(Long, Double)]] = {
     val cfg = idx.meta.cfg
     require(!cfg.rotate, "replay covers unrotated indexes")
@@ -28,7 +30,7 @@ object TopKReplay {
     val scanned = probedBy.values.flatten.toSet
     queries.map { case (qid, q) =>
       val qq = if (cfg.metric == "cosdist") K.normalize(q) else q
-      val pool = rows.filter(r => probedBy(qid).contains(r.cid)).map { r =>
+      val pool = rows.filter(r => probedBy(qid).contains(r.cid) && idPred(r.id)).map { r =>
         val c = idx.meta.centroids(r.cid)
         val qr =
           if (cfg.residual && isL2) qq.indices.map(j => qq(j) - c(j)).toArray else qq

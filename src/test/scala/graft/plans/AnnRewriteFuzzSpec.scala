@@ -3,7 +3,7 @@ package graft.plans
 import graft.SparkSpec
 import graft.core.{VectorKernels => K}
 import graft.functions.GraftFunctions
-import graft.index.{IvfConfig, IvfIndex}
+import graft.index.{IvfConfig, IvfIndex, TopKReplay}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -167,7 +167,9 @@ class AnnRewriteFuzzSpec extends SparkSpec {
     * refine), re-sorted exactly over the table; prefiltered = pools of
     * min(k*r, n) ids in estimate order (`search` at refine 1), probes and
     * refine x4 until k predicate survivors exist or every cell and row
-    * is covered, then the exact top-k of the table's survivors. */
+    * is covered, then the exact top-k of the table's survivors. The
+    * serve still runs this way for a RESIDUAL prefilter (one no conjunct
+    * of which is key-only). */
   private def twoJobServe(dir: String, ix: IvfIndex, q: Array[Float], k: Int,
                           probes: Int, refine: Int,
                           pred: Option[Column]): Seq[Long] =
@@ -203,6 +205,42 @@ class AnnRewriteFuzzSpec extends SparkSpec {
         .limit(k).select("id").as[Long].collect().toSeq
     }
 
+  /** A KEY-ONLY prefiltered serve replayed on the driver
+    * ([[TopKReplay]] with the id predicate): the pool is the top k*r by
+    * (lb, id) of the probed rows `keep` passes; probes and refine x4
+    * while the pool holds fewer than k ids, or while `keep` passes under
+    * 1/r of the probed rows, until every cell is probed and the pool
+    * holds every row it could (k*r reaches the row count, or fewer than
+    * k*r rows pass); the answer is the exact top-k of the pooled table
+    * rows. */
+  private def keyOnlyServe(dir: String, ix: IvfIndex, q: Array[Float], k: Int,
+                           probes: Int, refine: Int, keep: Long => Boolean): Seq[Long] = {
+    import spark.implicits._
+    val table = spark.read.parquet(dir).select("id", "vec").as[(Long, Seq[Float])]
+      .collect().map { case (id, v) => (id, v.toArray) }.toSeq
+    val cells = ix.dataDf.select("cluster_id", "id").as[(Int, Long)].collect()
+    val lists = ix.meta.cfg.lists
+    val n = ix.rowCount
+    var p = probes
+    var r = refine
+    def round(): (Seq[Long], Long, Long) = {
+      val probed = ix.probe(q, math.min(lists, p)).toSet
+      val asked = cells.filter(c => probed(c._1))
+      (TopKReplay.topK(ix, Seq(0L -> q), k, math.min(lists, p), r,
+        table = Some(table), idPred = keep)(0L).map(_._1),
+        asked.length.toLong, asked.count(c => keep(c._2)).toLong)
+    }
+    var (got, asked, passed) = round()
+    while (!(p >= lists && (k.toLong * r >= n || passed < k.toLong * r)) &&
+        (got.length < k || passed * r < asked)) {
+      p *= 4
+      r *= 4
+      val next = round()
+      got = next._1; asked = next._2; passed = next._3
+    }
+    got
+  }
+
   test("served plain and prefiltered top-k equal the two-job serve's " +
        "answers: l2/cosdist/negdot, codes-only, f16, and after appendDelta") {
     val cases = Seq(
@@ -219,10 +257,19 @@ class AnnRewriteFuzzSpec extends SparkSpec {
         val (dir, ix) = servedTable(500 + ci, cfg, delta)
         try graft.core.Confs.withConfs(spark, "graft.ann.probes" -> "2",
             "graft.ann.refine" -> "2", "graft.ann.cost.enable" -> "false") {
-          (0 until 6).foreach { t =>
+          // t % 3: 0 plain, 1 key-only (`id % 5 = m`, evaluated in the
+          // pool task), 2 residual (reads vec, counted over the pool)
+          (0 until 9).foreach { t =>
             val k = 1 + rng.nextInt(10)
             val q = Array.fill(8)(rng.nextFloat() * 4 - 2)
-            val pred = if (t % 2 == 0) None else Some(col("id") % 5 === rng.nextInt(5))
+            val m = rng.nextInt(5)
+            val pred = t % 3 match {
+              case 0 => None
+              case 1 => Some(col("id") % 5 === m)
+              case _ =>
+                if (t % 2 == 0) Some(element_at(col("vec"), 1 + m) > rng.nextFloat() * 2 - 1)
+                else Some(col("id") % 5 === m || element_at(col("vec"), 1 + m) > 1.5f)
+            }
             val base = spark.read.parquet(dir)
             val df = pred.map(base.filter).getOrElse(base)
               .orderBy(distOf(cfg.metric)(col("vec"), typedlit(q.toSeq)))
@@ -230,7 +277,9 @@ class AnnRewriteFuzzSpec extends SparkSpec {
             val planStr = df.queryExecution.optimizedPlan.toString
             assert(AnnTopKRewrite.inServed(planStr), s"[$name] not served:\n$planStr")
             val got = df.collect().map(_.getLong(0)).toSeq
-            val want = twoJobServe(dir, ix, q, k, probes = 2, refine = 2, pred)
+            val want =
+              if (t % 3 == 1) keyOnlyServe(dir, ix, q, k, probes = 2, refine = 2, _ % 5 == m)
+              else twoJobServe(dir, ix, q, k, probes = 2, refine = 2, pred)
             assert(got == want, s"[$name] trial $t k=$k pred=$pred:\n got=$got\nwant=$want")
           }
         } finally AnnCatalog.unregister(dir)

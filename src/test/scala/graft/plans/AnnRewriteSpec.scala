@@ -133,11 +133,14 @@ class AnnRewriteSpec extends SparkSpec {
       val q = Array.fill(8)(0.3f)
       // highly selective predicate (exactly k matching rows): the initial
       // candidate set cannot contain k survivors, so the rule must
-      // escalate to full coverage — making the answer exact.
+      // escalate to full coverage — making the answer exact. The
+      // predicate is RESIDUAL (one conjunct reading id and vec; every
+      // vec component is below 1), so each round counts survivors; the
+      // key-only `id >= 495` runs in the pool (next test)
       withConfs("graft.ann.cost.enable" -> "false") {
         val jobs0 = AnnTopKRewrite.planningJobs.get()
         val df = spark.read.parquet(tableDir)
-          .filter(col("id") >= 495L)
+          .filter(col("id") >= 495L || element_at(col("vec"), 1) > 2.0f)
           .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
           .limit(5)
         val optimized = df.queryExecution.optimizedPlan.toString
@@ -148,6 +151,37 @@ class AnnRewriteSpec extends SparkSpec {
           s"planningJobs ${AnnTopKRewrite.planningJobs.get()} vs start $jobs0")
         // full-row collect of the rewritten plan: must contain the k true
         // survivors, not an unfiltered top-k that the predicate empties
+        val got = df.collect().map(_.getLong(0)).toSeq
+        val data = spark.read.parquet(tableDir).as[(Long, Seq[Float])].collect()
+        val want = data.filter(_._1 >= 495L)
+          .map { case (id, v) => (K.l2(v.toArray, q), id) }
+          .sorted.take(5).map(_._2).toSeq
+        assert(got == want)
+      }
+    } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("key-only prefilter: `id >= 495` runs in the pool, which holds the k " +
+       "survivors without a survivor count") {
+    import spark.implicits._
+    val (tableDir, indexDir) = setup
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      val q = Array.fill(8)(0.3f)
+      withConfs("graft.ann.cost.enable" -> "false") {
+        val jobs0 = AnnTopKRewrite.planningJobs.get()
+        val df = spark.read.parquet(tableDir)
+          .filter(col("id") >= 495L)
+          .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
+          .limit(5)
+        val optimized = df.queryExecution.optimizedPlan.toString
+        assert(AnnTopKRewrite.inServed(optimized), s"expected prefilter index serve:\n$optimized")
+        // the first pool (3 of 8 cells) holds at most the 5 qualifying
+        // rows at a pass rate far under 1/refine, so it widens; the second
+        // probes every cell and comes up short of k*refine, so it holds
+        // every qualifying row — two pool jobs, no count
+        assert(AnnTopKRewrite.planningJobs.get() == jobs0 + 2,
+          s"planningJobs ${AnnTopKRewrite.planningJobs.get()} vs start $jobs0")
         val got = df.collect().map(_.getLong(0)).toSeq
         val data = spark.read.parquet(tableDir).as[(Long, Seq[Float])].collect()
         val want = data.filter(_._1 >= 495L)
@@ -1415,8 +1449,9 @@ class AnnRewriteSpec extends SparkSpec {
       AnnCatalog.unregister(s"$tableDir/part=$p"))
   }
 
-  test("PREFILTERED query over a partitioned table is served with " +
-       "escalation: exact results, selective and non-selective predicates") {
+  /** 800 rows in 4 `part=` children, each child indexed (4 lists) and
+    * registered: the partitioned prefilter fixture. */
+  private def partitionedPrefilterTable(): (String, Int, Seq[(Long, Seq[Float], Int)]) = {
     import spark.implicits._
     val rng = new scala.util.Random(71)
     val nParts = 4
@@ -1431,6 +1466,12 @@ class AnnRewriteSpec extends SparkSpec {
         d, IvfConfig(lists = 4))
       AnnCatalog.register(s"$tableDir/part=$p", d, "id", "vec")
     }
+    (tableDir, nParts, rows)
+  }
+
+  test("PREFILTERED query over a partitioned table is served with " +
+       "escalation: exact results, selective and non-selective predicates") {
+    val (tableDir, nParts, rows) = partitionedPrefilterTable()
     try withRule {
       val q = Array.fill(8)(0.2f)
       def brute(pred: Long => Boolean, k: Int) =
@@ -1440,12 +1481,14 @@ class AnnRewriteSpec extends SparkSpec {
       // ULTRA-selective predicate (8 of 800 rows): the first pools cannot
       // hold k survivors, so escalation must widen x4 per round until the
       // pools provably cover every root — the terminal state is exact by
-      // construction (all qualifying rows are candidates)
+      // construction (all qualifying rows are candidates). RESIDUAL (it
+      // reads vec; every component is below 1): the key-only
+      // `id % 100 = 0` runs in the pools (next test)
       withConfs("graft.ann.probes" -> "2", "graft.ann.refine" -> "4",
           "graft.ann.cost.enable" -> "false") {
         val jobs0 = AnnTopKRewrite.planningJobs.get()
         val sel = spark.read.parquet(tableDir)
-          .filter(col("id") % 100 === 0)
+          .filter(col("id") % 100 === 0 || element_at(col("vec"), 1) > 2.0f)
           .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
           .limit(7).select("id")
         assert(AnnTopKRewrite.inServed(sel.queryExecution.optimizedPlan.toString),
@@ -1493,6 +1536,36 @@ class AnnRewriteSpec extends SparkSpec {
           .sorted.take(6).map(_._2).toSeq
         assert(sph.collect().map(_.getLong(0)).toSeq == want,
           "sphere multi-root serve not exact")
+      }
+    } finally (0 until nParts).foreach(p =>
+      AnnCatalog.unregister(s"$tableDir/part=$p"))
+  }
+
+  test("key-only prefilter over a partitioned table: `id % 100 = 0` runs in " +
+       "the flat multi-root pool; exact with no survivor count") {
+    val (tableDir, nParts, rows) = partitionedPrefilterTable()
+    try withRule {
+      val q = Array.fill(8)(0.2f)
+      withConfs("graft.ann.probes" -> "2", "graft.ann.refine" -> "4",
+          "graft.ann.cost.enable" -> "false") {
+        val jobs0 = AnnTopKRewrite.planningJobs.get()
+        val sel = spark.read.parquet(tableDir)
+          .filter(col("id") % 100 === 0)
+          .orderBy(GraftFunctions.vecL2(col("vec"), typedlit(q.toSeq)))
+          .limit(7).select("id")
+        assert(AnnTopKRewrite.inServed(sel.queryExecution.optimizedPlan.toString),
+          "prefiltered partitioned query not served:\n" +
+            sel.queryExecution.optimizedPlan)
+        // every qualifying row sits in part=0; the first pools (2 of 4
+        // cells per root) widen, the second probe every cell and come up
+        // short of k*refine, so they hold all 8 — two pool jobs, no count
+        assert(AnnTopKRewrite.planningJobs.get() == jobs0 + 2,
+          s"planningJobs ${AnnTopKRewrite.planningJobs.get() - jobs0}")
+        val want = rows.filter(_._1 % 100 == 0)
+          .map { case (id, v, _) => (K.l2(v.toArray, q), id) }
+          .sorted.take(7).map(_._2)
+        assert(sel.collect().map(_.getLong(0)).toSeq == want,
+          "selective prefilter wrong rows")
       }
     } finally (0 until nParts).foreach(p =>
       AnnCatalog.unregister(s"$tableDir/part=$p"))
