@@ -4,6 +4,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 
 /**
  * One Spark job over every partition of an RDD, running a NAMED task
@@ -25,16 +26,16 @@ object BareJob {
   def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U): Array[U] =
     rdd.sparkContext.runJob(rdd, task, 0 until rdd.getNumPartitions)
 
-  /** Rows in `rdd`, as one job without a shuffle (`Dataset.count` is an
-    * aggregate: two jobs and an exchange under AQE). */
-  def count(rdd: RDD[_]): Long = run(rdd, CountRows).sum
+  /** Column 0 (a long) of every row of `rdd`, as one job. */
+  def longs(rdd: RDD[InternalRow]): Array[Long] = run(rdd, FirstLongs).flatten
 
-  /** The task of [[count]]: the partition's row count. */
-  object CountRows extends ((TaskContext, Iterator[Any]) => Long) with Serializable {
-    def apply(ctx: TaskContext, it: Iterator[Any]): Long = {
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      n
+  /** The task of [[longs]]: the partition's column-0 longs. */
+  object FirstLongs extends ((TaskContext, Iterator[InternalRow]) => Array[Long])
+      with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): Array[Long] = {
+      val out = Array.newBuilder[Long]
+      while (it.hasNext) out += it.next().getLong(0)
+      out.result()
     }
   }
 }

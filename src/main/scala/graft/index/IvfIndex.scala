@@ -1096,18 +1096,19 @@ object IvfIndex {
       epsilon: Double): Array[(Int, Int, Long, Double)] =
     pools(idxs, queries, nCand, probes, epsilon)._2
 
-  /** The planner's top-k candidate pool (one query): per root the exact
-    * top `nCand` (id, lb, root) in (lb, id) order among the rows `keep` —
+  /** The planner's IVF candidate pools (the top-k serve's one query, a
+    * KNN-join slice's many): per (root, query) the exact top `nCand`
+    * (root, queryIdx, id, lb) in (lb, id) order among the rows `keep` —
     * a key-only prefilter bound as in [[KeyFilter]] — passes, plus how
     * many probed rows `keep` was asked about and passed (0 and 0
-    * without it). */
-  private[graft] def multiEstimateCandidates(idxs: Seq[IvfIndex], q: Array[Float],
-      nCand: Int, probes: Seq[Int], epsilon: Double = 1.9,
-      keep: Option[Expression] = None): (Array[(Long, Double, Int)], Long, Long) = {
+    * without it), one job for the whole batch. */
+  private[graft] def multiEstimateCandidates(idxs: Seq[IvfIndex],
+      queries: Array[Array[Float]], nCand: Int, probes: Seq[Int],
+      epsilon: Double = 1.9, keep: Option[Expression] = None)
+      : (Array[(Int, Int, Long, Double)], Long, Long) = {
     val sc = idxs.head.spark.sparkContext
     val kf = keep.map(new KeyFilter(_, sc.longAccumulator, sc.longAccumulator))
-    val cands = pools(idxs, Array(q), nCand, probes, epsilon, keep = kf)._2
-      .map { case (r, _, id, lb) => (id, lb, r) }
+    val cands = pools(idxs, queries, nCand, probes, epsilon, keep = kf)._2
     (cands, kf.fold(0L)(_.asked.value), kf.fold(0L)(_.passed.value))
   }
 

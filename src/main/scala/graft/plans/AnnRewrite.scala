@@ -47,14 +47,16 @@ import graft.plans.AnnCatalog.Kind
  *    longer disables the rewrite. Its KEY-ONLY conjuncts (the id column
  *    alone, no subquery) run inside the pool task before the codes
  *    unpack, so rows they drop spend none of the k*refine budget; any
- *    other conjunct is checked by a survivor count over the pool's ids.
+ *    other conjunct is checked by a survivor fetch over the pool's ids.
  *    The probe/refine budget escalates (x4 per round, like re-scanning
  *    with a larger budget) until k survivors exist or the candidate set
  *    provably covers the table — at which point the plan is exact. A
  *    round also widens while the pass rates it saw put fewer than k
  *    survivors in an unfiltered k*refine pool, so a selective filter
  *    reaches the probe budget the unfiltered count escalated to. A
- *    key-only prefilter plans one pool job per round and no count.
+ *    key-only prefilter plans one pool job per round and no fetch. The
+ *    KNN join's indexed-side prefilter runs the same escalation over a
+ *    slice of queries at once.
  *    Non-deterministic predicates conservatively keep the original plan.
  *
  *  - KILL SWITCH `graft.ann.enable=false` = `vchordrq.enable_scan`
@@ -63,6 +65,11 @@ import graft.plans.AnnCatalog.Kind
  * Enable per session:
  *   spark.experimental.extraOptimizations ++= Seq(AnnTopKRewrite(spark))
  * or globally with spark.sql.extensions=graft.plans.GraftSparkExtensions.
+ * The two differ on an `id IN (SELECT ...)` prefilter: extraOptimizations
+ * run after Spark's RewritePredicateSubquery, so the rule sees a LeftSemi
+ * join there, not a Filter, and the exact sort runs; only the injected
+ * extension sees the Filter and serves it (KeyPrefilterSpec, "subquery
+ * conjuncts stay residual").
  */
 object AnnCatalog {
   /** One registration: reads of a table (or of one partition child) may
@@ -452,13 +459,26 @@ object AnnCatalog {
     * expressible only when every entry shares ONE table (the per-child
     * entries of a partitioned corpus each point at their own child; the
     * batched faces refuse those loudly). */
-  private def ivfRerank(spark: SparkSession, es: Seq[Entry], idxs: Seq[IvfIndex])
+  private[plans] def ivfRerank(spark: SparkSession, es: Seq[Entry], idxs: Seq[IvfIndex])
       : Option[(org.apache.spark.sql.DataFrame, String, String)] =
     if (idxs.forall(_.meta.cfg.storeVectors)) None
     else es.map(_.tablePath).filter(_.nonEmpty).distinct match {
       case Seq(tp) => Some((spark.read.parquet(tp), es.head.idCol, es.head.vecCol))
       case _ => None
     }
+
+  /** Codes-only or storage-mixed token children rescore from the
+    * multivector corpus at `paths`, exploded to one row per token. */
+  private[plans] def tokenRerank(spark: SparkSession, paths: Seq[String],
+      es: Seq[Entry], idxs: Seq[IvfIndex])
+      : Option[(org.apache.spark.sql.DataFrame, String, String)] = {
+    import org.apache.spark.sql.functions.{col, explode}
+    val storage = idxs.head.meta.cfg.storage
+    if (idxs.forall(ix => ix.meta.cfg.storeVectors && ix.meta.cfg.storage == storage)) None
+    else Some((spark.read.parquet(paths: _*)
+      .select(col(es.head.idCol), explode(col(es.head.vecCol)).as("__tok")),
+      es.head.idCol, "__tok"))
+  }
 
   /** "SQL in, batch out" (round 15): answer a bounded queries TABLE of
     * spheres over a REGISTERED corpus through the batched range face.
@@ -590,7 +610,7 @@ object AnnCatalog {
   def servedMaxsimMany(spark: SparkSession, tablePath: String,
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       tokensCol: String, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, explode}
+    import org.apache.spark.sql.functions.col
     val es = resolveServed(spark, tablePath, "servedMaxsimMany",
       Seq(Kind.Tokens)).entries
     val idxs = es.map(index(spark, _))
@@ -609,18 +629,9 @@ object AnnCatalog {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("qid", "doc", "maxsim")
     }
-    val h = idxs.head
-    // codes-only / storage-mixed children: the rerank token table is the
-    // registered corpus itself, exploded to one row per token
-    val rt =
-      if (idxs.forall(ix => ix.meta.cfg.storeVectors &&
-          ix.meta.cfg.storage == h.meta.cfg.storage)) None
-      else Some((spark.read.parquet(tablePath)
-        .select(col(es.head.idCol), explode(col(es.head.vecCol)).as("__tok")),
-        es.head.idCol, "__tok"))
     graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k, kPerToken = c.kPerToken,
       probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)),
-      refine = c.refine, rerankTable = rt)
+      refine = c.refine, rerankTable = tokenRerank(spark, Seq(tablePath), es, idxs))
   }
 }
 
@@ -683,7 +694,7 @@ private[plans] object CostGates {
 
 object AnnTopKRewrite {
   /** Spark jobs launched DURING PLANNING (prefilter escalation only):
-    * each pool fetch and each survivor count is a bounded driver-blocking
+    * each pool and each survivor fetch is a bounded driver-blocking
     * job inside the optimizer rule — the Spark analogue of the
     * reference's scan-time escalation, which likewise does index work
     * before returning rows. Observable so operators can tell "slow
@@ -700,8 +711,8 @@ object AnnTopKRewrite {
     new org.apache.spark.sql.catalyst.trees.TreeNodeTag[Boolean]("graft.ann.served")
 
   /** True while THIS thread is inside a planning-time helper job (the
-    * prefilter survivor counts). The rule no-ops under the guard: a
-    * survivor-count plan contains the user's own Filter, and optimizing
+    * prefilter survivor fetches). The rule no-ops under the guard: a
+    * survivor-fetch plan contains the user's own Filter, and optimizing
     * it would otherwise RE-FIRE the Filter-rooted serve cases (a sphere
     * conjunct re-launching range-candidate jobs once per escalation
     * round) — recursive serving of the planner's own internal queries.
@@ -819,7 +830,7 @@ object AnnTopKRewrite {
     * back ANDed and bound to the one-column row (id: long) every pool row
     * source leads with — an IntegerType id reads back through a cast,
     * lossless because the index widened it. The rest come back ANDed as
-    * the residual the survivor count still checks. `isnotnull(id)`, which
+    * the residual the survivor fetch still checks. `isnotnull(id)`, which
     * the optimizer infers from any null-intolerant id conjunct, is
     * neither: no indexed row has a null id. */
   private[plans] def splitKeyOnly(pred: Expression, id: IdCol)
@@ -1204,11 +1215,13 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * [[AnnTopKRewrite.planningJobs]]; a bulk query set amortizes through
     * the batch machinery instead of falling back to the O(Q x N) cross
     * join. A deterministic PREFILTER on the indexed side escalates
-    * instead of declining (the single-query serve's contract, batched per
-    * slice): the predicate is query-independent, so each round is one
-    * pooled candidate job plus one bounded survivor fetch flooring EVERY
-    * query's survivor count at once; probes/refine x4 until every query
-    * holds k survivors or the pools provably cover the table. */
+    * instead of declining, through the top-k serve's own escalation run
+    * over each slice's queries at once ([[ivfPrefilter]]): the predicate
+    * is query-independent, so a round is ONE pool job for every query
+    * and root, plus one survivor fetch only when a conjunct reads more
+    * than the id column; probes/refine x4 until every query holds k
+    * survivors at the pass rate an unfiltered pool needs, or its pools
+    * provably cover the table. */
   private def serveKnnJoin(c: AnnConf, f: Filter): Option[LogicalPlan] = {
     val w = f.child.asInstanceOf[Window]
     // exactly one window expression: row_number() — rank() admits past-k
@@ -1422,7 +1435,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   private def knnJoinMaxSim(c: AnnConf, j: KnnJoin, k: Int,
       es: Seq[AnnCatalog.Entry], roots: Seq[String],
       tokenSets: () => Option[Array[Array[Array[Float]]]]): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions.{col => fcol, explode}
     val idxs = es.map(AnnCatalog.index(spark, _))
     val probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists))
     // k-floor + cost gate (serveMaxSimMulti's formulas; the query-row
@@ -1436,16 +1448,9 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         (ix.rowCount, ix.meta.cfg.lists, p) }, qn, c.kPerToken, k, c.refine)
     }
     if (!costOk) return None
-    val h = idxs.head
-    // codes-only / storage-mixed children rescore from the corpus itself
-    // (the indexed side's own files), exploded to one row per token — the
-    // servedMaxsimMany rule
-    def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] =
-      if (idxs.forall(ix => ix.meta.cfg.storeVectors &&
-          ix.meta.cfg.storage == h.meta.cfg.storage)) None
-      else Some((spark.read.parquet(roots: _*)
-        .select(fcol(es.head.idCol), explode(fcol(es.head.vecCol)).as("__tok")),
-        es.head.idCol, "__tok"))
+    // codes-only / storage-mixed children rescore from the indexed side's
+    // own files (read once, and only when needed)
+    lazy val rt = AnnCatalog.tokenRerank(spark, roots, es, idxs)
     serveKnnJoinRestrict(c, j, tokenSets, keepEmpty = true) { slice =>
       // the batched face's own pool budget, checked here so the planner
       // DECLINES instead of throwing mid-rule
@@ -1456,7 +1461,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         val queries = slice.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
         Some(graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k,
             kPerToken = c.kPerToken, probes = probes, refine = c.refine,
-            rerankTable = rtOf)
+            rerankTable = rt)
           .select("doc").distinct()
           .collect().map(_.getLong(0)))
       }
@@ -1602,7 +1607,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       es: Seq[AnnCatalog.Entry], predOpt: Option[Expression],
       centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
     val idxs = es.map(AnnCatalog.index(spark, _))
-    val maxInList = c.maxInList
     val refine = c.refine
     // cost gate: per query row, summed per-root index work vs the exact
     // cross join touching every indexed row — the query-row count
@@ -1622,127 +1626,46 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         "graft.ann.refine (the 1M-row anchor measured recall " +
         "0.93 -> 0.98 going refine 16 -> 64)")
     }
-    // searchManyMulti reranks from the roots' own stored vectors or
-    // from one rerank table: codes-only children would need a union
-    // table the per-child entries cannot supply, so codes-only serves
-    // only on one root with a tablePath (rtOf below)
-    val multiOk = idxs.forall(_.meta.cfg.storeVectors) ||
-      (idxs.length == 1 && es.head.tablePath.nonEmpty)
-    // batched-face driver-pool budget (the face itself refuses
-    // loudly past it; the planner declines instead of throwing)
-    val maxPool = c.batchMaxPoolTuples
+    // only the no-prefilter path reranks in the index (searchManyMulti):
+    // from the roots' own stored vectors, or from the one rerank table
+    // codes-only entries share (read once, and only when needed); the
+    // prefilter pools are estimate-only
+    lazy val rt = AnnCatalog.ivfRerank(spark, es, idxs)
+    val multiOk = predOpt.isDefined || idxs.forall(_.meta.cfg.storeVectors) ||
+      rt.isDefined
     if (!costOk || !multiOk) None
     else serveKnnJoinRestrict(c, j, centersOf,
         complete = idxs.forall(_.sourceComplete)) { centers =>
-      import spark.implicits._
-      val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-      def rtOf: Option[(org.apache.spark.sql.DataFrame, String, String)] = {
-        val e0 = es.head
-        if (idxs.head.meta.cfg.storeVectors || e0.tablePath.isEmpty) None
-        else Some((spark.read.parquet(e0.tablePath), e0.idCol, e0.vecCol))
-      }
-      // per-query candidate POOLS of k*r ids by estimate order (the
-      // escalateMulti() pool semantics — refine=1, the survivor floor needs
-      // the whole pool, not its reranked top-k) at the given probe
-      // scale — ONE batched job however many queries and roots
-      def pools(probeScale: Int, r: Int): Option[Map[Long, Array[Long]]] = {
-        val nCand = math.max(k * r, k)
-        if (idxs.length.toLong * queries.length * nCand > maxPool) None
-        else {
-          AnnTopKRewrite.planningJobs.incrementAndGet()
-          val probes = idxs.map(ix =>
-            math.min(ix.meta.cfg.lists,
-              c.probesFor(ix.meta.cfg.lists) * probeScale)).max
-          Some(IvfIndex.searchManyMulti(idxs, queries, nCand,
-              probes = probes, refine = 1, rerankTable = rtOf)
-            .select("qid", "id").as[(Long, Long)].collect()
-            .groupBy(_._1).view.mapValues(_.map(_._2)).toMap)
-        }
-      }
       predOpt match {
         case None =>
           // no prefilter: per-query exact-reranked top-k candidates in
           // one batched job (the window reranks the union again)
           val nCand = math.max(k * refine, k)
-          if (idxs.length.toLong * queries.length * nCand > maxPool) None
+          if (idxs.length.toLong * centers.length * nCand > c.batchMaxPoolTuples) None
           else {
+            import spark.implicits._
             AnnTopKRewrite.planningJobs.incrementAndGet()
+            val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
             val probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)).max
             Some(IvfIndex.searchManyMulti(idxs, queries, k, probes = probes,
-                refine = refine, rerankTable = rtOf)
+                refine = refine, rerankTable = rt)
               .select("id").as[Long].collect())
           }
-        case Some(_) =>
-          // PREFILTER on the indexed side — the escalation contract of
-          // the single-query serve, per query: the predicate is
-          // query-INDEPENDENT, so one bounded survivor fetch per round
-          // (ids of `indexedSide` rows — the user Filter is inside it —
-          // within the pooled candidates) floors every query's
-          // survivor count at once; probes/refine escalate x4 until
-          // every query holds k survivors or the pools provably cover
-          // the table. Overflowing maxInList declines to the exact
-          // plan (a giant IN loses to the cross join). Unlike the
-          // single-query serve it does not split off key-only conjuncts
-          // (AnnTopKRewrite.splitKeyOnly) into the pools yet, so every
-          // round fetches survivors.
-          def survivorSet(allIds: Array[Long]): Option[Set[Long]] =
-            if (allIds.isEmpty) Some(Set.empty)
-            else if (allIds.length > maxInList) None
-            else {
-              AnnTopKRewrite.planningJobs.incrementAndGet()
-              ensureInPushdown(allIds.length)
-              AnnTopKRewrite.withPlanningGuard {
-                Some(ColumnBridge.ofRows(spark,
-                    Filter(j.id.in(allIds), j.indexedSide))
-                  .select(j.id.attr.name).as[Long].collect().toSet)
-              }
-            }
-          var scale = 1
-          var r = refine
-          // coverage = "the pool provably holds EVERY row": full
-          // probes per root AND k*r at least the SUMMED corpus row
-          // count — pools() truncates to k*r candidates per query
-          // GLOBALLY across roots (searchManyMulti's final
-          // fold), so a per-root rowCount comparison would declare
-          // coverage with rows of the larger corpus missing and skip
-          // the survivor floor
-          def covered: Boolean =
-            idxs.forall(ix =>
-              c.probesFor(ix.meta.cfg.lists) * scale >= ix.meta.cfg.lists) &&
-              k.toLong * r >= idxs.map(_.rowCount).sum
-          var out: Option[Array[Long]] = None
-          var done = false
-          while (!done) {
-            pools(scale, r) match {
-              case None => done = true // pool budget: decline
-              case Some(byQ) =>
-                val allIds = byQ.valuesIterator.flatten.toArray.distinct
-                if (allIds.length > maxInList) done = true // decline
-                else if (covered) { out = Some(allIds); done = true }
-                else survivorSet(allIds) match {
-                  case None => done = true // IN budget: decline
-                  case Some(surv) =>
-                    // a query absent from the pool map retrieved
-                    // nothing — zero survivors, keep escalating
-                    val minSurv =
-                      if (byQ.size < queries.length) 0L
-                      else byQ.valuesIterator
-                        .map(_.count(surv.contains).toLong).min
-                    if (minSurv >= k) { out = Some(allIds); done = true }
-                    else { scale *= 4; r *= 4 }
-                }
-            }
-          }
-          // loud: a budget decline here lands AFTER one or more
-          // escalation rounds already ran planning jobs, and the
-          // prefiltered exact cross join that follows is the
-          // expensive path
+        case Some(pred) =>
+          // PREFILTER on the indexed side: the top-k serve's escalation
+          // over the slice's queries at once (the window reranks the
+          // pooled candidates exactly). Overflowing a budget declines to
+          // the exact plan (a giant IN loses to the cross join) — loudly,
+          // since it lands AFTER one or more escalation rounds ran
+          // planning jobs, and the prefiltered exact cross join that
+          // follows is the expensive path
+          val out = ivfPrefilter(c, idxs, centers, k, pred, j.id, j.indexedSide)
           if (out.isEmpty)
             logWarning("KNN-join prefilter escalation declined after " +
-              s"running its planning rounds (pool budget $maxPool, IN " +
-              s"budget $maxInList) — the exact windowed cross join " +
-              "will run. Raise the budgets or pre-filter the table " +
-              "into a registered corpus.")
+              "running its planning rounds (pool budget " +
+              s"${c.batchMaxPoolTuples}, IN budget ${c.maxInList}) — the " +
+              "exact windowed cross join will run. Raise the budgets or " +
+              "pre-filter the table into a registered corpus.")
           out
       }
     }
@@ -2071,7 +1994,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * than the query's set). An `isnotnull(x)` the optimizer inferred
     * from an index conjunct (`x = 1`) is dropped from the remainder too:
     * every indexed row passes it, so it must not leave a residual for
-    * the survivor count. Parse or resolution failure, or an unprovable
+    * the survivor fetch. Parse or resolution failure, or an unprovable
     * conjunct, declines (None result) — a partial index must never serve
     * a query it doesn't cover. */
   private def partialMatch(predicateSql: String, queryPred: Expression,
@@ -2197,14 +2120,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * plan. `probes = auto` sizes each root's probe budget as
     * ceil(sqrt(lists)). Cost model sums the per-root index costs against
     * the total exact scan. Declines when even k ids per root exceed
-    * `graft.ann.maxInList`. A prefilter splits ([[AnnTopKRewrite.splitKeyOnly]]):
-    * its key-only conjuncts filter the pool rows inside the pool task, so
-    * the pool is the top k·refine of the rows they pass and its size is
-    * the survivor count; a residual conjunct adds one survivor count per
-    * escalation round, over the id column and the residual's own
-    * columns. A round widens x4 while fewer than k survive, or while the
-    * pass rates seen (key-only over the probed rows, residual over the
-    * pool) put fewer than k survivors in an unfiltered k·refine pool. */
+    * `graft.ann.maxInList`. A prefilter runs the IVF prefilter
+    * escalation ([[ivfPrefilter]]) for this one query. */
   private def serveMulti(c: AnnConf, t: TopK, es: Seq[AnnCatalog.Entry],
                          id: IdCol, qv: ArrayData,
                          predOpt: Option[Expression]): Option[LogicalPlan] = {
@@ -2235,115 +2152,26 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // the k-floor is the serve/decline line, as in the old per-root
     // shape: if even k ids per root overflow maxInList, decline to exact
     if (idxs.length.toLong * k > maxInList) return Some(t.gl)
-    // one unioned collect per call: (id, lb, root) for the per-root top
-    // k*refineScale estimate candidates at the given probe scale, among
-    // the rows `keep` (a bound key-only prefilter) passes, and the probed
-    // rows `keep` was asked about and passed
-    def unionPool(probeScale: Int, refineScale: Int, keep: Option[Expression] = None)
-        : (Array[(Long, Double, Int)], Long, Long) = {
-      AnnTopKRewrite.planningJobs.incrementAndGet()
-      val nCand = math.max(k * refineScale, k)
-      val prs = idxs.map(ix =>
-        math.min(ix.meta.cfg.lists, c.probesFor(ix.meta.cfg.lists) * probeScale))
-      IvfIndex.multiEstimateCandidates(idxs, qArr, nCand, prs, keep = keep)
-    }
-    // dedup ids across roots, and within a root across generation and
-    // delta (keep the best lb for budgeting): one id must not take two of
-    // the k*refine slots
-    def dedup(pool: Array[(Long, Double, Int)]): Array[(Long, Double, Int)] =
-      pool.groupBy(_._1).valuesIterator.map(_.minBy(t => (t._2, t._3))).toArray
     def planWith(ids: Array[Long]): LogicalPlan =
       served(c, t, id, ids, idxs.forall(_.sourceComplete))
 
     predOpt match {
       case None =>
-        Some(planWith(withinInBudget(dedup(unionPool(1, refine0)._1), k, maxInList)))
+        AnnTopKRewrite.planningJobs.incrementAndGet()
+        // (id, lb, root), deduped across roots and within a root across
+        // generation and delta (keep the best lb for budgeting): one id
+        // must not take two of the k*refine slots
+        val pool = IvfIndex.multiEstimateCandidates(idxs, Array(qArr),
+            math.max(k * refine0, k), ivfProbes(c, idxs, 1))._1
+          .groupBy(_._3).valuesIterator
+          .map(_.minBy(p => (p._4, p._1))).map(p => (p._3, p._4, p._1)).toArray
+        Some(planWith(withinInBudget(pool, k, maxInList)))
       case Some(pred) =>
-        // PREFILTER: key-only conjuncts run inside the pool task, so the
-        // pool is the top k*refine of the rows they pass; a residual
-        // (anything reading another column) is counted over the pool's
-        // ids. Probes/refine escalate x4 until k survivors exist at the
-        // pass rate an unfiltered pool would need, or every root is
-        // provably covered. The IN list must be the POOL, not a top-k —
-        // a top-k list holds k survivors only if the residual passes all
-        // of them. Each round is ONE unioned pool job, plus ONE survivor
-        // count when a residual is left, regardless of root count. A pool
-        // past maxInList means the exact plan is equivalent-or-cheaper
-        // than a giant IN — declined BEFORE the pool job runs.
-        def escalateMulti(): Option[LogicalPlan] = {
-          val (keep, residual) = AnnTopKRewrite.splitKeyOnly(pred, id)
-          var scale = 1
-          var r = refine0
-          // tight at full probes, conservative below — per root
-          // min(k*r, rows), summed
-          def poolBound: Long =
-            idxs.map(ix => math.min(k.toLong * r, ix.rowCount)).sum
-          // one round's pool: the deduped ids, the rows each root pooled,
-          // and the probed rows the key-only conjuncts were asked about
-          // and passed
-          final case class Round(ids: Array[Long], pooled: Array[Int],
-              asked: Long, passed: Long)
-          def pool(): Round = {
-            val (cands, asked, passed) = unionPool(scale, r, keep)
-            val perRoot = new Array[Int](idxs.length)
-            cands.foreach(t => perRoot(t._3) += 1)
-            Round(dedup(cands).map(_._1), perRoot, asked, passed)
-          }
-          // a root is covered once every cell is probed and its pool holds
-          // every row it could: k*r reaches its row count, or the pool
-          // came up short of k*r (it holds every row the key-only
-          // conjuncts pass)
-          def covered(rd: Round): Boolean = idxs.zipWithIndex.forall { case (ix, ri) =>
-            math.min(ix.meta.cfg.lists,
-              c.probesFor(ix.meta.cfg.lists) * scale) >= ix.meta.cfg.lists &&
-              (k.toLong * r >= ix.rowCount || rd.pooled(ri) < k.toLong * r)
-          }
-          // every pooled id passes the key-only conjuncts: with no
-          // residual the pool size IS the survivor count, and no plan runs
-          def survivors(ids: Array[Long]): Long =
-            if (ids.isEmpty || residual.isEmpty) ids.length.toLong
-            else {
-              AnnTopKRewrite.planningJobs.incrementAndGet()
-              ensureInPushdown(ids.length)
-              // guard: the count plan contains the user's own Filter —
-              // optimizing it must not re-fire this rule's Filter cases.
-              // A bare count over the id column alone (the scan reads id
-              // and the filter's columns, never an unread vector): one
-              // job, no shuffle, no closure cleaning
-              AnnTopKRewrite.withPlanningGuard {
-                graft.core.BareJob.count(ColumnBridge.toInternalRdd(
-                  ColumnBridge.ofRows(spark,
-                    Project(Seq(id.attr), Filter(id.in(ids), t.child)))))
-              }
-            }
-          // a round widens while its pool holds fewer than k survivors, or
-          // while fewer than k would be expected to pass in an UNFILTERED
-          // pool of k*r ids (the survivor count's pool before key-only
-          // conjuncts moved into the task, whose escalation this keeps):
-          // the key-only pass rate the pool task saw over the probed rows
-          // times the residual's over the pool, times r, under 1. Without
-          // it a selective filter would stop at the first probe budget,
-          // short of where the unfiltered count widened, and lose recall;
-          // a filter passing at least 1/r of the rows serves in one round
-          def short(rd: Round): Boolean = {
-            val surv = survivors(rd.ids)
-            surv < k || keep.isDefined &&
-              rd.passed.toDouble * surv * r < rd.asked.toDouble * rd.ids.length
-          }
-          if (poolBound > maxInList) return Some(t.gl)
-          var rd = pool()
-          if (rd.ids.length > maxInList) return Some(t.gl)
-          // check coverage FIRST: a covered pool serves regardless of the
-          // survivor count, so the count job is pure waste there
-          while (!covered(rd) && short(rd)) {
-            scale *= 4
-            r *= 4
-            if (poolBound > maxInList) return Some(t.gl)
-            rd = pool()
-            if (rd.ids.length > maxInList) return Some(t.gl)
-          }
-          Some(planWith(rd.ids))
-        }
+        // the prefilter escalation over this one query; a budget decline
+        // keeps the exact plan
+        def escalated: Option[LogicalPlan] =
+          Some(ivfPrefilter(c, idxs, Array(qArr), k, pred, id, t.child)
+            .fold(t.gl)(planWith))
         pred match {
           // sphere prefilter in the shared index metric (reference
           // opclass strategy 2 WITH an order-by, pushdown_range.slt):
@@ -2359,12 +2187,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                  sphAttr.name == es.head.vecCol =>
             AnnTopKRewrite.planningJobs.incrementAndGet()
             // one flat read over every root's sphere-intersecting cluster
-            // dirs (no per-root union branches — see unionPool)
+            // dirs (no per-root union branches)
             val raw = IvfIndex.multiRangeCandidateIds(idxs,
               Array((sphCv.toFloatArray(), sphRadius)), c.epsilon, maxInList)
             // overflow BEFORE dedup: a truncated-then-deduped list could
             // silently miss qualifying candidates past the limit
-            if (raw.length > maxInList) escalateMulti()
+            if (raw.length > maxInList) escalated
             else if (raw.isEmpty) Some(LocalRelation(t.gl.output))
             else {
               // merge the IN into the EXISTING Filter and stamp it: a
@@ -2382,9 +2210,114 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
                 case other                        => stamped(Filter(inExpr, other))
               }))
             }
-          case _ => escalateMulti()
+          case _ => escalated
         }
     }
+  }
+
+  /** Each root's probe budget at `scale` times the configured one,
+    * capped at its list count. */
+  private def ivfProbes(c: AnnConf, idxs: Seq[IvfIndex], scale: Int): Seq[Int] =
+    idxs.map(ix => math.min(ix.meta.cfg.lists, c.probesFor(ix.meta.cfg.lists) * scale))
+
+  /** The ONE IVF prefilter escalation (reference `vchordrq.prefilter`,
+    * scanners/default.rs:178-224), for the top-k serve's one query and a
+    * KNN-join slice's many: the predicate is query-independent, so one
+    * round serves every query. The prefilter splits
+    * ([[AnnTopKRewrite.splitKeyOnly]]): its key-only conjuncts run inside
+    * the pool task, so each (root, query) pool is the top k·r of the rows
+    * they pass, and the pool's size is its survivor count. A round is ONE
+    * pool job over every root and query, plus, only when a residual
+    * conjunct is left, ONE survivor fetch: the ids of `child` rows (the
+    * user Filter is inside it) among the pooled ids, over the id column
+    * and the residual's own columns. A root is covered for a query once
+    * every cell is probed and its pool holds every row it could: k·r
+    * reaches the root's row count, or the pool came up short of k·r.
+    * Probes and refine widen x4 while a query not covered on every root
+    * holds fewer than k survivors, or would expect fewer than k passing
+    * rows in an UNFILTERED k·r pool at the pass rates the round saw (the
+    * key-only conjuncts' over the probed rows, the residual's over the
+    * query's pool). So a filter passing at least 1/refine of the rows
+    * serves in one round, and a selective one widens to the probe budget
+    * an unfiltered survivor count reached. The IN list must be the POOL,
+    * not a top-k: a top-k holds k survivors only if the residual passes
+    * all of them. Returns every pool's ids, or None when a budget
+    * declines: one query's pool bound past `graft.ann.maxInList` (checked
+    * before the pool job runs), the driver's pool tuples past
+    * `graft.ann.batch.maxPoolTuples`, or the pooled ids past maxInList. */
+  private def ivfPrefilter(c: AnnConf, idxs: Seq[IvfIndex],
+      queries: Array[Array[Float]], k: Int, pred: Expression, id: IdCol,
+      child: LogicalPlan): Option[Array[Long]] = {
+    val (keep, residual) = AnnTopKRewrite.splitKeyOnly(pred, id)
+    val nQ = queries.length
+    val maxInList = c.maxInList
+    var scale = 1
+    var r = c.refine
+    // one query's pool, tight at full probes, conservative below — per
+    // root min(k*r, rows), summed
+    def poolBound: Long = idxs.map(ix => math.min(k.toLong * r, ix.rowCount)).sum
+    // one round: each query's distinct pooled ids, their union, the rows
+    // each (root, query) pooled, and the probed rows the key-only
+    // conjuncts were asked about and passed
+    final case class Round(byQ: Array[Array[Long]], ids: Array[Long],
+        pooled: Array[Array[Int]], asked: Long, passed: Long)
+    def pool(): Option[Round] =
+      if (poolBound > maxInList || nQ * poolBound > c.batchMaxPoolTuples) None
+      else {
+        AnnTopKRewrite.planningJobs.incrementAndGet()
+        val (cands, asked, passed) = IvfIndex.multiEstimateCandidates(idxs,
+          queries, math.max(k * r, k), ivfProbes(c, idxs, scale), keep = keep)
+        val pooled = Array.ofDim[Int](idxs.length, nQ)
+        val byQ = Array.fill(nQ)(scala.collection.mutable.LinkedHashSet.empty[Long])
+        val all = scala.collection.mutable.LinkedHashSet.empty[Long]
+        cands.foreach { case (ri, qi, cid, _) =>
+          pooled(ri)(qi) += 1; byQ(qi) += cid; all += cid
+        }
+        if (all.size > maxInList) None
+        else Some(Round(byQ.map(_.toArray), all.toArray, pooled, asked, passed))
+      }
+    def covered(rd: Round, qi: Int): Boolean = {
+      val probes = ivfProbes(c, idxs, scale)
+      idxs.indices.forall { ri =>
+        probes(ri) >= idxs(ri).meta.cfg.lists &&
+          (k.toLong * r >= idxs(ri).rowCount || rd.pooled(ri)(qi) < k.toLong * r)
+      }
+    }
+    // which pooled ids survive: all of them with no residual (no plan
+    // runs); else the guarded fetch — the plan contains the user's own
+    // Filter, and optimizing it must not re-fire this rule's Filter cases
+    def survives(ids: Array[Long]): Long => Boolean =
+      if (ids.isEmpty || residual.isEmpty) _ => true
+      else {
+        AnnTopKRewrite.planningJobs.incrementAndGet()
+        ensureInPushdown(ids.length)
+        AnnTopKRewrite.withPlanningGuard {
+          graft.core.BareJob.longs(ColumnBridge.toInternalRdd(
+            ColumnBridge.ofRows(spark, Project(
+              Seq(Alias(Cast(id.attr, org.apache.spark.sql.types.LongType), "id")()),
+              Filter(id.in(ids), child)))))
+        }.toSet
+      }
+    // coverage FIRST: a round that covers every query serves whatever
+    // its survivors, so the fetch would be pure waste there
+    def short(rd: Round): Boolean = {
+      val open = (0 until nQ).filterNot(covered(rd, _))
+      open.nonEmpty && {
+        val passes = survives(rd.ids)
+        open.exists { qi =>
+          val surv = rd.byQ(qi).count(passes).toLong
+          surv < k || keep.isDefined &&
+            rd.passed.toDouble * surv * r < rd.asked.toDouble * rd.byQ(qi).length
+        }
+      }
+    }
+    var rd = pool()
+    while (rd.exists(short)) {
+      scale *= 4
+      r *= 4
+      rd = pool()
+    }
+    rd.map(_.ids)
   }
 }
 

@@ -597,10 +597,11 @@ object GraftQueries {
     // PREFILTERED partitioned serving (round 11): a deterministic filter
     // between the Sort and the partitioned scan no longer declines to the
     // exact plan — the per-root estimate pools escalate (x4 probes/refine
-    // per round, ONE unioned pool job + ONE survivor count each round)
-    // until k survivors exist or every root is provably covered. The
-    // predicate here keeps fewer than k rows at every tier, so the serve
-    // always terminates at full coverage and the output is exact —
+    // per round, ONE unioned pool job each round) until k survivors exist
+    // or every root is provably covered. `vec_id % 251 = 3` is key-only,
+    // so it runs inside the pool task and no survivor fetch runs. It
+    // keeps fewer than k rows at every tier, so the serve always
+    // terminates at full coverage and the output is exact —
     // hash-compared against DuckDB recomputing the filtered top-k.
     "knn_partitioned_prefilter" -> Q(
       (s, d) => {

@@ -533,8 +533,8 @@ class IvfIndexSpec extends SparkSpec {
         // (id, lb bits, root) per query, and the batch's answers
         def state(ix: IvfIndex) = (
           batch.take(6).map { case (_, q) =>
-            IvfIndex.multiEstimateCandidates(Seq(ix), q, 40, Seq(3))._1.toSeq
-              .map(t => (t._1, java.lang.Double.doubleToRawLongBits(t._2), t._3))
+            IvfIndex.multiEstimateCandidates(Seq(ix), Array(q), 40, Seq(3))._1.toSeq
+              .map(t => (t._3, java.lang.Double.doubleToRawLongBits(t._4), t._1))
           }.toSeq,
           TopKReplay.byQid(ix.searchMany(batch, 5, probes = 3, refine = 8)))
         val cold = IvfIndex.load(spark, dir)

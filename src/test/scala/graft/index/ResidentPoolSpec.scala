@@ -7,7 +7,6 @@ import graft.plans.{AnnCatalog, AnnTopKRewrite}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
-import scala.jdk.CollectionConverters._
 
 /**
  * The warm single-root pool's resident row source: planned once per
@@ -59,65 +58,10 @@ class ResidentPoolSpec extends SparkSpec {
     df.collect().map(_.getLong(0)).toSeq
   }
 
-  /** The Spark jobs `f` runs, counted by a listener. The bus is FIFO, so
-    * once a marker job's start arrives every earlier job is counted. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val marker = "resident-pool job-count marker"
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        descs.add(Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    val out =
-      try {
-        val r = f
-        sc.setJobDescription(marker)
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.setJobDescription(null)
-        val deadline = System.nanoTime() + 30L * 1000000000L
-        while (!descs.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-        assert(descs.contains(marker), "listener bus did not drain")
-        r
-      } finally sc.removeSparkListener(listener)
-    (out, descs.size - 1)
-  }
+  private def jobsOf[T](f: => T): (T, Int) = graft.PlanProbes.jobsOf(spark)(f)
 
-  /** The columns of each file scan over `tableDir` planned while `f`
-    * runs (its ReadSchema), recorded by a strategy that plans nothing. */
-  private def scansOf[T](tableDir: String)(f: => T): (T, Seq[Set[String]]) = {
-    import org.apache.spark.sql.catalyst.planning.PhysicalOperation
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val root = new org.apache.hadoop.fs.Path(tableDir).toUri.getPath
-    val scans = new java.util.concurrent.ConcurrentLinkedQueue[Set[String]]()
-    val spy = new SparkStrategy {
-      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
-        plan match {
-          case PhysicalOperation(projects, filters, l: LogicalRelation) =>
-            l.relation match {
-              case fs: HadoopFsRelation
-                  if fs.location.rootPaths.exists(_.toUri.getPath == root) =>
-                scans.add((projects ++ filters).flatMap(_.references).map(_.name).toSet)
-              case _ =>
-            }
-          case _ =>
-        }
-        Nil
-      }
-    }
-    spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ spy
-    val out =
-      try f
-      finally spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies.filterNot(_ eq spy)
-    (out, scans.asScala.toSeq)
-  }
+  private def scansOf[T](tableDir: String)(f: => T): (T, Seq[Set[String]]) =
+    graft.PlanProbes.scansOf(spark, tableDir)(f)
 
   private def query(seed: Int): Array[Float] = {
     val rng = new scala.util.Random(1000 + seed)
@@ -125,8 +69,8 @@ class ResidentPoolSpec extends SparkSpec {
   }
 
   private def pool(ix: IvfIndex, q: Array[Float]): Set[Long] =
-    IvfIndex.multiEstimateCandidates(Seq(ix), q, 80, Seq(ix.meta.cfg.lists))._1
-      .map(_._1).toSet
+    IvfIndex.multiEstimateCandidates(Seq(ix), Array(q), 80, Seq(ix.meta.cfg.lists))._1
+      .map(_._3).toSet
 
   test("a prewarmed index plans its pool source once; each pool and each " +
        "survivor round runs one job") {

@@ -105,6 +105,15 @@ class KnnJoinFuzzSpec extends SparkSpec {
         val pred: Option[(Long, Long)] =
           if (rng.nextInt(3) == 0) Some((2L + rng.nextInt(4), rng.nextInt(2).toLong))
           else None
+        // RESIDUAL axis: about half of the prefiltered trials add a
+        // conjunct over vec (element_at(vec, j) > x), which stays residual
+        // beside the key-only one; at this axis's full coverage the first
+        // pool round serves and the plan's own Filter applies it. It drops
+        // NULL-vector rows, as the exact plan's Filter does
+        val residual: Option[(Int, Float)] =
+          if (pred.isDefined && rng.nextBoolean())
+            Some((1 + rng.nextInt(dim), rng.nextFloat() - 0.5f))
+          else None
         val qs = (0 until m).map { i =>
           // half data rows (self-match exercises dist=0 ties), half random
           val v = if (rng.nextBoolean()) allRows(rng.nextInt(n))._2
@@ -120,8 +129,10 @@ class KnnJoinFuzzSpec extends SparkSpec {
         val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
           .orderBy(distFn(col("vec"), col("center")), col("id"))
         val e0 = spark.read.parquet(dir)
-        val e = pred.map { case (pm, pr) => e0.filter(col("id") % pm === pr) }
-          .getOrElse(e0)
+        val e = pred.map { case (pm, pr) =>
+          e0.filter(residual.foldLeft(col("id") % pm === pr) { case (p, (j, x)) =>
+            p && element_at(col("vec"), j) > x })
+        }.getOrElse(e0)
         def build() = {
           graft.core.Confs.withConfs(spark,
               "graft.ann.knn.join.maxQueries" -> sliceCap) {
@@ -141,7 +152,8 @@ class KnnJoinFuzzSpec extends SparkSpec {
             val df = build()
             assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
               s"trial $trial (m=$m k=$k metric=$metric part=$partitioned " +
-              s"pred=$pred) was not served:\n${df.queryExecution.optimizedPlan}")
+              s"pred=$pred residual=$residual) was not served:\n" +
+              df.queryExecution.optimizedPlan)
             df.collect()
           }
           case None =>
@@ -153,12 +165,13 @@ class KnnJoinFuzzSpec extends SparkSpec {
         }).map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .toSeq.sortBy(t => (t._1, t._3))
         val fn = graft.ops.Knn.metricFn(metric)
-        val rows = pred.map { case (pm, pr) => allRows.filter(_._1 % pm == pr) }
-          .getOrElse(allRows)
+        val rows = pred.map { case (pm, pr) =>
+          allRows.filter(r => r._1 % pm == pr && residual.forall { case (j, x) => r._2(j - 1) > x })
+        }.getOrElse(allRows)
         // null-dist rows rank first in every partition (NULLS FIRST),
         // ordered among themselves by the window's id tiebreak
         val nulls: Seq[Long] =
-          if (!withNulls) Seq.empty
+          if (!withNulls || residual.isDefined) Seq.empty
           else pred.map { case (pm, pr) => nullIds.filter(_ % pm == pr) }
             .getOrElse(nullIds)
         val want = qs.flatMap { case (qid, q) =>
@@ -171,7 +184,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
         }
         assert(got == want,
           s"trial $trial (m=$m k=$k metric=$metric part=$partitioned " +
-          s"pred=$pred nulls=$withNulls) mismatch")
+          s"pred=$pred residual=$residual nulls=$withNulls) mismatch")
       }
     } finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == rule)

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.core.{VectorKernels => K}
 import graft.functions.GraftFunctions
 import graft.index.{IvfConfig, IvfIndex}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -65,22 +66,26 @@ class KnnJoinServeSpec extends SparkSpec {
       .collect().map { case (i, v) => (i, v.toArray) }
   }
 
-  /** Brute-force per-query top-k: (qid, id, dist-rounded, rn). */
+  /** Brute-force per-query top-k over the rows `keep` passes: (qid, id, rn). */
   private def brute(tableDir: String, qs: Seq[(Long, Array[Float])], k: Int,
-                    metric: String = "l2"): Seq[(Long, Long, Long)] = {
+                    metric: String = "l2",
+                    keep: ((Long, Array[Float])) => Boolean = _ => true)
+      : Seq[(Long, Long, Long)] = {
     val fn = graft.ops.Knn.metricFn(metric)
-    val rows = data(tableDir)
+    val rows = data(tableDir).filter(keep)
     qs.flatMap { case (qid, q) =>
       rows.map { case (id, v) => (fn(v, q), id) }.sorted.take(k)
         .zipWithIndex.map { case ((_, id), i) => (qid, id, (i + 1).toLong) }
     }
   }
 
-  /** The DSL windowed KNN-join shape over `path` for literal queries. */
-  private def kjDf(path: String, qs: Seq[(Long, Array[Float])], k: Int) = {
+  /** The DSL windowed KNN-join shape over `path` (its rows `pred`
+    * passes) for literal queries. */
+  private def kjDf(path: String, qs: Seq[(Long, Array[Float])], k: Int,
+      pred: Option[Column] = None) = {
     import spark.implicits._
     val qdf = qs.map { case (qid, q) => (qid, q.toSeq) }.toDF("qid", "center")
-    val e = spark.read.parquet(path)
+    val e = pred.fold(spark.read.parquet(path))(spark.read.parquet(path).filter)
     val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
       .orderBy(GraftFunctions.vecL2(col("vec"), col("center")), col("id"))
     qdf.crossJoin(e)
@@ -273,46 +278,113 @@ class KnnJoinServeSpec extends SparkSpec {
     } finally AnnCatalog.unregister(tableDir)
   }
 
-  test("multi-root prefilter escalation: coverage needs the SUMMED corpus " +
-       "row count, not each root's own") {
-    import spark.implicits._
+  test("multi-root prefilter escalation: each root's pool covers it once " +
+       "k*refine reaches that root's rows") {
     val (tableDir, _) = setup
     val dst = partSetup
     withRule {
-      // k*refine = 256 exceeds EACH root's 250 rows but not the 500-row
-      // sum: the pool truncates to k*refine candidates per query GLOBALLY
-      // (searchManyMulti's fold), so declaring coverage per root would
-      // skip the survivor floor with rows provably missing from the pool.
-      // The predicate keeps only 6 rows — fewer than k — so the floor is
-      // unsatisfiable and the serve MUST escalate to true full coverage
-      // before restricting.
+      // every cell probed, and k*refine = 256 per (root, query) pool is at
+      // least EACH root's 250 rows: every pool holds all of its root's
+      // rows, so the first round covers the table even though the
+      // predicate keeps only 6 rows, fewer than k
       withConfs("graft.ann.probes" -> "8", "graft.ann.refine" -> "32",
           "graft.ann.cost.enable" -> "false") {
         val byId = data(tableDir).toMap
         val qs = Seq(0L -> byId(3L), 1L -> byId(11L))
-        val qdf = qs.map { case (qid, q) => (qid, q.toSeq) }.toDF("qid", "center")
-        val e = spark.read.parquet(dst).filter(col("id") >= 494)
-        val wSpec = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(GraftFunctions.vecL2(col("vec"), col("center")), col("id"))
         val before = AnnTopKRewrite.planningJobs.get()
-        val df = qdf.crossJoin(e)
-          .withColumn("rn", row_number().over(wSpec))
-          .filter(col("rn") <= 8)
-          .select(col("qid"), col("id"), col("rn").cast("long").as("rn"))
+        val df = kjDf(dst, qs, 8, Some(col("id") >= 494))
         assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
           s"expected escalated multi-root serve:\n${df.queryExecution.optimizedPlan}")
-        // premature per-root coverage would stop at 2 jobs; the correct
-        // path runs at least one survivor fetch and a second pool round
-        assert(AnnTopKRewrite.planningJobs.get() - before >= 4)
-        val fn = graft.ops.Knn.metricFn("l2")
-        val rows = data(tableDir).filter(_._1 >= 494)
-        val want = qs.flatMap { case (qid, q) =>
-          rows.map { case (id, v) => (fn(v, q), id) }.sorted.take(8)
-            .zipWithIndex.map { case ((_, id), i) => (qid, id, (i + 1).toLong) }
-        }
-        assert(collectKj(df) == want)
+        // the queries collect and one covering pool round: `id >= 494` is
+        // key-only, so a round is its pool job alone, with no survivor fetch
+        assert(AnnTopKRewrite.planningJobs.get() - before == 2)
+        assert(collectKj(df) == brute(tableDir, qs, 8, keep = _._1 >= 494))
       }
     }
+  }
+
+  test("KNN-join prefilter cost: a key-only filter runs one Spark job per " +
+       "pool round and no survivor fetch; a residual one adds one fetch") {
+    val (tableDir, indexDir) = setup
+    AnnCatalog.register(tableDir, indexDir, "id", "vec")
+    try withRule {
+      // default probes (3 of 8 cells) and refine 1: each prefilter below
+      // widens over several rounds
+      withConfs("graft.ann.refine" -> "1") {
+        val byId = data(tableDir).toMap
+        val qs = Seq(0L -> byId(3L), 1L -> byId(9L))
+        // the first serve after registering loads the index and its row
+        // count; keep those jobs out of the counts
+        kjDf(tableDir, qs, 5).queryExecution.optimizedPlan
+        // plan the prefiltered join (its planning jobs run here), check it
+        // against brute force, and return (planning jobs, Spark jobs,
+        // survivor fetches = the planned scans of the table)
+        def cost(pred: Column, keep: ((Long, Array[Float])) => Boolean) = {
+          val df = kjDf(tableDir, qs, 5, Some(pred))
+          val pj = AnnTopKRewrite.planningJobs.get()
+          val ((_, fetches), jobs) = graft.PlanProbes.jobsOf(spark)(
+            graft.PlanProbes.scansOf(spark, tableDir)(df.queryExecution.optimizedPlan))
+          val planning = AnnTopKRewrite.planningJobs.get() - pj
+          assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
+            s"expected a served prefiltered join:\n${df.queryExecution.optimizedPlan}")
+          assert(collectKj(df) == brute(tableDir, qs, 5, keep = keep))
+          (planning, jobs, fetches)
+        }
+        // key-only: the queries collect (a local relation, no Spark job),
+        // then 3 pool rounds of one Spark job each and no survivor fetch
+        val (pjKey, jobsKey, fetchKey) = cost(col("id") % 7 === 0, _._1 % 7 == 0)
+        assert(fetchKey.isEmpty, s"a key-only prefilter fetched survivors: $fetchKey")
+        assert(pjKey == 1 + 3, s"key-only: $pjKey planning jobs")
+        assert(jobsKey == 3, s"key-only: $jobsKey Spark jobs for 3 pool rounds")
+        // residual: 3 rounds, each a pool job plus one single-job survivor
+        // fetch that reads the id and the residual's column
+        val (pjRes, jobsRes, fetchRes) =
+          cost(element_at(col("vec"), 1) > 0f, _._2(0) > 0f)
+        assert(fetchRes.length == 3, s"residual: ${fetchRes.length} survivor fetches")
+        fetchRes.foreach(cols => assert(cols == Set("id", "vec"), cols))
+        assert(pjRes == 1 + 3 + 3, s"residual: $pjRes planning jobs")
+        assert(jobsRes == 3 + 3, s"residual: $jobsRes Spark jobs")
+        // mixed: the key-only conjunct runs in the pool, the residual is
+        // fetched per round; the third round's pools hold every row that
+        // passes `id % 7 = 0` at full probes, so it covers and fetches none
+        val (pjMix, jobsMix, fetchMix) =
+          cost(col("id") % 7 === 0 && element_at(col("vec"), 1) > 0f,
+            r => r._1 % 7 == 0 && r._2(0) > 0f)
+        assert(fetchMix.length == 2, s"mixed: ${fetchMix.length} survivor fetches")
+        assert(pjMix == 1 + 3 + 2, s"mixed: $pjMix planning jobs")
+        assert(jobsMix == 3 + 2, s"mixed: $jobsMix Spark jobs")
+      }
+    } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("a codes-only partitioned corpus serves a prefiltered KNN join from " +
+       "estimate-only pools; unfiltered, it has no rerank table and declines") {
+    val (tableDir, _) = setup
+    val dst = Files.createTempDirectory("graft-kj-novec-part").toString
+    spark.read.parquet(tableDir)
+      .withColumn("pt", (col("id") % 2).cast("int"))
+      .write.partitionBy("pt").mode("overwrite").parquet(dst)
+    val children = (0 to 1).map(p => s"$dst/pt=$p")
+    children.foreach { child =>
+      val idir = Files.createTempDirectory("graft-kj-novec-pidx").toString
+      IvfIndex.build(spark.read.parquet(child), "id", "vec", idir,
+        IvfConfig(lists = 8, storeVectors = false))
+      AnnCatalog.register(child, idir, "id", "vec")
+    }
+    try withRule {
+      withConfs("graft.ann.probes" -> "8", "graft.ann.refine" -> "20",
+          "graft.ann.cost.enable" -> "false") {
+        val byId = data(tableDir).toMap
+        val qs = Seq(0L -> byId(5L), 1L -> byId(12L))
+        val df = kjDf(dst, qs, 4, Some(col("id") % 3 === 1))
+        assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
+          s"expected a served codes-only prefiltered join:\n${df.queryExecution.optimizedPlan}")
+        assert(collectKj(df) == brute(tableDir, qs, 4, keep = _._1 % 3 == 1))
+        // the per-child entries share no table: the in-index rerank of the
+        // unfiltered path has no vectors to read, so it keeps the exact plan
+        assert(!AnnTopKRewrite.inServed(kjDf(dst, qs, 4).queryExecution.optimizedPlan.toString))
+      }
+    } finally children.foreach(AnnCatalog.unregister)
   }
 
   test("declines: kill switch, join condition, rank(), desc, " +
