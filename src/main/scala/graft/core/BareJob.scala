@@ -24,7 +24,13 @@ object BareJob {
   /** Run `task` once per partition of `rdd`, as one job; one result per
     * partition, in partition order. */
   def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U): Array[U] =
-    rdd.sparkContext.runJob(rdd, task, 0 until rdd.getNumPartitions)
+    run(rdd, task, 0 until rdd.getNumPartitions)
+
+  /** Run `task` over only the partitions `parts` of `rdd`, as one job;
+    * one result per listed partition, in the listed order. */
+  def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U,
+      parts: Seq[Int]): Array[U] =
+    rdd.sparkContext.runJob(rdd, task, parts)
 
   /** Column 0 (a long) of every row of `rdd`, as one job. */
   def longs(rdd: RDD[InternalRow]): Array[Long] = run(rdd, FirstLongs).flatten

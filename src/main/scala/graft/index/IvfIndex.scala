@@ -2,7 +2,7 @@ package graft.index
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Predicate, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -215,6 +215,10 @@ object IvfIndex {
     * because the code bound kept more than [[rangeScanFallbackFrac]] of
     * the table (no pruning to exploit). */
   val rangeScanFallbacks = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Range estimate hits brought to the driver by [[collectHits]], summed
+    * over calls. */
+  private[index] val rangeDriverTuples = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Candidate fraction above which a range sphere abandons the
     * candidate path for a direct exact scan: past this the estimate
@@ -757,23 +761,23 @@ object IvfIndex {
   // helpers instead list every root's PROBED CLUSTER directories as
   // explicit leaf parquet paths and read them as ONE relation: a single
   // analyzed scan at any width, with each row resolving its owning
-  // (root, cluster) from its file path against a broadcast directory
+  // (root, cluster) from its file path against a directory
   // map and scored with that root's own prep (residual query, sums,
   // cluster dot — roots may differ in bits/storage/rotation).
   //
   // Trade, documented: the direct file read bypasses a prewarm() /
   // prewarmCodes() cache on the indexes it reads (probed cells come
-  // from the OS page cache instead). Every IVF range path — single-root
-  // included — reads flat, so range never uses those caches. The top-k
-  // pool has three row sources (PoolPlan.poolRows): a warm single root
-  // runs over its resident source, planned once per persisted cache; a
-  // cold single root plans a partition-pruned scan per pool; more roots
-  // plan the flat read per pool.
+  // from the OS page cache instead), so a single root never reads flat.
+  // The one cell scan (top-k pool and sphere range alike) has three
+  // row sources (PoolPlan.poolRows): a warm single root runs over its
+  // resident source, planned once per persisted cache; a cold single
+  // root plans a partition-pruned scan per scan; more roots plan the
+  // flat read per scan.
   // ------------------------------------------------------------------
 
-  /** Per-dir structural info for the flat read: (root, clusterId, bits,
-    * dim, isL2, isCos). Query preps travel separately, per (root, cell). */
-  private type DirInfo = (Int, Int, Int, Int, Boolean, Boolean)
+  /** Per-dir info for the flat read: (root, clusterId). Each root's code
+    * layout and the query preps travel separately ([[CellScan]]). */
+  private type DirInfo = (Int, Int)
 
   /** Register the probed-cluster leaf dirs of `ix` (current generation +
     * delta): structural info into `into`, and the dirs' pre-listed data
@@ -789,10 +793,6 @@ object IvfIndex {
     val gen = dl.gen
     val genCids = dl.genCids
     val deltaCids = dl.deltaCids
-    val bits = ix.meta.cfg.bits
-    val dim = ix.meta.dim
-    val isL2 = ix.meta.cfg.metric == "l2"
-    val isCos = ix.meta.cfg.metric == "cosdist"
     probed.foreach { cid =>
       val cands =
         (if (genCids.contains(cid)) s"${ix.dir}/$gen/cluster_id=$cid" :: Nil else Nil) :::
@@ -804,7 +804,7 @@ object IvfIndex {
         // guaranteed lookup miss only on this flat path
         val abs = Paths.get(d).toAbsolutePath.normalize.toString
         val key = new org.apache.hadoop.fs.Path(abs).toUri.getPath
-        into(key) = (root, cid, bits, dim, isL2, isCos)
+        into(key) = (root, cid)
         dl.filesByDir.get(key).foreach(files ++= _)
       }
     }
@@ -814,14 +814,15 @@ object IvfIndex {
     * ONE parquet relation, with an optional predicate pushed into the
     * scan — the rescore face of the flat multi-root read for callers
     * whose candidates are not cell-localized (packed-key MaxSim docs).
-    * Returns the raw (id, vec, __path) frame plus the dir -> root map
-    * (broadcast by the caller; resolve rows with [[rootOf]]). A per-root
+    * Returns the raw (id, vec, __path) frame plus the [[RootOfPath]]
+    * that resolves a row's root (captured per task, not broadcast: its
+    * dir cache is per copy). A per-root
     * union of dataDf reads expresses the same scan but analyzes R
     * relations per plan — the linear planning term the flat read exists
     * to remove. Requires homogeneous storage across roots. */
   private[graft] def flatAllVecsFor(idxs: Seq[IvfIndex],
       pred: Option[org.apache.spark.sql.Column])
-      : (org.apache.spark.sql.DataFrame, Map[String, Int]) = {
+      : (org.apache.spark.sql.DataFrame, RootOfPath) = {
     val h = idxs.head
     val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
     val files =
@@ -831,25 +832,7 @@ object IvfIndex {
       probedDirs(ix, r, dl.genCids ++ dl.deltaCids, info, files)
     }
     val df0 = flatVecsDf(h.spark, files.toArray, h.meta.cfg.storage == "f16")
-    (pred.map(df0.filter).getOrElse(df0),
-      info.iterator.map { case (k, v) => k -> v._1 }.toMap)
-  }
-
-  /** Resolve a row's owning ROOT from its file path against a
-    * [[flatAllVecsFor]] dir map, memoized per distinct dir. */
-  private[graft] def rootOf(info: Map[String, Int],
-      cache: java.util.HashMap[String, Integer], path: String): Int = {
-    val cut = path.lastIndexOf('/')
-    val dirStr = if (cut >= 0) path.substring(0, cut) else path
-    var r = cache.get(dirStr)
-    if (r == null) {
-      val key = new org.apache.hadoop.fs.Path(dirStr).toUri.getPath
-      r = Integer.valueOf(info.getOrElse(key, throw new IllegalStateException(
-        s"flat all-cells read: file dir '$dirStr' (key '$key') matches no " +
-        "registered cluster dir — a path-normalization mismatch")))
-      cache.put(dirStr, r)
-    }
-    r.intValue()
+    (pred.map(df0.filter).getOrElse(df0), new RootOfPath(info.toMap))
   }
 
   /** One query set's scoring preps for one (root, cell), as parallel
@@ -861,12 +844,13 @@ object IvfIndex {
       val qSum: Array[Double], val qNormSq: Array[Double], val cDot: Array[Double])
       extends Serializable
 
-  /** What one pool pass plans on the driver and its rerank reuses (no
-    * re-probing): per root the prepped queries (`qq(root)(qi)`) and the
-    * union of probed cells; past one root, the flat read's dir map and
-    * the probed cells' files. */
+  /** What one cell scan plans on the driver and its exact phase reuses
+    * (no re-probing): per root the prepped queries (`qq(root)(qi)`), each
+    * query's cells (`cells(root)(qi)`) and their union (`probed`); past
+    * one root, the flat read's dir map and the probed cells' files. */
   private final class PoolPlan(val idxs: Seq[IvfIndex],
-      val qq: Array[Array[Array[Float]]], val probed: Array[Array[Int]],
+      val qq: Array[Array[Array[Float]]], val cells: Array[Array[Array[Int]]],
+      val probed: Array[Array[Int]],
       val info: Map[String, DirInfo],
       val files: Array[org.apache.hadoop.fs.FileStatus]) {
     /** Past one root, both phases read ONE flat parquet relation over
@@ -875,7 +859,7 @@ object IvfIndex {
       * is a column). */
     def flat: Boolean = idxs.length > 1
     def empty: Boolean = if (flat) files.isEmpty else probed(0).isEmpty
-    /** Pool rows (id, cmeta, codes, cluster_id | file path), from one of
+    /** Scan rows (id, cmeta, codes, cluster_id | file path), from one of
       * three sources:
       *  - warm resident: one root whose prewarm() / prewarmCodes() cache
       *    is valid reuses the RDD planned once over that cache
@@ -884,17 +868,30 @@ object IvfIndex {
       *    of the probed cells ([[IvfIndex.poolScan]]);
       *  - flat: more roots plan the flat read of the probed cells' files. */
     def poolRows: RDD[InternalRow] =
-      if (flat) planPoolSource(flatCodesFor(idxs.head.spark, files).toDF())
+      if (flat) planPoolSource(flatCodesFor(idxs.head.spark, files))
       else idxs.head.residentPool.map(_._2)
         .getOrElse(planPoolSource(idxs.head.poolScan(probed(0))))
-    /** Rerank rows: (id, vec[, file path]). */
+    /** Exact-phase rows: (id, vec[, file path]). */
     def vecs: DataFrame =
       if (flat) flatVecsDf(idxs.head.spark, files, idxs.head.meta.cfg.storage == "f16")
       else idxs.head.rerankScan(probed(0))
+    /** This plan over only the cells of queries `qis`: a range's exact
+      * phase skips the cells only its scan-fallback spheres probe, and
+      * the fallback reads only its own spheres' cells. */
+    def only(qis: Seq[Int]): PoolPlan = {
+      val sub = cells.map(byQ => qis.flatMap(byQ(_)).distinct.sorted.toArray)
+      val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
+      val files =
+        scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+      if (flat) idxs.zipWithIndex.foreach { case (ix, r) =>
+        probedDirs(ix, r, sub(r), info, files)
+      }
+      new PoolPlan(idxs, qq, cells, sub, info.toMap, files.toArray)
+    }
   }
 
   /** Pool row sources planned (Catalyst analysis through physical plan)
-    * so far: one per cold or flat pool, one per persisted relation for a
+    * so far: one per cold or flat scan, one per persisted relation for a
     * warm root. */
   private[index] val poolSourcePlans = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -903,37 +900,33 @@ object IvfIndex {
     ColumnBridge.toInternalRdd(df)
   }
 
-  /** The ONE IVF top-k estimate pool (reference crates/vchordrq/src/
-    * search.rs:36-196: probe, then RaBitQ lower bound rough - eps*err):
-    * per (root, query), the exact top `nCand` (id, lb) by (lb, id) over
-    * that root's probed cells, from ONE Spark job for R roots x B
-    * queries. Each row's codes unpack ONCE and every query probing its
-    * cell scores against that scratch (bit-identical to
-    * [[RaBitQ.estimateDot]]); partition-local [[graft.core.BoundedTopK]]
-    * heaps bound each partition's output, and [[collectPools]] bounds the
-    * driver collect. Queries are prepped PER ROOT (roots may differ in
-    * bits, storage and rotation). `lb` carries no cosdist output shift
-    * (ordering only). `keep` ([[KeyFilter]]) admits a row to the pools
-    * before its codes unpack, so the pools are the top `nCand` of the
-    * rows it passes. Returns the plan for the rerank plus
-    * (root, queryIdx, id, lb) rows, sorted by (lb, id) within each
-    * (root, query). */
-  private def pools(idxs: Seq[IvfIndex], queries: Array[Array[Float]],
-      nCand: Int, probes: Seq[Int], epsilon: Double,
-      probes1: Int = -1, keep: Option[KeyFilter] = None)
-      : (PoolPlan, Array[(Int, Int, Long, Double)]) = {
-    require(idxs.nonEmpty && probes.length == idxs.length,
-      "one probe budget per root index")
+  /** What a cell-scan task ships: per root, dense over cells, the preps
+    * of the queries scanning each cell (null = none); the flat read's dir
+    * map; each root's code layout; and epsilon. */
+  private final class CellScan(val preps: Array[Array[CellPreps]],
+      val info: Map[String, DirInfo], val flat: Boolean, val bits: Array[Int],
+      val dims: Array[Int], val isL2: Array[Boolean], val eps: Double) extends Serializable
+
+  /** The driver half of every IVF cell scan, shared by the top-k pool and
+    * the sphere range: per root, each query is recorded, prepped and
+    * given its cells by `cellsOf(root, queryIdx, prepped query)` (the
+    * nearest centroids for top-k, the sphere-intersecting cells for
+    * range), and each cell the scoring preps of the queries scanning it.
+    * Queries are prepped PER ROOT (roots may differ in bits, storage and
+    * rotation). */
+  private def planCells(idxs: Seq[IvfIndex], queries: Array[Array[Float]],
+      epsilon: Double, cellsOf: (Int, Int, Array[Float]) => Array[Int])
+      : (PoolPlan, CellScan) = {
     require(queries.nonEmpty, "empty query batch")
-    val spark = idxs.head.spark
     val nQ = queries.length
     val nRoots = idxs.length
     val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
     val files =
       scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
     val qq = Array.ofDim[Array[Float]](nRoots, nQ)
+    val cells = Array.ofDim[Array[Int]](nRoots, nQ)
     val probed = new Array[Array[Int]](nRoots)
-    // per root, dense over cells: the preps of the queries probing each
+    // per root, dense over cells: the preps of the queries scanning each
     val preps = new Array[Array[CellPreps]](nRoots)
     idxs.zipWithIndex.foreach { case (ix, r) =>
       val byCell = scala.collection.mutable.HashMap.empty[Int,
@@ -941,9 +934,9 @@ object IvfIndex {
       queries.zipWithIndex.foreach { case (q, qi) =>
         graft.eval.QueryRecorder.record(ix.dir, q)
         qq(r)(qi) = ix.prepQuery(q)
-        val cells = ix.probe(q, probes(r), probes1)
-        val pc = ix.clusterPrep(qq(r)(qi), cells)
-        cells.foreach { cid =>
+        cells(r)(qi) = cellsOf(r, qi, qq(r)(qi))
+        val pc = ix.clusterPrep(qq(r)(qi), cells(r)(qi))
+        cells(r)(qi).foreach { cid =>
           byCell.getOrElseUpdate(cid,
             scala.collection.mutable.ArrayBuffer.empty) += ((qi, pc(cid)))
         }
@@ -956,12 +949,81 @@ object IvfIndex {
       }
       if (nRoots > 1) probedDirs(ix, r, probed(r), info, files)
     }
-    val plan = new PoolPlan(idxs, qq, probed, info.toMap, files.toArray)
+    val plan = new PoolPlan(idxs, qq, cells, probed, info.toMap, files.toArray)
+    (plan, new CellScan(preps, plan.info, plan.flat, idxs.map(_.meta.cfg.bits).toArray,
+      idxs.map(_.meta.dim).toArray, idxs.map(_.meta.cfg.metric == "l2").toArray, epsilon))
+  }
+
+  /** One task's walk over cell-scan rows: `cell` resolves a row's
+    * (root, cell) — from its file path when flat, else `cluster_id` —
+    * and returns the preps of the queries scanning that cell (null =
+    * none, so a source holding every cell scans exactly what a pruned
+    * one does); `unpack` decodes the row's codes ONCE; `lb` is query
+    * slot i's epsilon-scaled lower bound over them, bit-identical to
+    * [[lbOf]] (no cosdist output shift). The one per-row bound of the
+    * top-k pool and the sphere range. */
+  private final class RowBound(s: CellScan) {
+    private val dirCache = new java.util.HashMap[String, DirInfo]()
+    private val scratch = new Array[Float](s.dims.max)
+    private val bias = s.bits.map(RaBitQ.biasOf)
+    private val sqrtDim = s.dims.map(d => math.sqrt(d.toDouble))
+    private var disU2 = 0.0
+    private var scale = 0.0
+    var root = 0
+    def cell(row: InternalRow): CellPreps = {
+      var cid = 0
+      if (s.flat) {
+        val d = dirInfoFor(s.info, dirCache, row.getString(3))
+        root = d._1; cid = d._2
+      } else cid = row.getInt(3)
+      val rp = s.preps(root)
+      if (cid >= 0 && cid < rp.length) rp(cid) else null
+    }
+    def unpack(row: InternalRow): Unit = {
+      val cm = row.getArray(1)
+      disU2 = cm.getFloat(0)
+      scale = RaBitQ.scaleOf(cm.getFloat(0), cm.getFloat(1))
+      RaBitQ.unpackTo(row.getBinary(2), s.bits(root), s.dims(root), scratch)
+    }
+    def lb(cp: CellPreps, i: Int): Double = {
+      val qNormSq = cp.qNormSq(i)
+      val d = RaBitQ.estimateDotUnpacked(scratch, s.dims(root), scale, bias(root),
+        cp.qr(i), cp.qSum(i))
+      val err = math.sqrt(qNormSq) * scale * sqrtDim(root)
+      // L2 from the residual estimate; dot-family adds the cluster term
+      // dot(q, c) back
+      if (s.isL2(root)) {
+        val e = math.max(qNormSq + disU2 - 2.0 * d, 0.0)
+        math.sqrt(math.max(e - s.eps * err, 0.0))
+      } else -(d + cp.cDot(i)) - s.eps * err
+    }
+  }
+
+  /** The ONE IVF top-k estimate pool (reference crates/vchordrq/src/
+    * search.rs:36-196: probe, then RaBitQ lower bound rough - eps*err):
+    * per (root, query), the exact top `nCand` (id, lb) by (lb, id) over
+    * that root's probed cells, from ONE Spark job for R roots x B
+    * queries. Each row's codes unpack ONCE and every query probing its
+    * cell scores against that scratch ([[RowBound]]); partition-local
+    * [[graft.core.BoundedTopK]] heaps bound each partition's output, and
+    * [[collectPools]] bounds the driver collect. `lb` carries no cosdist
+    * output shift (ordering only). `keep` ([[KeyFilter]]) admits a row to
+    * the pools before its codes unpack, so the pools are the top `nCand`
+    * of the rows it passes. Returns the plan for the rerank plus
+    * (root, queryIdx, id, lb) rows, sorted by (lb, id) within each
+    * (root, query). */
+  private def pools(idxs: Seq[IvfIndex], queries: Array[Array[Float]],
+      nCand: Int, probes: Seq[Int], epsilon: Double,
+      probes1: Int = -1, keep: Option[KeyFilter] = None)
+      : (PoolPlan, Array[(Int, Int, Long, Double)]) = {
+    require(idxs.nonEmpty && probes.length == idxs.length,
+      "one probe budget per root index")
+    val nQ = queries.length
+    val (plan, scan) = planCells(idxs, queries, epsilon,
+      (r, qi, _) => idxs(r).probe(queries(qi), probes(r), probes1))
     if (plan.empty) return (plan, Array.empty)
-    val task = new PoolTask(preps, plan.info, plan.flat, nQ, nCand,
-      idxs.map(_.meta.cfg.bits).toArray, idxs.map(_.meta.dim).toArray,
-      idxs.map(_.meta.cfg.metric == "l2").toArray, epsilon, keep.orNull)
-    (plan, collectPools(spark, plan.poolRows, task, nRoots * nQ, nCand)
+    val task = new PoolTask(scan, nQ, nCand, keep.orNull)
+    (plan, collectPools(idxs.head.spark, plan.poolRows, task, idxs.length * nQ, nCand)
       .map { case (slot, id, lb) => (slot / nQ, slot % nQ, id, lb) })
   }
 
@@ -976,15 +1038,9 @@ object IvfIndex {
   /** The pool's per-partition kernel, a named task ([[graft.core.BareJob]]:
     * no closure cleaning, and the preps ride in the stage's task binary).
     * Per (root, query) slot `root * nQ + qi`, the partition's exact top
-    * `nCand` (slot, id, lb) by (lb, id). A row resolves (root, cell) from
-    * its file path when `flat`, else reads `cluster_id`; a cell no query
-    * probes (`preps(root)(cid) == null`) is skipped, so a source that
-    * holds every cell pools exactly what a pruned one does. A probed row
-    * `keep` (null = every row) rejects is skipped too. */
-  private final class PoolTask(preps: Array[Array[CellPreps]],
-      info: Map[String, DirInfo], flat: Boolean, nQ: Int, nCand: Int,
-      bits: Array[Int], dims: Array[Int], isL2: Array[Boolean], eps: Double,
-      keep: KeyFilter)
+    * `nCand` (slot, id, lb) by (lb, id). A probed row `keep` (null = every
+    * row) rejects is skipped. */
+  private final class PoolTask(scan: CellScan, nQ: Int, nCand: Int, keep: KeyFilter)
       extends ((TaskContext, Iterator[InternalRow]) => Array[(Int, Long, Double)])
       with Serializable {
     def apply(ctx: TaskContext, it: Iterator[InternalRow]): Array[(Int, Long, Double)] = {
@@ -997,20 +1053,10 @@ object IvfIndex {
         }
       var asked = 0L
       var passed = 0L
-      val dirCache = new java.util.HashMap[String, DirInfo]()
-      val heaps = new Array[graft.core.BoundedTopK](preps.length * nQ)
-      val scratch = new Array[Float](dims.max)
-      val bias = bits.map(RaBitQ.biasOf)
-      val sqrtDim = dims.map(d => math.sqrt(d.toDouble))
+      val rb = new RowBound(scan)
+      val heaps = new Array[graft.core.BoundedTopK](scan.preps.length * nQ)
       it.foreach { row =>
-        var root = 0
-        var cid = 0
-        if (flat) {
-          val d = dirInfoFor(info, dirCache, row.getString(3))
-          root = d._1; cid = d._2
-        } else cid = row.getInt(3)
-        val rp = preps(root)
-        val cp = if (cid >= 0 && cid < rp.length) rp(cid) else null
+        val cp = rb.cell(row)
         var in = cp != null
         if (in && admit != null) {
           asked += 1
@@ -1019,28 +1065,13 @@ object IvfIndex {
         }
         if (in) {
           val id = row.getLong(0)
-          val cm = row.getArray(1)
-          val disU2 = cm.getFloat(0)
-          val scale = RaBitQ.scaleOf(disU2, cm.getFloat(1))
-          val dim = dims(root)
-          RaBitQ.unpackTo(row.getBinary(2), bits(root), dim, scratch)
+          rb.unpack(row)
           var i = 0
           while (i < cp.qis.length) {
-            val qNormSq = cp.qNormSq(i)
-            val d = RaBitQ.estimateDotUnpacked(scratch, dim, scale, bias(root),
-              cp.qr(i), cp.qSum(i))
-            val err = math.sqrt(qNormSq) * scale * sqrtDim(root)
-            // the lbOf bound: L2 from the residual estimate; dot-family
-            // adds the cluster term dot(q, c) back
-            val lb =
-              if (isL2(root)) {
-                val e = math.max(qNormSq + disU2 - 2.0 * d, 0.0)
-                math.sqrt(math.max(e - eps * err, 0.0))
-              } else -(d + cp.cDot(i)) - eps * err
-            val slot = root * nQ + cp.qis(i)
+            val slot = rb.root * nQ + cp.qis(i)
             var h = heaps(slot)
             if (h == null) { h = new graft.core.BoundedTopK(nCand); heaps(slot) = h }
-            h.offer(lb, id)
+            h.offer(rb.lb(cp, i), id)
             i += 1
           }
         }
@@ -1054,6 +1085,70 @@ object IvfIndex {
         s += 1
       }
       out.toArray
+    }
+  }
+
+  /** The sphere range's per-partition kernel over the same rows and
+    * bound as [[PoolTask]]: (queryIdx, root, id) for each sphere whose
+    * bound, cos-shifted at the cutoff, is below its radius — every
+    * passing sphere, or only the first when `firstHit`. `apply` returns
+    * a partition's first `cap` hits and its full hit count, the two
+    * halves of the bounded driver collect ([[collectHits]]); the
+    * distributed survivor tier maps `hits` uncapped. A gen+delta double
+    * row emits its tuples twice. */
+  private final class RangeTask(scan: CellScan, radii: Array[Double],
+      isCos: Array[Boolean], firstHit: Boolean, val cap: Int = Int.MaxValue)
+      extends ((TaskContext, Iterator[InternalRow]) => (Array[(Int, Int, Long)], Long))
+      with Serializable {
+    def capped(c: Int): RangeTask = new RangeTask(scan, radii, isCos, firstHit, c)
+    def hits(it: Iterator[InternalRow]): Iterator[(Int, Int, Long)] = {
+      val rb = new RowBound(scan)
+      it.flatMap { row =>
+        val cp = rb.cell(row)
+        if (cp == null) Iterator.empty
+        else {
+          val id = row.getLong(0)
+          val root = rb.root
+          rb.unpack(row)
+          val pass = cp.qis.indices.iterator.filter { i =>
+            val lb = rb.lb(cp, i)
+            (if (isCos(root)) 1.0 + lb else lb) < radii(cp.qis(i))
+          }.map(i => (cp.qis(i), root, id))
+          if (firstHit) pass.take(1) else pass
+        }
+      }
+    }
+    def apply(ctx: TaskContext, it: Iterator[InternalRow]): (Array[(Int, Int, Long)], Long) = {
+      val out = Array.newBuilder[(Int, Int, Long)]
+      var n = 0L
+      hits(it).foreach { h => if (n < cap) out += h; n += 1 }
+      (out.result(), n)
+    }
+  }
+
+  /** The range estimate's driver collect, bounded in TOTAL: every
+    * (queryIdx, root, id) hit of `task` over `rows` when there are at
+    * most `lim`, else null. A first job ships each partition's first
+    * ceil((lim + 1) / partitions) hits and its full count, so at most
+    * lim + partitions tuples reach the driver however large the sphere;
+    * only when the counts sum to at most `lim` but some partition passed
+    * its share does a second job re-collect just those partitions whole
+    * (at most `lim` tuples). The usual bounded range is one job. */
+  private def collectHits(rows: RDD[InternalRow], task: RangeTask,
+      lim: Int): Array[(Int, Int, Long)] = {
+    val nParts = math.max(1, rows.getNumPartitions)
+    val share = ((lim.toLong + nParts) / nParts).toInt
+    val first = graft.core.BareJob.run(rows, task.capped(share))
+    val total = first.iterator.map(_._2).sum
+    rangeDriverTuples.addAndGet(first.iterator.map(_._1.length.toLong).sum)
+    if (total > lim) null
+    else {
+      val over = first.indices.filter(p => first(p)._2 > first(p)._1.length)
+      val again =
+        if (over.isEmpty) Array.empty[Array[(Int, Int, Long)]]
+        else graft.core.BareJob.run(rows, task, over).map(_._1)
+      rangeDriverTuples.addAndGet(again.iterator.map(_.length.toLong).sum)
+      (first.indices.filterNot(over.toSet).flatMap(first(_)._1) ++ again.iterator.flatten).toArray
     }
   }
 
@@ -1088,20 +1183,14 @@ object IvfIndex {
     }
   }
 
-  /** Per-(root, query) estimate pools for callers that score them
-    * themselves (the partitioned MaxSim serves, T = query tokens):
-    * (root, queryIdx, id, lb), lb without the cosdist shift. */
-  private[graft] def multiEstimatePools(idxs: Seq[IvfIndex],
-      queries: Array[Array[Float]], nCand: Int, probes: Seq[Int],
-      epsilon: Double): Array[(Int, Int, Long, Double)] =
-    pools(idxs, queries, nCand, probes, epsilon)._2
-
-  /** The planner's IVF candidate pools (the top-k serve's one query, a
-    * KNN-join slice's many): per (root, query) the exact top `nCand`
-    * (root, queryIdx, id, lb) in (lb, id) order among the rows `keep` —
-    * a key-only prefilter bound as in [[KeyFilter]] — passes, plus how
-    * many probed rows `keep` was asked about and passed (0 and 0
-    * without it), one job for the whole batch. */
+  /** Per-(root, query) IVF estimate pools, one job for the whole batch:
+    * the planner's candidates (the top-k serve's one query, a KNN-join
+    * slice's many) and the partitioned MaxSim serves' (T = query tokens,
+    * scored by the caller). Per (root, query) the exact top `nCand`
+    * (root, queryIdx, id, lb) in (lb, id) order, lb without the cosdist
+    * shift, among the rows `keep` — a key-only prefilter bound as in
+    * [[KeyFilter]] — passes, plus how many probed rows `keep` was asked
+    * about and passed (0 and 0 without it). */
   private[graft] def multiEstimateCandidates(idxs: Seq[IvfIndex],
       queries: Array[Array[Float]], nCand: Int, probes: Seq[Int],
       epsilon: Double = 1.9, keep: Option[Expression] = None)
@@ -1112,112 +1201,38 @@ object IvfIndex {
     (cands, kf.fold(0L)(_.asked.value), kf.fold(0L)(_.passed.value))
   }
 
-  /** Driver-side range prep of every root plus the code-estimate
-    * survivor kernel — the ONE range estimate kernel, shared by the
-    * planner's candidate pool ([[multiRangeCandidateIds]]) and the
-    * batched range fold ([[rangeManyMultiHomogeneous]]). Per root and
-    * sphere: the prepped query, the sphere-intersecting cells
-    * (`rangeCells`) and their scoring preps. `codes` reads those cells'
-    * codes as ONE flat relation (null when no cell is probed); `hits`
-    * maps its rows to (qi, root, id) for each sphere whose
-    * epsilon-scaled lower bound (cos-shifted at the cutoff) undercuts
-    * its radius — every passing sphere, or only the first when
-    * `firstHit`. Callers run `hits` in their own mapPartitions so each
-    * picks its output encoder. A gen+delta double row emits its tuples
-    * twice. */
-  private final case class RangeEstimate(
-      codes: Dataset[(Long, Array[Float], Array[Byte], String)],
-      hits: Iterator[(Long, Array[Float], Array[Byte], String)] => Iterator[(Int, Int, Long)],
-      files: Array[org.apache.hadoop.fs.FileStatus],
-      bInfo: org.apache.spark.broadcast.Broadcast[Map[String, DirInfo]],
-      qq: Array[Array[Array[Float]]],
-      cells: Array[Array[Array[Int]]])
-
-  private def rangeEstimate(idxs: Seq[IvfIndex],
-      spheres: Array[(Array[Float], Double)], epsilon: Double,
-      firstHit: Boolean): RangeEstimate = {
-    val spark = idxs.head.spark
-    import spark.implicits._
-    val nQ = spheres.length
-    val info = scala.collection.mutable.HashMap.empty[String, DirInfo]
-    val files =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    // per root: cid -> preps of the spheres whose range cells include it
-    // ((queryIdx, radius, qr, qSum, qNormSq, clusterDot) per sphere); and
-    // per (root, query) the prepped vector + probed cells (the fold's
-    // exact phase and scan fallback reuse them — no re-probing)
-    val prepByRoot = Array.fill(idxs.length)(scala.collection.mutable
-      .HashMap.empty[Int, List[(Int, Double, Array[Float], Double, Double, Double)]])
-    val qqByRoot = Array.ofDim[Array[Float]](idxs.length, nQ)
-    val cellsByRootQ = Array.ofDim[Array[Int]](idxs.length, nQ)
-    idxs.zipWithIndex.foreach { case (ix, r) =>
-      val allProbed = scala.collection.mutable.LinkedHashSet.empty[Int]
-      spheres.zipWithIndex.foreach { case ((center, radius), qi) =>
-        graft.eval.QueryRecorder.record(ix.dir, center)
-        val qq = ix.prepQuery(center)
-        qqByRoot(r)(qi) = qq
-        val probed = ix.rangeCells(qq, radius)
-        cellsByRootQ(r)(qi) = probed
-        val pc = ix.clusterPrep(qq, probed)
-        probed.foreach { cid =>
-          val (qr, qSum, qNormSq, cDot) = pc(cid)
-          prepByRoot(r)(cid) = (qi, radius, qr, qSum, qNormSq, cDot) ::
-            prepByRoot(r).getOrElse(cid, Nil)
-          allProbed += cid
-        }
-      }
-      probedDirs(ix, r, allProbed, info, files)
-    }
-    val bInfo = spark.sparkContext.broadcast(info.toMap)
-    val bPreps = spark.sparkContext.broadcast(
-      prepByRoot.map(_.view.mapValues(_.toArray).toMap))
-    val eps = epsilon
-    val hits = (it: Iterator[(Long, Array[Float], Array[Byte], String)]) => {
-      val info = bInfo.value
-      val preps = bPreps.value
-      val dirCache = new java.util.HashMap[String, DirInfo]()
-      it.flatMap { case (id, cm, codes, path) =>
-        val (root, cid, bits, dim, isL2, isCos) = dirInfoFor(info, dirCache, path)
-        val sps = preps(root).getOrElse(cid,
-          Array.empty[(Int, Double, Array[Float], Double, Double, Double)])
-        if (sps.isEmpty) Iterator.empty
-        else {
-          val code = RaBitQ.Code(cm, codes, bits, dim)
-          val pass = sps.iterator.filter { case (_, rad, qr, qSum, qNormSq, cDot) =>
-            val lb0 = lbOf(code, bits, dim, isL2, qr, qSum, qNormSq, cDot, eps)
-            val lb = if (isCos) 1.0 + lb0 else lb0 // cosdist output shift
-            lb < rad
-          }.map(sp => (sp._1, root, id))
-          if (firstHit) pass.take(1) else pass
-        }
-      }
-    }
-    RangeEstimate(if (files.isEmpty) null else flatCodesFor(spark, files.toArray),
-      hits, files.toArray, bInfo, qqByRoot, cellsByRootQ)
+  /** The sphere range's cell scan (reference scanners/default.rs:111-117:
+    * the top-k scanner with the center as scan vector and the radius as
+    * cutoff): [[planCells]] over each sphere's intersecting cells
+    * (`rangeCells`), and the [[RangeTask]] that emits their hits. */
+  private def rangeScan(idxs: Seq[IvfIndex], centers: Array[Array[Float]],
+      radii: Array[Double], epsilon: Double,
+      firstHit: Boolean): (PoolPlan, RangeTask) = {
+    val (plan, scan) = planCells(idxs, centers, epsilon,
+      (r, qi, qq) => idxs(r).rangeCells(qq, radii(qi)))
+    (plan, new RangeTask(scan, radii, idxs.map(_.meta.cfg.metric == "cosdist").toArray,
+      firstHit))
   }
 
-  /** One-read multi-root MULTI-SPHERE range candidates: ids whose code
-    * lower bound undercuts SOME sphere's radius in that sphere's
-    * intersecting cells of ANY root ([[rangeEstimate]], a row exits at
-    * its first passing sphere), capped at `cap + 1` rows so callers
-    * detect overflow without an unbounded collect. One Spark job and ONE
-    * analyzed relation for R roots x M spheres — every planner range
+  /** Multi-root MULTI-SPHERE range candidates: ids whose code lower bound
+    * undercuts SOME sphere's radius in that sphere's intersecting cells
+    * of ANY root (a row exits at its first passing sphere), or None past
+    * `cap` of them — overflow is detected by the bounded
+    * [[collectHits]], never an unbounded collect. ONE Spark job over the
+    * pool's row sources (a second only when a partition passes its share
+    * of `cap` while the total stays under it) — every planner range
     * serve (standalone filter and order-by at M = 1, range join at any
     * M, on one root or many) pools through this. May contain gen+delta
-    * duplicates — callers dedup after the overflow check. */
+    * duplicates, counted toward `cap` — callers dedup. */
   private[graft] def multiRangeCandidateIds(idxs: Seq[IvfIndex],
       spheres: Array[(Array[Float], Double)], epsilon: Double,
-      cap: Int): Array[Long] = {
+      cap: Int): Option[Array[Long]] = {
     require(idxs.nonEmpty, "no root indexes")
     require(spheres.nonEmpty, "no spheres")
-    val spark = idxs.head.spark
-    import spark.implicits._
-    val e = rangeEstimate(idxs, spheres, epsilon, firstHit = true)
-    if (e.codes == null) Array.empty
-    else {
-      val hits = e.hits
-      e.codes.mapPartitions(it => hits(it).map(_._3)).limit(cap + 1).collect()
-    }
+    val (plan, task) = rangeScan(idxs, spheres.map(_._1), spheres.map(_._2), epsilon,
+      firstHit = true)
+    if (plan.empty) Some(Array.empty)
+    else Option(collectHits(plan.poolRows, task, cap)).map(_.map(_._3))
   }
 
   /** One index's on-disk layout snapshot: current generation name, the
@@ -1260,9 +1275,7 @@ object IvfIndex {
     * Pruned to the estimate columns plus the file path (no vec bytes
     * read — same column economics as codesDf). */
   private def flatCodesFor(spark: SparkSession,
-      files: Array[org.apache.hadoop.fs.FileStatus])
-      : Dataset[(Long, Array[Float], Array[Byte], String)] = {
-    import spark.implicits._
+      files: Array[org.apache.hadoop.fs.FileStatus]): DataFrame = {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("id", LongType),
@@ -1280,7 +1293,6 @@ object IvfIndex {
     spark.baseRelationToDataFrame(rel)
       .select(col("id"), col("cmeta"), col("codes"),
         col("_metadata.file_path").as("__path"))
-      .as[(Long, Array[Float], Array[Byte], String)]
   }
 
   /** Flat VECTOR read over exactly `files` (the rerank face of
@@ -1373,63 +1385,138 @@ object IvfIndex {
 
   /** The ONE IVF exact rerank (reference crates/vchordrq/src/rerank.rs:
     * 34-110 in-index, 111+ in-table): exact distances for pooled
-    * (root, queryIdx, id) candidates, as raw (queryIdx, id, dist) rows.
-    * In-index, one scan of the probed cells' vectors checks membership
-    * on the raw InternalRow (sorted-id binary search per root) BEFORE any
-    * vector decode and scores against the root-prepped query. In-table,
-    * candidates from any root only gate membership: the source table's
-    * rows are the single exact truth, point-fetched ([[pointFetch]]) and
-    * scored against the RAW queries. Rows are not folded: a gen+delta
-    * double row scores twice ([[topKFold]] keeps its best). */
+    * (root, queryIdx, id) candidates, as raw (queryIdx, id, dist) rows,
+    * from ONE job. In-index, a bare job ([[ExactTask]]) scans the probed
+    * cells' vectors once, checks membership per root and scores against
+    * the root-prepped query. In-table, [[tableScores]]. Rows are not
+    * folded: a gen+delta double row scores twice ([[topKFold]] keeps its
+    * best). */
   private def rerank(p: PoolPlan, cands: Array[(Int, Int, Long)],
       raw: Array[Array[Float]],
       rerankTable: Option[(DataFrame, String, String)]): Array[(Int, Long, Double)] = {
     if (cands.isEmpty) return Array.empty
-    val h = p.idxs.head
-    val spark = h.spark
-    import spark.implicits._
+    val cfg = p.idxs.head.meta.cfg
     rerankTable match {
       case Some((src, idCol, vecCol)) =>
-        val id2q: Map[Long, Array[Int]] =
-          cands.groupBy(_._3).view.mapValues(_.map(_._2).distinct).toMap
-        val kern = exactKernel(h.meta.cfg.metric, stored = false)
-        val bState = spark.sparkContext.broadcast((id2q, raw))
-        pointFetch(src, idCol, id2q.keys.toArray.sorted)
-          .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-          .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            val (i2q, qs) = bState.value
-            i2q.getOrElse(id, Array.empty[Int]).iterator.map(qi => (qi, id, kern(v, qs(qi))))
-          }.collect()
+        tableScores(src, idCol, vecCol, cands, raw, cfg.metric).collect()
       case None =>
-        // per root: sorted candidate ids + each id's query slots
-        val ids = Array.fill(p.idxs.length)(Array.empty[Long])
-        val qis = Array.fill(p.idxs.length)(Array.empty[Array[Int]])
-        cands.groupBy(_._1).foreach { case (r, cs) =>
-          val byId = cs.groupBy(_._3).toArray.sortBy(_._1)
-          ids(r) = byId.map(_._1)
-          qis(r) = byId.map(_._2.map(_._2).distinct)
+        val byRoot = cands.groupBy(_._1)
+        val members = Array.tabulate(p.idxs.length)(r =>
+          Members.of(byRoot.getOrElse(r, Array.empty[(Int, Int, Long)])))
+        graft.core.BareJob.run(ColumnBridge.toInternalRdd(p.vecs),
+          new ExactTask(members, null, p.qq, p.info, p.flat,
+            cfg.storage == "f16", cfg.metric, stored = true))
+          .flatMap { case (qi, id, d) => qi.indices.iterator.map(i => (qi(i), id(i), d(i))) }
+    }
+  }
+
+  /** One root's rerank membership: its sorted unique candidate ids and,
+    * CSR-style, each id's distinct query slots
+    * (`slots(offs(i) until offs(i + 1))`). Primitive arrays, so a task
+    * binary holding a million candidates (a large range) serializes and
+    * deserializes in a few bulk copies. */
+  private final class Members(val ids: Array[Long], val offs: Array[Int],
+      val slots: Array[Int]) extends Serializable
+
+  private object Members {
+    private val byIdThenSlot: Comparator[(Int, Int, Long)] = (a, b) => {
+      val c = java.lang.Long.compare(a._3, b._3)
+      if (c != 0) c else Integer.compare(a._2, b._2)
+    }
+    /** From one root's (root, queryIdx, id) candidates in any order;
+      * repeats fold. */
+    def of(cands: Array[(Int, Int, Long)]): Members = {
+      val s = cands.clone()
+      java.util.Arrays.sort(s, byIdThenSlot)
+      val ids = Array.newBuilder[Long]
+      val offs = Array.newBuilder[Int]
+      val slots = Array.newBuilder[Int]
+      var n = 0
+      var i = 0
+      while (i < s.length) {
+        val newId = i == 0 || s(i)._3 != s(i - 1)._3
+        if (newId) { ids += s(i)._3; offs += n }
+        if (newId || s(i)._2 != s(i - 1)._2) { slots += s(i)._2; n += 1 }
+        i += 1
+      }
+      offs += n
+      new Members(ids.result(), offs.result(), slots.result())
+    }
+  }
+
+  /** The in-table exact phase, lazy: candidates from any root only gate
+    * membership, since the source table's rows are the single exact
+    * truth; they are point-fetched ([[pointFetch]]) and scored against
+    * the RAW queries of their slots, as (queryIdx, id, dist). */
+  private def tableScores(src: DataFrame, idCol: String, vecCol: String,
+      cands: Array[(Int, Int, Long)], raw: Array[Array[Float]],
+      metric: String): Dataset[(Int, Long, Double)] = {
+    val spark = src.sparkSession
+    import spark.implicits._
+    val id2q: Map[Long, Array[Int]] =
+      cands.groupBy(_._3).view.mapValues(_.map(_._2).distinct).toMap
+    tableVecs(pointFetch(src, idCol, id2q.keys.toArray.sorted), idCol, vecCol)
+      .as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        val kern = exactKernel(metric, stored = false)
+        it.flatMap { case (id, v) =>
+          if (v == null) Iterator.empty
+          else id2q.getOrElse(id, Array.empty[Int]).iterator
+            .map(qi => (qi, id, kern(v, raw(qi))))
         }
-        val kern = exactKernel(h.meta.cfg.metric, stored = true)
-        val f16 = h.meta.cfg.storage == "f16"
-        val flat = p.flat
-        val bState = spark.sparkContext.broadcast((ids, qis, p.qq, p.info))
-        ColumnBridge.toInternalRdd(p.vecs).mapPartitions { it =>
-          val (ids, qis, qq, info) = bState.value
-          val dirCache = new java.util.HashMap[String, DirInfo]()
-          it.flatMap { row =>
-            val id = row.getLong(0)
-            val root = if (flat) dirInfoFor(info, dirCache, row.getString(2))._1 else 0
-            val at = java.util.Arrays.binarySearch(ids(root), id)
-            if (at < 0) Iterator.empty
-            else {
-              val v =
-                if (f16) graft.core.Half.decodeBytes(row.getBinary(1))
-                else row.getArray(1).toFloatArray()
-              qis(root)(at).iterator.map(qi => (qi, id, kern(v, qq(root)(qi))))
-            }
+      }
+  }
+
+  /** A rerank table's exact-phase rows: (id: long, vec: array<float>). */
+  private def tableVecs(src: DataFrame, idCol: String, vecCol: String): DataFrame =
+    src.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+
+  /** The exact phase's kernel over (id, vec[, file path]) rows, a named
+    * task: a row whose id is among its root's [[Members]] (binary search
+    * on the raw row, BEFORE any vector decode) scores against each of
+    * that id's query slots; with `members` null every row scores against
+    * every slot in `all` (the range's scan fallback).
+    * Output (queryIdx, id, dist): stored vectors against the root-prepped
+    * queries `qs(root)`, table vectors (`stored` false, one root) against
+    * the raw ones. A NULL id or vector scores nothing. */
+  private final class ExactTask(members: Array[Members],
+      all: Array[Int], qs: Array[Array[Array[Float]]], info: Map[String, DirInfo],
+      flat: Boolean, f16: Boolean, metric: String, stored: Boolean)
+      extends ((TaskContext, Iterator[InternalRow]) =>
+        (Array[Int], Array[Long], Array[Double]))
+      with Serializable {
+    def scores(it: Iterator[InternalRow]): Iterator[(Int, Long, Double)] = {
+      val kern = exactKernel(metric, stored)
+      val dirCache = new java.util.HashMap[String, DirInfo]()
+      it.flatMap { row =>
+        val root = if (flat) dirInfoFor(info, dirCache, row.getString(2))._1 else 0
+        val slots: Iterator[Int] =
+          if (row.isNullAt(0) || row.isNullAt(1)) null
+          else if (members == null) all.iterator
+          else {
+            val m = members(root)
+            val at = java.util.Arrays.binarySearch(m.ids, row.getLong(0))
+            if (at < 0) null else (m.offs(at) until m.offs(at + 1)).iterator.map(m.slots(_))
           }
-        }.collect()
+        if (slots == null) Iterator.empty
+        else {
+          val id = row.getLong(0)
+          val v =
+            if (f16) graft.core.Half.decodeBytes(row.getBinary(1))
+            else row.getArray(1).toFloatArray()
+          slots.map(qi => (qi, id, kern(v, qs(root)(qi))))
+        }
+      }
+    }
+    /** The rows as parallel primitive arrays, which a driver collect
+      * deserializes in bulk. */
+    def apply(ctx: TaskContext, it: Iterator[InternalRow])
+        : (Array[Int], Array[Long], Array[Double]) = {
+      val qi = Array.newBuilder[Int]
+      val id = Array.newBuilder[Long]
+      val dist = Array.newBuilder[Double]
+      scores(it).foreach { t => qi += t._1; id += t._2; dist += t._3 }
+      (qi.result(), id.result(), dist.result())
     }
   }
 
@@ -1485,17 +1572,21 @@ object IvfIndex {
     * M spheres x R roots answered by a CONSTANT number of Spark jobs.
     * [[IvfIndex.rangeSearch]] is this fold at M = 1, R = 1; a batch over
     * one index passes `Seq(idx)`; partition.slt-style corpora pass every
-    * per-child index. Job 1 pools (qid, root, id) code-estimate
-    * survivors over every root's sphere-intersecting cells from ONE flat
-    * parquet relation (a row passes its cell's spheres' epsilon-scaled
-    * lower bound, cos-shifted at the cutoff). Survivor delivery is
-    * two-tier: BOUNDED survivor sets (under
-    * `graft.ann.range.maxDriverSurvivors`, default 1M tuples) collect
-    * once and the exact strict-< cutoff runs as a membership
-    * mapPartitions over the flat VECTOR read (or a point fetch from the
-    * rerank table) — two jobs total; past the bound, survivors stay a
-    * DATAFRAME end to end — joined to the root-tagged vector read on
-    * (root, id), broadcast while bounded ([[rangeBroadcastCap]]) — so a
+    * per-child index. The estimate is the top-k pool's cell scan: ONE
+    * job of [[RangeTask]] over [[PoolPlan.poolRows]] (the resident
+    * source when a single root is warm, a pruned scan when it is cold,
+    * one flat relation past one root) emits (qid, root, id) survivors
+    * whose epsilon-scaled lower bound, cos-shifted at the cutoff, is
+    * below the radius. Survivor delivery is two-tier: BOUNDED survivor
+    * sets (under `graft.ann.range.maxDriverSurvivors`, default 1M tuples)
+    * collect in that job, bounded in total ([[collectHits]]: a second
+    * job only when one partition passes its share of the bound), and the
+    * exact strict-< cutoff is the top-k [[rerank]] of the probed cells'
+    * vectors followed by `dist < radius` on the driver — two jobs, and
+    * the answer returns as a sorted local frame (with a rerank table,
+    * the point fetch [[tableScores]] stays a lazy frame); past the
+    * bound, survivors stay a DATAFRAME end to end — joined to the vector
+    * read on (root, id), broadcast while bounded ([[rangeBroadcastCap]]) — so a
     * low-selectivity sphere over billions of rows is served without any
     * driver candidate collect. Spheres whose code bound kept more than
     * [[rangeScanFallbackFrac]] of the corpus take the direct-scan
@@ -1504,7 +1595,7 @@ object IvfIndex {
     * (rotation / cosine normalization may differ), and each row scores
     * only under its own root's prep. Children must share dim and metric;
     * STORAGE-mixed corpora (f32 + f16, full + codes-only with a rerank
-    * table) serve by homogeneous group — per-group survivor frames union
+    * table) serve by homogeneous group — per-group survivor rows union
     * exactly, since the range contract is a per-row cutoff with no
     * cross-group merge state. An id stored twice in one root (gen +
     * delta, append-without-delete) yields its rows independently — both
@@ -1521,7 +1612,7 @@ object IvfIndex {
     // dim and metric must agree (one sphere center, one comparable
     // cutoff); STORAGE-mixed corpora serve by homogeneous group below —
     // range output is a per-row cutoff with no cross-group merge state,
-    // so group frames union exactly (the searchManyMulti policy)
+    // so group rows union exactly (the searchManyMulti policy)
     require(idxs.forall(ix => ix.meta.dim == h.meta.dim &&
         ix.meta.cfg.metric == h.meta.cfg.metric),
       "rangeSearchManyMulti requires homogeneous dim and metric across " +
@@ -1533,64 +1624,72 @@ object IvfIndex {
     val groups: Seq[Seq[IvfIndex]] =
       idxs.groupBy(ix => (ix.meta.cfg.storage, ix.meta.cfg.storeVectors))
         .toSeq.sortBy(_._1).map(_._2)
-    if (groups.length > 1) {
-      // per-group serve, frames unioned, one global ordering: each
-      // group's rows are its own exact strict-< survivors, and the range
-      // contract has no cross-root fold — the union IS the answer. With
-      // a rerankTable the groups share ONE source of truth, so the union
-      // can carry identical duplicate rows (an id indexed by roots in
-      // two groups scores from the same table row in each; a group's
-      // no-prune scan fallback re-emits other groups' survivors from the
-      // shared table): distinct() folds them — exact, because in-table
-      // rows are unique per (qid, id). The no-rerank union keeps
-      // per-root rows independently (different stored vectors, the
-      // colliding-ids contract). The driver-survivor cap divides by the
-      // group count so a mixed call collects no more than a homogeneous
-      // one.
-      val unioned = groups.map(g => rangeManyMultiHomogeneous(g, queries,
-          epsilon, rerankTable, capDivisor = groups.length))
-        .reduce(_ unionByName _)
-      return (if (rerankTable.nonEmpty) unioned.distinct() else unioned)
-        .orderBy("qid", "dist", "id")
+    // per-group serve, rows unioned, one global ordering: each group's
+    // rows are its own exact strict-< survivors, and the range contract
+    // has no cross-root fold — the union IS the answer. With a
+    // rerankTable the groups share ONE source of truth, so the union can
+    // carry identical duplicate rows (an id indexed by roots in two
+    // groups scores from the same table row in each; a group's no-prune
+    // scan fallback re-emits other groups' survivors from the shared
+    // table): distinct folds them — exact, because in-table rows are
+    // unique per (qid, id). The no-rerank union keeps per-root rows
+    // independently (different stored vectors, the colliding-ids
+    // contract). The driver-survivor cap divides by the group count so
+    // a mixed call collects no more than a homogeneous one.
+    val dedup = rerankTable.nonEmpty && groups.length > 1
+    val parts = groups.map(g => rangeManyMultiHomogeneous(g, queries,
+      epsilon, rerankTable, capDivisor = groups.length))
+    val local = parts.flatMap(_._1)
+    val spread = parts.flatMap(_._2)
+    import h.spark.implicits._
+    // only the in-index rerank answers locally, so `dedup` (a rerank
+    // table's) never applies to `local`
+    if (spread.isEmpty) {
+      val sorted = local.toArray
+      java.util.Arrays.sort(sorted, byQidDistId)
+      sorted.toSeq.toDF("qid", "id", "dist")
     }
-    rangeManyMultiHomogeneous(idxs, queries, epsilon, rerankTable)
-      .orderBy("qid", "dist", "id")
+    else {
+      val all = (local.toDF("qid", "id", "dist") +: spread).reduce(_ unionByName _)
+      (if (dedup) all.distinct() else all).orderBy("qid", "dist", "id")
+    }
   }
 
-  /** One HOMOGENEOUS group's [[rangeSearchManyMulti]] body, returning
-    * the UNORDERED (qid, id, dist) survivor frame (the caller unions
-    * groups and orders once; `capDivisor` splits the driver-survivor
-    * budget across groups). */
+  /** Range output order (qid, dist, id), comparing fields in place (no
+    * key tuple per row). -0.0 ties 0.0 (an orthogonal negdot / cosdist
+    * row), as in Spark's orderBy. */
+  private val byQidDistId: Comparator[(Long, Long, Double)] = (a, b) => {
+    val q = java.lang.Long.compare(a._1, b._1)
+    val d = java.lang.Double.compare(a._3 + 0.0, b._3 + 0.0)
+    if (q != 0) q else if (d != 0) d else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** One HOMOGENEOUS group's [[rangeSearchManyMulti]] body: the rows the
+    * driver survivor tier answered, plus the UNORDERED (qid, id, dist)
+    * frame of the distributed tier and the scan fallback when either
+    * runs (the caller unions groups and orders once; `capDivisor` splits
+    * the driver-survivor budget across groups). */
   private def rangeManyMultiHomogeneous(idxs: Seq[IvfIndex],
       queries: Array[(Long, Array[Float], Double)],
       epsilon: Double,
       rerankTable: Option[(org.apache.spark.sql.DataFrame, String, String)],
       capDivisor: Int = 1)
-      : org.apache.spark.sql.DataFrame = {
+      : (Seq[(Long, Long, Double)], Option[DataFrame]) = {
     val h = idxs.head
     val spark = h.spark
     import spark.implicits._
-    val met = h.meta.cfg.metric
-    val f16 = h.meta.cfg.storage == "f16"
+    val cfg = h.meta.cfg
+    val f16 = cfg.storage == "f16"
     val nQ = queries.length
-    // job 1 (lazy plan): the shared code-estimate pass, emitting EVERY
-    // passing sphere (per-qid survivors, unlike the planner's
-    // any-sphere pooled ids). The driver tier dedups what it collects;
-    // the distributed tier dedups `cand0` so a gen+delta double row
-    // does not multiply through the join below
-    val RangeEstimate(codes, hits, files, bInfo, qqByRoot, cellsByRootQ) =
-      rangeEstimate(idxs, queries.map(q => (q._2, q._3)), epsilon, firstHit = false)
-    if (codes == null)
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-    val est = codes.mapPartitions(hits)
-    val qidArr = queries.map(_._1)
-    lazy val cand0 = est.toDF("qi", "root", "id").distinct()
-    val nTable = idxs.map(_.rowCount).sum
-    // TWO-TIER survivor delivery. Common case (bounded survivors): ONE
-    // estimate pass collects the (qi, root, id) survivors to the driver
-    // — per-query no-prune counts come free, and the exact phase is a
-    // straight membership mapPartitions over the flat vector read (no
-    // join, no broadcast-exchange job, no second codes pass). Past
+    val qids = queries.map(_._1)
+    val centers = queries.map(_._2)
+    val radii = queries.map(_._3)
+    // TWO-TIER survivor delivery. Common case (bounded survivors): the
+    // estimate job collects the (qi, root, id) survivors to the driver —
+    // per-query no-prune counts come free, and the exact phase is the
+    // top-k rerank (no join, no broadcast). The collect is bounded in
+    // total ([[collectHits]]: at most lim + partitions tuples decide the
+    // tier). Past
     // `graft.ann.range.maxDriverSurvivors` (default 1M tuples ≈ 24 MB
     // boxed) the huge-sphere path takes over: survivors stay a
     // DataFrame end to end — one count job for the no-prune split, the
@@ -1601,13 +1700,18 @@ object IvfIndex {
     // doubles can tip a sphere near it into the distributed tier.
     val maxDriver = graft.core.AnnConf(spark).rangeMaxDriverSurvivors /
       math.max(1, capDivisor)
+    val lim = math.min(math.max(maxDriver, 0L), (Int.MaxValue - 2).toLong).toInt
+    val (plan, task) = rangeScan(idxs, centers, radii, epsilon, firstHit = false)
+    if (plan.empty) return (Nil, None)
+    val rows = plan.poolRows
     val probeRows: Array[(Int, Int, Long)] =
       if (maxDriver <= 0) null
-      else {
-        val lim = math.min(maxDriver, (Int.MaxValue - 2).toLong).toInt
-        val r = est.limit(lim + 1).collect()
-        if (r.length > lim) null else r.distinct
-      }
+      else Option(collectHits(rows, task, lim)).map(_.distinct).orNull
+    // the distributed tier dedups so a gen+delta double row does not
+    // multiply through the join below
+    lazy val cand0 = rows.mapPartitions(it => task.hits(it))
+      .toDF("qi", "root", "id").distinct()
+    val nTable = idxs.map(_.rowCount).sum
     // per-query no-prune check over THIS GROUP's corpus (on a
     // storage-mixed call each group decides its own scan fallback
     // against its own rows — the fallback concerns the scan the group
@@ -1619,228 +1723,111 @@ object IvfIndex {
         probeRows.groupBy(_._1).view.mapValues(_.length.toLong).toArray
       else cand0.groupBy("qi").count().as[(Int, Long)].collect()
     val scanQis: Set[Int] =
-      perQ.filter(_._2 > nTable * IvfIndex.rangeScanFallbackFrac).map(_._1).toSet
-    if (scanQis.nonEmpty) IvfIndex.rangeScanFallbacks.addAndGet(scanQis.size)
+      perQ.filter(_._2 > nTable * rangeScanFallbackFrac).map(_._1).toSet
+    if (scanQis.nonEmpty) rangeScanFallbacks.addAndGet(scanQis.size)
     val nJoinSurvivors = perQ.collect { case (q, c) if !scanQis.contains(q) => c }.sum
-    // the exact-phase vector read serves only JOIN-tier spheres: when
-    // some queries fell back to direct scan, cells probed ONLY by scan
-    // queries hold no possible members — reading them in the membership
-    // pass just rereads bytes the scan pass below reads again. Restrict
-    // to the join-tier queries' own probed cells (the cellsByRootQ
-    // bookkeeping the scan fallback already uses); dir resolution stays
-    // on the full `info` map (a superset is fine).
-    lazy val vecFiles: Array[org.apache.hadoop.fs.FileStatus] =
-      if (scanQis.isEmpty) files
-      else {
-        val jInfo = scala.collection.mutable.HashMap.empty[String, DirInfo]
-        val jFiles =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-        idxs.zipWithIndex.foreach { case (ix, r) =>
-          val cells = (0 until nQ).filterNot(scanQis.contains)
-            .flatMap(qi => cellsByRootQ(r)(qi)).distinct
-          probedDirs(ix, r, cells, jInfo, jFiles)
+    // the exact phase reads only the JOIN-tier spheres' cells: cells
+    // probed ONLY by scan-fallback spheres hold no possible members, and
+    // the scan pass below reads them anyway
+    val joinPlan =
+      if (scanQis.isEmpty) plan else plan.only((0 until nQ).filterNot(scanQis.contains))
+    // the strict-< cutoff of exact (queryIdx, id, dist) rows
+    def cutDf(scored: Dataset[(Int, Long, Double)]): DataFrame =
+      scored.flatMap { case (qi, id, d) =>
+        if (d < radii(qi)) Some((qids(qi), id, d)) else None
+      }.toDF("qid", "id", "dist")
+    // DRIVER-survivor tier: the top-k rerank, whose in-index rows return
+    // to the driver; the in-table point fetch stays a lazy frame
+    val surv =
+      if (probeRows == null) Array.empty[(Int, Int, Long)]
+      else probeRows.collect { case (qi, r, id) if !scanQis.contains(qi) => (r, qi, id) }
+    val (local, fetched) = rerankTable match {
+      case Some((src, idCol, vecCol)) if surv.nonEmpty =>
+        (Nil, Some(cutDf(tableScores(src, idCol, vecCol, surv, centers, cfg.metric))))
+      case _ =>
+        (rerank(joinPlan, surv, centers, None)
+          .collect { case (qi, id, d) if d < radii(qi) => (qids(qi), id, d) }.toSeq, None)
+    }
+    // HUGE-survivor tier: candidates stay distributed end to end, joined
+    // to the exact-phase rows on (root, id), each row tagged with its
+    // owning root first, so a stored row meets only its own root's
+    // spheres (colliding ids across roots)
+    val joined: Option[DataFrame] =
+      if (probeRows != null || joinPlan.empty) None
+      else Some {
+        val candJoin0 =
+          if (scanQis.isEmpty) cand0
+          else cand0.filter(!col("qi").isin(scanQis.toSeq.map(Integer.valueOf): _*))
+        def bcast(df: DataFrame): DataFrame =
+          if (nJoinSurvivors <= rangeBroadcastCap) broadcast(df) else df
+        val metric = cfg.metric
+        rerankTable match {
+          case None =>
+            val qq = plan.qq
+            val vecs = joinPlan.vecs
+            val root =
+              if (joinPlan.flat) udf(new RootOfPath(joinPlan.info)).apply(col("__path"))
+              else lit(0)
+            cutDf(vecs.select(root.as("root"), col("id"), col("vec"))
+              .join(bcast(candJoin0), Seq("root", "id"))
+              .select("qi", "root", "id", "vec")
+              .mapPartitions { (it: Iterator[Row]) =>
+                val kern = exactKernel(metric, stored = true)
+                it.map { row =>
+                  val qi = row.getInt(0)
+                  val v =
+                    if (f16) graft.core.Half.decodeBytes(row.getAs[Array[Byte]](3))
+                    else row.getSeq[Float](3).toArray
+                  (qi, row.getLong(2), kern(v, qq(row.getInt(1))(qi)))
+                }
+              })
+          case Some((src, idCol, vecCol)) =>
+            val candIds = candJoin0.select(col("qi"), col("id")).distinct()
+            cutDf(tableVecs(src, idCol, vecCol).toDF("id", "__v")
+              .join(bcast(candIds), "id").select("qi", "id", "__v")
+              .mapPartitions { (it: Iterator[Row]) =>
+                val kern = exactKernel(metric, stored = false)
+                it.flatMap { row =>
+                  if (row.isNullAt(2)) Iterator.empty
+                  else {
+                    val qi = row.getInt(0)
+                    Iterator.single((qi, row.getLong(1),
+                      kern(row.getSeq[Float](2).toArray, centers(qi))))
+                  }
+                }
+              })
         }
-        jFiles.toArray
       }
-    val bQq = spark.sparkContext.broadcast(qqByRoot)
-    val bQid = spark.sparkContext.broadcast(qidArr)
-    val bRad = spark.sparkContext.broadcast(queries.map(_._3))
-    val isF16 = f16
-    // exact strict-< cutoff for (qi, root, id, vec) rows against the
-    // root-prepped query (stored vectors are in index space)
-    val kStored = exactKernel(met, stored = true)
-    def cutRows(it: Iterator[(Int, Int, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-      val qq = bQq.value
-      val qids = bQid.value
-      val rads = bRad.value
-      it.flatMap { case (qi, root, id, v) =>
-        val d = kStored(v, qq(root)(qi))
-        if (d < rads(qi)) Iterator.single((qids(qi), id, d)) else Iterator.empty
-      }
-    }
-    // in-table exact kernel: RAW queries against original vectors;
-    // candidates from any root gate membership only (the source table's
-    // rows are the single exact truth)
-    val kRaw = exactKernel(met, stored = false)
-    val bQs = spark.sparkContext.broadcast(queries.map(q => (q._2, q._3)))
-    def cutRaw(it: Iterator[(Int, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
-      val qs = bQs.value
-      val qids = bQid.value
-      it.flatMap { case (qi, id, va) =>
-        val (q, r) = qs(qi)
-        val d = kRaw(va, q)
-        if (d < r) Iterator.single((qids(qi), id, d)) else Iterator.empty
-      }
-    }
-    lazy val emptyScored = Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-    val scored: org.apache.spark.sql.DataFrame = if (probeRows != null) {
-      // DRIVER-survivor tier: membership maps ship as broadcasts; the
-      // flat vector read is scanned ONCE with per-row membership checks
-      // (the [[rerank]] shape — same I/O as the broadcast join, none
-      // of the exchange machinery)
-      val surv = probeRows.filter(t => !scanQis.contains(t._1))
-      if (surv.isEmpty) emptyScored
-      else rerankTable match {
-        case None =>
-          val cmap: Map[(Int, Long), Array[Int]] =
-            surv.groupBy(t => (t._2, t._3)).view.mapValues(_.map(_._1)).toMap
-          val bC = spark.sparkContext.broadcast(cmap)
-          // InternalRow scan (the [[rerank]] pattern):
-          // membership on the raw row BEFORE any vector decode — the
-          // typed-Dataset form decoded f16 bytes / boxed f32 Seqs for
-          // EVERY scanned row first, a per-row allocation storm the
-          // selective-sphere case pays for nothing
-          val isF16L = isF16
-          org.apache.spark.sql.graft.ColumnBridge
-            .toInternalRdd(flatVecsDf(spark, vecFiles, f16))
-            .mapPartitions { it =>
-              val info = bInfo.value
-              val cm = bC.value
-              val dirCache = new java.util.HashMap[String, DirInfo]()
-              cutRows(it.flatMap { row =>
-                val id = row.getLong(0)
-                val root = dirInfoFor(info, dirCache, row.getString(2))._1
-                cm.get((root, id)) match {
-                  case None => Iterator.empty
-                  case Some(qis) =>
-                    val v: Array[Float] =
-                      if (isF16L) graft.core.Half.decodeBytes(row.getBinary(1))
-                      else row.getArray(1).toFloatArray()
-                    qis.iterator.map(qi => (qi, root, id, v))
-                }
-              })
-            }.toDF("qid", "id", "dist")
-        case Some((src, idCol, vecCol)) =>
-          val id2q: Map[Long, Array[Int]] =
-            surv.groupBy(_._3).view.mapValues(_.map(_._1).distinct).toMap
-          val bI2Q = spark.sparkContext.broadcast(id2q)
-          pointFetch(src, idCol, id2q.keysIterator.toArray.sorted)
-            .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-            .as[(Long, Seq[Float])]
-            .mapPartitions { it =>
-              val i2q = bI2Q.value
-              cutRaw(it.flatMap { case (id, v) =>
-                val va = v.toArray
-                i2q.getOrElse(id, Array.empty[Int]).iterator
-                  .map(qi => (qi, id, va))
-              })
-            }.toDF("qid", "id", "dist")
-      }
-    } else {
-      // HUGE-survivor tier: candidates stay distributed end to end
-      val candJoin0 =
-        if (scanQis.isEmpty) cand0
-        else cand0.filter(!col("qi").isin(scanQis.toSeq.map(Integer.valueOf): _*))
-      if (vecFiles.isEmpty) emptyScored // every sphere fell back to scan
-      else rerankTable match {
-        case None =>
-          // flat VECTOR read over the JOIN-tier probed files, tagged with
-          // its owning root so survivors join on (root, id) — colliding
-          // ids across roots score only under their own root's spheres
-          val vecRows = flatVecsDf(spark, vecFiles, f16)
-          val tagged =
-            if (isF16)
-              vecRows.as[(Long, Array[Byte], String)].mapPartitions { it =>
-                val info = bInfo.value
-                val dirCache = new java.util.HashMap[String, DirInfo]()
-                it.map { case (id, vb, path) =>
-                  (dirInfoFor(info, dirCache, path)._1, id, vb)
-                }
-              }.toDF("root", "id", "vb")
-            else
-              vecRows.as[(Long, Seq[Float], String)].mapPartitions { it =>
-                val info = bInfo.value
-                val dirCache = new java.util.HashMap[String, DirInfo]()
-                it.map { case (id, v, path) =>
-                  (dirInfoFor(info, dirCache, path)._1, id, v)
-                }
-              }.toDF("root", "id", "v")
-          val cand =
-            if (nJoinSurvivors <= IvfIndex.rangeBroadcastCap) broadcast(candJoin0)
-            else candJoin0
-          val joined = tagged.join(cand, Seq("root", "id"))
-          if (isF16)
-            joined.select(col("qi"), col("root"), col("id"), col("vb"))
-              .as[(Int, Int, Long, Array[Byte])]
-              .mapPartitions(it => cutRows(it.map { case (qi, r, id, vb) =>
-                (qi, r, id, graft.core.Half.decodeBytes(vb)) }))
-              .toDF("qid", "id", "dist")
-          else
-            joined.select(col("qi"), col("root"), col("id"), col("v"))
-              .as[(Int, Int, Long, Seq[Float])]
-              .mapPartitions(it => cutRows(it.map { case (qi, r, id, v) =>
-                (qi, r, id, v.toArray) }))
-              .toDF("qid", "id", "dist")
-        case Some((src, idCol, vecCol)) =>
-          val candIds = candJoin0.select(col("qi"), col("id")).distinct()
-          val cand =
-            if (nJoinSurvivors <= IvfIndex.rangeBroadcastCap) broadcast(candIds)
-            else candIds
-          src.select(col(idCol).cast("long").as("id"),
-              col(vecCol).cast("array<float>").as("__v"))
-            .join(cand, Seq("id"))
-            .select(col("qi"), col("id"), col("__v"))
-            .as[(Int, Long, Seq[Float])]
-            .mapPartitions { it =>
-              cutRaw(it.map { case (qi, id, v) => (qi, id, v.toArray) })
-            }.toDF("qid", "id", "dist")
-      }
-    }
     // direct-scan rows for the no-prune spheres: one pass over THOSE
-    // spheres' probed cells (a second flat relation over the subset),
-    // every scan sphere tested per row under its own root's prep
-    val scanned: Option[org.apache.spark.sql.DataFrame] =
+    // spheres' probed cells, every scan sphere tested per row under its
+    // own root's prep
+    val scanned: Option[DataFrame] =
       if (scanQis.isEmpty) None
       else {
-        val scanInfo = scala.collection.mutable.HashMap.empty[String, DirInfo]
-        val scanFiles =
-          scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-        idxs.zipWithIndex.foreach { case (ix, r) =>
-          val cells = scanQis.toSeq.flatMap(qi => cellsByRootQ(r)(qi)).distinct
-          probedDirs(ix, r, cells, scanInfo, scanFiles)
-        }
-        if (scanFiles.isEmpty) None
+        val sp = plan.only(scanQis.toSeq.sorted)
+        if (sp.empty) None
         else Some {
-          val bSInfo = spark.sparkContext.broadcast(scanInfo.toMap)
           val scanArr = scanQis.toArray.sorted
-          val bScan = spark.sparkContext.broadcast(scanArr)
-          rerankTable match {
-            case None =>
-              val rows = flatVecsDf(spark, scanFiles.toArray, f16)
-              def scanIt(it: Iterator[(Long, Array[Float], String)],
-                         info: Map[String, DirInfo]): Iterator[(Int, Int, Long, Array[Float])] = {
-                val dirCache = new java.util.HashMap[String, DirInfo]()
-                val qis = bScan.value
-                it.flatMap { case (id, v, path) =>
-                  val root = dirInfoFor(info, dirCache, path)._1
-                  qis.iterator.map(qi => (qi, root, id, v))
-                }
-              }
-              if (isF16)
-                rows.as[(Long, Array[Byte], String)].mapPartitions { it =>
-                  cutRows(scanIt(it.map { case (id, vb, p) =>
-                    (id, graft.core.Half.decodeBytes(vb), p) }, bSInfo.value))
-                }.toDF("qid", "id", "dist")
-              else
-                rows.as[(Long, Seq[Float], String)].mapPartitions { it =>
-                  cutRows(scanIt(it.map { case (id, v, p) =>
-                    (id, v.toArray, p) }, bSInfo.value))
-                }.toDF("qid", "id", "dist")
-            case Some((src, idCol, vecCol)) =>
-              src.select(col(idCol).cast("long").as("id"),
-                  col(vecCol).cast("array<float>").as("__v"))
-                .as[(Long, Seq[Float])]
-                .mapPartitions { it =>
-                  val qis = bScan.value
-                  cutRaw(it.flatMap { case (id, v) =>
-                    val va = v.toArray
-                    qis.iterator.map(qi => (qi, id, va))
-                  })
-                }.toDF("qid", "id", "dist")
+          val (vecRows, t) = rerankTable match {
+            case None => (sp.vecs, new ExactTask(null, scanArr, sp.qq, sp.info,
+              sp.flat, f16, cfg.metric, stored = true))
+            case Some((src, idCol, vecCol)) => (tableVecs(src, idCol, vecCol),
+              new ExactTask(null, scanArr, Array(centers), Map.empty,
+                flat = false, f16 = false, cfg.metric, stored = false))
           }
+          cutDf(ColumnBridge.toInternalRdd(vecRows).mapPartitions(it => t.scores(it)).toDS())
         }
       }
-    scanned.map(s => scored.unionByName(s)).getOrElse(scored)
+    (local, (fetched ++ joined ++ scanned).reduceOption(_ unionByName _))
+  }
+
+  /** A flat read row's owning root from its file path ([[dirInfoFor]]),
+    * as a UDF body or a captured function; each task deserializes its
+    * own copy, and so its own dir cache. */
+  private[graft] final class RootOfPath(info: Map[String, (Int, Int)])
+      extends (String => Int) with Serializable {
+    @transient private lazy val cache = new java.util.HashMap[String, DirInfo]()
+    def apply(path: String): Int = dirInfoFor(info, cache, path)._1
   }
 
   /** Resolve a row's owning dir info from its file path (normalized to
@@ -1863,8 +1850,9 @@ object IvfIndex {
 
   /** The RaBitQ estimator on a packed code: epsilon-scaled code lower
     * bound in the root's own metric (dot-family WITHOUT the cosdist
-    * output shift — range callers apply it at the cutoff). The top-k
-    * pool computes the same bound over codes unpacked once per row. */
+    * output shift — the range applies it at the cutoff). The cell scan
+    * computes the same bound over codes unpacked once per row
+    * ([[RowBound]]); the replay specs grade against this one. */
   private[index] def lbOf(code: RaBitQ.Code, bits: Int, dim: Int, isL2: Boolean,
                    qr: Array[Float], qSum: Double, qNormSq: Double,
                    cDot: Double, epsilon: Double): Double =
@@ -2581,7 +2569,12 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
    * cutoff (vec column read only for estimate survivors). This is the
    * batched multi-root fold ([[IvfIndex.rangeSearchManyMulti]]) with one
    * sphere and one root, so survivor delivery, the no-prune scan
-   * fallback and the rerank-table point fetch are that fold's.
+   * fallback and the rerank-table point fetch are that fold's. With
+   * bounded survivors and stored vectors it runs two Spark jobs when
+   * called, warm or cold
+   * (the estimate over the top-k pool's row source, then the exact
+   * rerank; a third only when one partition of the source passes its
+   * share of the survivor bound), and returns a local frame.
    * Output: (id, dist) ascending (dist, id).
    */
   def rangeSearch(center: Array[Float], radius: Double, epsilon: Double = 1.9,

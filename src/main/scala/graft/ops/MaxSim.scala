@@ -272,7 +272,7 @@ object MaxSim {
    * scanners/maxsim.rs semantics over partition.slt-style per-child
    * indexes). ONE Spark job retrieves every (root, token) pool from a
    * single flat parquet read spanning all roots' probed cells
-   * (IvfIndex.multiEstimatePools, epsilon = 0 — unbiased estimates, the
+   * (IvfIndex.multiEstimateCandidates, epsilon = 0 — unbiased estimates, the
    * reference's maxsim_refine=0 retrieval mode); docs then score on the
    * driver over the BOUNDED pools (≤ roots x tokens x kPerToken rows):
    * per (root, doc), per-token min retrieved estimate, with the token's
@@ -290,8 +290,8 @@ object MaxSim {
       query: Array[Array[Float]], docsPerRoot: Int, kPerToken: Int,
       probes: Seq[Int]): Array[(Int, Long, Double)] = {
     require(query.nonEmpty, "empty token query")
-    val pools = graft.index.IvfIndex.multiEstimatePools(idxs, query,
-      kPerToken, probes, epsilon = 0.0)
+    val pools = graft.index.IvfIndex.multiEstimateCandidates(idxs, query,
+      kPerToken, probes, epsilon = 0.0)._1
     val nQ = query.length
     val worst = pools.groupBy(t => (t._1, t._2)).view
       .mapValues(_.map(_._4).max).toMap
@@ -384,7 +384,7 @@ object MaxSim {
    *
    *   job 1: ONE pooled retrieval over every (root, query-token) from a
    *          single flat parquet read spanning all roots' probed cells
-   *          (IvfIndex.multiEstimatePools, epsilon = 0 — the reference's
+   *          (IvfIndex.multiEstimateCandidates, epsilon = 0 — the reference's
    *          maxsim_refine=0 unbiased-estimate retrieval,
    *          crates/vchordrq/src/search.rs:199-380); docs then score on
    *          the driver over the BOUNDED pools, per (query, root), with
@@ -449,7 +449,7 @@ object MaxSim {
     val nQ = queries.length
     val qidArr = queries.map(_._1)
     // flatten to global token slots: query qi owns [offsets(qi),
-    // offsets(qi+1)) — one multiEstimatePools call retrieves the whole
+    // offsets(qi+1)) — one multiEstimateCandidates call retrieves the whole
     // batch's tokens in one flat job
     val offsets = queries.scanLeft(0)(_ + _._2.length).toArray
     val allTokens: Array[Array[Float]] = queries.flatMap(_._2)
@@ -460,8 +460,8 @@ object MaxSim {
       s"maxsimManyMulti pool budget exceeded: ${idxs.length} roots x " +
       s"${allTokens.length} tokens x $kPerToken > $maxPool " +
       "(graft.ann.maxsim.maxPoolTuples) — lower kPerToken or split the batch")
-    val pools = graft.index.IvfIndex.multiEstimatePools(idxs, allTokens,
-      kPerToken, prb, epsilon = 0.0)
+    val pools = graft.index.IvfIndex.multiEstimateCandidates(idxs, allTokens,
+      kPerToken, prb, epsilon = 0.0)._1
     val docsPerRoot = k * math.max(refine, 1)
     def qiOf(gti: Int): Int = {
       var lo = 0
@@ -593,14 +593,11 @@ object MaxSim {
     // physical planning, not execution
     val scored = graft.core.Confs.withConfs(spark,
         "spark.sql.codegen.wholeStage" -> "false") {
-      val (vecDf, rootMap) = graft.index.IvfIndex.flatAllVecsFor(idxs, Some(pred))
-      val bRoot = spark.sparkContext.broadcast(rootMap)
+      val (vecDf, rootOf) = graft.index.IvfIndex.flatAllVecsFor(idxs, Some(pred))
       val scoredRows = org.apache.spark.sql.graft.ColumnBridge
         .toInternalRdd(vecDf)
         .mapPartitions { it =>
           val cands = bCand.value
-          val roots = bRoot.value
-          val dirCache = new java.util.HashMap[String, Integer]()
           it.flatMap { row =>
             val doc = row.getLong(0) >> 16
             cands.get(doc) match {
@@ -608,8 +605,7 @@ object MaxSim {
               case Some(qis) =>
                 // root resolved only for MEMBERS (query rotation is per
                 // root); non-candidates pay neither the lookup nor decode
-                val root =
-                  graft.index.IvfIndex.rootOf(roots, dirCache, row.getString(2))
+                val root = rootOf(row.getString(2))
                 val v: Array[Float] =
                   if (isF16) graft.core.Half.decodeBytes(row.getBinary(1))
                   else row.getArray(1).toFloatArray()

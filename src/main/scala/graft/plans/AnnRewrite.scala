@@ -1686,10 +1686,11 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * bounded driver-blocking jobs regardless of query-row count AND root
     * count (both counted in [[AnnTopKRewrite.planningJobs]]) — one
     * collect of the capped queries side, then ONE pooled codes pass
-    * answering every sphere over one flat relation spanning every root's
-    * intersecting cells ([[IvfIndex.multiRangeCandidateIds]], one root or
-    * many). The old shape serialized one probe job per query row (up to
-    * maxQueries=256 planner-stalling jobs per range-join plan). For bulk
+    * answering every sphere over every root's intersecting cells
+    * ([[IvfIndex.multiRangeCandidateIds]]: the top-k pool's row sources,
+    * one flat relation past one root). The old shape serialized one
+    * probe job per query row (up to maxQueries=256 planner-stalling jobs
+    * per range-join plan). For bulk
     * M past the cap use [[IvfIndex.rangeSearchManyMulti]]. */
   private def serveRangeJoin(c: AnnConf, j: Join): Option[LogicalPlan] = {
     val cond = j.condition.get
@@ -1774,22 +1775,22 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           if (spheres.isEmpty) Some(LocalRelation(j.output))
           else {
             // ONE pooled candidate job for the whole batch: every
-            // sphere's estimate survivors from one flat relation spanning
-            // every root's intersecting cells, capped so overflow
+            // sphere's estimate survivors over every root's intersecting
+            // cells, collected with a bounded total so overflow
             // detection is itself bounded
             AnnTopKRewrite.planningJobs.incrementAndGet()
-            val ids = IvfIndex.multiRangeCandidateIds(idxs, spheres, eps, maxInList)
-            // overflow BEFORE dedup (the flat rows may carry gen+delta
-            // duplicates): a truncated-then-deduped list could
+            // overflow is counted BEFORE dedup (the flat rows may carry
+            // gen+delta duplicates): a truncated-then-deduped list could
             // sneak under the cap while missing candidates past it
-            if (ids.length > maxInList) None
-            else if (ids.isEmpty) Some(LocalRelation(j.output))
-            else {
-              val dids = ids.distinct.sorted
-              ensureInPushdown(dids.length)
-              val restricted = stamped(Filter(id.in(dids), indexedSide))
-              Some(if (indexedSide eq j.left) j.copy(left = restricted)
-                   else j.copy(right = restricted))
+            IvfIndex.multiRangeCandidateIds(idxs, spheres, eps, maxInList) match {
+              case None => None
+              case Some(ids) if ids.isEmpty => Some(LocalRelation(j.output))
+              case Some(ids) =>
+                val dids = ids.distinct.sorted
+                ensureInPushdown(dids.length)
+                val restricted = stamped(Filter(id.in(dids), indexedSide))
+                Some(if (indexedSide eq j.left) j.copy(left = restricted)
+                     else j.copy(right = restricted))
             }
           }
         }
@@ -1822,15 +1823,16 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         val maxInList = c.maxInList
         // ONE planning job AND one analyzed relation however many roots
         // (same flat shape as serveMulti): all roots' sphere-intersecting
-        // cluster dirs read as a single scan, the union-level limit makes
-        // overflow detection itself bounded — a sphere covering most of a
-        // 500-child corpus stops after maxInList+1 ids instead of
-        // materializing every root's pool
+        // cluster dirs read as a single scan, and a bounded collect
+        // makes overflow detection itself bounded — a sphere covering
+        // most of a 500-child corpus ships each partition's count and
+        // at most its share of maxInList+1 ids instead of every root's
+        // pool
         AnnTopKRewrite.planningJobs.incrementAndGet()
-        val raw = IvfIndex.multiRangeCandidateIds(
+        val cands = IvfIndex.multiRangeCandidateIds(
           tier.entries.map(AnnCatalog.index(spark, _)),
           Array((cv.toFloatArray(), radius)), c.epsilon, maxInList)
-        // overflow check BEFORE dedup: a truncated-then-deduped list could
+        // overflow counted BEFORE dedup: a truncated-then-deduped list could
         // sneak under the cap while silently missing candidates past the
         // limit — serving it would drop qualifying rows.
         // DECISION (round 12, deliberate): overflow DECLINES to the exact
@@ -1842,12 +1844,13 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         // that regime with a DISTRIBUTED candidate join and a no-prune
         // scan fallback — machinery a planner rewrite cannot express as
         // an IN.
-        if (raw.length > maxInList) None
-        else if (raw.isEmpty) Some(LocalRelation(f.output))
-        else {
-          val all = raw.distinct
-          ensureInPushdown(all.length)
-          Some(stamped(Filter(And(f.condition, id.in(all)), f.child)))
+        cands.map { raw =>
+          if (raw.isEmpty) LocalRelation(f.output)
+          else {
+            val all = raw.distinct
+            ensureInPushdown(all.length)
+            stamped(Filter(And(f.condition, id.in(all)), f.child))
+          }
         }
       }
     } yield served
@@ -1912,7 +1915,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // driver for scoring. The flat read caps the collect at
     // max(4M direct-collect budget, that figure): past the budget it
     // merges partition-local heaps per (root, token) slot on executors
-    // before collecting (IvfIndex.multiEstimatePools), so no scan
+    // before collecting (IvfIndex.multiEstimateCandidates), so no scan
     // width can blow the guard below out by its partition count.
     // Bounded by construction, but a 256-child
     // corpus x a 64-token query x kPerToken=1000 would be 16M tuples
@@ -2186,15 +2189,16 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
               if idxs.forall(_.meta.cfg.metric == sphMetric) &&
                  sphAttr.name == es.head.vecCol =>
             AnnTopKRewrite.planningJobs.incrementAndGet()
-            // one flat read over every root's sphere-intersecting cluster
-            // dirs (no per-root union branches)
-            val raw = IvfIndex.multiRangeCandidateIds(idxs,
+            // one read over every root's sphere-intersecting cluster
+            // dirs (flat past one root, no per-root union branches)
+            // overflow is counted BEFORE dedup: a truncated-then-deduped
+            // list could silently miss qualifying candidates past the limit
+            val cands = IvfIndex.multiRangeCandidateIds(idxs,
               Array((sphCv.toFloatArray(), sphRadius)), c.epsilon, maxInList)
-            // overflow BEFORE dedup: a truncated-then-deduped list could
-            // silently miss qualifying candidates past the limit
-            if (raw.length > maxInList) escalated
-            else if (raw.isEmpty) Some(LocalRelation(t.gl.output))
+            if (cands.isEmpty) escalated
+            else if (cands.get.isEmpty) Some(LocalRelation(t.gl.output))
             else {
+              val raw = cands.get
               // merge the IN into the EXISTING Filter and stamp it: a
               // fresh In-Filter
               // wrapped AROUND the unstamped sphere Filter would leave

@@ -2622,8 +2622,8 @@ object GraftQueries {
     // range_batch_indexed answered across the two-root partitioned
     // copy's per-child indexes in a constant number of flat jobs
     // (IvfIndex.rangeSearchManyMulti — one pooled code-estimate pass
-    // over every root's sphere-intersecting cells, survivors joined to
-    // the flat vector read for the exact strict-< cutoff). The cutoff is
+    // over every root's sphere-intersecting cells, survivors reranked
+    // over the flat vector read for the exact strict-< cutoff). The cutoff is
     // exact and the triangle cell bound complete, so it hash-matches the
     // SAME oracle as range_batch_indexed (the partitioned copy holds
     // identical rows).

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
  * Round-11 baseline (per-root union-of-frames pool, one job): 0.44 s at
  * 4 roots, 0.55 at 8, 1.16 at 16, 3.09 at 32 — linear in R from
  * Catalyst analyzing R union branches + R per-index reads. The flat
- * multi-root read (IvfIndex.multiEstimatePools: ONE relation over
+ * multi-root read (IvfIndex.multiEstimateCandidates: ONE relation over
  * every root's probed cluster dirs) is what this probe grades —
  * round-12 measured 0.11/0.10/0.09/0.23/0.59/1.08 s at
  * 4/8/16/32/128/256 roots. Round 13 replaced the per-plan dir

@@ -435,8 +435,8 @@ class IvfIndexSpec extends SparkSpec {
     val queries = Array(Array.fill(8)(0.1f), Array.fill(8)(-0.2f),
       Array.fill(8)(0.3f))
     def pools(): Set[(Int, Int, Long, Double)] =
-      IvfIndex.multiEstimatePools(idxs, queries, nCand = 20,
-        probes = Seq(4, 4), epsilon = 1.9).toSet
+      IvfIndex.multiEstimateCandidates(idxs, queries, nCand = 20,
+        probes = Seq(4, 4), epsilon = 1.9)._1.toSet
     val direct = pools()
     spark.conf.set("graft.ann.flat.directCollectMax", "0")
     val merged =

@@ -15,7 +15,8 @@ import java.nio.file.Files
  * exactly one Spark job. A key-only prefilter runs inside the pool, so
  * its query plans one job per pool round and no survivor count; a
  * residual one adds a survivor count that reads only the id and the
- * residual's columns.
+ * residual's columns. A sphere range scans the same row sources: one
+ * estimate job and one exact job, warm or cold.
  */
 class ResidentPoolSpec extends SparkSpec {
 
@@ -138,6 +139,92 @@ class ResidentPoolSpec extends SparkSpec {
       val (_, poolJobs) = jobsOf(pool(ix, query(40)))
       assert(poolJobs == 1, s"multiEstimateCandidates ran $poolJobs jobs")
     } finally AnnCatalog.unregister(tableDir)
+  }
+
+  test("a sphere range runs the pool's row sources: two jobs warm or cold, one " +
+       "per planner candidate fetch, one resident plan, no stale read after an append") {
+    import spark.implicits._
+    val (_, indexDir, rows) = fixture()
+    val ix = IvfIndex.load(spark, indexDir)
+    def inside(q: Array[Float], r: Double): Seq[Long] =
+      rows.map { case (id, v) => (K.l2(v, q), id) }.filter(_._1 < r).sorted.map(_._2)
+    def range(q: Array[Float], r: Double): Seq[Long] =
+      ix.rangeSearch(q, r).collect().map(_.getLong(0)).toSeq
+    val q = query(70)
+    val r = rows.map { case (_, v) => K.l2(v, q) }.sorted.apply(30)
+    // the first range fills the cell-radius and row-count caches
+    assert(range(q, r) == inside(q, r))
+    val (cold, coldJobs) = jobsOf(range(q, r))
+    assert(coldJobs == 2, s"a cold range ran $coldJobs Spark jobs")
+    assert(cold == inside(q, r) && cold.length == 30)
+    // the planner's candidate fetch: one job
+    val (ids, fetchJobs) = jobsOf(IvfIndex.multiRangeCandidateIds(Seq(ix),
+      Array((q, r)), 1.9, 1000))
+    assert(fetchJobs == 1, s"multiRangeCandidateIds ran $fetchJobs Spark jobs")
+    assert(inside(q, r).toSet.subsetOf(ids.get.toSet))
+    ix.prewarm()
+    val plans0 = IvfIndex.poolSourcePlans.get()
+    (0 until 10).foreach { i =>
+      val qi = query(80 + i)
+      val (got, jobs) = jobsOf(range(qi, r))
+      assert(jobs == 2, s"warm range $i ran $jobs Spark jobs")
+      assert(got == inside(qi, r), s"warm range $i")
+    }
+    assert(IvfIndex.poolSourcePlans.get() - plans0 <= 1,
+      s"10 warm ranges planned ${IvfIndex.poolSourcePlans.get() - plans0} sources")
+    assert(ix.holdsResident)
+    // a row appended inside the sphere: the resident source is stale, so
+    // the next range must read the current generation and delta
+    val fresh = 5000L
+    ix.appendDelta(Seq((fresh, q.toSeq)).toDF("id", "vec"), "id", "vec")
+    assert(range(q, r) == fresh +: inside(q, r),
+      "a warm range missed a row appended after prewarm")
+  }
+
+  test("a range's driver collect is bounded in total, not per partition, " +
+       "and past the bound the (root, id) join answers exactly") {
+    val (_, indexDir, rows) = fixture()
+    val ix = IvfIndex.load(spark, indexDir)
+    def inside(q: Array[Float], r: Double): Seq[Long] =
+      rows.map { case (id, v) => (K.l2(v, q), id) }.filter(_._1 < r).sorted.map(_._2)
+    val q = query(90)
+    val dists = rows.map { case (_, v) => K.l2(v, q) }.sorted
+    // one small file per partition: the cold source spans many
+    // partitions, each holding a few cells
+    graft.core.Confs.withConfs(spark, "spark.sql.files.maxPartitionBytes" -> "4096") {
+      val nParts = org.apache.spark.sql.graft.ColumnBridge
+        .toInternalRdd(ix.poolScan((0 until 16).toArray)).getNumPartitions
+      assert(nParts >= 8, s"the cold source has $nParts partitions")
+      def run(lim: Int, r: Double): (Seq[Long], Long, Int) =
+        graft.core.Confs.withConfs(spark,
+            "graft.ann.range.maxDriverSurvivors" -> lim.toString) {
+          val t0 = IvfIndex.rangeDriverTuples.get()
+          val (got, jobs) = jobsOf(ix.rangeSearch(q, r).collect().map(_.getLong(0)).toSeq)
+          (got, IvfIndex.rangeDriverTuples.get() - t0, jobs)
+        }
+      // a sphere whose survivors overflow a bound of 50: the first job
+      // ships at most 50 + partitions tuples, then the distributed tier
+      // answers exactly
+      val big = dists(300)
+      val (gotBig, tuplesBig, _) = run(50, big)
+      assert(gotBig == inside(q, big))
+      assert(tuplesBig <= 50 + nParts,
+        s"an overflowing range brought $tuplesBig tuples to the driver")
+      // under the bound, with a partition past its share: one more job
+      // re-collects that partition whole (at most 2 x bound + partitions
+      // tuples in all), and the driver tier answers
+      val small = dists(60)
+      val (gotAmple, tuplesAmple, jobsAmple) = run(1000000, small)
+      assert(gotAmple == inside(q, small))
+      assert(jobsAmple == 2, s"an ample bound ran $jobsAmple jobs")
+      val tight = (tuplesAmple + 1).toInt
+      val (gotTight, tuplesTight, jobsTight) = run(tight, small)
+      assert(gotTight == inside(q, small))
+      assert(jobsTight == 3, s"a tight bound ran $jobsTight jobs")
+      assert(tuplesTight <= 2 * tight + nParts)
+      // the planner fetch declines past its cap
+      assert(IvfIndex.multiRangeCandidateIds(Seq(ix), Array((q, big)), 1.9, 50).isEmpty)
+    }
   }
 
   test("a residual survivor count reads the id and the residual's columns, " +

@@ -14,7 +14,8 @@ import org.apache.spark.sql.DataFrame
   * rerank table — and the best row per id ranks by (dist, id). The
   * rerank scans the union of the batch's probed cells, as the batched
   * serve does. `idPred` replays a key-only prefilter: only rows whose id
-  * it passes enter the pool. Unrotated indexes only. */
+  * it passes enter the pool. Unrotated indexes only. [[pool]] is the
+  * estimate step alone, for replays of the planner's candidate pools. */
 object TopKReplay {
   def topK(idx: IvfIndex, queries: Seq[(Long, Array[Float])], k: Int,
            probes: Int, refine: Int, epsilon: Double = 1.9,
@@ -22,25 +23,12 @@ object TopKReplay {
            idPred: Long => Boolean = _ => true)
       : Map[Long, Seq[(Long, Double)]] = {
     val cfg = idx.meta.cfg
-    require(!cfg.rotate, "replay covers unrotated indexes")
-    val isL2 = cfg.metric == "l2"
-    val f16 = cfg.storage == "f16"
-    val rows = rowsOf(idx.dataDf, cfg.storeVectors, f16)
-    val probedBy = queries.map { case (qid, q) => qid -> idx.probe(q, probes).toSet }.toMap
-    val scanned = probedBy.values.flatten.toSet
+    val rows = rowsOf(idx)
+    val scanned = queries.flatMap { case (_, q) => idx.probe(q, probes) }.toSet
     queries.map { case (qid, q) =>
       val qq = if (cfg.metric == "cosdist") K.normalize(q) else q
-      val pool = rows.filter(r => probedBy(qid).contains(r.cid) && idPred(r.id)).map { r =>
-        val c = idx.meta.centroids(r.cid)
-        val qr =
-          if (cfg.residual && isL2) qq.indices.map(j => qq(j) - c(j)).toArray else qq
-        val cDot = if (cfg.residual && !isL2) K.dot(qq, c) else 0.0
-        val lb = IvfIndex.lbOf(RaBitQ.Code(r.cmeta, r.codes, cfg.bits, idx.meta.dim),
-          cfg.bits, idx.meta.dim, isL2, qr, qr.map(_.toDouble).sum, K.normSq(qr), cDot,
-          epsilon)
-        (lb, r.id)
-      }.sorted.take(math.max(k * refine, k))
-      val cand = pool.map(_._2).toSet
+      val cand = pool(idx, rows, q, probes, math.max(k * refine, k), epsilon, idPred)
+        .map(_._2).toSet
       val scored: Seq[(Long, Double)] = table match {
         case Some(t) =>
           t.filter(r => cand.contains(r._1)).map { case (id, v) =>
@@ -88,12 +76,37 @@ object TopKReplay {
   def rowsOfSearch(df: DataFrame): Seq[(Long, Double)] =
     df.select("id", "dist").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  private final case class Row(cid: Int, id: Long, cmeta: Array[Float],
+  /** The estimate pool of one query: the top `nCand` (lb, id) pairs, by
+    * (lb, id), of the rows of `idx` (collected by [[rowsOf]]) in its
+    * `probes` nearest cells whose id `idPred` passes. */
+  def pool(idx: IvfIndex, rows: Seq[Row], q: Array[Float], probes: Int, nCand: Int,
+           epsilon: Double = 1.9, idPred: Long => Boolean = _ => true): Seq[(Double, Long)] = {
+    val cfg = idx.meta.cfg
+    require(!cfg.rotate, "replay covers unrotated indexes")
+    val isL2 = cfg.metric == "l2"
+    val qq = if (cfg.metric == "cosdist") K.normalize(q) else q
+    val probed = idx.probe(q, probes).toSet
+    rows.filter(r => probed.contains(r.cid) && idPred(r.id)).map { r =>
+      val c = idx.meta.centroids(r.cid)
+      val qr =
+        if (cfg.residual && isL2) qq.indices.map(j => qq(j) - c(j)).toArray else qq
+      val cDot = if (cfg.residual && !isL2) K.dot(qq, c) else 0.0
+      val lb = IvfIndex.lbOf(RaBitQ.Code(r.cmeta, r.codes, cfg.bits, idx.meta.dim),
+        cfg.bits, idx.meta.dim, isL2, qr, qr.map(_.toDouble).sum, K.normSq(qr), cDot,
+        epsilon)
+      (lb, r.id)
+    }.sorted.take(nCand)
+  }
+
+  final case class Row(cid: Int, id: Long, cmeta: Array[Float],
       codes: Array[Byte], vec: Array[Float])
 
-  private def rowsOf(df: DataFrame, withVec: Boolean, f16: Boolean): Seq[Row] = {
+  /** The stored rows of `idx`, with their vectors when it stores them. */
+  def rowsOf(idx: IvfIndex): Seq[Row] = {
+    val withVec = idx.meta.cfg.storeVectors
+    val f16 = idx.meta.cfg.storage == "f16"
     val cols = Seq("cluster_id", "id", "cmeta", "codes") ++ (if (withVec) Seq("vec") else Nil)
-    df.select(cols.head, cols.tail: _*).collect().map { r =>
+    idx.dataDf.select(cols.head, cols.tail: _*).collect().map { r =>
       val vec =
         if (!withVec) null
         else if (f16) graft.core.Half.decodeBytes(r.getAs[Array[Byte]](4))

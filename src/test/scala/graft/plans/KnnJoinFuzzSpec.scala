@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.functions.GraftFunctions
-import graft.index.{IvfConfig, IvfIndex}
+import graft.index.{IvfConfig, IvfIndex, TopKReplay}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -185,6 +185,130 @@ class KnnJoinFuzzSpec extends SparkSpec {
         assert(got == want,
           s"trial $trial (m=$m k=$k metric=$metric part=$partitioned " +
           s"pred=$pred residual=$residual nulls=$withNulls) mismatch")
+      }
+    } finally spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations.filterNot(_ == rule)
+  }
+
+  /** The planner's IVF prefilter escalation for one KNN join, replayed
+    * on the driver ([[TopKReplay.pool]] per (root, query)): the distinct
+    * centers slice by `sliceCap`, and each slice pools the top k*r of the
+    * probed rows `keyOnly` passes, then probes and refine widen x4 while
+    * a query not covered on every root (all cells probed and k*r reaching
+    * the root's rows, or its pool short of k*r) holds fewer than k rows
+    * passing the whole prefilter (`passes`), or would expect fewer than k
+    * in an unfiltered k*r pool at the round's key-only pass rate over the
+    * probed rows. Returns the union of every slice's last pools: the ids
+    * the served join restricts its indexed side to. */
+  private def escalationReplay(roots: Seq[(IvfIndex, Seq[TopKReplay.Row])],
+      centers: Seq[Array[Float]], k: Int, probes: Int, refine: Int, sliceCap: Int,
+      keyOnly: Long => Boolean, passes: Long => Boolean): Set[Long] =
+    centers.map(_.toSeq).distinct.map(_.toArray).grouped(sliceCap).flatMap { slice =>
+      var scale = 1
+      var r = refine
+      def round(): (Seq[Seq[Int]], Seq[Set[Long]], Long, Long) = {
+        val byRoot = roots.map { case (ix, rows) =>
+          val p = math.min(ix.meta.cfg.lists, probes * scale)
+          val probed = slice.flatMap(q => ix.probe(q, p)).toSet
+          val asked = rows.filter(row => probed.contains(row.cid))
+          (slice.map(q => TopKReplay.pool(ix, rows, q, p, k * r, idPred = keyOnly).map(_._2)),
+            asked.length.toLong, asked.count(row => keyOnly(row.id)).toLong)
+        }
+        (byRoot.map(_._1.map(_.length)),
+          slice.indices.map(qi => byRoot.flatMap(_._1(qi)).toSet),
+          byRoot.map(_._2).sum, byRoot.map(_._3).sum)
+      }
+      def short(rd: (Seq[Seq[Int]], Seq[Set[Long]], Long, Long)): Boolean = {
+        val (pooled, byQ, asked, passed) = rd
+        slice.indices.exists { qi =>
+          val covered = roots.zipWithIndex.forall { case ((ix, rows), ri) =>
+            probes * scale >= ix.meta.cfg.lists &&
+              (k.toLong * r >= rows.length || pooled(ri)(qi) < k.toLong * r)
+          }
+          val surv = byQ(qi).count(passes).toLong
+          !covered &&
+            (surv < k || passed.toDouble * surv * r < asked.toDouble * byQ(qi).size)
+        }
+      }
+      var rd = round()
+      while (short(rd)) {
+        scale *= 4
+        r *= 4
+        rd = round()
+      }
+      rd._2.flatten
+    }.toSet
+
+  test("12 seeded prefiltered trials below full coverage: served rows == " +
+       "the exact top-k of a replayed escalation's pools") {
+    val (flat, part) = fixture
+    val rng = new scala.util.Random(919)
+    val rule = AnnTopKRewrite(spark)
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ rule
+    try graft.core.Confs.withConfs(spark,
+        "graft.ann.probes" -> "1", "graft.ann.refine" -> "2",
+        "graft.ann.cost.enable" -> "false") {
+      import spark.implicits._
+      (1 to 12).foreach { trial =>
+        val metric = Seq("l2", "cosdist", "negdot")(rng.nextInt(3))
+        val partitioned = metric == "l2" && rng.nextBoolean()
+        val dirs =
+          if (partitioned) Seq(s"$part/pt=0", s"$part/pt=1") else Seq(flat(metric))
+        val roots = dirs.map { d =>
+          val ix = AnnCatalog.index(spark, AnnCatalog.lookup(Seq(d)).get)
+          (ix, TopKReplay.rowsOf(ix))
+        }
+        val m = 1 + rng.nextInt(5)
+        val k = 1 + rng.nextInt(8)
+        val sliceCap = Seq(2, 256)(rng.nextInt(2))
+        val (pm, pr) = (2L + rng.nextInt(4), rng.nextInt(2).toLong)
+        val residual: Option[(Int, Float)] =
+          if (rng.nextBoolean()) Some((1 + rng.nextInt(dim), rng.nextFloat() - 0.5f))
+          else None
+        val qs = (0 until m).map { i =>
+          val v = if (rng.nextBoolean()) allRows(rng.nextInt(n))._2
+                  else Array.fill(dim)(rng.nextFloat() * 2 - 1)
+          (i.toLong, v)
+        }
+        val distFn = metric match {
+          case "l2"      => GraftFunctions.vecL2 _
+          case "cosdist" => GraftFunctions.vecCosdist _
+          case "negdot"  => GraftFunctions.vecNegdot _
+        }
+        val qdf = qs.map { case (qid, q) => (qid, q.toSeq) }.toDF("qid", "center")
+        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
+          .orderBy(distFn(col("vec"), col("center")), col("id"))
+        val e = spark.read.parquet(if (partitioned) part else flat(metric))
+          .filter(residual.foldLeft(col("id") % pm === pr) { case (p, (j, x)) =>
+            p && element_at(col("vec"), j) > x })
+        val clue = s"trial $trial (m=$m k=$k metric=$metric part=$partitioned " +
+          s"slice=$sliceCap pred=id % $pm = $pr residual=$residual)"
+        val got = graft.core.Confs.withConfs(spark,
+            "graft.ann.knn.join.maxQueries" -> sliceCap.toString) {
+          val df = qdf.crossJoin(e)
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") <= k)
+            .select(col("qid"), col("id"), col("rn").cast("long").as("rn"))
+          assert(AnnTopKRewrite.inServed(df.queryExecution.optimizedPlan.toString),
+            s"$clue was not served:\n${df.queryExecution.optimizedPlan}")
+          df.collect()
+        }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .toSeq.sortBy(t => (t._1, t._3))
+        val keyOnly = (id: Long) => id % pm == pr
+        val passing = allRows.filter { case (id, v) =>
+          keyOnly(id) && residual.forall { case (j, x) => v(j - 1) > x }
+        }
+        val passIds = passing.map(_._1).toSet
+        val pooled = escalationReplay(roots, qs.map(_._2), k, 1, 2, sliceCap,
+          keyOnly, passIds.contains)
+        val fn = graft.ops.Knn.metricFn(metric)
+        val want = qs.flatMap { case (qid, q) =>
+          passing.filter(t => pooled.contains(t._1)).map { case (id, v) => (fn(v, q), id) }
+            .sorted.take(k).zipWithIndex
+            .map { case ((_, id), i) => (qid, id, (i + 1).toLong) }
+        }
+        assert(got == want, s"$clue mismatch: got $got want $want")
       }
     } finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == rule)
