@@ -1447,8 +1447,10 @@ object IvfIndex {
   /** The in-table exact phase, lazy: candidates from any root only gate
     * membership, since the source table's rows are the single exact
     * truth; they are point-fetched ([[pointFetch]]) and scored against
-    * the RAW queries of their slots, as (queryIdx, id, dist). */
-  private def tableScores(src: DataFrame, idCol: String, vecCol: String,
+    * the RAW queries of their slots, as (queryIdx, id, dist). A NULL
+    * vector scores nothing. Also the driver graph tier's exact phase
+    * (`VamanaGraph.searchManyMulti` / `rangeSearchManyMulti`). */
+  private[index] def tableScores(src: DataFrame, idCol: String, vecCol: String,
       cands: Array[(Int, Int, Long)], raw: Array[Array[Float]],
       metric: String): Dataset[(Int, Long, Double)] = {
     val spark = src.sparkSession
@@ -1520,21 +1522,28 @@ object IvfIndex {
     }
   }
 
-  /** The top-k faces' final driver fold: per query, ONE row per id at
-    * its best distance (an id in both gen and delta, append-without-
-    * delete, or in two storage groups scores twice), then the k best by
-    * (dist, id). Output (qid, id, dist, rn). */
-  private def topKFold(spark: SparkSession, rows: Array[(Int, Long, Double)],
+  /** The top-k faces' final driver fold: [[foldOne]] per query, as
+    * (qid, id, dist, rn). */
+  private[index] def topKFold(spark: SparkSession, rows: Array[(Int, Long, Double)],
       k: Int, qids: Array[Long]): DataFrame = {
     import spark.implicits._
     rows.groupBy(_._1).toSeq.flatMap { case (qi, rs) =>
-      rs.groupBy(_._2).valuesIterator
-        .map(dups => dups.minBy(r => (r._3, r._2)))
-        .map(r => (r._3, r._2)).toSeq
-        .sorted.take(k).zipWithIndex
-        .map { case ((d, id), i) => (qids(qi), id, d, (i + 1).toLong) }
+      foldOne(rs.iterator.map(r => (r._2, r._3)), k)
+        .map { case (id, d, rn) => (qids(qi), id, d, rn) }
     }.toDF("qid", "id", "dist", "rn")
   }
+
+  /** One query's top-k fold (IVF and driver graph): ONE row per id at its
+    * best distance (an id in both gen and delta, append-without-delete,
+    * in two storage groups or in two graphs scores twice), then the k
+    * best by (dist, id), as (id, dist, rn). */
+  private[index] def foldOne(rows: Iterator[(Long, Double)],
+      k: Int): Seq[(Long, Double, Long)] =
+    rows.toSeq.groupBy(_._1).valuesIterator
+      .map(dups => dups.minBy(r => (r._2, r._1)))
+      .map(r => (r._2, r._1)).toSeq
+      .sorted.take(k).zipWithIndex
+      .map { case ((d, id), i) => (id, d, (i + 1).toLong) }
 
   /** The rerank-table POINT FETCH, shared by top-k and range: source
     * rows whose id is a candidate. While the id set fits a pushed parquet

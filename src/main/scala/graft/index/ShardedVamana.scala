@@ -143,13 +143,14 @@ object ShardedVamana {
     lazy val totalVertices: Long =
       graphs.map(_._2.ids.length.toLong).fold(0L)(_ + _)
 
-    /** Batch search, (qid, id, dist, rn) like VamanaGraph.searchBatch.
-      * Queries broadcast over the resident shard RDD; per-shard
-      * candidates are bounded (k, or ef with rerank) id/dist rows; the
-      * global top-k merge is one fixed-width shuffle. `rerankTable`
-      * re-scores the full per-shard ef pool EXACTLY from the source
-      * table — mandatory economics on quantized shards — via joins, no
-      * driver collect. */
+    /** Batch search, (qid, id, dist, rn) like
+      * [[VamanaGraph.searchManyMulti]]. Queries broadcast over the
+      * resident shard RDD; per-shard candidates are bounded (k, or ef
+      * with rerank) id/dist rows; the global top-k merge is one
+      * fixed-width shuffle. `rerankTable` re-scores the full per-shard ef
+      * pool EXACTLY from the source table — mandatory economics on
+      * quantized shards — via joins, no driver collect; a NULL source
+      * vector scores nothing and one id keeps its best distance. */
     def search(spark: SparkSession, queries: Array[(Long, Array[Float])],
                k: Int, ef: Int = -1,
                rerankTable: Option[(DataFrame, String, String)] = None,
@@ -205,11 +206,17 @@ object ShardedVamana {
               case "negdot"  => GF.vecNegdot
               case "cosdist" => GF.vecCosdist
             }
+          // a NULL source vector scores nothing, and a source table
+          // holding two rows for one id folds to its best distance before
+          // ranking (the driver tier's exact phase, IvfIndex.tableScores
+          // + topKFold): a NULL dist would sort first and take rn = 1
           val scored = cand
             .join(src.select(col(idCol).cast("long").as("id"),
-              col(vecCol).cast("array<float>").as("__v")), Seq("id"))
+              col(vecCol).cast("array<float>").as("__v"))
+              .filter(col("__v").isNotNull), Seq("id"))
             .join(broadcast(qDf), Seq("qid"))
-            .select(col("qid"), col("id"), kern(col("__v"), col("qvec")).as("dist"))
+            .groupBy("qid", "id")
+            .agg(min(kern(col("__v"), col("qvec"))).as("dist"))
           topk(scored, k)
       }
     }
@@ -225,9 +232,10 @@ object ShardedVamana {
       * keeps shards small, so saturation is cheap per shard). Fully
       * DISTRIBUTED: per-shard hits stay executor-side; the quantized
       * path collects by ε lower bound and reranks EXACTLY from the
-      * source table via joins, strict-< cutoff per query radius — no
-      * driver collect anywhere. Per-(shard, query) hit counts are
-      * bounded loudly by `graft.ann.batch.maxPoolTuples` / batch size. */
+      * source table via joins, strict-< cutoff per query radius, one row
+      * per id at its best distance — no driver collect anywhere.
+      * Per-(shard, query) hit counts are bounded loudly by
+      * `graft.ann.batch.maxPoolTuples` / batch size. */
     def rangeSearch(spark: SparkSession,
                     queries: Array[(Long, Array[Float], Double)],
                     ef: Int = -1, epsilon: Double = 1.9,
@@ -288,7 +296,8 @@ object ShardedVamana {
             .select(col("qid"), col("id"),
               kern(col("__v"), col("qvec")).as("dist"), col("radius"))
             .filter(col("dist") < col("radius"))
-            .select("qid", "id", "dist")
+            // a source table holding two rows for one id emits it once
+            .groupBy("qid", "id").agg(min("dist").as("dist"))
       }
     }
 

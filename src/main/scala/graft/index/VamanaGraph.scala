@@ -25,8 +25,9 @@ import graft.core.{RaBitQ, VectorKernels => K}
  * crates/vchordg/src/search.rs:34-60, bits per types.rs:25-45): the
  * broadcast shrinks ~16x at bits=2 and ~32x at bits=1 (the reference's
  * most-compressed tier: dim/8 bytes + 16B metadata vs 4*dim),
- * beam search ranks by code estimates, and `searchBatch(rerankTable=...)`
- * restores exact distances for the ef-bounded candidates in one join —
+ * beam search ranks by code estimates, and
+ * `VamanaGraph.searchManyMulti(rerankTable=...)` restores exact distances
+ * for the ef-bounded candidates through the IVF in-table exact phase —
  * the same estimate-then-rerank economics as the IVF path.
  */
 final case class VamanaConfig(
@@ -112,7 +113,7 @@ final class VamanaGraph(
    * from the medoid with an ef-bounded result set; terminates when the
    * closest unexpanded candidate is worse than the ef-th result. On a
    * quantized graph distances are code ESTIMATES — use
-   * `searchBatch(rerankTable=...)` for exact output.
+   * [[VamanaGraph.searchManyMulti]] with a `rerankTable` for exact output.
    */
   def search(q: Array[Float], k: Int, ef: Int = -1): Array[(Long, Double)] = {
     val efUse = math.max(if (ef <= 0) cfg.efSearch else ef, k)
@@ -262,73 +263,6 @@ final class VamanaGraph(
       .sortBy(t => (t._2, t._1))
   }
 
-  /** Batch search: queries fan out across executors, graph broadcast.
-    * With `rerankTable` the beam's ef-bounded candidates are re-scored
-    * EXACTLY from the source table in one join (mandatory economics on a
-    * quantized graph, optional belt-and-braces on an exact one).
-    * On a QUANTIZED graph a missing `rerankTable` would silently emit
-    * code-ESTIMATE distances — the reference always reranks to exact
-    * (crates/vchordg/src/search.rs:98-140) — so that combination fails
-    * loudly unless the caller opts in with `allowEstimates=true`.
-    * Output: (qid, id, dist, rn). */
-  def searchBatch(spark: SparkSession, queries: Array[(Long, Array[Float])],
-                  k: Int, ef: Int = -1,
-                  rerankTable: Option[(DataFrame, String, String)] = None,
-                  allowEstimates: Boolean = false): DataFrame = {
-    import spark.implicits._
-    require(!quantized || rerankTable.nonEmpty || allowEstimates,
-      "searchBatch on a quantized graph without rerankTable returns code-ESTIMATE " +
-      "distances, not exact ones: pass rerankTable=Some((sourceDf, idCol, vecCol)) " +
-      "to rerank exactly (reference semantics), or allowEstimates=true to opt in")
-    if (queries.isEmpty)
-      return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
-    val bg = spark.sparkContext.broadcast(this)
-    rerankTable match {
-      case None =>
-        spark.sparkContext.parallelize(queries.toSeq, math.min(queries.length, 32))
-          .flatMap { case (qid, q) =>
-            bg.value.search(q, k, ef).zipWithIndex.map { case ((id, d), i) =>
-              (qid, id, d, (i + 1).toLong)
-            }
-          }
-          .toDF("qid", "id", "dist", "rn")
-      case Some((src, idCol, vecCol)) =>
-        // job 1: beam per query, keep the FULL ef candidate pool
-        val efUse = math.max(if (ef <= 0) cfg.efSearch else ef, k)
-        val candPairs = spark.sparkContext
-          .parallelize(queries.toSeq, math.min(queries.length, 32))
-          .flatMap { case (qid, q) =>
-            bg.value.search(q, efUse, efUse).map { case (id, _) => (qid, id) }
-          }.collect()
-        val qById = queries.toMap
-        val idToQ = candPairs.groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-        val bIdToQ = spark.sparkContext.broadcast(idToQ)
-        val bQs = spark.sparkContext.broadcast(qById)
-        val metric = cfg.metric
-        // job 2: exact distances for candidate rows only
-        val candIds = candPairs.map(_._2).distinct.toSeq
-        val scored = src
-          .join(broadcast(candIds.toDF("__cand_id")),
-            col(idCol).cast("long") === col("__cand_id"))
-          .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-          .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            val kern: (Array[Float], Array[Float]) => Double = metric match {
-              case "l2"      => K.l2
-              case "negdot"  => K.negdot
-              case "cosdist" => K.cosdist
-            }
-            bIdToQ.value.getOrElse(id, Array.empty[Long]).toSeq
-              .map(qid => (qid, id, kern(v, bQs.value(qid))))
-          }.collect()
-        val out = scored.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-          rows.map(r => (r._3, r._2)).sorted.take(k).zipWithIndex
-            .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-        }
-        out.toDF("qid", "id", "dist", "rn")
-    }
-  }
-
   def degreeStats: (Int, Double) = {
     if (adj.isEmpty) return (0, 0.0)
     val degs = adj.map(_.length)
@@ -430,27 +364,30 @@ final class VamanaGraph(
 
 object VamanaGraph {
 
-  /** Batched MULTI-GRAPH search — the graph-tier analogue of
+  /** Batched MULTI-GRAPH search, the one batch face of the driver graph
+    * tier (one graph is R = 1) — the graph-tier analogue of
     * [[IvfIndex.searchManyMulti]] and the amortized form of the planner's
-    * partitioned-graph serve (AnnTopKRewrite.serveGraphMulti, reference
+    * graph candidate fetch (AnnTopKRewrite.graphFetch, reference
     * partition.slt semantics over per-child vchordg indexes): B queries x
     * R driver-resident graphs. Beams fan out over executors (queries
-    * parallelize, the graph set broadcasts once — the searchBatch
-    * economics times R); per (query, graph) the candidate budget matches
-    * the planner serve (k on exact graphs; the full ef pool on quantized
-    * ones, whose code estimates the exact phase corrects). Ids colliding
-    * across graphs fold to one slot with their best distance (the
-    * searchManyMulti output contract). With `rerankTable` the pooled
-    * candidates re-score EXACTLY from the source table in ONE join for
-    * the whole batch — mandatory on quantized graphs unless
-    * `allowEstimates=true` (the searchBatch rule). Output
-    * (qid, id, dist, rn). */
+    * parallelize, the graph set broadcasts once); per (query, graph) the
+    * candidate budget matches the planner serve (k on exact graphs; the
+    * full ef pool on quantized ones, whose code estimates the exact phase
+    * corrects). Ids colliding across graphs fold to one slot with their
+    * best distance (the searchManyMulti output contract). Without a
+    * rerank table the frame is lazy: each beam task folds its own queries
+    * ([[IvfIndex.foldOne]]), so the beams run in the caller's job. With
+    * `rerankTable` the pooled candidates re-score EXACTLY through the IVF
+    * in-table exact phase ([[IvfIndex.tableScores]]: one point fetch for
+    * the whole batch; a NULL source vector scores nothing) — mandatory on
+    * quantized graphs unless `allowEstimates=true`, since the reference
+    * always reranks to exact (crates/vchordg/src/search.rs:98-140).
+    * Output (qid, id, dist, rn). */
   def searchManyMulti(spark: SparkSession, graphs: Seq[VamanaGraph],
                       queries: Array[(Long, Array[Float])], k: Int,
                       ef: Int = -1,
                       rerankTable: Option[(DataFrame, String, String)] = None,
                       allowEstimates: Boolean = false): DataFrame = {
-    import spark.implicits._
     require(graphs.nonEmpty, "no graphs")
     require(queries.nonEmpty, "empty query batch")
     require(queries.map(_._1).distinct.length == queries.length,
@@ -493,67 +430,35 @@ object VamanaGraph {
     val bgs = spark.sparkContext.broadcast(graphs.toIndexedSeq)
     val rerank = rerankTable.nonEmpty
     val kArg = k
-    // job 1: beams fan out per query; each task runs its query against
-    // EVERY graph — per-graph budget k (exact) or the ef pool (quantized,
-    // or any rerank: the wider pool only helps the exact phase)
-    val candRows: Array[(Long, Long, Double)] = spark.sparkContext
-      .parallelize(queries.toSeq, math.min(queries.length, 32))
-      .flatMap { case (qid, q) =>
-        bgs.value.iterator.flatMap { g =>
-          val efUse = math.max(if (ef <= 0) g.cfg.efSearch else ef, kArg)
-          val kCand = if (g.quantized || rerank) efUse else kArg
-          g.search(q, kCand, efUse).iterator.map { case (id, d) => (qid, id, d) }
-        }
-      }.collect()
+    val qids = queries.map(_._1)
+    // beams fan out per query; each task runs its queries against EVERY
+    // graph — per-graph budget k (exact) or the ef pool (quantized, or
+    // any rerank: the wider pool only helps the exact phase)
+    val beam: Array[Float] => Iterator[(Long, Double)] = q =>
+      bgs.value.iterator.flatMap { g =>
+        val efUse = math.max(if (ef <= 0) g.cfg.efSearch else ef, kArg)
+        val kCand = if (g.quantized || rerank) efUse else kArg
+        g.search(q, kCand, efUse).iterator
+      }
+    val fan = spark.sparkContext.parallelize(
+      queries.iterator.map(_._2).zipWithIndex.toSeq, math.min(queries.length, 32))
     rerankTable match {
       case None =>
         // beam distances are exact on unquantized graphs (estimates only
-        // under allowEstimates): fold per (qid, id) to the best distance
-        // and take k — zero further Spark work
-        val out = candRows.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-          rows.groupBy(_._2).valuesIterator
-            .map(dups => dups.minBy(r => (r._3, r._2)))
-            .map(r => (r._3, r._2)).toSeq
-            .sorted.take(kArg).zipWithIndex
-            .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-        }
-        out.toDF("qid", "id", "dist", "rn")
+        // under allowEstimates): each task folds its own queries, so the
+        // frame stays lazy and runs in the caller's job
+        import spark.implicits._
+        fan.flatMap { case (q, qi) =>
+          IvfIndex.foldOne(beam(q), kArg).map { case (id, d, rn) => (qids(qi), id, d, rn) }
+        }.toDF("qid", "id", "dist", "rn")
       case Some((src, idCol, vecCol)) =>
-        // job 2: ONE exact pass over the batch's pooled candidates from
-        // the source table (original vectors, raw queries)
-        val qById = queries.toMap
-        val idToQ = candRows.map(t => (t._1, t._2)).distinct
-          .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-        val bIdToQ = spark.sparkContext.broadcast(idToQ)
-        val bQs = spark.sparkContext.broadcast(qById)
-        val metric = metrics.head
-        val candIds = idToQ.keysIterator.toSeq
-        val scored = src
-          .join(broadcast(candIds.toDF("__cand_id")),
-            col(idCol).cast("long") === col("__cand_id"))
-          .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-          .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            val kern: (Array[Float], Array[Float]) => Double = metric match {
-              case "l2"      => K.l2
-              case "negdot"  => K.negdot
-              case "cosdist" => K.cosdist
-            }
-            bIdToQ.value.getOrElse(id, Array.empty[Long]).toSeq
-              .map(qid => (qid, id, kern(v, bQs.value(qid))))
-          }.collect()
-        // fold per (qid, id) to the BEST distance — mirroring the
-        // no-rerank branch: a source table holding two rows for one id
-        // (append-without-delete) must not let that id occupy two of the
-        // k slots
-        val out = scored.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-          rows.groupBy(_._2).valuesIterator
-            .map(dups => dups.minBy(r => (r._3, r._2)))
-            .map(r => (r._3, r._2)).toSeq
-            .sorted.take(kArg).zipWithIndex
-            .map { case ((d, id), i) => (qid, id, d, (i + 1).toLong) }
-        }
-        out.toDF("qid", "id", "dist", "rn")
+        // job 1 collects the batch's candidate pool; job 2 re-scores it
+        // from the source table, and the fold keeps one row per
+        // (qid, id) at its best distance — a source table holding two
+        // rows for one id must not fill two of the k slots
+        val cands = fan.flatMap { case (q, qi) => beam(q).map(t => (0, qi, t._1)) }.collect()
+        IvfIndex.topKFold(spark, IvfIndex.tableScores(src, idCol, vecCol, cands,
+          queries.map(_._2), metrics.head).collect(), k, qids)
     }
   }
 
@@ -614,65 +519,44 @@ object VamanaGraph {
     val rerank = rerankTable.nonEmpty
     val efArg = ef
     val epsArg = epsilon
+    val qids = queries.map(_._1)
     // job 1: beams fan out per query against EVERY graph; quantized
     // graphs under a rerank widen membership to the ε lower bound (the
     // exact pass below re-tightens), estimate-cut otherwise
-    val candRows: Array[(Long, Long, Double)] = spark.sparkContext
-      .parallelize(queries.toSeq, math.min(queries.length, 32))
-      .flatMap { case (qid, q, r) =>
+    val candRows: Array[(Int, Long, Double)] = spark.sparkContext
+      .parallelize(queries.iterator.map(t => (t._2, t._3)).zipWithIndex.toSeq,
+        math.min(queries.length, 32))
+      .flatMap { case ((q, r), qi) =>
         val hits = bgs.value.iterator.flatMap { g =>
           val eps = if (g.quantized && rerank) epsArg else 0.0
           g.rangeBeam(q, r, efArg, eps).iterator
-            .map { case (i, d) => (qid, g.ids(i), d) }
+            .map { case (i, d) => (qi, g.ids(i), d) }
         }.toArray
         require(hits.length <= perQueryBudget,
-          s"graph range pool budget exceeded: query $qid matched " +
+          s"graph range pool budget exceeded: query ${qids(qi)} matched " +
           s"${hits.length} candidates > $perQueryBudget " +
           "(graft.ann.batch.maxPoolTuples / batch size) — shrink the " +
           "radius, split the batch, or raise the conf")
         hits.iterator
       }.collect()
-    rerankTable match {
-      case None =>
-        // scores are exact on unquantized graphs (estimates only under
-        // allowEstimates) and already strictly inside each radius: fold
-        // cross-graph duplicates to their best distance
-        val out = candRows.groupBy(t => (t._1, t._2)).valuesIterator
-          .map(dups => dups.minBy(_._3)).toSeq
-        out.toDF("qid", "id", "dist")
+    // scores are exact on unquantized graphs (estimates only under
+    // allowEstimates) and already strictly inside each radius; with a
+    // rerank table job 2 re-scores the pooled candidates from the source
+    // table (the top-k face's exact phase) under the strict-< cutoff
+    val hits = rerankTable match {
+      case None => candRows
       case Some((src, idCol, vecCol)) =>
-        // job 2: ONE exact pass over the batch's pooled candidates from
-        // the source table, strict-< cutoff per query radius
-        val qById = queries.iterator.map(t => (t._1, (t._2, t._3))).toMap
-        val idToQ = candRows.map(t => (t._1, t._2)).distinct
-          .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-        val bIdToQ = spark.sparkContext.broadcast(idToQ)
-        val bQs = spark.sparkContext.broadcast(qById)
-        val metric = metrics.head
-        val candIds = idToQ.keysIterator.toSeq
-        val scored = src
-          .join(broadcast(candIds.toDF("__cand_id")),
-            col(idCol).cast("long") === col("__cand_id"))
-          .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-          .as[(Long, Array[Float])]
-          .flatMap { case (id, v) =>
-            val kern: (Array[Float], Array[Float]) => Double = metric match {
-              case "l2"      => K.l2
-              case "negdot"  => K.negdot
-              case "cosdist" => K.cosdist
-            }
-            bIdToQ.value.getOrElse(id, Array.empty[Long]).toSeq.flatMap { qid =>
-              val (q, r) = bQs.value(qid)
-              val d = kern(v, q)
-              if (d < r) Some((qid, id, d)) else None
-            }
-          }.collect()
-        // fold per (qid, id) to the best distance — a source table
-        // holding two rows for one id must not emit the id twice
-        val out = scored.groupBy(t => (t._1, t._2)).valuesIterator
-          .map(dups => dups.minBy(_._3)).toSeq
-        out.toDF("qid", "id", "dist")
+        val radii = queries.map(_._3)
+        IvfIndex.tableScores(src, idCol, vecCol,
+          candRows.map(t => (0, t._1, t._2)), queries.map(_._2), metrics.head)
+          .filter(t => t._3 < radii(t._1)).collect()
     }
+    // fold per (qid, id) to the best distance: cross-graph duplicates,
+    // and a source table holding two rows for one id, emit the id once
+    hits.groupBy(t => (t._1, t._2)).valuesIterator
+      .map(dups => dups.minBy(_._3))
+      .map { case (qi, id, d) => (qids(qi), id, d) }.toSeq
+      .toDF("qid", "id", "dist")
   }
 
   /** Build from a DataFrame — collects vectors (moderate-scale index; see

@@ -368,13 +368,10 @@ object Curation {
     // the histograms are <= `buckets` rows by construction: collect them
     // ONCE and finish on the driver. Per-doc bucket arrays come from ONE
     // generated kernel call (ShingleBucketsExpr) instead of a
-    // per-shingle string explode + hex-md5 chain, and FanOut spreads the
-    // hash work across the box when the scan is a single tiny row group
-    // (no-op at real scale) — guide §2/§4.
+    // per-shingle string explode + hex-md5 chain — guide §4.
     def hist(d: DataFrame, t: String): Array[Long] = {
       val h = new Array[Long](buckets)
-      graft.core.FanOut(d)
-        .select(explode(kcol(graft.functions.ShingleBucketsExpr(
+      d.select(explode(kcol(graft.functions.ShingleBucketsExpr(
           kexpr(toks(col(t))), n, buckets))).as("__b"))
         .groupBy("__b").agg(count(lit(1)).as("__c")).as[(Long, Long)].collect()
         .foreach { case (b, c) => h(b.toInt) = c }
@@ -423,8 +420,7 @@ object Curation {
     // the filter above it and re-evaluate the kernel per consumer.
     val score = kcol(graft.functions.ShingleScoreExpr(
       kexpr(toks(col(textCol))), n, w))
-    graft.core.FanOut(df)
-      .select(col(idCol).as("doc_id"), explode(array(score)).as("__r"))
+    df.select(col(idCol).as("doc_id"), explode(array(score)).as("__r"))
       .filter(col("__r")(0) > 0)
       .select(col("doc_id"), col("__r")(0).cast("long").as("n_shingles"),
         col("__r")(1).as("weight"))
@@ -549,11 +545,9 @@ object Curation {
     // emits each document's bigram buckets followed by its context
     // buckets offset by `buckets` (a tag in the key), one explode + one
     // small groupBy, split back on the driver. Previously two full
-    // tokenize+md5 jobs. FanOut spreads the hash work when the scan is
-    // one tiny row group (no-op at real scale).
+    // tokenize+md5 jobs.
     val h2 = new Array[Long](2 * buckets)
-    graft.core.FanOut(lmDf)
-      .select(explode(kcol(graft.functions.NgramLmBucketsExpr(
+    lmDf.select(explode(kcol(graft.functions.NgramLmBucketsExpr(
         kexpr(toks(col(lmTextCol))), buckets))).as("__k"))
       .groupBy("__k").agg(count(lit(1)).as("__c"))
       .as[(Long, Long)].collect()
@@ -645,12 +639,10 @@ object Curation {
     // join probes per bigram with zero row expansion (guide step 4).
     // explode(array(·)) pins the kernel to ONE evaluation per row (a
     // plain projection would collapse into the filter and re-evaluate
-    // per consumer); FanOut spreads the md5 work when the scan is one
-    // tiny row group (no-op at real scale).
+    // per consumer).
     val score = kcol(graft.functions.NgramScoreExpr(
       kexpr(toks(col(textCol))), cb, cu, alpha))
-    graft.core.FanOut(df)
-      .select(col(idCol).as("doc_id"), explode(array(score)).as("__r"))
+    df.select(col(idCol).as("doc_id"), explode(array(score)).as("__r"))
       .filter(col("__r")(0) > 0)
       .select(col("doc_id"), col("__r")(0).cast("long").as("n_bigrams"),
         (-col("__r")(1) / col("__r")(0)).as("xent"))

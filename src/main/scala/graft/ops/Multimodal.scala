@@ -196,7 +196,7 @@ object Multimodal {
                  batchSize: Int = 256): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.core.FanOut(df.select(col(idCol).cast("long"), col(blobCol)))
+    df.select(col(idCol).cast("long"), col(blobCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.grouped(batchSize).flatMap { batch =>
@@ -226,7 +226,7 @@ object Multimodal {
                  batchSize: Int = 256): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.core.FanOut(df.select(col(idCol).cast("long"), col(blobCol)))
+    df.select(col(idCol).cast("long"), col(blobCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.grouped(batchSize).flatMap { batch =>
@@ -348,7 +348,7 @@ object Multimodal {
                       batchSize: Int = 256): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.core.FanOut(df.select(col(idCol).cast("long"), col(blobCol)))
+    df.select(col(idCol).cast("long"), col(blobCol))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.grouped(batchSize).flatMap { batch =>
@@ -660,7 +660,7 @@ object Multimodal {
     val spark = df.sparkSession
     import spark.implicits._
     val dec = decoder // ship the decoder, not the enclosing object
-    graft.core.FanOut(df.select(col(idCol).cast("long"), col(blobCol)))
+    df.select(col(idCol).cast("long"), col(blobCol))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, blob) =>
         // sample by POSITION in the decoder's emission (robust to sparse

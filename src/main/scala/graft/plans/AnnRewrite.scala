@@ -411,17 +411,23 @@ object AnnCatalog {
 
   def unregisterMaxSim(tablePath: String): Unit = remove(Kind.Tokens, tablePath)
 
-  /** The served batch entry points' resolve: the corpus's file relation
-    * resolves EXACTLY as the planner's serves do (first covering family
-    * of `kinds`); unregistered corpora refuse loudly. */
-  private def resolveServed(spark: SparkSession, tablePath: String,
-      face: String, kinds: Seq[Kind]): Tier = {
+  /** The served batch entry points' shared skeleton. The corpus's file
+    * relation resolves EXACTLY as the planner's serves do (first covering
+    * family of `kinds`), and unregistered corpora refuse loudly. The
+    * queries table (already cast by the face) collects under a LOUD cap
+    * (the batch collects to the driver, the join-serve policy), and a row
+    * holding a NULL matches nothing (the join-serve null contract), so it
+    * is dropped. None for an empty batch. */
+  private def servedBatch[Q: scala.reflect.ClassTag](spark: SparkSession,
+      tablePath: String, face: String, kinds: Seq[Kind],
+      queries: org.apache.spark.sql.DataFrame, maxQ: Int, conf: String)(
+      parse: org.apache.spark.sql.Row => Q): Option[(Tier, Array[Q])] = {
     val fsRel = spark.read.parquet(tablePath).queryExecution.analyzed.collectFirst {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
         lr.relation.asInstanceOf[HadoopFsRelation]
     }.getOrElse(throw new IllegalArgumentException(
       s"$face: '$tablePath' did not resolve to a file-backed relation"))
-    resolve(spark, fsRel.location.rootPaths.map(_.toString),
+    val tier = resolve(spark, fsRel.location.rootPaths.map(_.toString),
         fsRel.location.inputFiles.toSeq, kinds)
       .getOrElse(throw new IllegalArgumentException(
         if (kinds == Seq(Kind.Tokens))
@@ -434,17 +440,12 @@ object AnnCatalog {
           "with AnnCatalog.register / registerGraph / registerShardedGraph " +
           "first; unregistered corpora have the exact DSL faces instead of " +
           "a silent full scan"))
-  }
-
-  /** Bounded queries-side collect for the served entry points: the cap
-    * is LOUD (the batch collects to the driver, the join-serve policy). */
-  private def boundedRows(df: org.apache.spark.sql.DataFrame, maxQ: Int,
-      face: String, conf: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.limit(maxQ + 1).collect()
+    val rows = queries.limit(maxQ + 1).collect()
     require(rows.length <= maxQ,
       s"$face: queries table exceeds $maxQ rows ($conf) — the batch " +
       "collects to the driver; split it or raise the conf")
-    rows
+    val qs = rows.iterator.filterNot(_.anyNull).map(parse).toArray
+    if (qs.isEmpty) None else Some((tier, qs))
   }
 
   /** The rerank table of a graph or sharded tier whose vertices are
@@ -514,35 +515,33 @@ object AnnCatalog {
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       centerCol: String, radiusCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val tier = resolveServed(spark, tablePath, "servedRangeMany", Kind.vectors)
     val c = AnnConf(spark)
-    val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
-        col(centerCol).cast("array<float>"), col(radiusCol).cast("double")),
-      c.rangeServedMaxQueries, "servedRangeMany",
-      AnnConf.RangeServedMaxQueries.name)
-    val queries = rows.iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      .toArray
-    if (queries.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
-    }
-    val es = tier.entries
-    tier.kind match {
-      case Kind.Ivf =>
-        val idxs = es.map(index(spark, _))
-        IvfIndex.rangeSearchManyMulti(idxs, queries, c.epsilon,
-          ivfRerank(spark, es, idxs))
-      case Kind.Graph =>
-        val gs = es.map(graph(spark, _))
-        graft.index.VamanaGraph.rangeSearchManyMulti(spark, gs, queries,
-          ef = c.efSearch, epsilon = c.epsilon, rerankTable =
-            quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
-      case _ =>
-        val h = shardedGraph(spark, es.head)
-        h.rangeSearch(spark, queries, ef = c.efSearch, epsilon = c.epsilon,
-          rerankTable = quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
+    servedBatch(spark, tablePath, "servedRangeMany", Kind.vectors,
+        queriesDf.select(col(qidCol).cast("long"),
+          col(centerCol).cast("array<float>"), col(radiusCol).cast("double")),
+        c.rangeServedMaxQueries, AnnConf.RangeServedMaxQueries.name) { r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2))
+    } match {
+      case None =>
+        import spark.implicits._
+        Seq.empty[(Long, Long, Double)].toDF("qid", "id", "dist")
+      case Some((tier, queries)) =>
+        val es = tier.entries
+        tier.kind match {
+          case Kind.Ivf =>
+            val idxs = es.map(index(spark, _))
+            IvfIndex.rangeSearchManyMulti(idxs, queries, c.epsilon,
+              ivfRerank(spark, es, idxs))
+          case Kind.Graph =>
+            val gs = es.map(graph(spark, _))
+            graft.index.VamanaGraph.rangeSearchManyMulti(spark, gs, queries,
+              ef = c.efSearch, epsilon = c.epsilon, rerankTable =
+                quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
+          case _ =>
+            val h = shardedGraph(spark, es.head)
+            h.rangeSearch(spark, queries, ef = c.efSearch, epsilon = c.epsilon,
+              rerankTable = quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
+        }
     }
   }
 
@@ -567,36 +566,33 @@ object AnnCatalog {
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       centerCol: String, k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
-    val tier = resolveServed(spark, tablePath, "servedSearchMany", Kind.vectors)
     val c = AnnConf(spark)
-    val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
-        col(centerCol).cast("array<float>")),
-      c.knnServedMaxQueries, "servedSearchMany",
-      AnnConf.KnnServedMaxQueries.name)
-    val queries = rows.iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .toArray
-    if (queries.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
-    }
-    val es = tier.entries
-    tier.kind match {
-      case Kind.Ivf =>
-        val idxs = es.map(index(spark, _))
-        IvfIndex.searchManyMulti(idxs, queries, k,
-          probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)).max,
-          refine = c.refine, rerankTable = ivfRerank(spark, es, idxs))
-      case Kind.Graph =>
-        val gs = es.map(graph(spark, _))
-        graft.index.VamanaGraph.searchManyMulti(spark, gs, queries, k,
-          ef = c.efSearch, rerankTable =
-            quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
-      case _ =>
-        val h = shardedGraph(spark, es.head)
-        h.search(spark, queries, k, ef = c.efSearch, rerankTable =
-          quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
+    servedBatch(spark, tablePath, "servedSearchMany", Kind.vectors,
+        queriesDf.select(col(qidCol).cast("long"), col(centerCol).cast("array<float>")),
+        c.knnServedMaxQueries, AnnConf.KnnServedMaxQueries.name) { r =>
+      (r.getLong(0), r.getSeq[Float](1).toArray)
+    } match {
+      case None =>
+        import spark.implicits._
+        Seq.empty[(Long, Long, Double, Long)].toDF("qid", "id", "dist", "rn")
+      case Some((tier, queries)) =>
+        val es = tier.entries
+        tier.kind match {
+          case Kind.Ivf =>
+            val idxs = es.map(index(spark, _))
+            IvfIndex.searchManyMulti(idxs, queries, k,
+              probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)).max,
+              refine = c.refine, rerankTable = ivfRerank(spark, es, idxs))
+          case Kind.Graph =>
+            val gs = es.map(graph(spark, _))
+            graft.index.VamanaGraph.searchManyMulti(spark, gs, queries, k,
+              ef = c.efSearch, rerankTable =
+                quantizedRerank(spark, gs.exists(_.quantized), tablePath, es.head))
+          case _ =>
+            val h = shardedGraph(spark, es.head)
+            h.search(spark, queries, k, ef = c.efSearch, rerankTable =
+              quantizedRerank(spark, h.cfg.bits > 0, tablePath, es.head))
+        }
     }
   }
 
@@ -610,28 +606,25 @@ object AnnCatalog {
   def servedMaxsimMany(spark: SparkSession, tablePath: String,
       queriesDf: org.apache.spark.sql.DataFrame, qidCol: String,
       tokensCol: String, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val es = resolveServed(spark, tablePath, "servedMaxsimMany",
-      Seq(Kind.Tokens)).entries
-    val idxs = es.map(index(spark, _))
+    import org.apache.spark.sql.functions.{col, size, when}
     val c = AnnConf(spark)
-    val rows = boundedRows(queriesDf.select(col(qidCol).cast("long"),
-        col(tokensCol).cast("array<array<float>>")),
-      c.maxsimServedMaxQueries, "servedMaxsimMany",
-      AnnConf.MaxsimServedMaxQueries.name)
-    val queries: Array[(Long, Array[Array[Float]])] = rows.iterator
-      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getLong(0),
-        r.getSeq[scala.collection.Seq[Float]](1).map(_.toArray).toArray))
-      .filter(_._2.nonEmpty)
-      .toArray
-    if (queries.isEmpty) {
-      import spark.implicits._
-      return Seq.empty[(Long, Long, Double)].toDF("qid", "doc", "maxsim")
+    // an empty token list matches nothing either: it reads as NULL
+    val tokens = col(tokensCol).cast("array<array<float>>")
+    servedBatch(spark, tablePath, "servedMaxsimMany", Seq(Kind.Tokens),
+        queriesDf.select(col(qidCol).cast("long"), when(size(tokens) > 0, tokens)),
+        c.maxsimServedMaxQueries, AnnConf.MaxsimServedMaxQueries.name) { r =>
+      (r.getLong(0), r.getSeq[scala.collection.Seq[Float]](1).map(_.toArray).toArray)
+    } match {
+      case None =>
+        import spark.implicits._
+        Seq.empty[(Long, Long, Double)].toDF("qid", "doc", "maxsim")
+      case Some((tier, queries)) =>
+        val es = tier.entries
+        val idxs = es.map(index(spark, _))
+        graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k, kPerToken = c.kPerToken,
+          probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)),
+          refine = c.refine, rerankTable = tokenRerank(spark, Seq(tablePath), es, idxs))
     }
-    graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k, kPerToken = c.kPerToken,
-      probes = idxs.map(ix => c.probesFor(ix.meta.cfg.lists)),
-      refine = c.refine, rerankTable = tokenRerank(spark, Seq(tablePath), es, idxs))
   }
 }
 
@@ -661,7 +654,7 @@ private[plans] object CostGates {
       ivfRootCost(n, lists, probes, k, refine)
     }.sum < roots.map(_._1).sum.toDouble
 
-  /** Graph-tier gate (single serve, multi serve, and join route): the
+  /** Graph-tier gate (top-k serve and join route, one or many graphs): the
     * summed ef-bounded beams plus the k-row fetch vs the exact scan. */
   def graph(nGraphs: Int, sumVertices: Long, ef: Int, k: Int): Boolean =
     nGraphs.toDouble * ef + k < sumVertices.toDouble
@@ -1168,9 +1161,15 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       resolveIn(s, t.child.output, kinds, col, metric).flatMap {
         case (tier, id) => tier.kind match {
           case Kind.Ivf     => serveMulti(c, t, tier.entries, id, qv, s.pred)
-          case Kind.Graph   => serveGraphMulti(c, t, tier.entries, id, qv)
-          case Kind.Sharded => serveShardedGraph(c, t, tier.entries.head, id, qv)
           case Kind.Tokens  => serveMaxSimMulti(c, t, tier.entries, id, qv)
+          case _ =>
+            // a graph tier: its KNN-join fetch at one query, then the
+            // exact Sort+Limit over the IN-restricted scan
+            graphFetch(c, tier, t.k).map { case (fetch, complete) =>
+              val ids = fetch(Array(qv.toFloatArray()))
+              if (ids.length > c.maxInList) t.gl
+              else served(c, t, id, ids, complete)
+            }
         }
       }.orElse(if (kinds == Kind.vectors) servePartial(c, t, s, col, metric, qv) else None)
     }
@@ -1327,9 +1326,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           val j = KnnJoin(f, w, join, projOpt, indexedSide, indexedIsLeft, id, vecAttr)
           tier.kind match {
             case Kind.Ivf     => knnJoinIvf(c, j, k, tier.entries, s.pred, () => centers)
-            case Kind.Graph   => knnJoinGraph(c, j, k, tier.entries, () => centers)
-            case Kind.Sharded => knnJoinSharded(c, j, k, tier.entries.head, () => centers)
             case Kind.Tokens  => knnJoinMaxSim(c, j, k, tier.entries, s.roots, () => tokenSets)
+            case _ =>
+              graphFetch(c, tier, k).flatMap { case (fetch, complete) =>
+                serveKnnJoinRestrict(c, j, () => centers, complete = complete)(
+                  slice => Some(fetch(slice)))
+              }
           }
         }
       }
@@ -1551,55 +1553,41 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Graph-tier KNN join: the same windowed rank shape served from
-    * driver-resident Vamana graphs (single registration or per-child
-    * partitioned cover) — every query beams against every graph ON THE
-    * DRIVER (zero Spark jobs at planning, the serveGraphMulti economics
-    * times the query count; one bounded queries-side collect only).
-    * Per-(query, graph) candidate budgets match the planner's graph
-    * serve: k on exact graphs, the full ef pool on quantized ones (the
-    * window's exact rerank corrects estimate ordering). Declines mirror
-    * [[knnJoinIvf]] plus the graph cost gate. */
-  private def knnJoinGraph(c: AnnConf, j: KnnJoin, k: Int,
-      ges: Seq[AnnCatalog.Entry],
-      centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
-    val gs = ges.map(AnnCatalog.graph(spark, _))
+  /** The graph tiers' candidate fetch and cost gate, shared by the top-k
+    * serve (one query) and the KNN join (one slice of queries per call).
+    * Every query beams against every graph — for k ids, or for its whole
+    * ef pool when the vertices are quantized (code estimates, which the
+    * plan's exact Sort or the join's window corrects); `graft.ann.efSearch`
+    * mirrors the ef_search GUC (default 64, reference
+    * src/index/gucs.rs:38-44). Driver-resident Vamana graphs (one
+    * registration or a partitioned table's one per child) beam ON THE
+    * DRIVER: zero Spark jobs at planning. The sharded tier runs one
+    * [[graft.index.ShardedVamana.Handle.search]] over its resident shard
+    * RDD per fetch, Spark jobs at planning time counted as one planning
+    * job. None when the cost gate declines: the summed ef-bounded beams
+    * plus k against the exact scan of every vertex — per query row, so a
+    * join's query count cancels. Also returns whether the tier attests
+    * source completeness. */
+  private def graphFetch(c: AnnConf, tier: AnnCatalog.Tier, k: Int)
+      : Option[(Array[Array[Float]] => Array[Long], Boolean)] = {
     val ef = c.efSearch
-    // per query row: summed beam work vs the exact cross join's per-query
-    // row scan (serveGraphMulti's gate — M cancels)
-    if (c.costEnable &&
-        !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, k)) None
-    else serveKnnJoinRestrict(c, j, centersOf,
-        complete = gs.forall(_.sourceComplete)) { centers =>
-      Some(centers.flatMap { q =>
-        gs.flatMap { g =>
-          val kCand = if (g.quantized) math.max(ef, k) else k
-          g.search(q, kCand, ef).map(_._1)
-        }
-      })
-    }
-  }
-
-  /** Sharded-graph KNN join: the same windowed rank shape served from
-    * the DISTRIBUTED graph tier — the whole batch beams in ONE
-    * [[graft.index.ShardedVamana.Handle.search]] call over the resident
-    * shard RDD (Spark jobs at planning time, like the single-query
-    * sharded serve); quantized shards keep the ef pool as candidates
-    * and the window's exact rerank restores ordering. */
-  private def knnJoinSharded(c: AnnConf, j: KnnJoin, k: Int,
-      se: AnnCatalog.Entry,
-      centersOf: () => Option[Array[Array[Float]]]): Option[LogicalPlan] = {
-    val h = AnnCatalog.shardedGraph(spark, se)
-    val ef = c.efSearch
-    if (c.costEnable && !CostGates.sharded(h.shards, h.totalVertices, ef, k)) None
-    else serveKnnJoinRestrict(c, j, centersOf,
-        complete = h.sourceComplete) { centers =>
-      AnnTopKRewrite.planningJobs.incrementAndGet()
-      val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-      val kCand = if (h.cfg.bits > 0) math.max(ef, k) else k
-      Some(h.search(spark, queries, kCand, ef, allowEstimates = true)
-        .select("id").distinct()
-        .collect().map(_.getLong(0)))
+    def kCand(quantized: Boolean): Int = if (quantized) math.max(ef, k) else k
+    if (tier.kind == Kind.Graph) {
+      val gs = tier.entries.map(AnnCatalog.graph(spark, _))
+      if (c.costEnable &&
+          !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, k)) None
+      else Some((centers => centers.flatMap { q =>
+          gs.flatMap(g => g.search(q, kCand(g.quantized), ef).map(_._1))
+        }.distinct, gs.forall(_.sourceComplete)))
+    } else {
+      val h = AnnCatalog.shardedGraph(spark, tier.entries.head)
+      if (c.costEnable && !CostGates.sharded(h.shards, h.totalVertices, ef, k)) None
+      else Some(({ centers =>
+        AnnTopKRewrite.planningJobs.incrementAndGet()
+        val queries = centers.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+        h.search(spark, queries, kCand(h.cfg.bits > 0), ef, allowEstimates = true)
+          .select("id").collect().map(_.getLong(0)).distinct
+      }, h.sourceComplete))
     }
   }
 
@@ -1932,55 +1920,6 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     val ids = withinInBudget(perRoot.map { case (root, doc, s) => (doc, s, root) },
       k, c.maxInList)
     Some(served(c, t, id, ids, complete = false))
-  }
-
-  /** The graph (vchordg) top-k serve, for one driver-tier Vamana graph or
-    * a partitioned table's one per child: every graph beams
-    * (ef-bounded; `graft.ann.efSearch` mirrors the ef_search GUC,
-    * default 64, reference src/index/gucs.rs:38-44) for k candidates, or
-    * for its whole ef pool when quantized (code estimates, which the
-    * plan's exact Sort corrects); the ids union (docs are unique across
-    * roots), and the standard exact Sort+Limit runs over the
-    * IN-restricted scan. Driver-side only — zero Spark jobs at planning.
-    * Cost gate: summed beam work (~roots*ef + k) vs the total exact scan
-    * — declines on tiny tables. The IN budget declines past
-    * `graft.ann.maxInList`. */
-  private def serveGraphMulti(c: AnnConf, t: TopK, ges: Seq[AnnCatalog.Entry],
-                              id: IdCol, qv: ArrayData): Option[LogicalPlan] = {
-    val gs = ges.map(AnnCatalog.graph(spark, _))
-    val ef = c.efSearch
-    if (c.costEnable &&
-        !CostGates.graph(gs.length, gs.map(_.ids.length.toLong).sum, ef, t.k))
-      return None
-    val q = qv.toFloatArray()
-    val ids = gs.flatMap { g =>
-      val kCand = if (g.quantized) math.max(ef, t.k) else t.k
-      g.search(q, kCand, ef).map(_._1)
-    }.distinct
-    if (ids.length > c.maxInList) Some(t.gl)
-    else Some(served(c, t, id, ids, gs.forall(_.sourceComplete)))
-  }
-
-  /** Sharded-graph serve: every shard beams, the bounded merge supplies
-    * candidate ids. Runs Spark jobs AT PLANNING TIME over the resident
-    * shard RDD (counted in [[AnnTopKRewrite.planningJobs]], like
-    * prefilter escalation). Cost gate: total beam work is ~shards*ef —
-    * decline when the exact scan is no more work. */
-  private def serveShardedGraph(c: AnnConf, t: TopK, entry: AnnCatalog.Entry,
-                                id: IdCol, qv: ArrayData): Option[LogicalPlan] = {
-    val h = AnnCatalog.shardedGraph(spark, entry)
-    val ef = c.efSearch
-    if (c.costEnable && !CostGates.sharded(h.shards, h.totalVertices, ef, t.k))
-      return None
-    AnnTopKRewrite.planningJobs.incrementAndGet()
-    // on QUANTIZED shards the merge ranks by code estimates — keep the
-    // whole ef pool as candidates (the rewritten plan's exact Sort+Limit
-    // over the source table restores exactness, rerank-in-table style)
-    val kCand = if (h.cfg.bits > 0) math.max(ef, t.k) else t.k
-    val ids = h.search(spark, Array(0L -> qv.toFloatArray()), kCand, ef,
-        allowEstimates = true)
-      .select("id").collect().map(_.getLong(0))
-    Some(served(c, t, id, ids, h.sourceComplete))
   }
 
   /** Partial-index predicate implication, the restricted form Postgres

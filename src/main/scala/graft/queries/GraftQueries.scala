@@ -916,8 +916,8 @@ object GraftQueries {
     // The GRAPH-tier KNN JOIN: the same windowed rank shape served from
     // the partitioned graph fixture's per-child driver-resident Vamana
     // graphs (zero planning Spark jobs beyond the queries collect —
-    // every query beams on the driver, serveGraphMulti economics times
-    // the batch). Generous beams make it exact; collected inside
+    // every query beams on the driver through the top-k serve's graph
+    // candidate fetch). Generous beams make it exact; collected inside
     // withConfs so the pinned rows reflect the forced serve (the cost
     // model rightly declines on tiny tiers, as knn_partitioned).
     "knn_join_graph" -> Q(
@@ -1123,7 +1123,8 @@ object GraftQueries {
     "graph_knn" -> Q(
       (s, d) => {
         val q = qvec(s, d, 0)
-        GraphCache.get(s, d).searchBatch(s, Array(0L -> q), 10)
+        graft.index.VamanaGraph.searchManyMulti(s, Seq(GraphCache.get(s, d)),
+            Array(0L -> q), 10)
           .select(col("id").as("vec_id"), round(col("dist"), 3).as("dist"), col("rn"))
           .orderBy("rn") },
       Some(s"""$distCte
@@ -2972,7 +2973,8 @@ object GraftQueries {
     // is inserted into the LIVE graph post-build, then searched.
     "graph_knn_insert" -> Q(
       (s, d) => { val q = qvec(s, d, 0)
-        graphOut(variantGraph(s, d, "gins").searchBatch(s, Array(0L -> q), 10)) },
+        graphOut(graft.index.VamanaGraph.searchManyMulti(s,
+          Seq(variantGraph(s, d, "gins")), Array(0L -> q), 10)) },
       Some(graphOracle(""))),
 
     // quantized graph vertices (G1, reference vchordg RaBitQ codes): the
@@ -2980,14 +2982,16 @@ object GraftQueries {
     // distances for the ef pool.
     "graph_knn_quantized" -> Q(
       (s, d) => { val q = qvec(s, d, 0)
-        graphOut(variantGraph(s, d, "gq").searchBatch(s, Array(0L -> q), 10,
+        graphOut(graft.index.VamanaGraph.searchManyMulti(s,
+          Seq(variantGraph(s, d, "gq")), Array(0L -> q), 10,
           rerankTable = Some((tbl(s, d, "embeddings"), "vec_id", "embedding")))) },
       Some(graphOracle(""))),
 
     // graph vacuum (G4): deleted vertices must never surface.
     "graph_knn_vacuum" -> Q(
       (s, d) => { val q = qvec(s, d, 0)
-        graphOut(variantGraph(s, d, "gvac").searchBatch(s, Array(0L -> q), 10)) },
+        graphOut(graft.index.VamanaGraph.searchManyMulti(s,
+          Seq(variantGraph(s, d, "gvac")), Array(0L -> q), 10)) },
       Some(graphOracle("vec_id % 7 <> 0"))),
 
     // QUANTIZED-tier vacuum (G4, reference maintain.rs relink-in-place):
@@ -2997,7 +3001,8 @@ object GraftQueries {
     // exact output.
     "graph_knn_vacuum_quantized" -> Q(
       (s, d) => { val q = qvec(s, d, 0)
-        graphOut(variantGraph(s, d, "gvacq").searchBatch(s, Array(0L -> q), 10,
+        graphOut(graft.index.VamanaGraph.searchManyMulti(s,
+          Seq(variantGraph(s, d, "gvacq")), Array(0L -> q), 10,
           rerankTable = Some((tbl(s, d, "embeddings"), "vec_id", "embedding")))) },
       Some(graphOracle("vec_id % 7 <> 0"))),
 

@@ -140,6 +140,39 @@ class GraphSearchManyMultiSpec extends SparkSpec {
       s"the folded slot must carry the best of its duplicate rows: ${got.toSeq}")
   }
 
+  test("rerank-table rows with a NULL vector score nothing: top-k and " +
+       "range equal brute force over the non-null rows") {
+    import spark.implicits._
+    val rows = corpus(100, 0, 61)
+    val g = build(rows, bits = 8)
+    val q = Array.fill(8)(0.2f)
+    val near = brute(rows.toSeq, q, 2).map(_._1)
+    // the SOURCE table adds a NULL-vector row for the nearest candidate
+    // and a second, closer row for the next one
+    val extra = Seq((near(0), null: Array[Float]), (near(1), q))
+    val src = (rows.toSeq ++ extra).map { case (id, v) => (id, Option(v).map(_.toSeq)) }
+      .toDF("id", "vec")
+    val nonNull = rows.toSeq ++ extra.filter(_._2 != null)
+    val want = brute(nonNull, q, 5)
+    val got = VamanaGraph.searchManyMulti(spark, Seq(g), Array(0L -> q),
+        k = 5, ef = 256, rerankTable = Some((src, "id", "vec")))
+      .as[(Long, Long, Double, Long)].collect().sortBy(_._4)
+    assert(got.map(_._2).toSeq == want.map(_._1), s"top-k: ${got.toSeq} want=$want")
+    got.map(_._3).zip(want.map(_._2)).foreach { case (d, w) =>
+      assert(math.abs(d - w) < 1e-9, s"top-k $d vs $w")
+    }
+    val r = brute(nonNull, q, 12).last._2
+    val wantIn = brute(nonNull, q, nonNull.length).filter(_._2 < r).toMap
+    val gotIn = VamanaGraph.rangeSearchManyMulti(spark, Seq(g),
+        Array((0L, q, r)), ef = 256, rerankTable = Some((src, "id", "vec")))
+      .as[(Long, Long, Double)].collect()
+    assert(gotIn.map(_._2).sorted.toSeq == wantIn.keys.toSeq.sorted,
+      s"range: ${gotIn.toSeq} want=$wantIn")
+    gotIn.foreach { case (_, id, d) =>
+      assert(math.abs(d - wantIn(id)) < 1e-9, s"range id $id: $d vs ${wantIn(id)}")
+    }
+  }
+
   test("metric mixes and duplicate qids refuse loudly") {
     val a = build(corpus(40, 0, 41))
     val bRows = corpus(40, 100, 42)

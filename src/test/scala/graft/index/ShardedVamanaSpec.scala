@@ -115,6 +115,41 @@ class ShardedVamanaSpec extends SparkSpec {
     } finally h.unpersist()
   }
 
+  test("rerank-table rows: a NULL vector scores nothing and a duplicated " +
+       "id keeps its best distance, top-k and range") {
+    val s = spark
+    import s.implicits._
+    val h = ShardedVamana.load(spark, dir)
+    try {
+      val q = Array.fill(16)(0.1f)
+      val near = brute(q, 2)
+      // a NULL-vector row for the nearest candidate, and a second,
+      // closer row for the next one
+      val extra = Seq((near(0), null: Array[Float]), (near(1), q))
+      val src = (data ++ extra).map { case (id, v) => (id, Option(v).map(_.toSeq)) }
+        .toDF("id", "vec")
+      val want = (data ++ extra.filter(_._2 != null))
+        .map { case (id, v) => (K.l2(v, q), id) }
+        .groupBy(_._2).valuesIterator.map(_.min).toSeq.sorted.take(10)
+      val got = h.search(spark, Array(0L -> q), 10,
+          rerankTable = Some((src, "id", "vec")))
+        .select("id", "dist", "rn").as[(Long, Double, Long)].collect().sortBy(_._3)
+      assert(got.map(_._1).toSeq == want.map(_._2), s"got=${got.toSeq} want=$want")
+      got.map(_._2).zip(want.map(_._1)).foreach { case (d, w) =>
+        assert(math.abs(d - w) < 1e-5, s"$d vs $w")
+      }
+      // the range face under the same table: each id once, at its best
+      val r = want.last._1
+      val wantIn = want.filter(_._1 < r).map(t => (t._2, t._1)).toMap
+      val gotIn = h.rangeSearch(spark, Array((0L, q, r)), ef = 1200,
+          rerankTable = Some((src, "id", "vec")))
+        .select("id", "dist").as[(Long, Double)].collect()
+      assert(gotIn.map(_._1).sorted.toSeq == wantIn.keys.toSeq.sorted,
+        s"range got=${gotIn.toSeq} want=$wantIn")
+      gotIn.foreach { case (id, d) => assert(math.abs(d - wantIn(id)) < 1e-5, s"$id: $d") }
+    } finally h.unpersist()
+  }
+
   test("bits=1 sharded tier: odd-dim load (cmeta dim recovery) + rerank recall floor") {
     val s = spark
     import s.implicits._

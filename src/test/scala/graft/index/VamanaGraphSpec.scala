@@ -58,7 +58,7 @@ class VamanaGraphSpec extends SparkSpec {
   test("searchBatch over broadcast graph matches local search") {
     import spark.implicits._
     val queries = data.take(5).map { case (id, v) => (id, v) }.toArray
-    val got = graph.searchBatch(spark, queries, 3)
+    val got = VamanaGraph.searchManyMulti(spark, Seq(graph), queries, 3)
       .select("qid", "id", "rn").as[(Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
     queries.foreach { case (qid, q) =>
@@ -121,7 +121,7 @@ class VamanaGraphSpec extends SparkSpec {
     assert(g2.ids.forall(id => !dead.contains(id)))
     assert(g2.degreeStats._1 <= 24)
     // code-estimate beam over the vacuumed graph still reaches the live
-    // true neighbors (rerank restores exactness in searchBatch)
+    // true neighbors (rerank restores exactness in searchManyMulti)
     val live = data.filterNot { case (id, _) => dead.contains(id) }
     def bruteLive(q: Array[Float], k: Int): Seq[Long] =
       live.map { case (id, v) => (K.l2(v, q), id) }.sortBy(identity).take(k).map(_._2)
@@ -153,10 +153,13 @@ class VamanaGraphSpec extends SparkSpec {
     val qg = VamanaGraph.build(
       data.map(_._1).toArray, data.map(_._2).toArray, VamanaConfig(m = 24, bits = 8))
     val q = Array(0L -> Array.fill(16)(0.1f))
-    val e = intercept[IllegalArgumentException] { qg.searchBatch(spark, q, 5) }
+    val e = intercept[IllegalArgumentException] {
+      VamanaGraph.searchManyMulti(spark, Seq(qg), q, 5)
+    }
     assert(e.getMessage.contains("code-ESTIMATE"))
     assert(e.getMessage.contains("rerankTable"))
-    assert(qg.searchBatch(spark, q, 5, allowEstimates = true).count() == 5)
+    assert(VamanaGraph.searchManyMulti(spark, Seq(qg), q, 5,
+      allowEstimates = true).count() == 5)
   }
 
   test("quantized vertices (bits=2): >=4x smaller broadcast, recall floor via rerank") {
@@ -175,7 +178,7 @@ class VamanaGraphSpec extends SparkSpec {
     val rng = new scala.util.Random(3)
     val queries = Array.tabulate(20)(i =>
       (i.toLong, Array.fill(16)(rng.nextFloat() * 2 - 1)))
-    val got = qg.searchBatch(spark, queries, 10, ef = 64,
+    val got = VamanaGraph.searchManyMulti(spark, Seq(qg), queries, 10, ef = 64,
         rerankTable = Some((src, "id", "vec")))
       .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toMap).toMap
@@ -217,7 +220,7 @@ class VamanaGraphSpec extends SparkSpec {
     val rng = new scala.util.Random(17)
     val queries = Array.tabulate(20)(i =>
       (i.toLong, Array.fill(16)(rng.nextFloat() * 2 - 1)))
-    val got = g1.searchBatch(spark, queries, 10, ef = 128,
+    val got = VamanaGraph.searchManyMulti(spark, Seq(g1), queries, 10, ef = 128,
         rerankTable = Some((src, "id", "vec")))
       .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3)).toMap).toMap
