@@ -394,7 +394,7 @@ object IvfIndex {
 
   /** Bytes currently held by this JVM's local-mode shuffle scratch
     * (blockmgr-* dirs under java.io.tmpdir). Observability for the staged
-    * build and for [[tools.NovecScale]]'s peak-scratch sampler. */
+    * build; COVERAGE.md's 1B-row codes-only anchor sampled peak scratch. */
   private[graft] def shuffleScratchBytes(): Long = {
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))
     Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -2375,45 +2375,6 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
     }.toMap
   }
 
-  /** Per-cluster indexed row counts (cached with dataDf's invalidation
-    * key) — the analog of the reference's per-cell `tuples()` counter on
-    * jump tuples, used by MaxSim threshold pricing. */
-  @volatile private var clusterCountsCache: (String, Boolean, Long, Map[Int, Long]) = null
-  def clusterCounts: Map[Int, Long] = {
-    val gen = currentGen
-    val delta = deltaExists
-    val ver = mutations.get()
-    val c = clusterCountsCache
-    if (c != null && c._1 == gen && c._2 == delta && c._3 == ver) c._4
-    else {
-      val m = dataDf.groupBy("cluster_id").count()
-        .as[(Int, Long)].collect().toMap
-      clusterCountsCache = (gen, delta, ver, m)
-      m
-    }
-  }
-
-  /** Every leaf cell in probe order (the same l2s-to-centroid ordering
-    * `probe` uses, so the first `probes` entries ARE the probed set),
-    * carrying the INDEX-METRIC distance from the query to the centroid —
-    * the value stream of the reference's maxsim probe iterator
-    * (crates/vchordrq/src/search.rs:283-301), used to price unvisited
-    * cells. */
-  def cellOrder(q: Array[Float]): Array[(Int, Double)] = {
-    val qq = prepQuery(q)
-    meta.centroids.indices
-      .map(i => (K.l2s(qq, meta.centroids(i)), i))
-      .sortBy(identity)
-      .map { case (l2s, i) =>
-        val d = meta.cfg.metric match {
-          case "l2"      => math.sqrt(l2s)
-          case "negdot"  => K.negdot(qq, meta.centroids(i))
-          case "cosdist" => 1.0 + K.negdot(qq, meta.centroids(i))
-        }
-        (i, d)
-      }.toArray
-  }
-
   /** Probed leaf cluster ids: nearest `probes` leaf centroids. With
     * internal levels (B5), the probe DESCENDS the tree: each level keeps
     * only its best groups and expands their children, so a deep tree
@@ -2603,40 +2564,22 @@ final class IvfIndex(val spark: SparkSession, val dir: String, val meta: IvfMeta
    * prewarmCodes() cache when one is valid. Refuses loudly past
    * `graft.ann.batch.maxPoolTuples` pooled tuples.
    *
-   * `exactBudget >= 0` switches to the reference's per-query refine
-   * budget (maxsim_refine, src/index/vchordrq/scanners/maxsim.rs:99-260):
-   * the output set is the top-k BY ESTIMATE, of which only the first
-   * exactBudget rows per query are re-scored exactly — the remainder keep
-   * their estimate as the distance (callers wanting honest mixing pass
-   * epsilon = 0). `exactBudget = 0` runs no exact phase, so a codes-only
-   * index serves it without a rerank table.
    * Output: (qid, id, dist, rn).
    */
   def searchMany(queries: Array[(Long, Array[Float])], k: Int, probes: Int = 4,
                  epsilon: Double = 1.9, refine: Int = 8,
                  rerankTable: Option[(DataFrame, String, String)] = None,
-                 probes1: Int = -1, exactBudget: Int = -1): DataFrame = {
+                 probes1: Int = -1): DataFrame = {
     IvfIndex.requireBatch(queries.map(_._1))
-    if (exactBudget != 0) requireRerankSource(rerankTable)
-    val budgeted = exactBudget >= 0
-    val nCand = if (budgeted) k else math.max(k * refine, k)
+    requireRerankSource(rerankTable)
+    val nCand = math.max(k * refine, k)
     IvfIndex.requirePoolBudget(spark, "searchMany", 1, queries.length, nCand)
     val qvecs = queries.map(_._2)
     val (plan, pool) =
       IvfIndex.pools(Seq(this), qvecs, nCand, Seq(probes), epsilon, probes1)
-    // budgeted: the first exactBudget candidates per query in estimate
-    // order rerank; the rest keep their lower bound as the distance
-    val (exact, rough) =
-      if (!budgeted) (pool, Array.empty[(Int, Int, Long, Double)])
-      else pool.groupBy(_._2).valuesIterator
-        .flatMap(_.sortBy(t => (t._4, t._3)).zipWithIndex).toArray
-        .partition(_._2 < exactBudget) match {
-          case (e, r) => (e.map(_._1), r.map(_._1))
-        }
-    val scored = IvfIndex.rerank(plan, exact.map(t => (t._1, t._2, t._3)),
+    val scored = IvfIndex.rerank(plan, pool.map(t => (t._1, t._2, t._3)),
       qvecs, rerankTable)
-    IvfIndex.topKFold(spark, scored ++ rough.map(t => (t._2, t._3, t._4)), k,
-      queries.map(_._1))
+    IvfIndex.topKFold(spark, scored, k, queries.map(_._1))
   }
 
   /**

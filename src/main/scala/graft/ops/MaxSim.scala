@@ -78,39 +78,6 @@ object MaxSim {
     score(tokens, docCol, vecCol, query)
       .orderBy(col("maxsim"), col("doc")).limit(k)
 
-  /** Aggregator over RETRIEVED candidate rows `(tokenIdx, dist)`: buffer
-    * = per-query-token min retrieved distance in fixed slots; finish
-    * sums in token order with `estimates(i)` standing in for tokens that
-    * did not retrieve this doc — the distributed form of
-    * [[approxTopK]]'s doc scoring (min is order-insensitive and the
-    * final sum runs in fixed token order, so the result is
-    * byte-identical to the sequential loop under any partitioning). */
-  final class RetrievedMinAgg(nTokens: Int, estimates: Array[Double])
-      extends Aggregator[(Long, Double), Array[Double], Double] {
-    override def zero: Array[Double] = Array.fill(nTokens)(Double.PositiveInfinity)
-    override def reduce(buf: Array[Double], r: (Long, Double)): Array[Double] = {
-      val qi = r._1.toInt
-      if (r._2 < buf(qi)) buf(qi) = r._2
-      buf
-    }
-    override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      var i = 0
-      while (i < a.length) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-      a
-    }
-    override def finish(buf: Array[Double]): Double = {
-      var s = 0.0
-      var i = 0
-      while (i < buf.length) {
-        s += (if (buf(i) == Double.PositiveInfinity) estimates(i) else buf(i))
-        i += 1
-      }
-      s
-    }
-    override def bufferEncoder: Encoder[Array[Double]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
-  }
-
   // ------------------------------------------------------------ index path
 
   /** Pack (doc, token position) into one long row key — the reference's
@@ -138,196 +105,55 @@ object MaxSim {
   }
 
   /**
-   * Approximate MaxSim through the IVF index (reference `maxsim_search` +
-   * `maxsim_threshold`, crates/vchordrq/src/search.rs:199-380 and
-   * scanners/maxsim.rs): each query token retrieves its `kPerToken` best
-   * token vectors; a doc's missing token contributes the token's worst
-   * retrieved distance as the pessimistic estimate for unvisited cells;
-   * docs score by the sum.
+   * The MaxSim candidate phase (reference scanners/maxsim.rs), for a batch
+   * of token queries over one token index or a partitioned corpus's
+   * per-child ones. ONE Spark job pools every (root, query token)'s
+   * `kPerToken` best estimates from a single flat read spanning all
+   * roots' probed cells (IvfIndex.multiEstimateCandidates, epsilon = 0 —
+   * the reference's maxsim_refine=0 unbiased-estimate retrieval,
+   * crates/vchordrq/src/search.rs:199-380). Docs then score on the driver
+   * over the BOUNDED pools, per (root, query): per-token min retrieved
+   * estimate, with the token's worst retrieved estimate IN THAT ROOT
+   * standing in for misses (0.0 when it retrieved nothing there), summed
+   * in token order — a doc never competes against another root's
+   * stand-ins. Returns the best `docsPerRoot` docs per (root, query) as
+   * (root, queryIdx, doc, estimate), ascending (estimate, doc).
    *
-   * `refineDocs > 0` adds the reference's `maxsim_refine` step: that many
-   * of the best estimated docs are RE-SCORED EXACTLY from the index's
-   * stored token vectors (one distributed pass over just those docs'
-   * tokens), and the final top-k orders by exact score — estimate error
-   * can then only cost recall at the candidate boundary, never ordering.
-   *
-   * `refinePerToken >= 0` switches to the reference's PER-TOKEN refine
-   * budget (`vchordrq.maxsim_refine`, scanners/maxsim.rs:99-260): each
-   * query token's retrieved candidates are ranked by code estimate and
-   * only the first `refinePerToken` get exact distances — the remainder
-   * contribute their estimate (0 = pure-estimate retrieval, the
-   * reference's maxsim_refine=0). Exact-scoring cost is then
-   * refinePerToken * |query tokens|, independent of how many tokens the
-   * candidate DOCS have (the per-doc `refineDocs` rescore costs
-   * |doc tokens| * |query tokens| per refined doc — under sparse probes
-   * the per-token budget buys more ranking fidelity per exact scoring).
-   * -1 (default) keeps the fully-exact retrieval path.
-   *
-   * `maxsimThreshold > 0` enables the reference's threshold pricing
-   * (search.rs:369-380 + scanners/maxsim.rs:698-717): a token's stand-in
-   * for docs it did not retrieve becomes max(worst retrieved distance,
-   * centroid distance of the first unprobed cells covering that many
-   * tuples) — the probe iterator keeps being consumed WITHOUT scanning
-   * until `maxsimThreshold` tuples are covered. Pricing misses at an
-   * unvisited-cell distance (instead of the optimistic worst-retrieved)
-   * penalizes docs whose tokens live outside the probe horizon, which is
-   * what keeps sparse-probe rankings honest.
+   * Callers MUST rescore exactly: estimate error may cost recall at the
+   * candidate boundary, never final ordering. Pool budgets are the
+   * callers' (the planner declines, [[maxsimManyMulti]] refuses).
    */
-  def approxTopK(idx: graft.index.IvfIndex, query: Array[Array[Float]], k: Int,
-                 kPerToken: Int = 100, probes: Int = 4, refine: Int = 8,
-                 refineDocs: Int = 0, maxsimThreshold: Int = 0,
-                 refinePerToken: Int = -1): DataFrame = {
-    val spark = idx.spark
-    import spark.implicits._
-    // ALL tokens retrieve through ONE batch call (qid = token index):
-    // per-token `search` is searchMany with one query, so the batch
-    // answers the same rows for 2 Spark jobs total instead of 2 per
-    // token — a 100-token ColBERT query would otherwise serialize 200
-    // driver-scheduled jobs. With a per-token
-    // budget the batch runs in mixed exact/estimate mode (epsilon = 0 so
-    // the estimate stand-ins carry no lower-bound slack).
-    val tokQueries = query.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-    val retrieved0 =
-      if (refinePerToken >= 0)
-        idx.searchMany(tokQueries, kPerToken, probes, epsilon = 0.0,
-          exactBudget = refinePerToken)
-      else
-        idx.searchMany(tokQueries, kPerToken, probes, refine = refine)
-    // the retrieved candidate set feeds TWO passes (per-token worst
-    // distance, then doc scoring) — persist so the retrieval plan runs
-    // once; everything downstream is bounded, so both passes are cheap
-    val retrieved = retrieved0.select(col("qid"), col("id"), col("dist")).persist()
-    try {
-      // per-token WORST retrieved distance — |tokens| rows, the only
-      // driver-side collect left on this path (doc scoring itself runs
-      // distributed below; at kPerToken=1000 x 100 tokens the old
-      // collect-and-loop shape shipped 100k rows to the driver)
-      val worst: Map[Long, Double] = retrieved.groupBy("qid")
-        .agg(max(col("dist")).as("w"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      // estimation_by_threshold: walk the probe iterator past the probed
-      // cells, consuming per-cell tuple counts until the threshold is
-      // covered; the last consumed cell's centroid distance prices misses
-      val thresholdEst: Seq[Double] =
-        if (maxsimThreshold <= 0) query.indices.map(_ => Double.NegativeInfinity)
-        else {
-          val counts = idx.clusterCounts
-          query.toSeq.map { q =>
-            val order = idx.cellOrder(q)
-            var remaining = maxsimThreshold.toLong
-            var i = 0
-            while (i < math.min(probes, order.length)) {
-              remaining -= counts.getOrElse(order(i)._1, 0L); i += 1
-            }
-            var est = Double.NegativeInfinity
-            while (i < order.length && remaining > 0) {
-              remaining -= counts.getOrElse(order(i)._1, 0L)
-              est = order(i)._2
-              i += 1
-            }
-            est
-          }
-        }
-      val estimates: Array[Double] = query.indices.map { qi =>
-        worst.get(qi.toLong) match {
-          case Some(w) => math.max(w, thresholdEst(qi))
-          case None    => 0.0 // token retrieved nothing
-        }
-      }.toArray
-      // DISTRIBUTED doc scoring: per-doc fixed-slot min aggregation with
-      // estimate fallbacks (map-side combine carries one |tokens|-wide
-      // buffer per doc — never the candidate rows), then a bounded
-      // TakeOrdered; byte-identical to the former driver loop (spec'd)
-      val scored = retrieved
-        .select(shiftright(col("id"), 16).as("doc"), col("qid"), col("dist"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .mapValues(r => (r._2, r._3))
-        .agg(new RetrievedMinAgg(query.length, estimates).toColumn.name("maxsim"))
-        .toDF("doc", "maxsim")
-      if (refineDocs <= 0) {
-        // bounded: k rows to the driver, returned as a local result so
-        // the persisted retrieval can be released eagerly
-        val top = scored.orderBy(col("maxsim"), col("doc")).limit(k)
-          .as[(Long, Double)].collect()
-        top.toSeq.toDF("doc", "maxsim")
-      } else {
-        val cand = scored.orderBy(col("maxsim"), col("doc"))
-          .limit(math.max(refineDocs, k))
-          .select("doc").as[Long].collect()
-        if (cand.isEmpty) // nothing retrieved: exactRescore's per-doc
-          // range predicate would be an empty reduce
-          Seq.empty[(Long, Double)].toDF("doc", "maxsim")
-        else exactRescore(idx, query,
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(cand))
-          .orderBy(col("maxsim"), col("doc"))
-          .limit(k)
-      }
-    } finally { retrieved.unpersist(); () }
-  }
-
-  /**
-   * Candidate docs for a PARTITIONED multivector corpus — per-child
-   * token indexes serving a whole-table MaxSim query (reference
-   * scanners/maxsim.rs semantics over partition.slt-style per-child
-   * indexes). ONE Spark job retrieves every (root, token) pool from a
-   * single flat parquet read spanning all roots' probed cells
-   * (IvfIndex.multiEstimateCandidates, epsilon = 0 — unbiased estimates, the
-   * reference's maxsim_refine=0 retrieval mode); docs then score on the
-   * driver over the BOUNDED pools (≤ roots x tokens x kPerToken rows):
-   * per (root, doc), per-token min retrieved estimate, with the token's
-   * worst retrieved distance in that root standing in for misses (the
-   * [[approxTopK]] estimate contract applied per root — a doc never
-   * competes against another root's stand-ins). Returns per root the
-   * top `docsPerRoot` (root, doc, score) by ascending estimate.
-   *
-   * Callers MUST rerank exactly (the served plan's own Sort over the
-   * source table does) — estimate error costs recall at the candidate
-   * boundary only, never final ordering. Docs are unique across roots
-   * (a partitioned corpus holds each doc's tokens in exactly one child).
-   */
-  def multiRootCandidateDocs(idxs: Seq[graft.index.IvfIndex],
-      query: Array[Array[Float]], docsPerRoot: Int, kPerToken: Int,
-      probes: Seq[Int]): Array[(Int, Long, Double)] = {
-    require(query.nonEmpty, "empty token query")
-    val pools = graft.index.IvfIndex.multiEstimateCandidates(idxs, query,
-      kPerToken, probes, epsilon = 0.0)._1
-    val nQ = query.length
+  private[graft] def candidateDocs(idxs: Seq[graft.index.IvfIndex],
+      queries: Array[Array[Array[Float]]], docsPerRoot: Int, kPerToken: Int,
+      probes: Seq[Int]): Array[(Int, Int, Long, Double)] = {
+    // global token slots: query qi owns [offsets(qi), offsets(qi + 1))
+    val offsets = queries.scanLeft(0)(_ + _.length)
+    val qiOf = queries.indices.flatMap(qi => Seq.fill(queries(qi).length)(qi))
+    val pools = graft.index.IvfIndex.multiEstimateCandidates(idxs,
+      queries.flatten, kPerToken, probes, epsilon = 0.0)._1
     val worst = pools.groupBy(t => (t._1, t._2)).view
       .mapValues(_.map(_._4).max).toMap
-    pools.groupBy(_._1).iterator.flatMap { case (root, rows) =>
-      // token retrieved nothing in this root -> 0.0 (the approxTopK
-      // no-retrieval stand-in)
-      val est = Array.tabulate(nQ)(qi => worst.getOrElse((root, qi), 0.0))
-      scoreRootPool(rows.iterator.map(t => (t._2, t._3, t._4)), nQ, est,
-        docsPerRoot).map { case (doc, s) => (root, doc, s) }
-    }.toArray
-  }
-
-  /** ONE root's estimate-scoring core, shared by
-    * [[multiRootCandidateDocs]] and [[maxsimManyMulti]]: fold pool rows
-    * (tokenIdx, packedId, lb) to per-doc per-token min estimates, price
-    * misses with `est` (worst retrieved per token, the approxTopK
-    * contract), sum in token order, return the best `take` docs
-    * ascending (score, doc). One implementation so the miss-stand-in
-    * semantics cannot silently fork between the faces. */
-  private def scoreRootPool(rows: Iterator[(Int, Long, Double)], nTok: Int,
-      est: Array[Double], take: Int): Array[(Long, Double)] = {
-    val perDoc = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
-    rows.foreach { case (ti, id, lb) =>
-      val buf = perDoc.getOrElseUpdate(unpackDoc(id),
-        Array.fill(nTok)(Double.PositiveInfinity))
-      if (lb < buf(ti)) buf(ti) = lb
-    }
-    perDoc.iterator.map { case (doc, buf) =>
-      var s = 0.0
-      var i = 0
-      while (i < nTok) {
-        s += (if (buf(i) == Double.PositiveInfinity) est(i) else buf(i))
-        i += 1
+    pools.groupBy(t => (t._1, qiOf(t._2))).iterator.flatMap { case ((root, qi), rows) =>
+      val nTok = queries(qi).length
+      val base = offsets(qi)
+      val est = Array.tabulate(nTok)(ti => worst.getOrElse((root, base + ti), 0.0))
+      val perDoc = scala.collection.mutable.HashMap.empty[Long, Array[Double]]
+      rows.foreach { case (_, gti, id, lb) =>
+        val buf = perDoc.getOrElseUpdate(unpackDoc(id),
+          Array.fill(nTok)(Double.PositiveInfinity))
+        if (lb < buf(gti - base)) buf(gti - base) = lb
       }
-      (doc, s)
-    }.toArray.sortBy(t => (t._2, t._1)).take(take)
+      perDoc.iterator.map { case (doc, buf) =>
+        var s = 0.0
+        var i = 0
+        while (i < nTok) {
+          s += (if (buf(i) == Double.PositiveInfinity) est(i) else buf(i))
+          i += 1
+        }
+        (doc, s)
+      }.toArray.sortBy(t => (t._2, t._1)).take(docsPerRoot)
+        .map { case (doc, s) => (root, qi, doc, s) }
+    }.toArray
   }
 
   /** Aggregator over rescore rows `(queryIdx, root, doc, tokvec)` grouped
@@ -375,50 +201,37 @@ object MaxSim {
   }
 
   /**
-   * Batched MULTI-ROOT MaxSim — the batch face of the partitioned serve
-   * ([[multiRootCandidateDocs]] + exact rescore) and the multi-root form
-   * of [[approxTopK]] with `refineDocs = k * refine`: B query documents x
-   * R per-child token indexes answered in TWO flat passes whose job
-   * count is CONSTANT in B and R (AQE materializes the rescore's one
-   * shuffle stage as its own scheduler job — 3 jobs total, flat).
+   * Batched MULTI-ROOT MaxSim, the one MaxSim retrieval (the reference's
+   * per-token search, doc-keyed merge and `maxsim_refine`, SURVEY §3.3):
+   * B query documents x R per-child token indexes (R = 1 for a single
+   * token index) answered in TWO flat passes whose job count is CONSTANT
+   * in B and R (AQE materializes the rescore's one shuffle stage as its
+   * own scheduler job — 3 jobs total, flat).
    *
-   *   job 1: ONE pooled retrieval over every (root, query-token) from a
-   *          single flat parquet read spanning all roots' probed cells
-   *          (IvfIndex.multiEstimateCandidates, epsilon = 0 — the reference's
-   *          maxsim_refine=0 unbiased-estimate retrieval,
-   *          crates/vchordrq/src/search.rs:199-380); docs then score on
-   *          the driver over the BOUNDED pools, per (query, root), with
-   *          each token's worst retrieved distance IN THAT ROOT standing
-   *          in for misses (the approxTopK estimate contract applied per
-   *          root) — the best `k * refine` docs per (query, root) become
-   *          rescore candidates, folded PER DOC across roots (a doc
-   *          selected by ANY root's estimates rescores over ALL its
-   *          stored tokens in every root, so a cross-root split doc is
-   *          always scored whole — candidate-boundary misses are the
-   *          only estimate effect, never a token-subset score)
+   *   job 1: [[candidateDocs]] — the best `k * refine` docs per
+   *          (query, root) by estimate become rescore candidates, folded
+   *          PER DOC across roots (a doc selected by ANY root's estimates
+   *          rescores over ALL its stored tokens in every root, so a
+   *          cross-root split doc is always scored whole — candidate-
+   *          boundary misses are the only estimate effect, never a
+   *          token-subset score)
    *   job 2: EXACT rescore of every candidate doc from the indexes' own
    *          stored token vectors (per-root packed-key range predicates
    *          pushed to parquet row groups, the [[coalesceDocRanges]]
    *          machinery), one shuffle with map-side combine scoring every
-   *          (query, doc) pair against the root-rotated query tokens —
-   *          final ordering is exact, estimate error can only cost
-   *          recall at the candidate boundary
+   *          (query, doc) pair against the root-rotated query tokens
    *
    * Requires homogeneous negdot children sharing the query dim. The
    * exact rescore reads the indexes' own stored vectors, so children
    * must ALSO share storage and store vectors — UNLESS `rerankTable`
    * supplies the original token table `(tokensDf, docCol, vecCol)` (one
-   * row per token keyed by doc): then job 2 rescored candidate docs
+   * row per token keyed by doc): then job 2 rescores candidate docs
    * from the SOURCE table against the RAW queries (original-space
    * vectors — rotation and storage are index-internal and irrelevant),
    * which serves codes-only and storage-mixed token children — the
    * rerank-in-table contract the top-k and range batch faces share.
-   * The per-root dataDf reads
-   * union into one plan, so planning is linear in R — the DSL batch
-   * face's trade (the planner's serveMaxSimMulti stays the flat-relation
-   * path for very wide corpora). Output: (qid, doc, maxsim) — top `k`
-   * docs per query ascending (maxsim, doc), the [[approxTopK]] contract
-   * keyed by qid.
+   * Output: (qid, doc, maxsim) — top `k` docs per query ascending
+   * (maxsim, doc), exact scores.
    */
   def maxsimManyMulti(idxs: Seq[graft.index.IvfIndex],
       queries: Array[(Long, Array[Array[Float]])], k: Int,
@@ -446,56 +259,25 @@ object MaxSim {
     val prb = if (probes.nonEmpty) probes else idxs.map(ix =>
       graft.core.AnnConf.autoProbes(ix.meta.cfg.lists))
     require(prb.length == idxs.length, "one probe budget per root index")
-    val nQ = queries.length
     val qidArr = queries.map(_._1)
-    // flatten to global token slots: query qi owns [offsets(qi),
-    // offsets(qi+1)) — one multiEstimateCandidates call retrieves the whole
-    // batch's tokens in one flat job
-    val offsets = queries.scanLeft(0)(_ + _._2.length).toArray
-    val allTokens: Array[Array[Float]] = queries.flatMap(_._2)
     // driver-pool budget (the serveMaxSimMulti guard, loud): the pooled
     // retrieval collects ≤ roots x totalTokens x kPerToken tuples
+    val nTokens = queries.map(_._2.length.toLong).sum
     val maxPool = graft.core.AnnConf(spark).maxsimMaxPoolTuples
-    require(idxs.length.toLong * allTokens.length * kPerToken <= maxPool,
+    require(idxs.length.toLong * nTokens * kPerToken <= maxPool,
       s"maxsimManyMulti pool budget exceeded: ${idxs.length} roots x " +
-      s"${allTokens.length} tokens x $kPerToken > $maxPool " +
+      s"$nTokens tokens x $kPerToken > $maxPool " +
       "(graft.ann.maxsim.maxPoolTuples) — lower kPerToken or split the batch")
-    val pools = graft.index.IvfIndex.multiEstimateCandidates(idxs, allTokens,
-      kPerToken, prb, epsilon = 0.0)._1
-    val docsPerRoot = k * math.max(refine, 1)
-    def qiOf(gti: Int): Int = {
-      var lo = 0
-      while (offsets(lo + 1) <= gti) lo += 1
-      lo
-    }
-    // per (root, global token): worst retrieved estimate (the miss
-    // stand-in); token retrieved nothing in that root -> 0.0
-    val worst = pools.groupBy(t => (t._1, t._2)).view
-      .mapValues(_.map(_._4).max).toMap
-    // per (query, root): estimate-score docs over that root's pools with
-    // per-root stand-ins ([[scoreRootPool]], the multiRootCandidateDocs
-    // core), keep the best docsPerRoot per (query, root) as rescore
-    // candidates. Candidacy is then folded PER DOC (union of selecting
-    // queries over ALL roots): a doc whose tokens split across roots may
-    // be selected by only one root's estimates, and gating the rescore
-    // on (root, doc) would score it over a token SUBSET — an inflated,
-    // wrong maxsim. Doc-level membership admits every root's rows of a
-    // selected doc, so the rescore is always whole-doc exact; per-root
-    // selections are kept separately for the span predicates below.
+    // candidacy folds PER DOC (see job 1 above); per-root selections
+    // feed the span predicates below
     val candDoc = scala.collection.mutable.HashMap.empty[Long, List[Int]]
     val selByRoot = Array.fill(idxs.length)(
       scala.collection.mutable.HashSet.empty[Long])
-    pools.groupBy(t => (t._1, qiOf(t._2))).foreach { case ((root, qi), rows) =>
-      val nTok = queries(qi)._2.length
-      val base = offsets(qi)
-      val est = Array.tabulate(nTok)(ti =>
-        worst.getOrElse((root, base + ti), 0.0))
-      scoreRootPool(rows.iterator.map(t => (t._2 - base, t._3, t._4)), nTok,
-        est, docsPerRoot).foreach { case (doc, _) =>
-          selByRoot(root) += doc
-          val cur = candDoc.getOrElse(doc, Nil)
-          if (!cur.contains(qi)) candDoc(doc) = qi :: cur
-      }
+    candidateDocs(idxs, queries.map(_._2), k * math.max(refine, 1), kPerToken,
+        prb).foreach { case (root, qi, doc, _) =>
+      selByRoot(root) += doc
+      val cur = candDoc.getOrElse(doc, Nil)
+      if (!cur.contains(qi)) candDoc(doc) = qi :: cur
     }
     if (candDoc.isEmpty)
       return Seq.empty[(Long, Long, Double)].toDF("qid", "doc", "maxsim")
@@ -565,8 +347,7 @@ object MaxSim {
     // (measured at the anchor: tight spans + interpreted 0.55 s/query vs
     // codegen-compilable coarse spans 2.7 s/query — pruning is the whole
     // game). Admitted foreign rows fall to the membership check.
-    // InternalRow
-    // scan (the IvfIndex.rerank pattern): candidate membership checks
+    // InternalRow scan (the IvfIndex.rerank pattern): candidate membership checks
     // on the raw row BEFORE any vector decode — the typed-Dataset form
     // boxed every scanned row's vector first, which at 100k-doc corpora
     // made the rescore read dominate the whole batch (measured 3.1
@@ -663,44 +444,5 @@ object MaxSim {
       }
       out.toSeq
     }
-  }
-
-  /** Exact MaxSim for `docs` from the index's own stored token vectors
-    * (the reference's refine fetches tuples from the index the same way). */
-  private def exactRescore(idx: graft.index.IvfIndex, query: Array[Array[Float]],
-                           docs: Seq[Long]): DataFrame = {
-    val spark = idx.spark
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // stored vectors live in the index space: rotation preserves dot
-    // products, so rotating the query tokens aligns exactly; f16 storage
-    // decodes to the same precision the estimates saw
-    val rot =
-      if (idx.meta.cfg.rotate) Some(new graft.core.Rotation(idx.meta.origDim)) else None
-    val q = query.map(t => rot.map(_.apply(t)).getOrElse(t))
-    val f16 = idx.meta.cfg.storage == "f16"
-    // RANGE predicates on the raw packed key — unlike a filter on
-    // shiftright(id, 16), these push down to Parquet row-group stats (the
-    // position payload occupies the low 16 bits, so a doc's tokens are
-    // exactly the keys in [doc<<16, doc<<16 | 0xFFFF]). The per-DOC
-    // formulation produced an O(docs)-deep Or chain (400 clauses in the
-    // bench plans; parquet evaluates O(clauses) per row group and its
-    // recursive visitor overflows the stack past ~1-2k): the sorted docs
-    // COALESCE into at most [[maxRescoreRanges]] spans instead, and the
-    // cheap exact membership filter keeps semantics identical however
-    // wide the capped spans get.
-    val uniq = docs.distinct
-    val docPred = coalesceDocRanges(uniq).map { case (a, b) =>
-      col("id").between(a << 16, (b << 16) | 0xffffL)
-    }.reduce(_ || _)
-    val rows = idx.dataDf
-      .filter(docPred && shiftright(col("id"), 16).isInCollection(uniq))
-      .withColumn("doc", shiftright(col("id"), 16))
-    val tokens =
-      if (f16) {
-        val dec = udf((b: Array[Byte]) => graft.core.Half.decodeBytes(b).toSeq)
-        rows.select(col("doc"), dec(col("vec")).as("v"))
-      } else rows.select(col("doc"), col("vec").as("v"))
-    score(tokens, "doc", "v", q)
   }
 }

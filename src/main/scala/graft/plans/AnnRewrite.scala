@@ -665,8 +665,8 @@ private[plans] object CostGates {
 
   /** Planning-time RECALL hint (round 17): true when the rerank pool
     * (k x refine) is far below a mean cluster's occupancy — the regime
-    * where the KnnJoinAnchor measured recall as refine-limited (0.93 ->
-    * 0.98 going refine 16 -> 64 on 1M rows / 64 lists). The serve still
+    * where COVERAGE.md's KNN-join anchor measured recall as refine-limited
+    * (0.93 -> 0.98 going refine 16 -> 64 on 1M rows / 64 lists). The serve still
     * runs; the hint points the operator at the knob BEFORE the recall
     * report does. The /8 keeps toy fixtures (hundreds of rows) quiet. */
   def refineLimited(rowCount: Long, lists: Int, k: Int, refine: Int): Boolean =
@@ -1464,8 +1464,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         Some(graft.ops.MaxSim.maxsimManyMulti(idxs, queries, k,
             kPerToken = c.kPerToken, probes = probes, refine = c.refine,
             rerankTable = rt)
-          .select("doc").distinct()
-          .collect().map(_.getLong(0)))
+          .select("doc").collect().map(_.getLong(0)).distinct)
       }
     }
   }
@@ -1871,10 +1870,10 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The MaxSim top-k serve (strategy 3, reference scanners/maxsim.rs),
-    * for one token index or a partitioned corpus's per-child ones: ONE
-    * flat retrieval job pools every (root, token)'s estimate candidates,
-    * docs score per root on the driver with per-root miss stand-ins
-    * (MaxSim.multiRootCandidateDocs), and the rewritten plan's own exact
+    * for one token index or a partitioned corpus's per-child ones: the
+    * batch face's candidate phase at one query (MaxSim.candidateDocs —
+    * ONE flat retrieval job, docs scored per root on the driver with
+    * per-root miss stand-ins), and the rewritten plan's own exact
     * Sort+Limit over the IN-restricted scan restores exact ordering.
     * Candidate budget: k*refine docs per root by estimate, floored at
     * each root's top-k then filled globally when over
@@ -1913,11 +1912,11 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (idxs.length.toLong * query.length * kPerToken > c.maxsimMaxPoolTuples)
       return Some(t.gl)
     AnnTopKRewrite.planningJobs.incrementAndGet()
-    val perRoot = graft.ops.MaxSim.multiRootCandidateDocs(idxs, query,
+    val perRoot = graft.ops.MaxSim.candidateDocs(idxs, Array(query),
       docsPerRoot = k * math.max(c.refine, 1), kPerToken = kPerToken,
       probes = probes)
     // docs are unique across roots (each doc's tokens live in one child)
-    val ids = withinInBudget(perRoot.map { case (root, doc, s) => (doc, s, root) },
+    val ids = withinInBudget(perRoot.map { case (root, _, doc, s) => (doc, s, root) },
       k, c.maxInList)
     Some(served(c, t, id, ids, complete = false))
   }

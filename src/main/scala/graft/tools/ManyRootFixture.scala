@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions.{col, typedlit}
  * lists=4 index per child, cached in tmpdir across runs, and a timed
  * optimizer pass producing the served plan. ONE implementation so the
  * standing bench key (`ScaleProbe`'s `_scale_manyroot8_plan`) and the
- * width sweep (`ManyRootPlanProbe`) cannot silently measure different
- * things.
+ * batched-face keys cannot silently measure different things (the
+ * width sweep's figures are in COVERAGE.md).
  */
 object ManyRootFixture {
 

@@ -512,10 +512,9 @@ object ScaleProbe {
           kwIdx.search(spark, kwTerms, 100).collect()
         }
       }
-      // MaxSim approximate retrieval at ColBERT-ish width: 64 query
-      // tokens x kPerToken=1000 -> 64k retrieved candidate rows, scored
-      // DISTRIBUTED (fixed-slot min aggregation; the former driver loop
-      // shipped every candidate row to the driver)
+      // MaxSim retrieval at ColBERT-ish width through the R = 1 batch
+      // face: 64 query tokens x kPerToken=1000 -> 64k pooled estimates,
+      // then an exact rescore of k x refine docs (100, then 400)
       if (!sys.env.get("SPARK_GRAFT_SCALE_MAXSIM").contains("0")) {
         val nMsDocs = sys.env.getOrElse("SPARK_GRAFT_SCALE_MAXSIM_N", "20000").toInt
         val toksPerDoc = 10
@@ -536,14 +535,11 @@ object ScaleProbe {
         }
         val msQuery = Array.tabulate(64)(qi =>
           Array.tabulate(dimMs)(j => unitMs(qi * 977L + j)))
-        timed(s"_scale_maxsim_approx${nMsDocs / 1000}k") {
-          graft.ops.MaxSim.approxTopK(msIdx, msQuery, 100,
-            kPerToken = 1000, probes = 8, refine = 8).count()
-        }
-        timed(s"_scale_maxsim_refine${nMsDocs / 1000}k") {
-          graft.ops.MaxSim.approxTopK(msIdx, msQuery, 100,
-            kPerToken = 1000, probes = 8, refine = 8, refineDocs = 400).count()
-        }
+        def maxsim(refine: Int) = graft.ops.MaxSim.maxsimManyMulti(Seq(msIdx),
+          Array(0L -> msQuery), 100, kPerToken = 1000, probes = Seq(8),
+          refine = refine).count()
+        timed(s"_scale_maxsim_approx${nMsDocs / 1000}k") { maxsim(1) }
+        timed(s"_scale_maxsim_refine${nMsDocs / 1000}k") { maxsim(4) }
       }
       // SemDeDup bulk: 100k x 16d embeddings in 256 planted clusters —
       // assignment scan (argmin over 256 codegen cosdists) + the
@@ -574,9 +570,9 @@ object ScaleProbe {
       // cost): 8 children x 2k rows, one index per child, time the
       // OPTIMIZER producing the served plan (the flat multi-root codes
       // read runs inside it — one pool job, one analyzed relation at any
-      // width). Fixture + timing shared with the width-sweep tool
-      // (`ManyRootFixture` / `ManyRootPlanProbe`); cached in tmp across
-      // runs; warm once, report min of 3.
+      // width). Fixture + timing in `ManyRootFixture` (the width sweep's
+      // figures are in COVERAGE.md); cached in tmp across runs; warm
+      // once, report min of 3.
       if (!sys.env.get("SPARK_GRAFT_SCALE_MANYROOT").contains("0")) {
         val nR = 8
         val best = graft.tools.ManyRootFixture.planRuns(spark, nR).min
@@ -586,7 +582,7 @@ object ScaleProbe {
         // regression canaries for the constant-job batch machinery —
         // searchManyMulti (16 queries, 2 flat jobs) and
         // rangeSearchManyMulti (8 spheres) across the 8 children.
-        // Throughput-scale numbers live in PartitionedServeProbe; these
+        // Throughput-scale numbers (16 x 100k) are in COVERAGE.md; these
         // track the per-call overhead per round. Warm once, min of 3.
         val idxs = graft.tools.ManyRootFixture.ensureFixture(spark, nR)._2
           .map(graft.index.IvfIndex.load(spark, _))

@@ -60,9 +60,6 @@ class IvfNoVecSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](thunk())
       assert(e.getMessage.contains("rerankTable"), e.getMessage)
     }
-    // pure-estimate batch (exactBudget = 0) needs no source — must NOT throw
-    assert(idx.searchMany(Array(0L -> q), 5, probes = 4, epsilon = 0.0,
-      exactBudget = 0).count() == 5)
   }
 
   test("load round-trips storeVectors=false; lifecycle insert/compact/delete/prewarm") {

@@ -46,13 +46,11 @@ class IvfStagedBuildSpec extends SparkSpec {
     assert(m3 == m1, "staged membership differs from one-pass")
     assert(m1.size == rows.size, "row lost or duplicated")
 
-    // identical search results (codes-only: estimate path via searchMany)
-    val qs = Array(0L -> Array.fill(16)(0.3f), 1L -> Array.fill(16)(-0.4f))
-    val r1 = one.searchMany(qs, 10, probes = 16, epsilon = 0.0, exactBudget = 0)
-      .select("qid", "id").as[(Long, Long)].collect().sorted.toSeq
-    val r3 = staged.searchMany(qs, 10, probes = 16, epsilon = 0.0, exactBudget = 0)
-      .select("qid", "id").as[(Long, Long)].collect().sorted.toSeq
-    assert(r3 == r1, "staged search differs from one-pass")
+    // identical search results (codes-only: the estimate pools)
+    val qs = Array(Array.fill(16)(0.3f), Array.fill(16)(-0.4f))
+    def est(ix: IvfIndex) = IvfIndex.multiEstimateCandidates(Seq(ix), qs, 10,
+      Seq(16), epsilon = 0.0)._1.map(t => (t._2, t._3)).sorted.toSeq
+    assert(est(staged) == est(one), "staged search differs from one-pass")
   }
 
   test("staged build with stored vectors + rerank stays exact; passes > " +

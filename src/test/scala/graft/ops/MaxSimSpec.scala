@@ -40,143 +40,16 @@ class MaxSimSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-maxsim-idx").toString
     val idx = MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", dir,
       graft.index.IvfConfig(metric = "negdot", lists = 8, residual = false))
-    val approx = MaxSim.approxTopK(idx, query, 10,
-        kPerToken = 200, probes = 8, refine = 32)
-      .select("doc").as[Long].collect().toSet
+    // maxsim_refine semantics: exact rescoring of the k x refine = 40
+    // candidate docs makes the top-k EXACT (scores and ordering) when the
+    // candidate pool covers the true top docs
     val exactPairs = docs.map { case (id, toks) => (K.maxsim(toks, query), id) }
       .sorted.take(10)
-    val exact = exactPairs.map(_._2).toSet
-    val overlap = approx.intersect(exact).size
-    assert(overlap >= 8, s"top-10 overlap $overlap; approx=$approx exact=$exact")
-    // maxsim_refine semantics: exact rescoring of the candidate docs makes
-    // the top-k EXACT (scores and ordering) when the candidate pool covers
-    // the true top docs
-    val refined = MaxSim.approxTopK(idx, query, 10,
-        kPerToken = 200, probes = 8, refine = 32, refineDocs = 40)
-      .as[(Long, Double)].collect().toSeq
+    val refined = MaxSim.maxsimManyMulti(Seq(idx), Array(0L -> query), 10,
+        kPerToken = 200, probes = Seq(8), refine = 4)
+      .as[(Long, Long, Double)].collect().toSeq.map(t => (t._2, t._3))
     assert(refined == exactPairs.map { case (s, id) => (id, s) },
       s"refined=$refined exact=$exactPairs")
-  }
-
-  test("distributed doc scoring is byte-identical to the sequential reference loop") {
-    import spark.implicits._
-    val tokens = docs.flatMap { case (id, toks) =>
-      toks.zipWithIndex.map { case (t, p) => (id, p, t.toSeq) }
-    }.toDF("doc", "pos", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-maxsim-par").toString
-    val idx = MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", dir,
-      graft.index.IvfConfig(metric = "negdot", lists = 8, residual = false))
-    // sparse probes so some docs MISS tokens (the estimate-fallback path
-    // must agree too) + a third query token retrieving its own docs
-    val q3 = query :+ tok(55L, 0)
-    val kPerToken = 20
-    val probes = 2
-    val got = MaxSim.approxTopK(idx, q3, 15,
-        kPerToken = kPerToken, probes = probes, refine = 8)
-      .as[(Long, Double)].collect().toSeq
-    // sequential reference: the collect-and-loop formulation the
-    // distributed aggregation replaced — per-token min with worst-
-    // retrieved fallback, summed in token order, ranked (score, doc)
-    val tokQueries = q3.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-    val retrieved = idx.searchMany(tokQueries, kPerToken, probes, refine = 8)
-      .select("qid", "id", "dist").as[(Long, Long, Double)].collect()
-    val byToken = retrieved.groupBy(_._1)
-      .view.mapValues(_.map(t => (t._2, t._3))).toMap
-    val perToken = q3.indices.map(i => byToken.getOrElse(i.toLong, Array.empty[(Long, Double)]))
-    val estimates = perToken.map(c => if (c.isEmpty) 0.0 else c.map(_._2).max)
-    val perTokenMin = perToken.map(_.groupBy(t => MaxSim.unpackDoc(t._1))
-      .view.mapValues(_.map(_._2).min).toMap)
-    val want = perTokenMin.flatMap(_.keys).distinct.map { doc =>
-      var s = 0.0
-      var qi = 0
-      while (qi < perTokenMin.length) {
-        s += perTokenMin(qi).getOrElse(doc, estimates(qi)); qi += 1
-      }
-      (doc, s)
-    }.sortBy { case (doc, s) => (s, doc) }.take(15)
-      .map { case (doc, s) => (doc, s) }
-    assert(got == want) // exact double equality: same mins, same sum order
-  }
-
-  test("maxsim_threshold prices misses at unvisited cells and fixes sparse-probe ranking") {
-    import spark.implicits._
-    // dim-4 axis-aligned fixture, lists=4 (one cell per axis group),
-    // probes=1: query token q1's cell holds ONLY doc 1's token, so every
-    // other doc is "missing" for q1 and gets the stand-in price.
-    //   doc 1 (A): tokens e0, e1            exact maxsim = -2.0
-    //   doc 2 (B): tokens 1.3*e0, e2        exact maxsim = -1.3 (e2 junk for q1)
-    //   doc 3 (C): tokens 0.5*e0, e3        exact maxsim = -0.5
-    // Worst-retrieved pricing sets q1's miss price to -1.0 (its only
-    // retrieved distance), which hands B a fantasy score of -2.3 ahead of
-    // A — the optimistic failure the reference's threshold semantics
-    // exist to prevent.
-    def e(i: Int, s: Float): Seq[Float] =
-      Seq.tabulate(4)(j => if (j == i) s else 0.0f)
-    val tokens = Seq(
-      (1L, 0, e(0, 1.0f)), (1L, 1, e(1, 1.0f)),
-      (2L, 0, e(0, 1.3f)), (2L, 1, e(2, 1.0f)),
-      (3L, 0, e(0, 0.5f)), (3L, 1, e(3, 1.0f))
-    ).toDF("doc", "pos", "v")
-    val query = Array(Array(1.0f, 0, 0, 0), Array(0, 1.0f, 0, 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-maxsim-thr").toString
-    val idx = MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", dir,
-      graft.index.IvfConfig(metric = "negdot", lists = 4, residual = false))
-    def run(threshold: Int): Seq[Long] =
-      MaxSim.approxTopK(idx, query, 3, kPerToken = 3, probes = 1,
-          maxsimThreshold = threshold)
-        .select("doc").as[Long].collect().toSeq
-    // optimistic pricing mis-ranks B above A
-    assert(run(0) == Seq(2L, 1L, 3L), s"got ${run(0)}")
-    // threshold pricing (probed cell covers 1 tuple; 2 more force one
-    // unvisited-cell step at ~0 distance) restores the exact order
-    assert(run(3) == Seq(1L, 2L, 3L), s"got ${run(3)}")
-  }
-
-  test("per-token refine budget beats per-doc refine at equal exact-scoring cost (sparse probes)") {
-    import spark.implicits._
-    // 60 docs x 16 tokens, dim-8 unit vectors, 4-bit codes: estimates are
-    // noisy enough that WHERE the exact scorings go decides the ranking.
-    // Cost accounting (exact token-pair scorings):
-    //   per-token budget r: |query tokens| * r        = 4r
-    //   per-doc refine d:   d * |doc tokens| * |query| = 64d  (min d = k)
-    // At an equal budget of 640 scorings: per-token exactly rescores the
-    // 160 best candidates of EVERY query token — enough to fix the
-    // RANKING that selects docs — while per-doc spends it all on the 10
-    // docs the noisy estimates already picked.
-    val rng = new scala.util.Random(42)
-    def vec(): Array[Float] = {
-      val v = Array.fill(8)(rng.nextFloat() * 2 - 1)
-      val n = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-      v.map(_ / n)
-    }
-    val docs2 = (0L until 100L).map(i => i -> Array.fill(16)(vec()))
-    val queries = Seq.fill(6)(Array.fill(4)(vec()))
-    val tokens = docs2.flatMap { case (id, toks) =>
-      toks.zipWithIndex.map { case (t, p) => (id, p, t.toSeq) }
-    }.toDF("doc", "pos", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-maxsim-ptb").toString
-    val idx = MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", dir,
-      graft.index.IvfConfig(metric = "negdot", lists = 8, residual = false, bits = 4))
-    def overlap(q: Array[Array[Float]], refPerTok: Int, refDocs: Int): Int = {
-      val exactTop = docs2.map { case (id, toks) => (K.maxsim(toks, q), id) }
-        .sorted.take(10).map(_._2).toSet
-      MaxSim.approxTopK(idx, q, 10, kPerToken = 1600, probes = 4,
-          refinePerToken = refPerTok, refineDocs = refDocs)
-        .select("doc").as[Long].collect().toSet.intersect(exactTop).size
-    }
-    val perToken = queries.map(overlap(_, 160, 0)).sum // 640 scorings/query
-    val perDoc = queries.map(overlap(_, 0, 10)).sum    // 640 scorings/query
-    assert(perToken > perDoc,
-      s"per-token budget recovered $perToken/60 vs per-doc $perDoc/60")
-    // full per-token budget == fully-exact retrieval, bit-for-bit
-    val q0 = queries.head
-    val full = MaxSim.approxTopK(idx, q0, 10, kPerToken = 1600, probes = 4,
-        refinePerToken = 1600)
-      .as[(Long, Double)].collect().toSeq
-    val normal = MaxSim.approxTopK(idx, q0, 10, kPerToken = 1600, probes = 4,
-        refine = 1)
-      .as[(Long, Double)].collect().toSeq
-    assert(full == normal, s"full=$full normal=$normal")
   }
 
   test("packKey/unpackDoc round-trip (u16 position payload)") {
@@ -218,25 +91,5 @@ class MaxSimSpec extends SparkSpec {
       case Seq((_, b), (c, _)) => c > b
       case _ => true
     })
-  }
-
-  test("refine over MANY scattered candidate docs (past the range cap) " +
-       "stays exact — the membership filter removes foreign docs the " +
-       "widened spans admit") {
-    import spark.implicits._
-    val tokens = docs.flatMap { case (id, toks) =>
-      toks.zipWithIndex.map { case (t, p) => (id, p, t.toSeq) }
-    }.toDF("doc", "pos", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft-maxsim-cap").toString
-    val idx = MaxSim.buildTokenIndex(tokens, "doc", "pos", "v", dir,
-      graft.index.IvfConfig(metric = "negdot", lists = 8, residual = false))
-    // refineDocs = 150 over 200 docs: far past maxRescoreRanges once
-    // coalesced candidates scatter; exactness must be unchanged
-    val refined = MaxSim.approxTopK(idx, query, 10,
-        kPerToken = 200, probes = 8, refine = 32, refineDocs = 150)
-      .as[(Long, Double)].collect().toSeq
-    val exactPairs = docs.map { case (id, toks) => (K.maxsim(toks, query), id) }
-      .sorted.take(10).map { case (s, id) => (id, s) }
-    assert(refined == exactPairs, s"refined=$refined exact=$exactPairs")
   }
 }

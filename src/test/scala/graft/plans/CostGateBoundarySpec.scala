@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * wrong #2): the served-route oracle queries pin `graft.ann.cost.enable
  * =false` because at toy scale the exact scan is rightly cheaper — so no
  * CORRECTNESS row exercises the gates' serve-side decisions, yet the
- * sliced serve's flagship economics (KnnJoinAnchor: served 38.6x faster
+ * sliced serve's flagship economics (COVERAGE.md's KNN-join anchor: 38.6x faster
  * than exact at 1M rows, 2.4x at 100k, both at ~0.98 recall) depend on
  * the gate NOT wrongly declining at real scale. These tests compute,
  * per tier, the smallest corpus N at which the gate flips to serve
@@ -37,7 +37,7 @@ class CostGateBoundarySpec extends AnyFunSuite {
 
   test("IVF join gate at the anchor's exact shape serves far below the " +
        "measured 100k break-even") {
-    // KnnJoinAnchor: lists=64, probes=16, k=5, refine=16 — measured
+    // COVERAGE.md's KNN-join anchor: lists=64, probes=16, k=5, refine=16 — measured
     // served/exact crossover is BELOW 100k rows (2.4x faster at 100k)
     def serveAt(n: Long) = CostGates.ivf(Seq((n, 64, 16)), k = 5, refine = 16)
     val b = boundary(1000000L)(serveAt)

@@ -639,6 +639,33 @@ class KnnJoinServeSpec extends SparkSpec {
     }
   }
 
+  test("maxsim join planning runs only the batched face's Spark jobs per " +
+       "slice (the candidate docs dedupe on the driver)") {
+    val tableDir = msSetup
+    withRule {
+      withConfs("graft.ann.probes" -> "4",
+          "graft.ann.maxsim.kPerToken" -> "256", "graft.ann.refine" -> "8",
+          "graft.ann.cost.enable" -> "false",
+          "graft.ann.knn.join.maxQueries" -> "2") {
+        // the first serve after registering loads the index; keep its
+        // jobs out of the counts
+        msKjDf(tableDir, qTokens(2, 75), 4).queryExecution.optimizedPlan
+        def jobs(n: Int): Int = {
+          val df = msKjDf(tableDir, qTokens(n, 77), 4)
+          val (plan, j) =
+            graft.PlanProbes.jobsOf(spark)(df.queryExecution.optimizedPlan)
+          assert(AnnTopKRewrite.inServed(plan.toString),
+            s"maxsim join was NOT served:\n$plan")
+          j
+        }
+        // per slice: the face's pool job, then its rescore (AQE runs the
+        // shuffle map stage and the result stage as two jobs)
+        assert(jobs(2) == 3, "one slice")
+        assert(jobs(4) == 6, "two slices")
+      }
+    }
+  }
+
   test("maxsim join declines: mixed condition, indexed partition key, " +
        "empty/null token sets, kill switch") {
     import spark.implicits._
