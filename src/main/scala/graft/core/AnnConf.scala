@@ -23,7 +23,7 @@ final class AnnConf private (conf: RuntimeConfig) {
 
   private def str(k: Key): String = conf.get(k.name, k.default)
   private def lenientLong(k: Key): Long =
-    scala.util.Try(conf.get(k.name).toLong).getOrElse(k.default.toLong)
+    conf.getOption(k.name).flatMap(_.toLongOption).getOrElse(k.default.toLong)
 
   lazy val enable: Boolean = str(Enable).toBoolean
   lazy val costEnable: Boolean = str(CostEnable).toBoolean

@@ -21,19 +21,35 @@ import org.apache.spark.sql.catalyst.InternalRow
  * its own.
  */
 object BareJob {
-  /** Run `task` once per partition of `rdd`, as one job; one result per
-    * partition, in partition order. */
-  def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U): Array[U] =
-    run(rdd, task, 0 until rdd.getNumPartitions)
+  /** Spark's job-description local property (`SparkContext`'s own
+    * constant is private). */
+  private val Description = "spark.job.description"
+
+  /** Run `task` once per partition of `rdd`, as one job described as
+    * `step` (see [[run]] below); one result per partition, in partition
+    * order. */
+  def run[T, U: ClassTag](step: String, rdd: RDD[T],
+      task: (TaskContext, Iterator[T]) => U): Array[U] =
+    run(step, rdd, task, 0 until rdd.getNumPartitions)
 
   /** Run `task` over only the partitions `parts` of `rdd`, as one job;
-    * one result per listed partition, in the listed order. */
-  def run[T, U: ClassTag](rdd: RDD[T], task: (TaskContext, Iterator[T]) => U,
-      parts: Seq[Int]): Array[U] =
-    rdd.sparkContext.runJob(rdd, task, parts)
+    * one result per listed partition, in the listed order. The job's
+    * `spark.job.description` is `step` (the UI and listeners name it by
+    * the planner or index step that ran it); the caller's description is
+    * restored afterwards. */
+  def run[T, U: ClassTag](step: String, rdd: RDD[T], task: (TaskContext, Iterator[T]) => U,
+      parts: Seq[Int]): Array[U] = {
+    val sc = rdd.sparkContext
+    val prev = sc.getLocalProperty(Description)
+    sc.setLocalProperty(Description, step)
+    try sc.runJob(rdd, task, parts)
+    finally sc.setLocalProperty(Description, prev)
+  }
 
-  /** Column 0 (a long) of every row of `rdd`, as one job. */
-  def longs(rdd: RDD[InternalRow]): Array[Long] = run(rdd, FirstLongs).flatten
+  /** Column 0 (a long) of every row of `rdd`, as one job described as
+    * `step`. */
+  def longs(step: String, rdd: RDD[InternalRow]): Array[Long] =
+    run(step, rdd, FirstLongs).flatten
 
   /** The task of [[longs]]: the partition's column-0 longs. */
   object FirstLongs extends ((TaskContext, Iterator[InternalRow]) => Array[Long])

@@ -1138,7 +1138,7 @@ object IvfIndex {
       lim: Int): Array[(Int, Int, Long)] = {
     val nParts = math.max(1, rows.getNumPartitions)
     val share = ((lim.toLong + nParts) / nParts).toInt
-    val first = graft.core.BareJob.run(rows, task.capped(share))
+    val first = graft.core.BareJob.run("ivf.range", rows, task.capped(share))
     val total = first.iterator.map(_._2).sum
     rangeDriverTuples.addAndGet(first.iterator.map(_._1.length.toLong).sum)
     if (total > lim) null
@@ -1146,7 +1146,7 @@ object IvfIndex {
       val over = first.indices.filter(p => first(p)._2 > first(p)._1.length)
       val again =
         if (over.isEmpty) Array.empty[Array[(Int, Int, Long)]]
-        else graft.core.BareJob.run(rows, task, over).map(_._1)
+        else graft.core.BareJob.run("ivf.range", rows, task, over).map(_._1)
       rangeDriverTuples.addAndGet(again.iterator.map(_.length.toLong).sum)
       (first.indices.filterNot(over.toSet).flatMap(first(_)._1) ++ again.iterator.flatten).toArray
     }
@@ -1166,7 +1166,7 @@ object IvfIndex {
       task: PoolTask, nSlots: Int, nCand: Int): Array[(Int, Long, Double)] = {
     val directMax = graft.core.AnnConf(spark).flatDirectCollectMax
     if (rows.getNumPartitions.toLong * nSlots * nCand <= directMax)
-      graft.core.BareJob.run(rows, task).flatten.groupBy(_._1).valuesIterator
+      graft.core.BareJob.run("ivf.pool", rows, task).flatten.groupBy(_._1).valuesIterator
         .flatMap(_.sortBy(t => (t._3, t._2)).take(nCand)).toArray
     else {
       // reducer count sized to the SLOT count, not inherited from the
@@ -1403,7 +1403,7 @@ object IvfIndex {
         val byRoot = cands.groupBy(_._1)
         val members = Array.tabulate(p.idxs.length)(r =>
           Members.of(byRoot.getOrElse(r, Array.empty[(Int, Int, Long)])))
-        graft.core.BareJob.run(ColumnBridge.toInternalRdd(p.vecs),
+        graft.core.BareJob.run("ivf.rerank", ColumnBridge.toInternalRdd(p.vecs),
           new ExactTask(members, null, p.qq, p.info, p.flat,
             cfg.storage == "f16", cfg.metric, stored = true))
           .flatMap { case (qi, id, d) => qi.indices.iterator.map(i => (qi(i), id(i), d(i))) }

@@ -26,12 +26,15 @@ import graft.plans.AnnCatalog.Kind
  *
  * over a Parquet relation registered in [[AnnCatalog]] becomes
  *
- *     GlobalLimit k (Sort [...] (Filter id IN (<ANN candidates>) child))
+ *     ServedTopK k [...] (Filter id IN (<ANN candidates>) child)
  *
  * The index supplies candidate row ids (probe -> estimate -> rerank); the
  * IN filter pushes down to the Parquet scan, so the full-table sort
- * collapses to a k-row sort over fetched candidates. An index serves only
- * its own metric (one opclass per operator, like the reference).
+ * collapses to a k-row rerank of the fetched candidates by the original
+ * ordering. [[ServedTopK]] plans as [[ServedTopKExec]]: one bare Spark job
+ * that keeps each partition's first k rows, where Spark's Sort+Limit would
+ * clean three closures on the driver per query. An index serves only its
+ * own metric (one opclass per operator, like the reference).
  *
  * Three planner behaviors mirror the reference's access-method glue:
  *
@@ -62,10 +65,11 @@ import graft.plans.AnnCatalog.Kind
  *  - KILL SWITCH `graft.ann.enable=false` = `vchordrq.enable_scan`
  *    (reference: src/index/gucs.rs:60).
  *
- * Enable per session:
- *   spark.experimental.extraOptimizations ++= Seq(AnnTopKRewrite(spark))
- * or globally with spark.sql.extensions=graft.plans.GraftSparkExtensions.
- * The two differ on an `id IN (SELECT ...)` prefilter: extraOptimizations
+ * Enable per session with `AnnTopKRewrite.install(spark)` (the rule in
+ * extraOptimizations, the [[ServedTopKStrategy]] in extraStrategies; it
+ * returns the uninstall), or globally with
+ * spark.sql.extensions=graft.plans.GraftSparkExtensions, which injects
+ * both. The two differ on an `id IN (SELECT ...)` prefilter: extraOptimizations
  * run after Spark's RewritePredicateSubquery, so the rule sees a LeftSemi
  * join there, not a Filter, and the exact sort runs; only the injected
  * extension sees the Filter and serves it (KeyPrefilterSpec, "subquery
@@ -856,6 +860,25 @@ object AnnTopKRewrite {
   private[plans] final case class KnnJoin(f: Filter, w: Window, join: Join,
       projOpt: Option[Seq[NamedExpression]], indexedSide: LogicalPlan,
       indexedIsLeft: Boolean, id: IdCol, vecAttr: Attribute)
+
+  /** Serve `spark`'s queries without the extension: the rule joins
+    * `extraOptimizations` and [[ServedTopKStrategy]] (which plans the
+    * rule's [[ServedTopK]] tails) joins `extraStrategies`. Returns the
+    * uninstall; a session that already carries the rule keeps it, and
+    * its uninstall does nothing. */
+  def install(spark: SparkSession): () => Unit = {
+    val x = spark.experimental
+    if (x.extraOptimizations.exists(_.isInstanceOf[AnnTopKRewrite])) () => ()
+    else {
+      val rule = AnnTopKRewrite(spark)
+      x.extraOptimizations = x.extraOptimizations :+ rule
+      x.extraStrategies = x.extraStrategies :+ ServedTopKStrategy
+      () => {
+        x.extraOptimizations = x.extraOptimizations.filterNot(_ eq rule)
+        x.extraStrategies = x.extraStrategies.filterNot(_ eq ServedTopKStrategy)
+      }
+    }
+  }
 }
 
 case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -868,15 +891,12 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     })
 
-  /** The ONE IN-plan tail of every top-k serve: the original ordering
-    * over the `restricted` child, the limit body's projection, the limit.
-    * The plan's own exact Sort reranks whatever candidates the child
-    * admits. */
-  private def inPlan(t: TopK, restricted: LogicalPlan): LogicalPlan = {
-    val sorted = Sort(t.sort.order, global = true, restricted)
-    val body = t.projOpt.map(pl => Project(pl, sorted): LogicalPlan).getOrElse(sorted)
-    GlobalLimit(Literal(t.k), LocalLimit(Literal(t.k), body))
-  }
+  /** The ONE IN-plan tail of every top-k serve: the original ordering's
+    * first k rows of the `restricted` child, through the limit body's
+    * projection, as a [[ServedTopK]]. The original exact ordering
+    * reranks whatever candidates the child admits. */
+  private def inPlan(t: TopK, restricted: LogicalPlan): LogicalPlan =
+    ServedTopK(t.k, t.sort.order, t.projOpt.getOrElse(restricted.output), restricted)
 
   /** The served top-k over candidate `ids` (no candidates: the exact
     * plan stays). */
@@ -1164,7 +1184,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case Kind.Tokens  => serveMaxSimMulti(c, t, tier.entries, id, qv)
           case _ =>
             // a graph tier: its KNN-join fetch at one query, then the
-            // exact Sort+Limit over the IN-restricted scan
+            // exact ServedTopK tail over the IN-restricted scan
             graphFetch(c, tier, t.k).map { case (fetch, complete) =>
               val ids = fetch(Array(qv.toFloatArray()))
               if (ids.length > c.maxInList) t.gl
@@ -1556,7 +1576,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * serve (one query) and the KNN join (one slice of queries per call).
     * Every query beams against every graph — for k ids, or for its whole
     * ef pool when the vertices are quantized (code estimates, which the
-    * plan's exact Sort or the join's window corrects); `graft.ann.efSearch`
+    * plan's exact top-k tail or the join's window corrects); `graft.ann.efSearch`
     * mirrors the ef_search GUC (default 64, reference
     * src/index/gucs.rs:38-44). Driver-resident Vamana graphs (one
     * registration or a partitioned table's one per child) beam ON THE
@@ -1874,7 +1894,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * batch face's candidate phase at one query (MaxSim.candidateDocs —
     * ONE flat retrieval job, docs scored per root on the driver with
     * per-root miss stand-ins), and the rewritten plan's own exact
-    * Sort+Limit over the IN-restricted scan restores exact ordering.
+    * ServedTopK tail over the IN-restricted scan restores exact ordering.
     * Candidate budget: k*refine docs per root by estimate, floored at
     * each root's top-k then filled globally when over
     * `graft.ann.maxInList` ([[withinInBudget]]). Cost gate: summed
@@ -2056,7 +2076,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The IVF top-k serve, for one root or a partitioned table's many:
     * one estimate-only pool of k·refine ids per root (RaBitQ lower
     * bounds, no in-index rerank), unioned, then the standard exact
-    * Sort+Limit over the IN-restricted scan reranks the pool — the
+    * ServedTopK tail over the IN-restricted scan reranks the pool — the
     * reference's probe, estimate, rerank pass with the rerank in the
     * plan. `probes = auto` sizes each root's probe budget as
     * ceil(sqrt(lists)). Cost model sums the per-root index costs against
@@ -2084,7 +2104,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // cost — Catalyst analyzed R union branches and listed R relations
     // (measured 0.44 s at 4 roots -> 3.09 s at 32). The per-root exact
     // rerank the pre-round-11 shape paid one serialized Spark job each
-    // for stays unnecessary: the rewritten plan's own Sort+Limit over
+    // for stays unnecessary: the rewritten plan's own ServedTopK tail over
     // the IN-restricted scan reranks the pooled candidates exactly, and
     // the full-depth pool per root is a superset of what per-root rerank
     // would have kept — end-to-end recall is the old path's or better.
@@ -2234,7 +2254,7 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         AnnTopKRewrite.planningJobs.incrementAndGet()
         ensureInPushdown(ids.length)
         AnnTopKRewrite.withPlanningGuard {
-          graft.core.BareJob.longs(ColumnBridge.toInternalRdd(
+          graft.core.BareJob.longs("ann.survivors", ColumnBridge.toInternalRdd(
             ColumnBridge.ofRows(spark, Project(
               Seq(Alias(Cast(id.attr, org.apache.spark.sql.types.LongType), "id")()),
               Filter(id.in(ids), child)))))
@@ -2265,6 +2285,8 @@ case class AnnTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
 /** `spark.sql.extensions` entry point. */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit =
+  override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(session => AnnTopKRewrite(session))
+    e.injectPlannerStrategy(_ => ServedTopKStrategy)
+  }
 }

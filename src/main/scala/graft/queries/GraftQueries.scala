@@ -476,9 +476,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_sql")
         val qSql = q.map(_.toString).mkString("array(", "F, ", "F)")
@@ -516,9 +514,7 @@ object GraftQueries {
       (s, d) => {
         val q = qvec(s, d, 0)
         val path = nullEmbTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("null_emb")
         val qSql = q.map(_.toString).mkString("array(", "F, ", "F)")
@@ -561,9 +557,7 @@ object GraftQueries {
       (s, d) => {
         val q = qvec(s, d, 0)
         val path = partitionedEmbTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         // at verify scale the per-root overheads double and the cost
         // model rightly declines (a 250-row root IS cheaper to scan) —
         // force the serve WHILE BUILDING this plan so the partitioned
@@ -607,9 +601,7 @@ object GraftQueries {
       (s, d) => {
         val q = qvec(s, d, 0)
         val path = partitionedEmbTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         val served = withConfs(s, "graft.ann.probes" -> "16",
           "graft.ann.refine" -> "16", "graft.ann.cost.enable" -> "false") {
             val df = s.read.parquet(path)
@@ -637,7 +629,7 @@ object GraftQueries {
     // into two parquet roots (pt = doc % 2), each with its own token
     // index; the whole-table `ORDER BY @# LIMIT k` is served by ONE flat
     // retrieval job pooling both roots' per-token candidates, then the
-    // plan's own exact Sort reranks — asserted in-query. k covers every
+    // plan's own exact top-k tail reranks — asserted in-query. k covers every
     // doc and kPerToken covers every token row, so the output is exact
     // and hash-matches the same DuckDB oracle as s7_maxsim/maxsim_agg.
     "maxsim_partitioned" -> Q(
@@ -645,9 +637,7 @@ object GraftQueries {
         val path = partitionedMaxSimTable(s, d)
         val qv = qvecs(s, d, 1L to 3L)
         val qs = (1L to 3L).map(qv)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         // probes=8 (full coverage of lists=8 children) while other ANN
         // queries in the same session rely on their own 16 or the auto
         // default — withConfs snapshots ALL THREE keys so neither the
@@ -725,15 +715,13 @@ object GraftQueries {
     // Partitioned GRAPH serving (round 12): the same two-root split with
     // one driver-tier Vamana graph per root; the whole-table read is
     // served by the union of per-child beams (zero planning jobs — the
-    // graphs are broadcast-resident) and the plan's exact Sort+Limit
+    // graphs are broadcast-resident) and the plan's exact top-k tail
     // reranks. Same oracle as knn_topk.
     "graph_knn_partitioned" -> Q(
       (s, d) => {
         val q = qvec(s, d, 0)
         val path = partitionedGraphTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         // generous beam (ef=256 over ~half-tier-sized children) — the
         // same exact-recall regime the graph_knn golden relies on;
         // withConfs snapshot-restores so a session-level efSearch or
@@ -827,9 +815,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_kj")
         // cost model off WHILE BUILDING the plan (the knn_partitioned
@@ -877,9 +863,7 @@ object GraftQueries {
     "knn_join_partitioned" -> Q(
       (s, d) => {
         val path = partitionedEmbTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_kj_part")
         val served = withConfs(s, "graft.ann.probes" -> "16",
@@ -923,9 +907,7 @@ object GraftQueries {
     "knn_join_graph" -> Q(
       (s, d) => {
         val path = partitionedGraphTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_kj_graph")
         val served = withConfs(s, "graft.ann.efSearch" -> "256",
@@ -968,9 +950,7 @@ object GraftQueries {
     "knn_join_sharded" -> Q(
       (s, d) => {
         val path = shardedKjTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_kj_shard")
         val served = withConfs(s, "graft.ann.efSearch" -> "256",
@@ -1017,9 +997,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_kj_bulk")
         val served = withConfs(s, "graft.ann.probes" -> "16",
@@ -1183,9 +1161,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         val served = s.read.parquet(path)
           .filter(sphereL2Contains(col("embedding"), lv(q), lit(1.3)))
           .orderBy(vecL2(col("embedding"), lv(q)))
@@ -1207,9 +1183,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         s.read.parquet(path)
           .filter(sphereL2Contains(col("embedding"), lv(q), lit(1.3)))
           .select(col("vec_id"), round(vecL2(col("embedding"), lv(q)), 3).as("dist"))
@@ -1254,9 +1228,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_rj")
         val served = s.sql(
@@ -1291,9 +1263,7 @@ object GraftQueries {
     "range_join_partitioned" -> Q(
       (s, d) => {
         val path = partitionedEmbTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("emb_rj_part")
         val served = s.sql(
@@ -2835,9 +2805,7 @@ object GraftQueries {
       (s, d) => {
         import s.implicits._
         val path = partitionedMaxSimTable(s, d)
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         graft.functions.GraftFunctions.registerAll(s)
         s.read.parquet(path).createOrReplaceTempView("ms_kj")
         val qv6 = qvecs(s, d, 1L to 6L)
@@ -2947,9 +2915,7 @@ object GraftQueries {
         val idx = IvfCache.get(s, d)
         val path = prefilterTable(s, d)
         graft.plans.AnnCatalog.register(path, idx.dir, "vec_id", "embedding")
-        if (!s.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite]))
-          s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations :+ graft.plans.AnnTopKRewrite(s)
+        graft.plans.AnnTopKRewrite.install(s)
         // collect inside withConfs (see sql_knn): pins the escalation
         // serve under probes=16 and restores the session confs
         val served = withConfs(s, "graft.ann.probes" -> "16",

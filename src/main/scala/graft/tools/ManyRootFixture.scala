@@ -55,17 +55,8 @@ object ManyRootFixture {
     (0 until roots).foreach { p =>
       graft.plans.AnnCatalog.register(s"$tableDir/part=$p", idxDirs(p), "id", "vec")
     }
-    // register our own rule instance only if none is present, and remove
-    // it BY REFERENCE on exit: AnnTopKRewrite is a case class, so
-    // equality-based filterNot would also strip a rule the CALLER had
-    // registered before this probe (and an unconditional append would
-    // double-run the rewrite for the probe's duration)
-    val rule = graft.plans.AnnTopKRewrite(spark)
-    val added =
-      !spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.AnnTopKRewrite])
-    if (added)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ rule
+    // a rule the caller registered stays (install leaves it in place)
+    val uninstall = graft.plans.AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark, "graft.ann.cost.enable" -> "false") {
       val q = Array.fill(8)(0.15f)
       def planOnce(): Double = {
@@ -81,9 +72,7 @@ object ManyRootFixture {
       planOnce() // warm
       (1 to runs).map(_ => planOnce())
     } finally {
-      if (added)
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       (0 until roots).foreach(p =>
         graft.plans.AnnCatalog.unregister(s"$tableDir/part=$p"))
     }

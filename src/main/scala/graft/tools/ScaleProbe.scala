@@ -621,11 +621,7 @@ object ScaleProbe {
             graft.plans.AnnCatalog.register(s"$tableDir/part=$p",
               idxDirs(p), "id", "vec")
           }
-          val rule = graft.plans.AnnTopKRewrite(spark)
-          val hadRule = spark.experimental.extraOptimizations
-            .exists(_.isInstanceOf[graft.plans.AnnTopKRewrite])
-          if (!hadRule) spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ rule
+          val uninstall = graft.plans.AnnTopKRewrite.install(spark)
           try {
             import org.apache.spark.sql.functions.{col, row_number}
             val qdf = qB.map { case (qid, v) => (qid, v.toSeq) }.toSeq
@@ -667,9 +663,7 @@ object ScaleProbe {
               say(f"_scale_manyroot${nR}_knnjoinsliced600 = $tKjS%.3fs")
             }
           } finally {
-            if (!hadRule) spark.experimental.extraOptimizations =
-              spark.experimental.extraOptimizations.filterNot(_
-                .asInstanceOf[AnyRef] eq rule)
+            uninstall()
             (0 until nR).foreach(p =>
               graft.plans.AnnCatalog.unregister(s"$tableDir/part=$p"))
           }

@@ -7,9 +7,16 @@ import scala.jdk.CollectionConverters._
   * scans of one table it plans. */
 object PlanProbes {
 
-  /** The Spark jobs `f` runs, counted by a listener. The bus is FIFO, so
-    * once a marker job's start arrives every earlier job is counted. */
+  /** The Spark jobs `f` runs, counted by a listener. */
   def jobsOf[T](spark: SparkSession)(f: => T): (T, Int) = {
+    val (out, descs) = jobDescsOf(spark)(f)
+    (out, descs.length)
+  }
+
+  /** The `spark.job.description` of every Spark job `f` runs ("" when
+    * unset), in start order. The bus is FIFO, so once a marker job's
+    * start arrives every earlier job is recorded. */
+  def jobDescsOf[T](spark: SparkSession)(f: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val marker = "plan-probes job-count marker"
@@ -32,7 +39,7 @@ object PlanProbes {
         assert(descs.contains(marker), "listener bus did not drain")
         r
       } finally sc.removeSparkListener(listener)
-    (out, descs.size - 1)
+    (out, descs.asScala.toSeq.takeWhile(_ != marker))
   }
 
   /** The columns of each file scan over `tableDir` planned while `f`

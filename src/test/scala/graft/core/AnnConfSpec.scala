@@ -43,4 +43,20 @@ class AnnConfSpec extends SparkSpec {
       assert(AnnConf(spark).refine == 3 && AnnConf(spark).probesFor(64) == 2)
     }
   }
+
+  test("lenient budget keys: unset and malformed read the default, a set " +
+       "value is read") {
+    val k = AnnConf.FlatDirectCollectMax
+    val prev = spark.conf.getOption(k.name)
+    spark.conf.unset(k.name)
+    try {
+      assert(AnnConf(spark).flatDirectCollectMax == 4000000L)
+      Confs.withConfs(spark, k.name -> "12x") {
+        assert(AnnConf(spark).flatDirectCollectMax == 4000000L)
+      }
+      Confs.withConfs(spark, k.name -> "12") {
+        assert(AnnConf(spark).flatDirectCollectMax == 12L)
+      }
+    } finally prev.foreach(spark.conf.set(k.name, _))
+  }
 }

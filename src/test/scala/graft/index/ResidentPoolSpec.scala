@@ -37,11 +37,9 @@ class ResidentPoolSpec extends SparkSpec {
   }
 
   private def withRule[T](f: => T): T = {
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    finally uninstall()
   }
 
   private def topK(tableDir: String, q: Array[Float], filter: Option[Column] = None,

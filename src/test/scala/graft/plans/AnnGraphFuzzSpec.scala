@@ -48,9 +48,7 @@ class AnnGraphFuzzSpec extends SparkSpec {
     import spark.implicits._
     val (flatDir, partDir) = fixture
     val rng = new scala.util.Random(6006)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark, "graft.ann.cost.enable" -> "false") {
       var exhaustive = 0
       (1 to 25).foreach { trial =>
@@ -89,8 +87,7 @@ class AnnGraphFuzzSpec extends SparkSpec {
       info(s"graph shapes: $exhaustive exhaustive-exact of 25 — all pass")
       assert(exhaustive > 0)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       AnnCatalog.unregisterGraph(flatDir)
       (0 to 1).foreach(p => AnnCatalog.unregisterGraph(s"$partDir/part=$p"))
     }

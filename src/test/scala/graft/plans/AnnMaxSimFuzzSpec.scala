@@ -49,9 +49,7 @@ class AnnMaxSimFuzzSpec extends SparkSpec {
        "partitioned serves, and under forced declines") {
     val (flatDir, partDir, docs) = fixture
     val rng = new scala.util.Random(7373)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try {
       var served = 0
       var declined = 0
@@ -89,8 +87,7 @@ class AnnMaxSimFuzzSpec extends SparkSpec {
       info(s"maxsim shapes: $served served, $declined declined — all exact")
       assert(served > 0 && served + declined == 20)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       AnnCatalog.unregisterMaxSim(flatDir)
       (0 to 1).foreach(p => AnnCatalog.unregisterMaxSim(s"$partDir/part=$p"))
     }

@@ -47,9 +47,7 @@ class AnnPartialFuzzSpec extends SparkSpec {
        "yields brute-exact rows; declines fall back to the exact plan") {
     val (tableDir, rows) = fixture
     val rng = new scala.util.Random(9199)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark, "graft.ann.probes" -> "4",
         "graft.ann.refine" -> "50", "graft.ann.cost.enable" -> "false") {
       var served = 0
@@ -94,8 +92,7 @@ class AnnPartialFuzzSpec extends SparkSpec {
       // the prover must accept SOMETHING across 35 shapes over 4 indexes
       assert(served > 0 && served + declined == 35)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       // partials unregister by (table, indexDir); drop them all
       AnnCatalog.lookupPartials(Seq(tableDir)).foreach(pe =>
         AnnCatalog.unregisterPartial(tableDir, pe.entry.indexDir))

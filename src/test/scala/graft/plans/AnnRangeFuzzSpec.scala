@@ -53,9 +53,7 @@ class AnnRangeFuzzSpec extends SparkSpec {
        "decline, standalone and under ORDER BY LIMIT") {
     val (flatDir, partDir) = fixture
     val rng = new scala.util.Random(5151)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try {
       var served = 0
       var declined = 0
@@ -100,8 +98,7 @@ class AnnRangeFuzzSpec extends SparkSpec {
       info(s"sphere shapes: $served served, $declined declined — all exact")
       assert(served > 0 && served + declined == 30)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       AnnCatalog.unregister(flatDir)
       (0 to 2).foreach(p => AnnCatalog.unregister(s"$partDir/part=$p"))
     }

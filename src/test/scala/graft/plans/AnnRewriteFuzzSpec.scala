@@ -61,9 +61,7 @@ class AnnRewriteFuzzSpec extends SparkSpec {
        "escalation, partitioned union, and forced declines alike") {
     val (flatDir, partDir) = fixture
     val rng = new scala.util.Random(4242)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try {
       var served = 0
       var declined = 0
@@ -113,8 +111,7 @@ class AnnRewriteFuzzSpec extends SparkSpec {
       assert(served > 0 && declined >= 0)
       assert(served + declined == 40)
     } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       AnnCatalog.unregister(flatDir)
       (0 to 2).foreach(p => AnnCatalog.unregister(s"$partDir/part=$p"))
     }
@@ -122,12 +119,9 @@ class AnnRewriteFuzzSpec extends SparkSpec {
 
   /** Rule active for the body (the suites share one session). */
   private def withRule[T](body: => T): T = {
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+    finally uninstall()
   }
 
   private def distOf(metric: String): (Column, Column) => Column = metric match {

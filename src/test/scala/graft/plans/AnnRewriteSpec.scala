@@ -41,11 +41,9 @@ class AnnRewriteSpec extends SparkSpec {
   }
 
   private def withRule[T](f: => T): T = {
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    finally uninstall()
   }
 
   private def withConfs[T](kv: (String, String)*)(f: => T): T =

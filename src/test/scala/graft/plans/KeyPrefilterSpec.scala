@@ -39,11 +39,9 @@ class KeyPrefilterSpec extends SparkSpec {
   }
 
   private def withRule[T](f: => T): T = {
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    finally uninstall()
   }
 
   private def brute(rows: Seq[(Long, Int, Array[Float])], q: Array[Float], k: Int,

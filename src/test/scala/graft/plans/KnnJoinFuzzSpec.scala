@@ -76,9 +76,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
   test("30 seeded (queries x k x metric x form) trials: served rows == brute force") {
     val (flat, part) = fixture
     val rng = new scala.util.Random(555)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark,
         "graft.ann.probes" -> "4", "graft.ann.refine" -> "40",
         "graft.ann.cost.enable" -> "false") {
@@ -186,8 +184,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
           s"trial $trial (m=$m k=$k metric=$metric part=$partitioned " +
           s"pred=$pred residual=$residual nulls=$withNulls) mismatch")
       }
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    } finally uninstall()
   }
 
   /** The planner's IVF prefilter escalation for one KNN join, replayed
@@ -243,9 +240,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
        "the exact top-k of a replayed escalation's pools") {
     val (flat, part) = fixture
     val rng = new scala.util.Random(919)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark,
         "graft.ann.probes" -> "1", "graft.ann.refine" -> "2",
         "graft.ann.cost.enable" -> "false") {
@@ -310,8 +305,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
         }
         assert(got == want, s"$clue mismatch: got $got want $want")
       }
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    } finally uninstall()
   }
 
   /** Multivector corpus for the MAXSIM-join axis: 40 docs x 1-4 tokens
@@ -340,9 +334,7 @@ class KnnJoinFuzzSpec extends SparkSpec {
     import spark.implicits._
     val (dir, docs) = msFixture
     val rng = new scala.util.Random(777)
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     try graft.core.Confs.withConfs(spark,
         "graft.ann.probes" -> "4", "graft.ann.refine" -> "8",
         "graft.ann.maxsim.kPerToken" -> "256",
@@ -382,7 +374,6 @@ class KnnJoinFuzzSpec extends SparkSpec {
         assert(got == want,
           s"maxsim trial $trial (m=$m k=$k slice=$sliceCap) mismatch")
       }
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == rule)
+    } finally uninstall()
   }
 }

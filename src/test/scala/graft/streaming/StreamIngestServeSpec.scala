@@ -41,9 +41,7 @@ class StreamIngestServeSpec extends SparkSpec {
       AnnCatalog.register(s"$tableDir/part=$p", d, "id", "vec")
       d
     }
-    val rule = AnnTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
+    val uninstall = AnnTopKRewrite.install(spark)
     // ingest through the CATALOG's instance — the one the serves use
     val entry = AnnCatalog.resolve(spark, Seq(s"$tableDir/part=0"), Nil,
       Seq(AnnCatalog.Kind.Ivf)).get.entries.head
@@ -83,8 +81,7 @@ class StreamIngestServeSpec extends SparkSpec {
         "rows must survive the mid-stream compaction generation flip")
     } finally {
       query.stop()
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filter(r => !(r eq rule))
+      uninstall()
       (0 to 1).foreach(p => AnnCatalog.unregister(s"$tableDir/part=$p"))
     }
   }
